@@ -721,18 +721,12 @@ class CodeMemoryEngine:
                 if d.startswith("post-") and d not in keep:
                     shutil.rmtree(os.path.join(pdir, d), ignore_errors=True)
 
-        covered = tuple(state["covered"]) if state else None
+        covered = tuple(map(tuple, state["covered"])) if state else None
         if state is not None and covered != key:
-            if (
-                len(key) > len(covered)
-                and key[: len(covered)] == covered
-                and len(state["dirs"]) < self.ANN_MAX_DELTA_DIRS
-            ):
+            new_snaps = self.store.appended_snapshots(key, covered)
+            if new_snaps and len(state["dirs"]) < self.ANN_MAX_DELTA_DIRS:
                 delta = self.spark.read.parquet(
-                    *[
-                        os.path.join(self.store.root, "vectors", s)
-                        for s in key[len(covered):]
-                    ]
+                    *[os.path.join(self.store.root, "vectors", s) for s in new_snaps]
                 ).filter(F.col("sparse_indices").isNotNull())
                 dname = _new_dir("delta")
                 write_clustered(
@@ -857,8 +851,8 @@ class CodeMemoryEngine:
             # ~2 files per cell dir for the BASE: a bare partitionBy
             # write leaves one file per (upstream partition x cell) —
             # hundreds of tiny files whose task-scheduling cost exceeds
-            # the pruning win (bench.py ann_serving measured the naive
-            # layout LOSING to the brute scan); one file per cell
+            # the pruning win (measured: the naive layout LOST to the
+            # brute scan); one file per cell
             # serializes each probed cell into a single task. Two
             # balances both. The rolling DELTA writes 1 file per cell
             # (it is a fraction of the base by construction).
@@ -917,21 +911,13 @@ class CodeMemoryEngine:
                 else:
                     os.remove(p2)
 
-        covered = tuple(state["covered"]) if state else None
+        covered = tuple(map(tuple, state["covered"])) if state else None
         if state is not None and covered != key:
-            is_append = (
-                len(key) > len(covered)
-                and key[: len(covered)] == covered
-                and "base_rows" in state  # legacy pre-r9 states rebuild
-            )
-            if is_append:
-                new_snaps = [
-                    os.path.join(self.store.root, "vectors", s)
-                    for s in key[len(covered):]
-                ]
-                delta = self.spark.read.parquet(*new_snaps).select(
-                    "point_id", "dense"
-                )
+            new_snaps = self.store.appended_snapshots(key, covered)
+            if new_snaps and "base_rows" in state:  # legacy pre-r9 states rebuild
+                delta = self.spark.read.parquet(
+                    *[os.path.join(self.store.root, "vectors", s) for s in new_snaps]
+                ).select("point_id", "dense")
                 n_new = delta.count()
                 delta_rows = state.get("delta_rows", 0) + n_new
                 if delta_rows > self.ANN_DELTA_REBUILD_FRACTION * max(

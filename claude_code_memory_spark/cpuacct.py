@@ -14,9 +14,8 @@ The tree walk includes every live descendant (the local-mode executor
 JVM is a child of the Python driver) and, via cutime/cstime, reaped
 children — worker processes that die mid-stage stay accounted.
 
-First extracted from bench.py's section accounting (commit 89abe63);
-shared here so tools/bigrepo_run.py stage timings carry the same
-hygiene. Fail-soft: on a /proc-less platform ``cpu_totals`` raises
+Shared by the engine's per-stage profile and the benchmark harness.
+Fail-soft: on a /proc-less platform ``cpu_totals`` raises
 OSError and callers omit the CPU columns rather than guessing.
 """
 
@@ -75,7 +74,7 @@ class StageAccountant:
     the stage — the machine-independent figure targets are set in) and
     ``external_cpu_share`` (fraction of the whole machine spent OUTSIDE
     our tree while the stage ran; > 0.10 marks the stage's wall clock
-    suspect, same threshold as bench.py's section flags)."""
+    suspect)."""
 
     def __init__(self) -> None:
         self.stages: dict[str, dict] = {}

@@ -1,4 +1,4 @@
-"""Query registry shared by __spark_entry__, bench.py and the tests.
+"""Query registry shared by __spark_entry__, perfbench and the tests.
 
 Each entry: name -> (callable(spark, sf_dir) -> DataFrame, oracle SQL or
 None). The oracle SQL runs in DuckDB against views named after the
@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 class CatalogEntry:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
-    headline: bool = False  # included in bench.py
+    headline: bool = False  # run and timed by perfbench's catalog_headline workload
 
 
 REGISTRY: dict[str, CatalogEntry] = {}

@@ -13,7 +13,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Defaults fit the machine: every CPU this process may run on, and a
+# quarter of physical memory for the driver heap (the JVM's own default
+# heap share) — in local mode the driver JVM is the whole engine.
+# SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM override both.
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def _default_driver_mem() -> str:
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys // 4 // 2**30)}g"
 
 
 def get_spark(app_name: str = "claude_code_memory_spark", cpus: int | None = None) -> SparkSession:
@@ -33,7 +42,10 @@ def get_spark(app_name: str = "claude_code_memory_spark", cpus: int | None = Non
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .getOrCreate()
     )
 

@@ -54,7 +54,7 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     from claude_code_memory_spark.session import get_spark
 
-    s = get_spark("tests", cpus=8)
+    s = get_spark("tests")
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     yield s
 

@@ -1,4 +1,4 @@
-"""CPU accounting used by the evidence tooling (cpuacct.py): the
+"""CPU accounting used by the engine profile and the benchmark (cpuacct.py): the
 process-tree totals, the per-stage accountant, and the tree-shrank
 anomaly clamp (a /proc walk race during PySpark worker churn can
 double-count a snapshot; the next delta must surface as an anomaly,

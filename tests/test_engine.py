@@ -36,6 +36,51 @@ def test_index_and_search(spark, temp_repo, tmp_path):
     assert all(row["chunk_type"] in ("metadata", "implementation", "relation") for row in cls)
 
 
+def test_search_after_incremental_edit_matches_explode_path(spark, temp_repo, tmp_path):
+    """A one-file edit re-index commits tombstoned delta snapshots to
+    `vectors`. The postings and IVF indexes built before it must not
+    read a tombstone as a snapshot: unfiltered keyword and hybrid
+    searches afterwards equal the explode/brute path over the merged
+    table, and an ANN search still serves."""
+    from claude_code_memory_spark.embeddings import bm25 as bm25_mod
+    from claude_code_memory_spark.embeddings.hash_embedder import embed_text
+    from claude_code_memory_spark.operators.topk import (
+        dense_topk,
+        overfetch_limit,
+        rrf_fuse,
+        sparse_topk,
+    )
+
+    eng = CodeMemoryEngine(spark, str(tmp_path / "store"))
+    eng.index(temp_repo)
+    query, k = "helper compute numbers", 50
+    eng.search(query, mode="keyword", k=k).collect()  # builds the postings index
+    eng.search(query, mode="semantic", k=k, ann=True).collect()  # and the IVF one
+    with open(os.path.join(temp_repo, "main.py"), "a") as fh:
+        fh.write("\n\ndef helper_again(numbers):\n    return helper(numbers, 2)\n")
+    assert eng.index(temp_repo)["files_changed"] == 1
+
+    def scored(df, score):
+        return {(r["point_id"], round(r[score], 9)) for r in df.collect()}
+
+    vectors = eng.store.read("vectors")
+    terms = bm25_mod.query_terms(eng.bm25_model(), query)
+    fetch = overfetch_limit(k)
+    keyword = sparse_topk(vectors, terms, k, id_col="point_id")
+    hybrid = rrf_fuse(
+        dense_topk(vectors, embed_text(query, eng.dim), fetch, id_col="point_id", vec_col="dense"),
+        sparse_topk(vectors, terms, fetch, id_col="point_id"),
+        k,
+        id_col="point_id",
+    )
+    got_kw = scored(eng.search(query, mode="keyword", k=k), "score")
+    assert got_kw and got_kw == scored(keyword, "score")
+    assert scored(eng.search(query, mode="hybrid", k=k), "rrf_score") == scored(
+        hybrid, "rrf_score"
+    )
+    assert eng.search(query, mode="semantic", k=5, ann=True).count() == 5
+
+
 @pytest.mark.slow
 def test_incremental_noop_and_change(spark, temp_repo, tmp_path):
     eng = CodeMemoryEngine(spark, str(tmp_path / "store"))
@@ -528,7 +573,6 @@ def test_bm25_model_is_storage_backed_after_index(spark, temp_repo, tmp_path):
     assert "Python" not in plan and "mapInPandas" not in plan
 
 
-@pytest.mark.slow
 def test_first_build_missing_endpoint_branch_is_provably_empty(
     spark, temp_repo, tmp_path
 ):

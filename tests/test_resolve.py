@@ -2227,7 +2227,6 @@ def test_scoped_resolution_matches_unscoped(spark):
     assert ("use_factory", "Tool.run") in resolved  # factory return
 
 
-@pytest.mark.slow
 def test_scope_cap_breach_falls_back_unscoped(spark, monkeypatch):
     """Any cap breach keeps the full (round-12) path: same results,
     LAST_SCOPE_INFO names the gate that refused."""
@@ -2260,12 +2259,11 @@ def test_scope_cap_breach_falls_back_unscoped(spark, monkeypatch):
     assert out == unscoped
 
 
-@pytest.mark.slow
 def test_engine_incremental_scoped_matches_unscoped(spark, tmp_path, monkeypatch):
     """End-to-end: a 1-file incremental reindex takes the scoped path and
     leaves the relations table bit-identical to a CCMS_NO_SCOPE=1 run
     (the bigrepo relations_multiset_equal oracle, at fixture scale)."""
-    import os
+    import shutil
 
     from claude_code_memory_spark.api import CodeMemoryEngine
     from claude_code_memory_spark.operators import resolve as R
@@ -2276,14 +2274,18 @@ def test_engine_incremental_scoped_matches_unscoped(spark, tmp_path, monkeypatch
         p = proj / path
         p.parent.mkdir(parents=True, exist_ok=True)
         p.write_text(src)
+    # a first build has no stored state, so it never scopes: build once
+    # and give each variant its own copy of the store
+    base = tmp_path / "base"
+    CodeMemoryEngine(spark, str(base)).index(str(proj))
 
     def one_file_rels(store_dir, no_scope):
         if no_scope:
             monkeypatch.setenv("CCMS_NO_SCOPE", "1")
         else:
             monkeypatch.delenv("CCMS_NO_SCOPE", raising=False)
+        shutil.copytree(base, store_dir)
         eng = CodeMemoryEngine(spark, str(store_dir))
-        eng.index(str(proj))
         fs = eng.store.read("file_state")
         eng.store.write(
             "file_state",

@@ -1,6 +1,6 @@
 """One-file incremental reindex profile — the resolve-scoping target
 metric (verdict r12 'next round' item 1). Full-indexes the target, then
-drops one file_state row (same victim rule as bigrepo_run.py, or pass
+drops one file_state row (the first by relative_path, or pass
 one as argv[2]) and re-indexes that single file with profile=True +
 CCMS_RESOLVE_PROFILE=1, printing the stage split, the per-pin resolve
 profile, and the relations-multiset oracle.
