@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from claude_code_memory_spark import serving
 from claude_code_memory_spark.embeddings import bm25 as bm25_mod
 from claude_code_memory_spark.embeddings.hash_embedder import (
     DEFAULT_DIM,
@@ -27,12 +28,6 @@ from claude_code_memory_spark.operators.joins import (
     relations_touching,
     stale_imports,
     valid_relations,
-)
-from claude_code_memory_spark.operators.topk import (
-    dense_topk,
-    overfetch_limit,
-    rrf_fuse,
-    sparse_topk,
 )
 from claude_code_memory_spark.plans.chunks import (
     entity_metadata_chunks,
@@ -65,6 +60,7 @@ class CodeMemoryEngine:
         self.spark = spark
         self.store = TableStore(spark, workdir)
         self.dim = dim
+        self._snapshot = serving.Snapshot()
         ensure_package_shipped(spark)  # UDF stages import package code on workers
 
     # -- indexing ----------------------------------------------------------
@@ -415,8 +411,7 @@ class CodeMemoryEngine:
         # set; write it once, file-copy into the other tables' ts dirs
         from claude_code_memory_spark.plans.incremental import TombstoneSource
 
-        tsrc = TombstoneSource(self.store, replaced)
-        try:
+        with TombstoneSource(self.store, replaced) as tsrc:
             merge_replace_by_file(
                 self.store, "entities", entities, replaced, tombstone_src=tsrc
             )
@@ -443,8 +438,6 @@ class CodeMemoryEngine:
                 tombstone_src=tsrc,
             )
             _sub("write.merge_vectors")
-        finally:
-            tsrc.cleanup()
 
         # J2/J3 scoped by J7: only relations touching entities that were
         # added, changed, or deleted in THIS batch can have become invalid;
@@ -1001,7 +994,39 @@ class CodeMemoryEngine:
         self._ann_cache = ((key, n_centroids), df, centers)
         return df, centers
 
-    # -- search ------------------------------------------------------------
+    # -- serving (search / read_graph / get_implementation) ---------------
+
+    def _serving(
+        self, tables: tuple[str, ...], *, sparse: bool = False, ann: bool = False
+    ) -> serving.Snapshot:
+        """The serving snapshot with ``tables`` (and the BM25 / IVF parts
+        when asked) loaded from their current sources. A part whose source
+        changed since it was loaded — a write, an append, a rebuilt
+        postings or IVF index — is reloaded; the new snapshot replaces the
+        old one in a single assignment."""
+        store = self.store
+        need = {
+            t: (store.manifest_key(t), lambda t=t: serving.load_table(t, store.read(t)))
+            for t in tables
+        }
+        if sparse:
+            model, postings = (
+                (self.bm25_model(), self._sparse_postings())
+                if store.exists("chunks")
+                else (None, None)
+            )
+            need["sparse"] = (
+                (model, postings),
+                lambda: serving.Sparse(model, postings),
+            )
+        if ann:
+            idx = self._ann_index()
+            need["ivf"] = (
+                idx[0] if idx is not None else None,
+                lambda: serving.Ivf(*idx) if idx is not None else None,
+            )
+        self._snapshot = serving.refresh(self._snapshot, need)
+        return self._snapshot
 
     def search(
         self,
@@ -1019,114 +1044,49 @@ class CodeMemoryEngine:
         ann: bool = False,
         nprobe: int = 4,
     ) -> DataFrame:
-        """T1-T4: semantic / keyword / hybrid top-k with payload filters.
+        """T1-T4: semantic / keyword / hybrid top-k with payload filters,
+        scored in-process over the serving snapshot (`serving.py`) with
+        the scores, ties and row multiplicity of the Spark operators
+        (`dense_topk`, `sparse_topk`, `rrf_fuse`, `ivf_topk`,
+        `mmr_rerank`). Returns (point_id, score) — hybrid: (point_id,
+        dense_rank, sparse_rank, rrf_score) — in rank order, LEFT JOINed
+        to the chunk payload (entity_name, chunk_type, file_path,
+        line_number, content). A warm call runs no Spark job.
 
-        ``mmr=True`` (semantic mode only) over-fetches ``mmr_fetch``
-        candidates and greedily diversity-reranks them (MMR,
-        ``mmr_lambda`` trades relevance vs novelty); the result carries
-        an extra ``mmr_rank`` column in selection order."""
+        Semantic mode drops rounded scores below ``score_threshold``.
+        Hybrid fuses the over-fetched dense and keyword lists by RRF with
+        weight ``alpha`` on the dense side. ``ann=True`` on an unfiltered
+        search restricts the dense side to the ``nprobe`` IVF cells
+        nearest the query (`_ann_index`); payload-filtered searches score
+        every row that passes the filters. ``mmr=True`` (semantic mode
+        only) over-fetches ``mmr_fetch`` candidates and greedily
+        diversity-reranks them (MMR, ``mmr_lambda`` trades relevance vs
+        novelty); the result carries an extra ``mmr_rank`` column in
+        selection order."""
         if mode not in ("semantic", "keyword", "hybrid"):
             raise ValueError(f"invalid search mode: {mode}")  # qdrant.py:722-801
-        vectors = self.store.read("vectors")
-        if vectors is None:  # never-indexed collection: 0 hits, not a crash
-            if mode == "hybrid":
-                base = "point_id long, dense_rank int, sparse_rank int, rrf_score double"
-            elif mode == "semantic" and mmr:
-                # keep the documented mmr_rank column in the empty case too
-                base = "point_id long, score double, mmr_rank int"
-            else:
-                base = "point_id long, score double"
-            return self.spark.createDataFrame(
-                [],
-                base + ", entity_name string, chunk_type string,"
-                " file_path string, line_number int, content string",
-            )
-        if entity_types:
-            vectors = vectors.filter(F.col("entity_type").isin(entity_types))
-        if chunk_type:
-            vectors = vectors.filter(F.col("chunk_type") == chunk_type)
-
-        fetch = overfetch_limit(k) if mode == "hybrid" else k
-
-        def dense(limit):
-            # ann=True + no payload filters: probe the materialized IVF
-            # layout (nprobe cell dirs, file-level pruning) instead of
-            # scanning the corpus; filtered searches fall back to the
-            # brute scan, where the filter prunes the corpus side (the
-            # same unfiltered-only rule as the postings index)
-            if ann and not entity_types and not chunk_type:
-                idx = self._ann_index()
-                if idx is not None:
-                    from claude_code_memory_spark.operators.similarity import (
-                        ivf_topk,
-                    )
-
-                    indexed, centers = idx
-                    r = ivf_topk(
-                        indexed,
-                        centers,
-                        embed_text(query, self.dim),
-                        limit,
-                        nprobe=nprobe,
-                        id_col="point_id",
-                        vec_col="dense",
-                    )
-                    if mode != "hybrid" and score_threshold:
-                        r = r.filter(F.col("score") >= score_threshold)
-                    return r
-            return dense_topk(
-                vectors,
-                embed_text(query, self.dim),
-                limit,
-                id_col="point_id",
-                vec_col="dense",
-                score_threshold=score_threshold if mode != "hybrid" else None,
-            )
-
-        def sparse(limit):
-            terms = bm25_mod.query_terms(self.bm25_model(), query)
-            # unfiltered searches use the materialized postings index:
-            # per-query cost ∝ postings touched (term_index range-pruned at
-            # the parquet scan), not corpus size. Payload-filtered searches
-            # fall back to the explode path — the filter prunes the corpus
-            # side instead, and keeping filters on the postings table would
-            # mean denormalizing every payload column into it.
-            if not entity_types and not chunk_type:
-                postings = self._sparse_postings()
-                if postings is not None:
-                    from claude_code_memory_spark.operators.topk import (
-                        sparse_topk_postings,
-                    )
-
-                    return sparse_topk_postings(postings, terms, limit, id_col="point_id")
-            return sparse_topk(vectors, terms, limit, id_col="point_id")
-
-        if mode == "semantic":
-            if mmr:
-                from claude_code_memory_spark.operators.topk import mmr_rerank
-
-                cands = dense(mmr_fetch)
-                # re-attach the dense vectors for the pairwise novelty
-                # term: the candidate side is <= mmr_fetch rows, so the
-                # join broadcasts it against the corpus scan
-                with_vecs = F.broadcast(cands).join(
-                    vectors.select("point_id", "dense"), "point_id"
-                )
-                result = mmr_rerank(
-                    with_vecs, k, mmr_lambda, id_col="point_id", vec_col="dense"
-                )
-            else:
-                result = dense(k)
-        elif mode == "keyword":
-            result = sparse(k)
-        else:
-            result = rrf_fuse(dense(fetch), sparse(fetch), k, id_col="point_id", alpha=alpha)
-
-        chunks = self.store.read("chunks").select(
-            "point_id", "entity_name", "chunk_type", "file_path", "line_number",
-            "content",
+        ann = bool(ann and not entity_types and not chunk_type)
+        snap = self._serving(
+            ("vectors", "chunks"), sparse=mode != "semantic", ann=ann
         )
-        return result.join(chunks, "point_id", "left")
+        return self.spark.createDataFrame(
+            serving.search(
+                snap,
+                query,
+                embed_text(query, self.dim),
+                mode=mode,
+                k=k,
+                entity_types=entity_types,
+                chunk_type=chunk_type,
+                score_threshold=score_threshold,
+                alpha=alpha,
+                mmr=mmr and mode == "semantic",
+                mmr_lambda=mmr_lambda,
+                mmr_fetch=mmr_fetch,
+                ivf=snap["ivf"] if ann else None,
+                nprobe=nprobe,
+            )
+        )
 
     # -- graph surface (T7) --------------------------------------------------
 
@@ -1139,122 +1099,55 @@ class CodeMemoryEngine:
         entity_types: list[str] | None = None,
     ) -> DataFrame:
         """T7 MCP ``read_graph(entity, mode, limit, entityTypes)`` parity
-        (reference README.md:313-317). Modes:
+        (reference README.md:313-317), answered in-process from the
+        serving snapshot's relations and entities. Modes:
 
         - ``relationships`` — edges touching the entity;
-        - ``entities`` — the neighbor *entity rows* (joined to the
-          entities table, where ``entity_types`` filters apply);
+        - ``entities`` — the neighbor *entity rows* (from the entities
+          table, where ``entity_types`` filters apply);
         - ``raw`` — the full 1-hop subgraph: every edge between members
           of the neighborhood, not only edges touching the focus;
         - ``smart`` — deterministic summary (per relation_type ×
           direction: count + up to 5 sample neighbors). The reference's
           'smart' is an LLM summary — an engine *consumer*; this is the
           aggregation it would consume;
-        - ``bfs2`` — 2-hop expansion via iterative semi-joins (the Spark
-          shape of graph traversal).
+        - ``bfs2`` — the same 2-hop expansion as ``raw``: every edge
+          touching an endpoint of an edge of the entity.
 
         Default limits follow the reference: 150 for smart, 300 otherwise
         (README.md:318). ``entity_types`` filters by the *neighbor*
-        entity's type in every mode."""
+        entity's type in every mode. Rows come in store order, distinct in
+        ``raw``/``bfs2``; ``smart`` is ordered by count descending."""
         if mode not in ("smart", "entities", "relationships", "raw", "bfs2"):
             raise ValueError(f"invalid read_graph mode: {mode}")
         limit = limit if limit is not None else (150 if mode == "smart" else 300)
-        rel = self.store.read("relations")
-        direct = rel.filter(
-            (F.col("from_entity") == entity) | (F.col("to_entity") == entity)
-        )
-        neighbor = F.when(F.col("from_entity") == entity, F.col("to_entity")).otherwise(
-            F.col("from_entity")
-        )
-        if entity_types:
-            # keep edges whose neighbor is a known entity of a wanted type
-            wanted = (
-                self.store.read("entities")
-                .filter(F.col("entity_type").isin(entity_types))
-                .select(F.col("entity_name").alias("__n"))
-                .distinct()
+        snap = self._serving(("relations", "entities"))
+        return self.spark.createDataFrame(
+            serving.read_graph(
+                snap["relations"],
+                snap["entities"],
+                entity,
+                mode=mode,
+                limit=limit,
+                entity_types=entity_types,
             )
-            direct = direct.withColumn("__nb", neighbor).join(
-                F.broadcast(wanted), F.col("__nb") == F.col("__n"), "left_semi"
-            ).drop("__nb")
-
-        if mode == "relationships":
-            return direct.limit(limit)
-        if mode == "entities":
-            names = direct.select(neighbor.alias("__n")).distinct()
-            return (
-                self.store.read("entities")
-                .join(F.broadcast(names), F.col("entity_name") == F.col("__n"), "left_semi")
-                .limit(limit)
-            )
-        if mode == "smart":
-            return (
-                direct.withColumn("__nb", neighbor)
-                .withColumn(
-                    "direction",
-                    F.when(F.col("from_entity") == entity, F.lit("out")).otherwise(
-                        F.lit("in")
-                    ),
-                )
-                .groupBy("relation_type", "direction")
-                .agg(
-                    F.count("*").alias("n"),
-                    F.slice(F.sort_array(F.collect_set("__nb")), 1, 5).alias("sample"),
-                )
-                .orderBy(F.desc("n"), "relation_type", "direction")
-                .limit(limit)
-            )
-        # raw / bfs2: expand to the neighborhood's edges
-        frontier = (
-            direct.select(F.col("from_entity").alias("n"))
-            .unionByName(direct.select(F.col("to_entity").alias("n")))
-            .distinct()
         )
-        hop = rel.join(
-            F.broadcast(frontier),
-            (rel.from_entity == F.col("n")) | (rel.to_entity == F.col("n")),
-            "left_semi",
-        )
-        return direct.unionByName(hop).distinct().limit(limit)
 
     def get_implementation(self, entity_name: str, *, scope: str = "minimal") -> DataFrame:
         """Implementation chunks for an entity (README.md:318-323):
         'minimal' = just its code; 'logical' = + entities in the same
         containment group (parent's other children — class helpers);
-        'dependencies' = + everything it calls."""
+        'dependencies' = + everything it calls. Answered in-process from
+        the serving snapshot's chunks and relations; the expanded scopes
+        return distinct rows."""
         if scope not in ("minimal", "logical", "dependencies"):
             raise ValueError(f"invalid scope: {scope}")
-        # point lookup via file skipping: after optimize() clusters chunks
-        # by entity_name, this scans only the file(s) whose min/max range
-        # covers the name; unclustered tables conservatively scan all
-        own = self.store.read_pruned(
-            "chunks", [("entity_name", "=", entity_name)]
-        ).filter(F.col("chunk_type") == "implementation")
-        if scope == "minimal":
-            return own
-        # full-table frame only for the sibling/dependency expansions
-        chunks = self.store.read("chunks").filter(F.col("chunk_type") == "implementation")
-        rel = self.store.read("relations")
-        if scope == "logical":
-            parents = rel.filter(
-                (F.col("to_entity") == entity_name) & (F.col("relation_type") == "contains")
-            ).select(F.col("from_entity").alias("__p"))
-            siblings = (
-                rel.filter(F.col("relation_type") == "contains")
-                .join(F.broadcast(parents), rel.from_entity == F.col("__p"), "left_semi")
-                .select(F.col("to_entity").alias("__sib"))
+        snap = self._serving(("chunks", "relations"))
+        return self.spark.createDataFrame(
+            serving.get_implementation(
+                snap["chunks"].impl, snap["relations"], entity_name, scope
             )
-            group = chunks.join(
-                F.broadcast(siblings), chunks.entity_name == F.col("__sib"), "left_semi"
-            )
-            return own.unionByName(group).distinct()
-        callees = rel.filter(
-            (F.col("from_entity") == entity_name) & (F.col("relation_type") == "calls")
-        ).select(F.col("to_entity").alias("__callee"))
-        deps = chunks.join(
-            F.broadcast(callees), chunks.entity_name == F.col("__callee"), "left_semi"
         )
-        return own.unionByName(deps).distinct()
 
     def stats(self) -> DataFrame:
         """A2: collection statistics report."""
@@ -1323,8 +1216,8 @@ class CodeMemoryEngine:
         """Serving-layout maintenance (Delta OPTIMIZE CLUSTER BY
         analogue): rewrite `chunks` range-clustered by entity_name so
         each part file carries a narrow, disjoint name range — after
-        which `get_implementation` point lookups skip every
-        non-matching file via the footer-stats manifests
+        which `TableStore.read_pruned` point lookups on entity_name skip
+        every non-matching file via the footer-stats manifests
         (plans/skipping.py) instead of scanning the collection. Also
         folds append snapshots (compaction). Run between indexing
         batches; reads are correct (conservatively unpruned) before,

@@ -133,17 +133,23 @@ def transform(
     return packed
 
 
+def query_tf(query: str) -> dict[str, int]:
+    """Query term frequencies: lower-cased alphanumeric runs of two or
+    more characters (the query side of reference bm25.py:259-304)."""
+    import re
+    from collections import Counter
+
+    return Counter(t for t in re.findall(r"[a-z0-9]+", query.lower()) if len(t) > 1)
+
+
 def query_terms(model: BM25Model, query: str) -> DataFrame:
     """Query sparse vector as a (term_index, term_weight) DF — IDF weights
     (reference bm25.py:259-304)."""
     spark = model.vocabulary.sparkSession
-    import re
-
-    terms = [t for t in re.findall(r"[a-z0-9]+", query.lower()) if len(t) > 1]
-    if not terms:
+    tf = query_tf(query)
+    if not tf:
         return spark.createDataFrame([], "term_index int, term_weight double")
-    q = spark.createDataFrame([(t,) for t in terms], "term string")
-    tfq = q.groupBy("term").agg(F.count("*").alias("qtf"))
+    tfq = spark.createDataFrame(list(tf.items()), "term string, qtf long")
     return tfq.join(model.vocabulary, "term").select(
         "term_index", (F.col("idf") * F.col("qtf")).alias("term_weight")
     )

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -231,31 +232,52 @@ def mmr_rerank(
     rows = candidates.select(id_col, score_col, vec_col).collect()
     if not rows:
         return candidates.sparkSession.createDataFrame([], out_schema)
-    import math as _math
-
     ids = [r[id_col] for r in rows]
     if any(i is None for i in ids):
         raise ValueError("mmr_rerank: candidate ids must be non-null")
-    rel = [float(r[score_col]) for r in rows]
-    vecs = [[float(x) for x in r[vec_col]] for r in rows]
-    norms = [_math.sqrt(sum(x * x for x in v)) or 1.0 for v in vecs]
-
-    def cos(i: int, j: int) -> float:
-        return sum(a * b for a, b in zip(vecs[i], vecs[j])) / (norms[i] * norms[j])
-
-    selected: list[int] = []
-    remaining = list(range(len(rows)))
-    while remaining and len(selected) < k:
-        # minimize (-marginal_score, id): max marginal relevance, ties to
-        # the LOWER id in the id's own ordering (works for ints and strings)
-        def mmr_key(i: int):
-            penalty = max((cos(i, j) for j in selected), default=0.0)
-            return (-(lam * rel[i] - (1.0 - lam) * penalty), ids[i])
-
-        best = min(remaining, key=mmr_key)
-        selected.append(best)
-        remaining.remove(best)
+    rel = np.array([float(r[score_col]) for r in rows])
+    vecs = np.array([[float(x) for x in r[vec_col]] for r in rows])
     out = [
-        (ids[i], rel[i], rank + 1) for rank, i in enumerate(selected)
+        (ids[i], float(rel[i]), rank + 1)
+        for rank, i in enumerate(mmr_select(ids, rel, vecs, k, lam))
     ]
     return candidates.sparkSession.createDataFrame(out, out_schema)
+
+
+def mmr_select(
+    ids: Sequence, rel: np.ndarray, vecs: np.ndarray, k: int, lam: float
+) -> list[int]:
+    """Greedy MMR order over in-memory candidates: positions into ``ids``.
+
+    Step ``i`` picks argmax of ``lam * rel - (1 - lam) * penalty``, where
+    the penalty is the largest cosine to an already selected candidate
+    (0 before the first pick); ties go to the lower id in the id's own
+    ordering (ints and strings alike). Dot products and norms are summed
+    left to right over the dimensions in float64, a zero norm counts as
+    1, so a result does not depend on which caller computed it."""
+    m = len(ids)
+    if m == 0 or k <= 0:
+        return []
+    vecs = np.asarray(vecs, dtype=np.float64).reshape(m, -1)
+    cols = vecs.T  # one row per dimension: sequential accumulation
+    sq = np.zeros(m)
+    for c in cols:
+        sq += c * c
+    norms = np.sqrt(sq)
+    norms[norms == 0.0] = 1.0
+    penalty = np.zeros(m)
+    remaining = np.ones(m, dtype=bool)
+    selected: list[int] = []
+    while len(selected) < min(k, m):
+        marginal = lam * rel - (1.0 - lam) * penalty
+        live = np.flatnonzero(remaining)
+        best_val = marginal[live].max()
+        best = min(live[marginal[live] == best_val], key=lambda i: ids[i])
+        selected.append(int(best))
+        remaining[best] = False
+        dots = np.zeros(m)
+        for c in cols:
+            dots += c * c[best]
+        cos = dots / (norms * norms[best])
+        penalty = cos if len(selected) == 1 else np.maximum(penalty, cos)
+    return selected

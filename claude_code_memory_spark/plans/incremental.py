@@ -19,8 +19,10 @@ dedup-vs-just-deleted hazard (processors.py:155-179) forbids reordering).
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
+import re
 import shutil
 import time
 
@@ -430,10 +432,12 @@ class TableStore:
         vacuumed commit raises, while its log entry remains as an audit
         record — Delta's VACUUM + logRetention split."""
         for table in os.listdir(self.root):
-            # stranded shared-tombstone sources (crash between write and
-            # cleanup): safe to sweep here — vacuum runs between pipelines
+            # shared-tombstone sources: sweep the stranded ones (crash
+            # between write and cleanup), never one that an index() of
+            # another engine on this store is still copying from
             if table.startswith("_tsrc-"):
-                shutil.rmtree(os.path.join(self.root, table), ignore_errors=True)
+                if TombstoneSource.stranded(table):
+                    shutil.rmtree(os.path.join(self.root, table), ignore_errors=True)
                 continue
             meta = self._manifest(table)
             if meta is None:
@@ -454,18 +458,36 @@ class TombstoneSource:
     """One-per-batch tombstone parquet, written lazily on first delta
     commit and file-copied into every later table's ts dir (identical
     bytes, one Spark job instead of seven). The caller (api.index) owns
-    the lifecycle: ``cleanup()`` after the last merge of the batch."""
+    the lifecycle: it holds the source in a ``with`` block around the
+    batch's merges, and leaving the block cleans the dir up.
+
+    The dir is named ``_tsrc-<ms>-<pid>-<n>``. `TableStore.vacuum` sweeps
+    it only when `stranded`: its writer process is gone, or the writer is
+    this process and no ``with`` block holds the source any more."""
+
+    _seq = itertools.count()
+    _in_flight: set[str] = set()  # dir names of this process's live sources
 
     def __init__(self, store: TableStore, replaced_files: DataFrame):
         self.store = store
         self.replaced = replaced_files
         self._dir: str | None = None
+        self._held = False
+
+    def __enter__(self) -> "TombstoneSource":
+        self._held = True
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._held = False
+        self.cleanup()
 
     def materialize(self) -> str:
         if self._dir is None:
-            path = os.path.join(
-                self.store.root, f"_tsrc-{int(time.time() * 1000)}-{os.getpid()}"
-            )
+            name = f"_tsrc-{int(time.time() * 1000)}-{os.getpid()}-{next(self._seq)}"
+            if self._held:
+                self._in_flight.add(name)
+            path = os.path.join(self.store.root, name)
             self.replaced.select("file_path").write.mode("overwrite").parquet(path)
             self._dir = path
         return self._dir
@@ -473,7 +495,25 @@ class TombstoneSource:
     def cleanup(self) -> None:
         if self._dir is not None:
             shutil.rmtree(self._dir, ignore_errors=True)
+            self._in_flight.discard(os.path.basename(self._dir))
             self._dir = None
+
+    @classmethod
+    def stranded(cls, name: str) -> bool:
+        """Whether no writer can still be copying from source dir ``name``."""
+        m = re.fullmatch(r"_tsrc-\d+-(\d+)(?:-\d+)?", name)
+        if m is None:
+            return True
+        pid = int(m.group(1))
+        if pid == os.getpid():
+            return name not in cls._in_flight
+        try:
+            os.kill(pid, 0)  # signal 0: existence check only
+        except ProcessLookupError:
+            return True
+        except PermissionError:
+            return False  # alive, owned by another user
+        return False
 
 
 def merge_replace_by_file(

@@ -2,7 +2,7 @@
 # One-command release gate: every check, locally, failing on any red.
 #
 #   tools/ci.sh           # full gate: dtypes + catalog oracle + pytest +
-#                         # one benchmark seed per workload
+#                         # one benchmark seed per workload + one traced
 #   tools/ci.sh --fast    # skip the benchmark (the slow step) — the
 #                         # correctness gate alone
 #
@@ -12,8 +12,11 @@
 #   2. tools/selfcheck.py  — Spark vs DuckDB oracle gate over the whole
 #      catalog at sf0.01.
 #   3. pytest tests/       — the unit/property suite, slow tests included.
-#   4. perfbench/run.py    — one seed of each BENCHMARK.json workload;
-#      fails when a run exits non-zero or reports a failed operation.
+#   4. perfbench/run.py    — one seed of each BENCHMARK.json workload,
+#      plus one traced index_search seed (it calls _sparse_postings(),
+#      _ann_index() and the top-k operators directly, as its per-layer
+#      metrics do); fails when a run exits non-zero or reports a failed
+#      operation.
 set -u
 cd "$(dirname "$0")/.."
 
@@ -29,7 +32,7 @@ step() {
 
 bench() {
   local out
-  out=$(python3 perfbench/run.py --workload "$1" --seed 1 --seconds 5 --trace 0) || return 1
+  out=$(python3 perfbench/run.py --workload "$1" --seed 1 --seconds 5 --trace "${2:-0}") || return 1
   echo "$out"
   echo "$out" | tail -n 1 | python3 -c 'import json, sys; sys.exit(0 if json.load(sys.stdin)["correct"] else 1)'
 }
@@ -42,6 +45,7 @@ step "pytest (full, incl. slow)" env CCMS_FULL_TESTS=1 python -m pytest tests/ -
 if [ "$fast" = 0 ]; then
   step "benchmark index_search (seed 1)" bench index_search
   step "benchmark catalog_headline (seed 1)" bench catalog_headline
+  step "benchmark index_search traced (seed 1)" bench index_search 1
 fi
 
 if [ "$fail" = 0 ]; then
