@@ -77,11 +77,9 @@ def main(argv: list[str] | None = None) -> int:
                          help="also drop manual memories")
 
     p_opt = sub.add_parser(
-        "optimize",
-        help="recluster chunks by entity_name so point lookups file-skip",
+        "optimize", help="compact the chunks snapshots into one"
     )
     p_opt.add_argument("-c", "--collection", required=True)
-    p_opt.add_argument("--target-files", type=int, default=None)
 
     p_stats = sub.add_parser("stats")
     p_stats.add_argument("-c", "--collection", required=True)
@@ -240,8 +238,8 @@ def main(argv: list[str] | None = None) -> int:
         eng.clear(preserve_manual=not args.all)
         print("cleared" + ("" if args.all else " (manual memories preserved)"))
     elif args.cmd == "optimize":
-        eng.optimize(target_files=args.target_files)
-        print("optimized: chunks clustered by entity_name")
+        eng.optimize()
+        print("optimized: chunks compacted into one snapshot")
     elif args.cmd == "chat":
         print(eng.index_chat(args.file, gap_seconds=int(args.gap_hours * 3600)))
     elif args.cmd == "sql":

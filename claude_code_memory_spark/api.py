@@ -43,13 +43,6 @@ from claude_code_memory_spark.sources.files import (
 from claude_code_memory_spark.sources.python_parser import split_parsed
 from claude_code_memory_spark.sources.registry import parse_files
 
-# Resolve broadcast-hint gate (see the resolve_calls call in index()):
-# activate once the stored entity+bind tables reach the measured
-# broadcast-beats-SMJ crossover corpus, cap where ~42 corpus-scale
-# broadcast builds would strain the driver.
-_BC_LOOKUP_MIN_BYTES = 4 << 20  # ≈ the 865-file crossover corpus
-_BC_LOOKUP_MAX_BYTES = 64 << 20  # ≈ 1.5 M entities; past this, SMJ + AQE
-
 
 class CodeMemoryEngine:
     """One instance per collection (= per project namespace)."""
@@ -166,9 +159,6 @@ class CodeMemoryEngine:
         )
 
         stored_entities = self.store.read("entities")
-        stored_lookup_bytes = self.store.table_bytes("entities") + self.store.table_bytes(
-            "bindings"
-        )
         bindings = import_bindings(parsed)
         all_bindings = bindings
         stored_bindings = self.store.read("bindings")
@@ -247,22 +237,6 @@ class CodeMemoryEngine:
             return_binds=all_rbinds,
             stored_relations=stored_rels,
             scope_seed_files=scope_seed_files,
-            # lookup-side broadcast hints pay a fixed ~100-200 ms build
-            # per hinted join (~42 of them), and the hinted frames scale
-            # with the WHOLE corpus (stored ∪ batch), so the gate keys on
-            # stored-corpus size, not batch size: hint once the stored
-            # entity/bind tables pass the measured crossover (~865-file
-            # corpus, entities parquet ≈ 2-4 MB; an 80-file repo is
-            # ~0.26 MB and SMJ wins there) or the batch alone is
-            # full-index-sized (the only proxy before the first write).
-            # Never hint past the cap: ~42 corpus-scale broadcast builds
-            # at >64 MB parquet (~1.5 M entities) would hold GBs on the
-            # driver — SMJ + AQE take over there. See resolve._bc.
-            broadcast_lookups=(
-                n_changed >= 500
-                or stored_lookup_bytes >= _BC_LOOKUP_MIN_BYTES
-            )
-            and stored_lookup_bytes <= _BC_LOOKUP_MAX_BYTES,
         )
 
         # J4: pre-storage orphan filter — entity universe = stored ∪ batch.
@@ -1212,22 +1186,12 @@ class CodeMemoryEngine:
             .orderBy(F.desc("jaccard"), F.asc("point_a"), F.asc("point_b"))
         )
 
-    def optimize(self, target_files: int | None = None) -> None:
-        """Serving-layout maintenance (Delta OPTIMIZE CLUSTER BY
-        analogue): rewrite `chunks` range-clustered by entity_name so
-        each part file carries a narrow, disjoint name range — after
-        which `TableStore.read_pruned` point lookups on entity_name skip
-        every non-matching file via the footer-stats manifests
-        (plans/skipping.py) instead of scanning the collection. Also
-        folds append snapshots (compaction). Run between indexing
-        batches; reads are correct (conservatively unpruned) before,
-        during, and after."""
-        self.store.optimize(
-            "chunks",
-            cluster_by=["entity_name"],
-            partition_by=["chunk_type"],
-            target_files=target_files,
-        )
+    def optimize(self) -> None:
+        """Compact `chunks`: fold its snapshots (index commits, deltas,
+        `add_memory` appends) into one, still partitioned by
+        chunk_type. Rows are unchanged, so searches and lookups return
+        what they returned before. Run between indexing batches."""
+        self.store.optimize("chunks", partition_by=["chunk_type"])
 
     def sql(self, query: str) -> DataFrame:
         """Ad-hoc SQL over the collection: registers every store table
@@ -1326,23 +1290,7 @@ class CodeMemoryEngine:
             F.lit(None).cast("int").alias("line_number"),
             F.lit(None).cast("int").alias("end_line_number"),
         )
-        dense = chunk.withColumn("dense", hash_embedder_udf(self.dim)(F.col("content")))
-        model = self._load_bm25()
-        if model is None and self.store.read("chunks") is not None:
-            model = self.bm25_model()
-        if model is not None:
-            dense = dense.join(bm25_mod.transform(model, chunk), "point_id", "left")
-        else:  # memory added before any index: no corpus to weight against
-            dense = dense.withColumn(
-                "sparse_indices", F.lit(None).cast("array<int>")
-            ).withColumn("sparse_values", F.lit(None).cast("array<float>"))
-        vector = dense.select(
-            "point_id", "dense", "sparse_indices", "sparse_values",
-            "entity_name", "entity_type", "chunk_type", "file_path", "content_hash",
-        )
-        # O(1 row) append: prior snapshot dirs untouched
-        self.store.append("chunks", chunk, ["chunk_type"])
-        self.store.append("vectors", vector, ["chunk_type"])
+        self._vectorize_and_append(chunk)
 
     def index_chat(
         self, jsonl_path: str, *, gap_seconds: int = 3600, summarizer_transport=None
@@ -1408,8 +1356,8 @@ class CodeMemoryEngine:
                 "chunks_skipped_unchanged": n_total - n_new}
 
     def _embed_and_append(self, chunk: DataFrame) -> tuple[int, int]:
-        """Shared append-content tail (chat, streamed JSON, memories):
-        J6 dedup vs stored hashes → embed new → append chunks+vectors.
+        """Shared append-content tail of chat and streamed JSON: J6
+        dedup vs stored hashes → embed new → append chunks+vectors.
         Returns (total rows, newly embedded rows)."""
         stored_c = self.store.read("chunks")
         n_total = chunk.count()
@@ -1417,12 +1365,23 @@ class CodeMemoryEngine:
             chunk = dedup_new_content(chunk, stored_c.select("content_hash"))
         chunk = chunk.localCheckpoint()  # stable ids across the two writes
         n_new = chunk.count()
+        self._vectorize_and_append(chunk)
+        return n_total, n_new
+
+    def _vectorize_and_append(self, chunk: DataFrame) -> None:
+        """Dense-embed and BM25-encode new chunks with the in-session
+        model, then append chunks and vectors as new snapshots: O(new
+        chunks) IO, prior snapshot dirs untouched. Before any index
+        (no saved model, no chunks) there is no corpus to weight
+        against, so the sparse columns stay NULL."""
+        import os
+
         dense = chunk.withColumn("dense", hash_embedder_udf(self.dim)(F.col("content")))
-        model = self._load_bm25()
-        if model is None and stored_c is not None:
-            model = self.bm25_model()
-        if model is not None:
-            dense = dense.join(bm25_mod.transform(model, chunk), "point_id", "left")
+        if self.store.exists("chunks") or os.path.exists(
+            os.path.join(self._bm25_path(), "stats.parquet")
+        ):
+            sparse = bm25_mod.transform(self.bm25_model(), chunk)
+            dense = dense.join(sparse, "point_id", "left")
         else:
             dense = dense.withColumn(
                 "sparse_indices", F.lit(None).cast("array<int>")
@@ -1431,10 +1390,8 @@ class CodeMemoryEngine:
             "point_id", "dense", "sparse_indices", "sparse_values",
             "entity_name", "entity_type", "chunk_type", "file_path", "content_hash",
         )
-        # O(new chunks) append: prior snapshot dirs untouched
         self.store.append("chunks", chunk, ["chunk_type"])
         self.store.append("vectors", vector, ["chunk_type"])
-        return n_total, n_new
 
     def index_json_content(
         self, json_paths: list[str] | str, *, arrays=None, max_items: int = 0

@@ -47,9 +47,8 @@ def write_clustered(
     """Range-cluster a table on its hot filter column(s) before writing.
 
     `repartitionByRange` gives each output file a disjoint key range, so
-    every file's parquet footer carries tight min/max stats and a range
-    predicate skips whole row groups at scan time — the difference
-    between reading 100 TB and reading the one date-slice a query wants.
+    each row group's own parquet min/max statistics are tight and a
+    range predicate pushed into the scan skips whole row groups.
     `sortWithinPartitions` additionally orders pages inside each file
     (page-level stats + better compression on the clustered column).
 
@@ -155,22 +154,9 @@ def write_zordered(
     high bits dominate the key and degrade the layout to single-column
     clustering (Delta's ZORDER does the same per-column range binning).
     The min/max pass is one 1-row aggregate. The Z key is computed, used
-    for the range-partition + in-file sort, then dropped; file footers
-    carry min/max on the ORIGINAL columns, which is what the scan prunes
-    on."""
-    zorder_cluster(df, x, y, bits=bits, num_files=num_files).write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
-def zorder_cluster(
-    df: DataFrame, x: str, y: str, bits: int = 16, num_files: int = 32
-) -> DataFrame:
-    """The layout transform of `write_zordered` without the write:
-    range-normalized Morton key → range partition → in-file sort → key
-    dropped. Reused by TableStore.optimize(zorder_by=...) so store
-    snapshots get the 2-D tile layout (and therefore 2-D file skipping
-    via the footer-stats manifests)."""
+    for the range-partition + in-file sort, then dropped; parquet's
+    row-group statistics on the ORIGINAL columns are what a pushed-down
+    predicate prunes on."""
     from pyspark.sql import functions as F
 
     lo_x, hi_x, lo_y, hi_y = df.agg(
@@ -186,11 +172,13 @@ def zorder_cluster(
         ).cast("long")
 
     zk = zorder_key(scaled(x, lo_x, hi_x), scaled(y, lo_y, hi_y), bits=bits)
-    return (
+    (
         df.withColumn("__z", zk)
         .repartitionByRange(num_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
+        .write.mode("overwrite")
+        .parquet(path)
     )
 
 

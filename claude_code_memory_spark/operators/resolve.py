@@ -42,14 +42,14 @@ entity-universe validation — it never loses a relation.
 
 Scale: bindings and defs are entity-scale tables (rows ∝ import
 statements / definitions, not corpus bytes); every step is an
-equi-join on (module, name) keys — shuffle-partitioned, skew-free
-(module names are near-unique), no UDFs, no driver loops beyond the
-fixed ``max_hops`` join chain.
+equi-join on (module, name) keys, skew-free (module names are
+near-unique). The lookup joins carry no hints: Spark's size-based
+planner and AQE choose the join strategy. No UDFs, no driver loops
+beyond the fixed ``max_hops`` join chain.
 """
 
 from __future__ import annotations
 
-import contextvars
 import os
 
 from pyspark.sql import Column, DataFrame
@@ -183,7 +183,7 @@ def _normalize_targets(
     completes the path), keep the FEWEST-trims match, and leave the
     target untouched when nothing matches (external imports: os,
     pyspark, …). ``known_modules``: 1-column (module) frame, entity-
-    scale, broadcast."""
+    scale."""
     parts = F.split("target_module", r"\.")
     cands = F.filter(
         F.transform(
@@ -227,9 +227,7 @@ def _normalize_targets(
         F.sequence(F.lit(1), F.size(segs)),
         lambda k: F.array_join(F.slice(segs, 1, k), "."),
     )
-    km = _bc(
-        known_modules.select(F.explode(prefixes).alias("__km")).distinct()
-    )
+    km = known_modules.select(F.explode(prefixes).alias("__km")).distinct()
     hits = (
         exploded.join(km, F.col("__cand") == F.col("__km"))
         .groupBy("target_module")
@@ -237,7 +235,7 @@ def _normalize_targets(
         .select("target_module", F.col("__best.__cand").alias("__norm"))
     )
     return (
-        bindings.join(_bc(hits), "target_module", "left")
+        bindings.join(hits, "target_module", "left")
         .withColumn("target_module", F.coalesce("__norm", "target_module"))
         .drop("__norm")
     )
@@ -250,27 +248,6 @@ def _normalize_targets(
 # profile" that attributed 38 s of 81 s to the attr materialization,
 # now reproducible instead of hand-instrumented).
 PIN_PROFILE: list[tuple[str, float]] = []
-
-
-# Whether lookup-side BROADCAST hints are applied (set per resolve_calls
-# call via broadcast_lookups). The ~42 hinted joins each cost a fixed
-# driver-side broadcast build (~100-200 ms), which pays for itself only
-# when the fact side is large enough to make ~40 sort-merge shuffles
-# the bigger bill: measured crossover sits between the engine's own
-# 80-file repo (SMJ 16 s vs hinted 27 s) and the 865-file pyspark
-# corpus (SMJ 38 s vs hinted 21 s); the 31k-file stress corpus is 81 s
-# vs 47 s. api.index passes batch-file-count >= 500.
-#
-# A ContextVar (not a module global) so two engines resolving
-# concurrently on different threads in one process can't pick up each
-# other's hint setting — the value is scoped to the calling thread and
-# restored on resolve_calls exit.
-_USE_BC: contextvars.ContextVar[bool] = contextvars.ContextVar("ccms_use_bc", default=False)
-
-
-def _bc(df: DataFrame) -> DataFrame:
-    """Broadcast hint, applied only for large-batch resolves (_USE_BC)."""
-    return F.broadcast(df) if _USE_BC.get() else df
 
 
 def _pin(df: DataFrame, label: str = "?") -> DataFrame:
@@ -592,7 +569,6 @@ def resolve_calls(
     stored_relations: DataFrame | None = None,
     max_hops: int = 3,
     max_inherit: int = 3,
-    broadcast_lookups: bool = False,
     scope_seed_files: list[str] | None = None,
 ) -> DataFrame:
     """Rewrite `calls` relations through the import graph.
@@ -627,39 +603,6 @@ def resolve_calls(
     to_entity rewritten to the defining entity's name and
     import_type='resolved'. Non-call rows and unresolvable calls pass
     through unchanged."""
-    # Scope the broadcast hint to this call: every _bc() site runs
-    # eagerly inside the impl, so reset on exit keeps a later caller on
-    # the same thread from inheriting this batch's hint.
-    token = _USE_BC.set(bool(broadcast_lookups))
-    try:
-        return _resolve_calls_impl(
-            relations,
-            bindings,
-            entities,
-            type_binds,
-            return_binds=return_binds,
-            stored_relations=stored_relations,
-            max_hops=max_hops,
-            max_inherit=max_inherit,
-            scope_seed_files=scope_seed_files,
-        )
-    finally:
-        _USE_BC.reset(token)
-
-
-def _resolve_calls_impl(
-    relations: DataFrame,
-    bindings: DataFrame,
-    entities: DataFrame,
-    type_binds: DataFrame | None = None,
-    *,
-    return_binds: DataFrame | None = None,
-    stored_relations: DataFrame | None = None,
-    max_hops: int = 3,
-    max_inherit: int = 3,
-    scope_seed_files: list[str] | None = None,
-) -> DataFrame:
-    """resolve_calls body; _USE_BC is set/reset by the public wrapper."""
     if os.environ.get("CCMS_RESOLVE_PROFILE") == "1":
         PIN_PROFILE.clear()  # profile is per-run, not accumulated across runs
     # last-import-wins isn't statically knowable row-order-free; dedupe
@@ -762,11 +705,15 @@ def _resolve_calls_impl(
         )
 
         # absolute import targets → the path-derived module namespace
-        # (handles project-root == package-dir; see _normalize_targets)
-        known = defs.select(F.col("def_module").alias("module")).unionByName(
-            b.select("module")
-        )
-        b = _pin(_normalize_targets(b, known), "normalize_targets")
+        # (handles project-root == package-dir; see _normalize_targets).
+        # A scoping attempt that fell back after normalizing (edge cap,
+        # closure ≈ corpus) already built b_n from this same module set.
+        if b_n is None:
+            known = defs.select(F.col("def_module").alias("module")).unionByName(
+                b.select("module")
+            )
+            b_n = _normalize_targets(b, known)
+        b = _pin(b_n, "normalize_targets")
     fromb = b.filter(F.col("import_type") == "from")
     modb = b.filter(F.col("import_type") == "module")
     # what a module exports to star consumers: its __all__ when declared
@@ -923,11 +870,11 @@ def _resolve_calls_impl(
         F.col("member").alias("b_member"),
     )
     bare = bare.join(
-        _bc(cb),
+        cb,
         (bare.file_path == cb.b_file) & (bare.to_entity == cb.b_local),
         "left",
     ).join(
-        _bc(defs),
+        defs,
         (F.col("b_tmod") == defs.def_module) & (F.col("b_member") == defs.def_name),
         "left",
     )
@@ -1106,7 +1053,7 @@ def _resolve_calls_impl(
 
     bare = (
         bare.join(
-            _bc(star_hits),
+            star_hits,
             (F.col("file_path") == star_hits.st_file)
             & (F.col("to_entity") == star_hits.st_name),
             "left",
@@ -1144,7 +1091,7 @@ def _resolve_calls_impl(
         F.col("member").alias("e_member"),
     )
     attr = attr.join(
-        _bc(cb3), (attr.file_path == cb3.e_file) & (attr.context == cb3.e_local), "left"
+        cb3, (attr.file_path == cb3.e_file) & (attr.context == cb3.e_local), "left"
     )
 
     # (a) base is a module: the head is a module-alias binding
@@ -1156,7 +1103,7 @@ def _resolve_calls_impl(
         F.col("target_module").alias("m_tmod"),
     )
     attr = attr.join(
-        _bc(mb), (attr.file_path == mb.m_file) & (attr.__b0 == mb.m_local), "left"
+        mb, (attr.file_path == mb.m_file) & (attr.__b0 == mb.m_local), "left"
     ).withColumn(
         "__mod",
         F.coalesce(
@@ -1178,7 +1125,7 @@ def _resolve_calls_impl(
         F.col("member").alias("c_member"),
     )
     attr = attr.join(
-        _bc(cb2),
+        cb2,
         (F.col("__mod") == cb2.c_module) & (attr.to_entity == cb2.c_local),
         "left",
     ).withColumn(
@@ -1189,7 +1136,7 @@ def _resolve_calls_impl(
     # namespace-through-barrel: a (module, name) the module only
     # supplies via an unambiguous star-export hops once more (star_mod)
     attr = attr.join(
-        _bc(star_mod),
+        star_mod,
         (F.col("__mod_final") == F.col("sm_mod"))
         & (F.col("__name_final") == F.col("sm_name")),
         "left",
@@ -1202,7 +1149,7 @@ def _resolve_calls_impl(
         F.col("def_module").alias("d1_module"), F.col("def_name").alias("d1_name")
     )
     attr = attr.join(
-        _bc(d1),
+        d1,
         (F.col("__mod_final") == d1.d1_module) & (F.col("__name_final") == d1.d1_name),
         "left",
     )
@@ -1248,7 +1195,7 @@ def _resolve_calls_impl(
         F.col("k_name").alias("l1_name"),
     )
     attr = attr.join(
-        _bc(lc1),
+        lc1,
         (F.col("file_path") == lc1.l1_file) & (F.col("context") == lc1.l1_name),
         "left",
     )
@@ -1311,14 +1258,14 @@ def _resolve_calls_impl(
         )
         attr = (
             attr.join(
-                _bc(tbf),
+                tbf,
                 (F.col("file_path") == tbf.tf_file)
                 & (F.col("from_entity") == tbf.tf_scope)
                 & (F.col("context") == tbf.tf_var),
                 "left",
             )
             .join(
-                _bc(tbs),
+                tbs,
                 (F.col("file_path") == tbs.ts_file)
                 & (F.split(F.col("from_entity"), r"\.")[0] == tbs.ts_scope)
                 & (F.col("context") == tbs.ts_var)
@@ -1329,7 +1276,7 @@ def _resolve_calls_impl(
                 "left",
             )
             .join(
-                _bc(tbm),
+                tbm,
                 (F.col("file_path") == tbm.tm_file)
                 & (F.col("file_path") == tbm.tm_scope)
                 & (F.col("context") == tbm.tm_var),
@@ -1374,21 +1321,21 @@ def _resolve_calls_impl(
     ctor_rem = F.regexp_replace(F.col("__ctor.base"), r"^[^.]+", "")
     attr = (
         attr.join(
-            _bc(cb4),
+            cb4,
             F.col("__ctor.base").isNull()
             & (F.col("file_path") == cb4.c4_file)
             & (F.col("__ctor.ctor") == cb4.c4_local),
             "left",
         )
         .join(
-            _bc(lc2),
+            lc2,
             F.col("__ctor.base").isNull()
             & (F.col("file_path") == lc2.l2_file)
             & (F.col("__ctor.ctor") == lc2.l2_name),
             "left",
         )
         .join(
-            _bc(mb2),
+            mb2,
             F.col("__ctor.base").isNotNull()
             & (F.col("file_path") == mb2.m2_file)
             & (ctor_head == mb2.m2_local),
@@ -1456,7 +1403,7 @@ def _resolve_calls_impl(
     )
     attr = (
         attr.join(
-            _bc(cb5),
+            cb5,
             (F.col("__cls.mod") == cb5.g_module) & (F.col("__cls.name") == cb5.g_local),
             "left",
         )
@@ -1596,7 +1543,7 @@ def _resolve_calls_impl(
         fx = fx.filter(~F.col("fx_param"))
         attr = (
             attr.join(
-                _bc(fx),
+                fx,
                 (F.col("__cm") == fx.fx_module)
                 & (F.col("__cn") == fx.fx_func)
                 & (fx.fx_async == F.col("__aw")),
@@ -1704,14 +1651,14 @@ def _resolve_calls_impl(
             )
             attr = (
                 attr.join(
-                    _bc(b7f),
+                    b7f,
                     (F.col("file_path") == b7f.b7f_file)
                     & (F.col("from_entity") == b7f.b7f_scope)
                     & (F.col("__ctor.base") == b7f.b7f_var),
                     "left",
                 )
                 .join(
-                    _bc(b7s),
+                    b7s,
                     (F.col("file_path") == b7s.b7s_file)
                     & (F.split(F.col("from_entity"), r"\.")[0] == b7s.b7s_scope)
                     & (F.col("__ctor.base") == b7s.b7s_var)
@@ -1722,7 +1669,7 @@ def _resolve_calls_impl(
                     "left",
                 )
                 .join(
-                    _bc(b7m),
+                    b7m,
                     (F.col("file_path") == b7m.b7m_file)
                     & (F.col("file_path") == b7m.b7m_scope)
                     & (F.col("__ctor.base") == b7m.b7m_var),
@@ -1730,14 +1677,14 @@ def _resolve_calls_impl(
                 )
                 .withColumn("__bvar", F.coalesce("b7f_c", "b7s_c", "b7m_c"))
                 .join(
-                    _bc(x7),
+                    x7,
                     F.col("__bvar.base").isNull()
                     & (F.col("file_path") == x7.x7_file)
                     & (F.col("__bvar.ctor") == x7.x7_local),
                     "left",
                 )
                 .join(
-                    _bc(l7),
+                    l7,
                     F.col("__bvar.base").isNull()
                     & (F.col("file_path") == l7.l7_file)
                     & (F.col("__bvar.ctor") == l7.l7_name),
@@ -2143,7 +2090,7 @@ def _resolve_calls_impl(
             # dimension-scale join nodes to the attr plan — no
             # relation-scale replay — and saves one serial eager job.
             attr = attr.join(
-                _bc(mkf),
+                mkf,
                 (F.col("file_path") == mkf.mk_file)
                 & (F.col("from_entity") == mkf.mk_scope)
                 & (F.col("__ctor.base") == mkf.mk_marker),
@@ -2156,14 +2103,14 @@ def _resolve_calls_impl(
 
         attr = (
             attr.join(
-                _bc(cb6),
+                cb6,
                 base_is_name
                 & (F.col("file_path") == cb6.x6_file)
                 & (F.col("__ctor.base") == cb6.x6_local),
                 "left",
             )
             .join(
-                _bc(lc3),
+                lc3,
                 base_is_name
                 & (F.col("file_path") == lc3.l3_file)
                 & (F.col("__ctor.base") == lc3.l3_name),
@@ -2196,7 +2143,7 @@ def _resolve_calls_impl(
                 ),
             )
             .join(
-                _bc(fx2),
+                fx2,
                 (F.col("__bcls.mod") == fx2.f2_module)
                 & (
                     F.concat_ws(".", F.col("__bcls.name"), F.col("__ctor.ctor"))
@@ -2214,13 +2161,11 @@ def _resolve_calls_impl(
             # NULL on param rows by construction, so the two candidates
             # never compete.
             .join(
-                _bc(
-                    chased.select(
-                        F.col("file_path").alias("tg7_file"),
-                        F.col("local_name").alias("tg7_local"),
-                        F.col("target_module").alias("tg7_tmod"),
-                        F.col("member").alias("tg7_member"),
-                    )
+                chased.select(
+                    F.col("file_path").alias("tg7_file"),
+                    F.col("local_name").alias("tg7_local"),
+                    F.col("target_module").alias("tg7_tmod"),
+                    F.col("member").alias("tg7_member"),
                 ),
                 F.col("f2_param")
                 & (F.col("file_path") == F.col("tg7_file"))
@@ -2228,12 +2173,10 @@ def _resolve_calls_impl(
                 "left",
             )
             .join(
-                _bc(
-                    classes.select(
-                        F.col("file_path").alias("tl7_file"),
-                        F.col("k_module").alias("tl7_module"),
-                        F.col("k_name").alias("tl7_name"),
-                    )
+                classes.select(
+                    F.col("file_path").alias("tl7_file"),
+                    F.col("k_module").alias("tl7_module"),
+                    F.col("k_name").alias("tl7_name"),
                 ),
                 F.col("f2_param")
                 & (F.col("file_path") == F.col("tl7_file"))
@@ -2366,14 +2309,14 @@ def _resolve_calls_impl(
             )
             attr = (
                 attr.join(
-                    _bc(v8f),
+                    v8f,
                     (F.col("file_path") == v8f.v8f_file)
                     & (F.col("from_entity") == v8f.v8f_scope)
                     & (pv == v8f.v8f_var),
                     "left",
                 )
                 .join(
-                    _bc(v8m),
+                    v8m,
                     (F.col("file_path") == v8m.v8m_file)
                     & (F.col("file_path") == v8m.v8m_scope)
                     & (pv == v8m.v8m_var),
@@ -2381,21 +2324,21 @@ def _resolve_calls_impl(
                 )
                 .withColumn("__pvb", F.coalesce("v8f_c", "v8m_c"))
                 .join(
-                    _bc(v9),
+                    v9,
                     F.col("__pvb.base").isNull()
                     & (F.col("file_path") == v9.v9_file)
                     & (F.col("__pvb.ctor") == v9.v9_local),
                     "left",
                 )
                 .join(
-                    _bc(v10),
+                    v10,
                     F.col("__pvb.base").isNull()
                     & (F.col("file_path") == v10.v10_file)
                     & (F.col("__pvb.ctor") == v10.v10_name),
                     "left",
                 )
                 .join(
-                    _bc(lp),
+                    lp,
                     (two_self | base_prop_self)
                     & (F.col("file_path") == lp.lp_file)
                     & (F.split(F.col("from_entity"), r"\.")[0] == lp.lp_name),
@@ -2664,7 +2607,7 @@ def _resolve_calls_impl(
             )
             attr = (
                 attr.join(
-                    _bc(ap_tbl),
+                    ap_tbl,
                     (F.col("__hcls.mod") == ap_tbl.apt_mod)
                     & (F.col("__hcls.name") == ap_tbl.apt_name)
                     & (pp == ap_tbl.apt_attr),
@@ -2707,7 +2650,7 @@ def _resolve_calls_impl(
             )
             attr = (
                 attr.join(
-                    _bc(f2b),
+                    f2b,
                     F.col("__ctor").isNotNull()
                     & F.col("__aacls").isNotNull()
                     & (F.col("__aacls.mod") == f2b.f2b_module)
@@ -2777,20 +2720,20 @@ def _resolve_calls_impl(
             )
             attr = (
                 attr.join(
-                    _bc(vtb),
+                    vtb,
                     (F.col("e_tmod") == vtb.sg_mod)
                     & (F.col("e_member") == vtb.sg_var),
                     "left",
                 )
                 .join(
-                    _bc(sg9),
+                    sg9,
                     F.col("sg_c.base").isNull()
                     & (F.col("sg_file") == sg9.sg9_file)
                     & (F.col("sg_c.ctor") == sg9.sg9_local),
                     "left",
                 )
                 .join(
-                    _bc(sg10),
+                    sg10,
                     F.col("sg_c.base").isNull()
                     & (F.col("sg_file") == sg10.sg10_file)
                     & (F.col("sg_c.ctor") == sg10.sg10_name),
@@ -2909,7 +2852,7 @@ def _resolve_calls_impl(
         F.col("k_name").alias("sp_name"),
     )
     attr = attr.join(
-        _bc(sup_cls),
+        sup_cls,
         is_super
         & (F.col("file_path") == sup_cls.sp_file)
         & (F.split(F.col("from_entity"), r"\.")[0] == sup_cls.sp_name),
@@ -2948,7 +2891,7 @@ def _resolve_calls_impl(
         "h_def",
     )
     attr = attr.join(
-        _bc(hits),
+        hits,
         (F.col("__cm") == hits.h_mod)
         & (F.col("__cn") == hits.h_name)
         & (F.col("to_entity") == hits.h_method),
@@ -2961,7 +2904,7 @@ def _resolve_calls_impl(
         F.col("h_def").alias("hs_def"),
     )
     attr = attr.join(
-        _bc(hits_sup),
+        hits_sup,
         (F.col("sp_mod") == hits_sup.hs_mod)
         & (F.col("sp_name") == hits_sup.hs_name)
         & (F.col("to_entity") == hits_sup.hs_method),

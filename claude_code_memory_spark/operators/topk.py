@@ -102,11 +102,9 @@ def build_postings(
 
     `sparse_topk` explodes the stored sparse vectors on every query —
     fine for one-off scans, wrong for a query-serving corpus. Exploding
-    ONCE into a postings table and persisting it with
-    `io.write_clustered(postings, path, "term_index")` turns each query
-    into a term_index-IN-list scan: row groups holding non-query terms
-    are pruned (tests/test_layout.py mechanics), so per-query IO is
-    proportional to the touched postings lists — the inverted-index
+    ONCE into a postings table, clustered on term_index, turns a
+    query into a term_index-IN-list scan whose cost follows the
+    touched postings lists, not the corpus — the inverted-index
     property that makes keyword search sublinear, same reason Qdrant
     keeps a sparse index structure (storage/qdrant.py:228-239)."""
     return chunks.select(

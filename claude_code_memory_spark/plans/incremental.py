@@ -132,8 +132,7 @@ class TableStore:
         return self._assemble(table, meta)
 
     def _new_snapshot_dir(self, table: str, df: DataFrame,
-                          partition_by: list[str] | None,
-                          stats: str = "always") -> str:
+                          partition_by: list[str] | None) -> str:
         self._counter = getattr(self, "_counter", 0) + 1
         snap = f"snap-{int(time.time() * 1000)}-{os.getpid()}-{self._counter}"
         writer = df.write.mode("overwrite")
@@ -144,26 +143,6 @@ class TableStore:
             # search never lists the implementation partitions
             writer = writer.partitionBy(*partition_by)
         writer.parquet(os.path.join(self.root, table, snap))
-        snap_dir = os.path.join(self.root, table, snap)
-        # file-level min/max stats manifest (plans/skipping.py) — footer
-        # metadata only, written before the commit pointer ever references
-        # this dir; read_pruned consults it to skip whole files. Under
-        # stats="auto" (delta commits) tiny snapshots skip the stats
-        # job: a statless dir scans fully, which for KB-scale deltas
-        # costs less than the fixed Spark job that would prune it (r12 —
-        # seven per-table stats jobs dominated a 1-file commit).
-        if stats == "auto":
-            size = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _d, fs in os.walk(snap_dir)
-                for f in fs
-                if f.endswith(".parquet")
-            )
-            if size < self.STATS_MIN_BYTES:
-                return snap
-        from claude_code_memory_spark.plans.skipping import collect_file_stats
-
-        collect_file_stats(self.spark, snap_dir)
         return snap
 
     def _log_path(self, table: str) -> str:
@@ -238,22 +217,6 @@ class TableStore:
                     out.append(json.loads(line))
         return out
 
-    def table_bytes(self, table: str) -> int:
-        """On-disk parquet bytes across the table's current snapshots —
-        pure filesystem metadata, no Spark job (0 for absent tables).
-        Used as the corpus-size signal for plan decisions that must be
-        made before any job runs (e.g. resolve's broadcast-hint gate)."""
-        meta = self._manifest(table)
-        if meta is None:
-            return 0
-        total = 0
-        for s in meta["snapshots"]:
-            for root, _dirs, files in os.walk(os.path.join(self.root, table, s)):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        total += os.path.getsize(os.path.join(root, f))
-        return total
-
     def read_version(self, table: str, version: int) -> DataFrame:
         """Time-travel read: the table as of commit ``version`` (0-based,
         see `history`). Raises if the version never existed or its
@@ -288,11 +251,6 @@ class TableStore:
     # into one periodically is exactly Delta/Iceberg OPTIMIZE. O(corpus)
     # once per MAX_SNAPSHOTS appends = amortized O(1) per append.
     MAX_SNAPSHOTS = 32
-
-    # snapshots smaller than this skip the footer-stats job (see
-    # _new_snapshot_dir): a full scan of a sub-4MB dir is cheaper than
-    # the pruning job that would avoid it
-    STATS_MIN_BYTES = 4 << 20
 
     def append(self, table: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
         """Append rows as an additional manifest snapshot — O(new rows) IO,
@@ -347,7 +305,7 @@ class TableStore:
         bytes."""
         meta = self._manifest(table)
         assert meta is not None, "merge_delta requires an existing table"
-        snap = self._new_snapshot_dir(table, new_rows, partition_by, stats="auto")
+        snap = self._new_snapshot_dir(table, new_rows, partition_by)
         self._counter = getattr(self, "_counter", 0) + 1
         ts = f"ts-{int(time.time() * 1000)}-{os.getpid()}-{self._counter}"
         ts_path = os.path.join(self.root, table, ts)
@@ -361,43 +319,16 @@ class TableStore:
         tombstones = (meta.get("tombstones") or [None] * (len(snapshots) - 1)) + [ts]
         self._commit(table, snapshots, meta.get("schema", new_rows.schema.json()), tombstones)
 
-    def optimize(
-        self,
-        table: str,
-        cluster_by: list[str] | None = None,
-        partition_by: list[str] | None = None,
-        target_files: int | None = None,
-        zorder_by: tuple[str, str] | None = None,
-    ) -> None:
-        """Delta ``OPTIMIZE [ZORDER/CLUSTER BY]`` analogue: rewrite the
-        table as ONE new clustered snapshot. ``cluster_by`` range-
-        clusters (perfect file skipping on one column); ``zorder_by``
-        Morton-tiles two columns (io.zorder_cluster) so `read_pruned`
-        skips files on EITHER column or a 2-D box. Either way it also
-        folds append snapshots, so it subsumes compaction. Time travel
-        to prior versions is preserved (new commit, old snapshots
-        untouched until vacuum)."""
+    def optimize(self, table: str, partition_by: list[str] | None = None) -> None:
+        """Compaction (Delta ``OPTIMIZE`` without ZORDER): fold the
+        table's snapshots, appends and tombstoned deltas alike, into ONE
+        new snapshot with the same rows. Time travel to prior versions
+        is preserved (new commit, old snapshots untouched until
+        vacuum)."""
         df = self.read(table)
         if df is None:
             return
-        n = target_files or max(2, self.spark.sparkContext.defaultParallelism)
-        if zorder_by:
-            from claude_code_memory_spark.io import zorder_cluster
-
-            df = zorder_cluster(df, *zorder_by, num_files=n)
-        elif cluster_by:
-            df = df.repartitionByRange(n, *cluster_by)
         self.write(table, df, partition_by)
-
-    def read_pruned(self, table: str, predicates: list[tuple]) -> DataFrame | None:
-        """`read` + file-level data skipping: scans only the part files
-        whose footer min/max stats might satisfy ``predicates``
-        ([(col, op, literal)], AND-combined), then applies the predicates
-        as a real filter — result equals read().filter(...), IO doesn't
-        (plans/skipping.py)."""
-        from claude_code_memory_spark.plans.skipping import pruned_read
-
-        return pruned_read(self, table, predicates)
 
     def manifest_key(self, table: str) -> tuple | None:
         """Stable identifier of a table's current snapshot set — changes on

@@ -593,3 +593,41 @@ def test_first_build_missing_endpoint_branch_is_provably_empty(
     full = eng._invalid_relations(None, first_build=False)
     skipped = eng._invalid_relations(None, first_build=True)
     assert key_set(skipped) == key_set(full)
+
+
+def test_optimize_compacts_chunks_and_keeps_results(spark, temp_repo, tmp_path):
+    """optimize() folds the chunks snapshots of an index and two appended
+    memories into one snapshot; the table, searches and
+    get_implementation answer as before it ran. The snapshot dirs also
+    carry a `_filestats.json` sidecar, as stores written by earlier
+    versions do: the Spark reader and the serving snapshot must ignore it."""
+    store_dir = str(tmp_path / "store")
+    eng = CodeMemoryEngine(spark, store_dir)
+    eng.index(temp_repo)
+    eng.add_memory("deploy_ritual", "always run smoke tests before deploying")
+    eng.add_memory("cache_rule", "invalidate the cache after every write")
+    snaps = eng.store._manifest("chunks")["snapshots"]
+    assert len(snaps) == 3
+    for table in ("chunks", "vectors"):
+        for snap in eng.store._manifest(table)["snapshots"]:
+            with open(os.path.join(store_dir, table, snap, "_filestats.json"), "w") as fh:
+                fh.write('{"files": {"part-0.parquet": {"entity_name": "not parquet"}}}')
+
+    def rows(df):
+        return [tuple(r) for r in df.collect()]
+
+    def answers(engine):
+        return {
+            "chunks": sorted(rows(engine.store.read("chunks")), key=repr),
+            "keyword": rows(engine.search("helper", mode="keyword", k=5)),
+            "hybrid": rows(engine.search("compute numbers", mode="hybrid", k=5)),
+            "semantic": rows(engine.search("smoke tests before deploying", mode="semantic", k=5)),
+            "impl": sorted(rows(engine.get_implementation("compute", scope="logical")), key=repr),
+        }
+
+    before = answers(CodeMemoryEngine(spark, store_dir))
+    assert before["impl"] and before["keyword"]
+    eng.optimize()
+    assert len(eng.store._manifest("chunks")["snapshots"]) == 1
+    assert answers(eng) == before
+    assert answers(CodeMemoryEngine(spark, store_dir)) == before

@@ -105,14 +105,6 @@ def test_narrow_batch_aligns_to_stored_schema(spark, store):
     assert _as_set(store.read("t")) == {("a", 1, "x"), ("b", 2, None)}
 
 
-def test_pruned_read_equals_filtered_read_on_delta_table(spark, store):
-    merge_replace_by_file(store, "t", _rows(spark, [("a", 1), ("b", 5)]), _files(spark, []))
-    merge_replace_by_file(store, "t", _rows(spark, [("a", 9)]), _files(spark, ["a"]))
-    got = _as_set(store.read_pruned("t", [("val", ">", 2)]))
-    want = _as_set(store.read("t").filter("val > 2"))
-    assert got == want == {("b", 5), ("a", 9)}
-
-
 def test_manifest_key_changes_per_delta_commit(spark, store):
     merge_replace_by_file(store, "t", _rows(spark, [("a", 1)]), _files(spark, []))
     k0 = store.manifest_key("t")

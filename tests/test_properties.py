@@ -255,71 +255,6 @@ def test_zorder_n_matches_2d_layout():
         assert zorder_value_n([x, y], 8) == zorder_value(x, y, 8)
 
 
-# --- file-skipping pruner: exclusion is always provably correct ---------
-
-from claude_code_memory_spark.plans.skipping import _file_may_match  # noqa: E402
-
-
-def _pred_matches(v, op, val):
-    if op == "=":
-        return v == val
-    if op == "<":
-        return v < val
-    if op == "<=":
-        return v <= val
-    if op == ">":
-        return v > val
-    if op == ">=":
-        return v >= val
-    if op == "in":
-        return v in val
-    if op == "!=":  # unsupported by the pruner: it must keep the file
-        return v != val
-    raise AssertionError(op)
-
-
-def _pred_strategy(values):
-    scalar = st.tuples(
-        st.just("k"),
-        st.sampled_from(["=", "<", "<=", ">", ">=", "!="]),
-        values,
-    )
-    inlist = st.tuples(
-        st.just("k"), st.just("in"), st.lists(values, min_size=0, max_size=3)
-    )
-    return st.one_of(scalar, inlist)
-
-
-@given(
-    file_rows=st.lists(st.integers(-50, 50), min_size=1, max_size=30),
-    preds=st.lists(_pred_strategy(st.integers(-60, 60)), min_size=1, max_size=4),
-)
-@settings(max_examples=300, deadline=None)
-def test_pruner_never_excludes_a_matching_file_ints(file_rows, preds):
-    """If _file_may_match says False, NO row in the file satisfies the
-    conjunction — the invariant that makes skipping an IO-only
-    optimization. (The converse — keeping a non-matching file — is
-    allowed: pruning is conservative.)"""
-    cols = {"k": {"min": min(file_rows), "max": max(file_rows), "nulls": 0}}
-    if not _file_may_match(cols, preds):
-        for v in file_rows:
-            assert not all(_pred_matches(v, op, val) for _c, op, val in preds)
-
-
-@given(
-    file_rows=st.lists(st.text(alphabet="abcz", max_size=4), min_size=1, max_size=20),
-    preds=st.lists(
-        _pred_strategy(st.text(alphabet="abcz", max_size=4)), min_size=1, max_size=3
-    ),
-)
-@settings(max_examples=200, deadline=None)
-def test_pruner_never_excludes_a_matching_file_strings(file_rows, preds):
-    cols = {"k": {"min": min(file_rows), "max": max(file_rows), "nulls": 0}}
-    if not _file_may_match(cols, preds):
-        for v in file_rows:
-            assert not all(_pred_matches(v, op, val) for _c, op, val in preds)
-
-
 # --- KMV bottom-k sketches: the merge law is exact set algebra --------
 
 

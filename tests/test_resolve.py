@@ -1910,67 +1910,6 @@ def test_resolve_accepts_legacy_bind_schemas(spark):
     assert ("use", "Tool.run") in got
 
 
-@pytest.mark.slow
-def test_broadcast_lookups_plan_shape(spark):
-    """broadcast_lookups=True must plan the attr pipeline's lookup joins
-    as BroadcastHashJoins (the 362k-entity stress corpus measured 81s of
-    ~40 sort-merge shuffles without it, 47s with); False (the default,
-    right for small batches where ~42 broadcast builds cost more than
-    the shuffles) must keep the legacy sort-merge shape. Same results
-    either way — only the physical strategy moves."""
-    import contextlib
-    import io
-
-    from claude_code_memory_spark.sources.python_parser import (
-        PARSED_SCHEMA,
-        return_bindings,
-    )
-
-    fixture = {
-        "lib.py": (
-            "class Tool:\n"
-            "    def run(self):\n"
-            "        return 1\n"
-        ),
-        "app.py": (
-            "from lib import Tool\n"
-            "\n"
-            "def use():\n"
-            "    t = Tool()\n"
-            "    return t.run()\n"
-        ),
-    }
-    recs = []
-    for path, src in fixture.items():
-        recs.extend(parse_python_source(path, src))
-    parsed = spark.createDataFrame(recs, PARSED_SCHEMA)
-    entities, relations, _ = split_parsed(parsed)
-
-    def plan_of(bc):
-        out = resolve_calls(
-            relations,
-            import_bindings(parsed),
-            entities,
-            type_bindings(parsed),
-            return_binds=return_bindings(parsed),
-            broadcast_lookups=bc,
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            out.explain(mode="simple")
-        rows = {
-            (r["from_entity"], r["to_entity"])
-            for r in out.filter(out.import_type == "resolved").collect()
-        }
-        return buf.getvalue(), rows
-
-    plan_bc, rows_bc = plan_of(True)
-    plan_smj, rows_smj = plan_of(False)
-    assert rows_bc == rows_smj and ("use", "Tool.run") in rows_bc
-    assert plan_bc.count("BroadcastHashJoin") > plan_smj.count("BroadcastHashJoin")
-    assert plan_smj.count("SortMergeJoin") > plan_bc.count("SortMergeJoin")
-
-
 def test_awaited_bind_blocks_without_return_binds(spark):
     """`c = await mk()` must never type c as the factory's class when NO
     return_binds frame is supplied: without a factory table nothing can
@@ -2044,29 +1983,6 @@ def test_normalize_targets_is_row_id_free(spark):
     with contextlib.redirect_stdout(buf):
         out.explain(mode="extended")
     assert "monotonically_increasing_id" not in buf.getvalue()
-
-
-def test_use_bc_contextvar_reset_on_exit(spark):
-    """resolve_calls(broadcast_lookups=True) must not leak the hint to a
-    later resolve on the same thread (_USE_BC is token-reset on exit)."""
-    from claude_code_memory_spark.operators import resolve as R
-
-    recs = []
-    for path, src in FIXTURE.items():
-        recs.extend(parse_python_source(path, src))
-    from claude_code_memory_spark.sources.python_parser import PARSED_SCHEMA
-
-    parsed = spark.createDataFrame(recs, PARSED_SCHEMA)
-    entities, relations, _ = split_parsed(parsed)
-    assert R._USE_BC.get() is False
-    resolve_calls(
-        relations,
-        import_bindings(parsed),
-        entities,
-        type_bindings(parsed),
-        broadcast_lookups=True,
-    ).count()
-    assert R._USE_BC.get() is False, "broadcast hint leaked past resolve_calls exit"
 
 
 # --- reachable-module scoping (r13) ----------------------------------------

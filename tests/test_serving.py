@@ -165,7 +165,7 @@ def spark_read_graph(eng, entity, mode, entity_types=None, limit=300):
 
 
 def spark_get_implementation(eng, name, scope):
-    own = eng.store.read_pruned("chunks", [("entity_name", "=", name)]).filter(
+    own = eng.store.read("chunks").filter(F.col("entity_name") == name).filter(
         F.col("chunk_type") == "implementation")
     if scope == "minimal":
         return own

@@ -252,20 +252,3 @@ def test_delete_where_and_erasure(spark, tmp_path):
     with _pytest.raises(ValueError, match="vacuumed"):
         store.read_version("t", 0)
     assert {r["id"] for r in store.read("t").collect()} == {1, 3}
-
-
-def test_table_bytes_filesystem_only(spark, tmp_path):
-    """table_bytes sums on-disk parquet across the current manifest's
-    snapshots without running a Spark job; absent tables report 0. It
-    is the corpus-size signal for the resolve broadcast-hint gate."""
-    from claude_code_memory_spark.plans.incremental import TableStore
-
-    store = TableStore(spark, str(tmp_path / "tb"))
-    assert store.table_bytes("entities") == 0
-    df = spark.range(1000).withColumnRenamed("id", "v")
-    store.write("entities", df)
-    b1 = store.table_bytes("entities")
-    assert b1 > 0
-    store.append("entities", spark.range(1000, 2000).withColumnRenamed("id", "v"))
-    b2 = store.table_bytes("entities")
-    assert b2 > b1  # append adds a snapshot; bytes accumulate

@@ -25,9 +25,10 @@ fast=0
 
 fail=0
 step() {
-  echo "== ci: $1"
+  local label=$1
   shift
-  "$@" || { echo "== ci: FAILED: $1"; fail=1; }
+  echo "== ci: $label"
+  "$@" || { echo "== ci: FAILED: $label"; fail=1; }
 }
 
 bench() {
