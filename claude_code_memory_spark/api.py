@@ -207,28 +207,6 @@ class CodeMemoryEngine:
                     & (F.col("to_entity") == "property")
                 )
             ).join(F.broadcast(replaced), "file_path", "left_anti")
-        # reachable-module scoping seeds (r13): a small incremental batch
-        # hands resolve_calls its file list so the corpus-scale lookup
-        # tables are pre-filtered to the batch's import-reachable modules
-        # (result-identical; see resolve_calls docstring). Full/large
-        # indexes skip it — their reachable closure is ~the corpus, so
-        # the filter would cost two collects and buy nothing. The path
-        # collect is one tiny job on the already-cached `changed` frame.
-        import os as _os
-
-        scope_seed_files = None
-        if (
-            state is not None
-            and 0 < n_changed <= 500
-            # A/B kill switch (evidence runs + the forced-equivalence
-            # test): scoping is result-identical by construction, so the
-            # only way to MEASURE it is to disable it on the same tree
-            and _os.environ.get("CCMS_NO_SCOPE") != "1"
-        ):
-            scope_seed_files = [
-                r["relative_path"]
-                for r in changed.select("relative_path").collect()
-            ]
         relations = resolve_calls(
             relations,
             all_bindings,
@@ -236,7 +214,6 @@ class CodeMemoryEngine:
             all_tbinds,
             return_binds=all_rbinds,
             stored_relations=stored_rels,
-            scope_seed_files=scope_seed_files,
         )
 
         # J4: pre-storage orphan filter — entity universe = stored ∪ batch.
@@ -249,9 +226,10 @@ class CodeMemoryEngine:
         relations = self._filter_resolvable(relations, universe.distinct()).observe(
             obs_relations, F.count(F.lit(1)).alias("n")
         )
-        # the resolve+validate lineage is ~a dozen joins deep and has
-        # three consumers (relation chunks, the merge write, cleanup
-        # scoping); persist the entity-scale result so each consumer
+        # the resolve+validate lineage is ~a dozen joins deep and has two
+        # consumers (relation chunks and the relations merge write; the
+        # J7-scoped _orphan_cleanup re-reads the merged table from the
+        # store); persist the entity-scale result so each consumer
         # reuses one computation instead of replaying the join tree
         relations = relations.persist()
         if profile:

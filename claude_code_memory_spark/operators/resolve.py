@@ -73,82 +73,6 @@ def module_of_path(path_col: Column | str) -> Column:
     return F.regexp_replace(p, r"^__init__$", "")
 
 
-def module_of_path_py(path: str) -> str:
-    """Driver-side twin of ``module_of_path`` (same rules, plain Python) —
-    used to derive the scope seeds of an incremental batch from its file
-    paths without a Spark job. Pinned to the Column version by
-    ``test_resolve.py::test_module_of_path_py_matches_column``."""
-    import re
-
-    p = re.sub(r"^\./", "", path)
-    p = re.sub(r"(^|/)index\.(js|jsx|ts|tsx|mjs|cjs)$", "", p)
-    p = re.sub(r"\.(py|js|jsx|ts|tsx|mjs|cjs)$", "", p)
-    p = re.sub(r"/$", "", p)
-    p = p.replace("/", ".")
-    p = re.sub(r"\.__init__$", "", p)
-    return re.sub(r"^__init__$", "", p)
-
-
-# Reachability-scoping caps (r13): the driver-side BFS collects the
-# module-level import graph — module-COUNT-scale metadata, never row
-# data. Past these caps the resolve falls back to the unscoped path
-# (identical semantics, just the full lookup tables), so a 100 TB corpus
-# with a pathological module graph degrades to round-12 behavior rather
-# than a driver OOM.
-SCOPE_MAX_SEED_MODS = 1_000
-SCOPE_MAX_MODULES = 200_000
-SCOPE_MAX_EDGES = 500_000
-
-# Introspection of the most recent resolve_calls scope decision (tests/
-# evidence): {"scoped": bool, "why": str, "seeds": n, "modules": n,
-# "edges": n, "reach": n}. Overwritten per call; never read by the
-# pipeline itself.
-LAST_SCOPE_INFO: dict = {}
-
-
-def _reachable_modules(
-    seed_mods: set[str], edges: list, all_mods: list
-) -> set[str] | None:
-    """Transitive closure of the module import graph from ``seed_mods``,
-    with prefix-descendant expansion: when module ``m`` is reachable,
-    every known module named ``m.<suffix>`` is too. The expansion covers
-    the resolver's string-built submodule probes (``import pkg;
-    pkg.sub.f()`` concatenates ``pkg`` + ``.sub`` without any pkg→
-    pkg.sub import edge existing; likewise ``from . import utils`` →
-    ``pkg.utils`` and the ctor/factory dotted-base concatenations).
-    Returns the reachable module-name set — a strict SUPERSET of every
-    module any lookup join can be probed with for this batch, because
-    every probe key is either a seed file's own module, an (absolutized,
-    normalized) import-edge target of a reachable module, or a dotted
-    extension of one (see the r13 join-key inventory in
-    OPTIMIZATION_r13.md). Returns None when the closure covers ~all
-    modules (scoping would filter nothing)."""
-    import bisect
-
-    mods_sorted = sorted(set(all_mods))
-    adj: dict[str, list[str]] = {}
-    for m, t in edges:
-        adj.setdefault(m, []).append(t)
-    seen = set(seed_mods)
-    stack = list(seed_mods)
-    while stack:
-        m = stack.pop()
-        for t in adj.get(m, ()):
-            if t not in seen:
-                seen.add(t)
-                stack.append(t)
-        if m:  # '' has no dotted descendants (no module starts with '.')
-            lo = bisect.bisect_left(mods_sorted, m + ".")
-            hi = bisect.bisect_left(mods_sorted, m + "/")  # '/' > '.' in ASCII
-            for d in mods_sorted[lo:hi]:
-                if d not in seen:
-                    seen.add(d)
-                    stack.append(d)
-    if len(seen) >= 0.9 * max(len(mods_sorted), 1):
-        return None  # closure ≈ corpus: filtering would buy nothing
-    return seen
-
-
 def _absolutize(bindings: DataFrame) -> DataFrame:
     """Resolve leading-dot relative targets against the importing file's
     package: in ``pkg/sub.py`` (module pkg.sub), ``.m`` → ``pkg.m`` and
@@ -569,7 +493,6 @@ def resolve_calls(
     stored_relations: DataFrame | None = None,
     max_hops: int = 3,
     max_inherit: int = 3,
-    scope_seed_files: list[str] | None = None,
 ) -> DataFrame:
     """Rewrite `calls` relations through the import graph.
 
@@ -587,18 +510,10 @@ def resolve_calls(
     the `inherits` edges of untouched files, so without this the
     ancestor closure would silently forget every cross-file base class
     on reindex.
-    ``scope_seed_files``: the batch's file paths (r13, incremental
-    batches only). When given, every corpus-scale lookup table
-    (bindings, defs, classes, type/return binds, stored inherits) is
-    pre-filtered to the modules REACHABLE from those files through the
-    import graph (+ prefix descendants) before the ~40-join pipeline
-    runs — a pure lookup-side filter that is result-identical because
-    every lookup join is (module|file, name)-keyed and every probe key
-    is derived from a seed module by import-edge hops or dotted
-    extension (the reachable set is a superset of all probe keys, and
-    ambiguity-count group keys are module/file-scoped so counts cannot
-    change). Falls back to the unscoped path on any cap breach (see
-    SCOPE_MAX_*) or when the closure covers ~the whole corpus.
+    Cold and incremental batches run the same plan: the lookup tables
+    are the whole corpus (stored ∪ batch), unfiltered, because at
+    project scale resolve is bound by its Spark job count, not by the
+    size of those tables.
     Returns relations with the same schema; resolved calls have
     to_entity rewritten to the defining entity's name and
     import_type='resolved'. Non-call rows and unresolvable calls pass
@@ -609,111 +524,23 @@ def resolve_calls(
     # so a re-imported name can't fan a call out into duplicate rows
     b = _absolutize(bindings).dropDuplicates(["file_path", "local_name", "import_type"])
 
-    # --- reachable-module scoping (r13) --------------------------------
-    # For a small incremental batch the ~40 lookup joins below otherwise
-    # scan the WHOLE corpus (stored ∪ batch) per batch: O(corpus) resolve
-    # for a 1-file change. Filter every lookup table to the modules
-    # reachable from the batch's files through the import graph first.
-    # The `known` module set for target normalization is computed from
-    # the UNFILTERED corpus so normalization is bit-identical, and the
-    # BFS runs over normalized edges. Any cap breach → reach = None →
-    # the unscoped (round-12) path, byte-identical plans.
-    reach: set[str] | None = None
-    b_n = None
-    LAST_SCOPE_INFO.clear()
-    LAST_SCOPE_INFO.update({"scoped": False, "why": "no seeds"})
-    if scope_seed_files is not None:
-        seeds = {module_of_path_py(p) for p in scope_seed_files}
-        LAST_SCOPE_INFO.update({"seeds": len(seeds), "why": "seed cap"})
-        if 0 < len(seeds) <= SCOPE_MAX_SEED_MODS:
-            defs_mods = (
-                entities.filter(~F.col("entity_type").isin("import", "file"))
-                .select(module_of_path("file_path").alias("module"))
-            )
-            known0 = defs_mods.unionByName(b.select("module")).distinct()
-            mods = [r["module"] for r in known0.limit(SCOPE_MAX_MODULES + 1).collect()]
-            LAST_SCOPE_INFO.update({"modules": len(mods), "why": "module cap"})
-            if len(mods) <= SCOPE_MAX_MODULES:
-                b_n = _normalize_targets(b, known0)
-                edge_rows = (
-                    b_n.filter(
-                        F.col("target_module").isNotNull()
-                        & (F.col("target_module") != "")
-                    )
-                    .select("module", "target_module")
-                    .distinct()
-                    .limit(SCOPE_MAX_EDGES + 1)
-                    .collect()
-                )
-                LAST_SCOPE_INFO.update(
-                    {"edges": len(edge_rows), "why": "edge cap"}
-                )
-                if len(edge_rows) <= SCOPE_MAX_EDGES:
-                    reach = _reachable_modules(
-                        seeds,
-                        [(r["module"], r["target_module"]) for r in edge_rows],
-                        mods,
-                    )
-                    LAST_SCOPE_INFO.update(
-                        {
-                            "scoped": reach is not None,
-                            "reach": len(reach) if reach is not None else None,
-                            "why": "ok" if reach is not None else "closure ≈ corpus",
-                        }
-                    )
-
-    if reach is not None:
-        spark = bindings.sparkSession
-        reach_df = F.broadcast(
-            spark.createDataFrame(
-                [(m,) for m in sorted(reach)], "__reach_m string"
-            )
+    # definitions: non-import entities keyed by (defining module, name)
+    defs = _pin(
+        entities.filter(~F.col("entity_type").isin("import", "file"))
+        .select(
+            module_of_path("file_path").alias("def_module"),
+            F.col("entity_name").alias("def_name"),
         )
+        .distinct(),
+        "defs",
+    )
 
-        def _scoped(df: DataFrame, key: Column) -> DataFrame:
-            return df.join(reach_df, key == F.col("__reach_m"), "left_semi")
-
-        entities = _scoped(entities, module_of_path("file_path"))
-        if type_binds is not None:
-            type_binds = _scoped(type_binds, module_of_path("file_path"))
-        if return_binds is not None:
-            return_binds = _scoped(return_binds, module_of_path("file_path"))
-        if stored_relations is not None:
-            stored_relations = _scoped(
-                stored_relations, module_of_path("file_path")
-            )
-        defs = _pin(
-            entities.filter(~F.col("entity_type").isin("import", "file"))
-            .select(
-                module_of_path("file_path").alias("def_module"),
-                F.col("entity_name").alias("def_name"),
-            )
-            .distinct(),
-            "defs",
-        )
-        b = _pin(_scoped(b_n, F.col("module")), "normalize_targets")
-    else:
-        # definitions: non-import entities keyed by (defining module, name)
-        defs = _pin(
-            entities.filter(~F.col("entity_type").isin("import", "file"))
-            .select(
-                module_of_path("file_path").alias("def_module"),
-                F.col("entity_name").alias("def_name"),
-            )
-            .distinct(),
-            "defs",
-        )
-
-        # absolute import targets → the path-derived module namespace
-        # (handles project-root == package-dir; see _normalize_targets).
-        # A scoping attempt that fell back after normalizing (edge cap,
-        # closure ≈ corpus) already built b_n from this same module set.
-        if b_n is None:
-            known = defs.select(F.col("def_module").alias("module")).unionByName(
-                b.select("module")
-            )
-            b_n = _normalize_targets(b, known)
-        b = _pin(b_n, "normalize_targets")
+    # absolute import targets → the path-derived module namespace
+    # (handles project-root == package-dir; see _normalize_targets)
+    known = defs.select(F.col("def_module").alias("module")).unionByName(
+        b.select("module")
+    )
+    b = _pin(_normalize_targets(b, known), "normalize_targets")
     fromb = b.filter(F.col("import_type") == "from")
     modb = b.filter(F.col("import_type") == "module")
     # what a module exports to star consumers: its __all__ when declared

@@ -109,7 +109,7 @@ def relation_chunks(relations: DataFrame) -> DataFrame:
         F.coalesce("import_type", F.lit("")),
     )
     content = F.concat_ws(" ", F.col("from_entity"), F.col("relation_type"), F.col("to_entity"))
-    return relations.select(
+    rows = relations.select(
         chunk_id.alias("chunk_id"),
         point_id(chunk_id).alias("point_id"),
         F.col("from_entity").alias("entity_name"),
@@ -122,4 +122,13 @@ def relation_chunks(relations: DataFrame) -> DataFrame:
         "file_path",
         F.lit(None).cast("int").alias("line_number"),
         F.lit(None).cast("int").alias("end_line_number"),
-    ).dropDuplicates(["chunk_id"])  # A4 relation dedup (processors.py:346-394)
+    )
+    # A4 relation dedup (processors.py:346-394): one chunk per triple. When
+    # several files hold the triple (e.g. a vendored copy), the smallest
+    # file_path owns the chunk, so every build keeps the same row.
+    rest = [c for c in rows.columns if c not in ("chunk_id", "file_path")]
+    return (
+        rows.groupBy("chunk_id")
+        .agg(F.min(F.struct("file_path", *rest)).alias("__r"))
+        .select("chunk_id", *[F.col(f"__r.{c}").alias(c) for c in rows.columns[1:]])
+    )

@@ -324,8 +324,8 @@ def sketch_hll_mergeable(spark, sf_dir):
     (`hll_sketch_agg`) union (`hll_union_agg`) into the same estimate a
     single pass over all rows produces, so distinct counts can be
     pre-aggregated per partition/day/shard and combined later without
-    rescanning history (the rollup-maintenance story of plans/rollup.py,
-    extended to DISTINCT — which plain counts cannot do). The driver
+    rescanning history (incremental rollup maintenance extended to
+    DISTINCT — which plain counts cannot do). The driver
     pins: union-of-partials tracks the direct sketch within 2% and the
     estimate lands within 15% of the exact count (~150 users, far
     inside the lgK=12 error envelope)."""

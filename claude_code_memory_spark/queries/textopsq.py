@@ -770,8 +770,7 @@ def pack_training_sequences(spark, sf_dir):
     100 TB each shard packs independently and in parallel, and the
     window never leaves its partition. Companion of
     `chunk_pack_running_budget` (which packs WITHOUT straddling, the
-    retrieval-chunk discipline); `shards.py` exports the physical
-    files."""
+    retrieval-chunk discipline)."""
     from claude_code_memory_spark.functions.text import whitespace_token_count
 
     from claude_code_memory_spark.queries.base import spread

@@ -25,8 +25,7 @@ def _hourly_decimal_sums(spark, sf_dir):
     """Per (event_type, hour-bucket): row count + exact decimal value sum.
     One scan, one shuffle keyed on (type, bucket) with map-side combine —
     at 100 TB this is the continuous-aggregate refresh shape (the same
-    expression Structured Streaming runs incrementally; see
-    plans/rollup.py for the maintained variant)."""
+    expression Structured Streaming runs incrementally)."""
     e = _events_us(spark, sf_dir)
     return e.groupBy(
         "event_type", F.expr(f"ts_us div {_HR_US}").alias("bucket_id")

@@ -1,7 +1,7 @@
 """Every package module is reachable by import from the engine's entry
 points, so no module survives only because its own tests import it.
 
-The six modules in KNOWN_ORPHANS predate this guard. Their tests still
+The four modules in KNOWN_ORPHANS predate this guard. Their tests still
 pin their behaviour, so they stay until they are deleted together with
 those tests; the list may only shrink.
 
@@ -20,8 +20,6 @@ ENTRY_POINTS = (f"{PKG}.api", f"{PKG}.__main__", f"{PKG}.service", f"{PKG}.queri
 KNOWN_ORPHANS = {
     f"{PKG}.embeddings.provider",
     f"{PKG}.operators.multimodal",
-    f"{PKG}.plans.rollup",
-    f"{PKG}.plans.shards",
     f"{PKG}.streaming.joins",
     f"{PKG}.streaming.stateful",
 }

@@ -58,6 +58,21 @@ def test_implementation_chunks(spark, temp_repo):
     assert rows["helper"]["line_number"] < rows["helper"]["end_line_number"]
 
 
+def test_relation_chunk_owner_is_smallest_file_path(spark):
+    """Two files holding the same relation triple (a vendored copy) yield
+    one relation chunk, owned by the smallest file_path whatever the row
+    order, so every build stores the same chunk."""
+    from claude_code_memory_spark.plans.chunks import relation_chunks
+    from claude_code_memory_spark.schemas import RELATIONS
+
+    row = ("f", "g", "calls", None, 1.0, None)
+    rels = spark.createDataFrame(
+        [(*row, "vendor/copy0/a.py"), (*row, "a.py")], RELATIONS
+    ).coalesce(1)
+    out = relation_chunks(rels).collect()
+    assert [(r["chunk_id"], r["file_path"]) for r in out] == [("f::calls::g::", "a.py")]
+
+
 def test_decorator_and_raise_relations():
     """Decorators → (target, uses, name, decorator); raise X → (fn, throws, X) —
     the same relation surface the JS parser emits for @deco / throw new."""

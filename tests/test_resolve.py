@@ -1985,13 +1985,14 @@ def test_normalize_targets_is_row_id_free(spark):
     assert "monotonically_increasing_id" not in buf.getvalue()
 
 
-# --- reachable-module scoping (r13) ----------------------------------------
+# --- incremental re-index of one file ----------------------------------------
 
 SCOPE_FIXTURE = {
-    # seed file: exercises aliased from-import, module-alias submodule
-    # attribute call (pkg.sub NOT imported by pkg/__init__ — only the
-    # prefix-descendant rule makes it reachable), star import, instance-
-    # typed method through a 3-module inheritance chain, and a factory
+    # the re-indexed file: exercises aliased from-import, module-alias
+    # submodule attribute call (pkg.sub NOT imported by pkg/__init__ —
+    # the resolver builds the pkg.sub probe from the pkg binding), star
+    # import, instance-typed method through a 3-module inheritance chain,
+    # and a factory
     "app_s.py": (
         "import pkg\n"
         "from pkg.core import Tool, make_tool\n"
@@ -2032,8 +2033,8 @@ SCOPE_FIXTURE = {
     ),
     "pkg/deepbase.py": "class DeepBase:\n    def deep(self):\n        return 2\n",
     "pkg/star_src.py": "def starry(x):\n    return x\n",
-    # UNREACHABLE from app_s.py — defines colliding names; scoping must
-    # neither use nor miss them differently than the unscoped path
+    # UNREACHABLE from app_s.py — defines colliding names that no call in
+    # app_s.py may resolve to
     "island/__init__.py": "",
     "island/core.py": (
         "class Tool:\n"
@@ -2056,164 +2057,37 @@ SCOPE_FIXTURE = {
 }
 
 
-def _scope_fixture_frames(spark):
-    from claude_code_memory_spark.sources.python_parser import (
-        PARSED_SCHEMA,
-        return_bindings,
-    )
+def test_engine_incremental_reindex_matches_first_build(spark, tmp_path):
+    """A one-file incremental re-index resolves against stored ∪ batch
+    and leaves the relations table equal to the first build's, with the
+    re-indexed file's calls pinned through every resolution mechanism."""
+    from collections import Counter
 
-    recs = []
+    from claude_code_memory_spark.api import CodeMemoryEngine
+
+    proj = tmp_path / "proj"
     for path, src in SCOPE_FIXTURE.items():
-        recs.extend(parse_python_source(path, src))
-    parsed = spark.createDataFrame(recs, PARSED_SCHEMA).cache()
-    entities, relations, _ = split_parsed(parsed)
-    return parsed, entities, relations, return_bindings(parsed)
+        p = proj / path
+        p.parent.mkdir(parents=True, exist_ok=True)
+        p.write_text(src)
+    eng = CodeMemoryEngine(spark, str(tmp_path / "store"))
+    eng.index(str(proj))
+    first = Counter(tuple(r) for r in eng.store.read("relations").collect())
 
+    fs = eng.store.read("file_state")
+    eng.store.write("file_state", fs.filter(F.col("relative_path") != "app_s.py"))
+    assert eng.index(str(proj))["files_changed"] == 1
+    rels = eng.store.read("relations").collect()
+    assert Counter(tuple(r) for r in rels) == first
 
-def _rows(df):
-    return sorted(
-        (r["from_entity"], r["to_entity"], r["relation_type"],
-         r["import_type"], r["file_path"])
-        for r in df.collect()
-    )
-
-
-def test_module_of_path_py_matches_column(spark):
-    """Driver-side twin of module_of_path (scope seeds) stays pinned to
-    the Column version over every path shape the rule mentions."""
-    from claude_code_memory_spark.operators.resolve import module_of_path_py
-
-    paths = [
-        "a/b/c.py", "a/b/__init__.py", "./x.py", "__init__.py", "top.py",
-        "src/lib/index.ts", "src/lib/index.js", "index.js", "a/index.py",
-        "a/b/mod.tsx", "a/b/mod.mjs", "pkg/sub/__init__.py",
-    ]
-    col_rows = (
-        spark.createDataFrame([(p,) for p in paths], "p string")
-        .select("p", module_of_path("p").alias("m"))
-        .collect()
-    )
-    for r in col_rows:
-        assert module_of_path_py(r["p"]) == r["m"], r["p"]
-
-
-def test_scoped_resolution_matches_unscoped(spark):
-    """Lookup-side reachability scoping is result-identical: the seed
-    file's batch resolves to the same multiset with the lookup tables
-    filtered to its reachable modules (incl. the prefix-descendant
-    pkg.sub case and a 3-module inherits chain), with colliding
-    same-named entities in an unreachable module present either way."""
-    from claude_code_memory_spark.operators import resolve as R
-
-    parsed, entities, relations, rbinds = _scope_fixture_frames(spark)
-    batch = relations.filter(F.col("file_path") == "app_s.py")
-    # the cross-file inherits edges ride stored_relations in the real
-    # pipeline (api.index hands the resolver the stored inherits rows)
-    stored = relations.filter(
-        (F.col("file_path") != "app_s.py")
-        & (F.col("relation_type") == "inherits")
-    )
-    kwargs = dict(
-        type_binds=type_bindings(parsed), return_binds=rbinds,
-        stored_relations=stored,
-    )
-    unscoped = _rows(
-        resolve_calls(batch, import_bindings(parsed), entities, **kwargs)
-    )
-    scoped = _rows(
-        resolve_calls(
-            batch,
-            import_bindings(parsed),
-            entities,
-            scope_seed_files=["app_s.py"],
-            **kwargs,
-        )
-    )
-    assert R.LAST_SCOPE_INFO["scoped"] is True
-    # the island modules must actually have been filtered out
-    assert R.LAST_SCOPE_INFO["reach"] < R.LAST_SCOPE_INFO["modules"]
-    assert scoped == unscoped
-    # and the batch genuinely resolved things through every machinery
-    resolved = {(f, t) for f, t, _rt, it, _fp in scoped if it == "resolved"}
-    assert ("use_sub", "sub_helper") in resolved  # prefix-descendant probe
+    resolved = {
+        (r["from_entity"], r["to_entity"])
+        for r in rels
+        if r["file_path"] == "app_s.py" and r["import_type"] == "resolved"
+    }
+    assert ("use_sub", "sub_helper") in resolved  # submodule probe
     assert ("use_method", "Tool.run") in resolved
     assert ("use_method", "Base.close") in resolved  # 1-hop inherit
     assert ("use_method", "DeepBase.deep") in resolved  # 2-hop inherit
     assert ("use_star", "starry") in resolved  # star import
     assert ("use_factory", "Tool.run") in resolved  # factory return
-
-
-def test_scope_cap_breach_falls_back_unscoped(spark, monkeypatch):
-    """Any cap breach keeps the full (round-12) path: same results,
-    LAST_SCOPE_INFO names the gate that refused."""
-    from claude_code_memory_spark.operators import resolve as R
-
-    parsed, entities, relations, rbinds = _scope_fixture_frames(spark)
-    batch = relations.filter(F.col("file_path") == "app_s.py")
-    monkeypatch.setattr(R, "SCOPE_MAX_EDGES", 0)
-    out = _rows(
-        resolve_calls(
-            batch,
-            import_bindings(parsed),
-            entities,
-            type_binds=type_bindings(parsed),
-            return_binds=rbinds,
-            scope_seed_files=["app_s.py"],
-        )
-    )
-    assert R.LAST_SCOPE_INFO["scoped"] is False
-    assert R.LAST_SCOPE_INFO["why"] == "edge cap"
-    unscoped = _rows(
-        resolve_calls(
-            batch,
-            import_bindings(parsed),
-            entities,
-            type_binds=type_bindings(parsed),
-            return_binds=rbinds,
-        )
-    )
-    assert out == unscoped
-
-
-def test_engine_incremental_scoped_matches_unscoped(spark, tmp_path, monkeypatch):
-    """End-to-end: a 1-file incremental reindex takes the scoped path and
-    leaves the relations table bit-identical to a CCMS_NO_SCOPE=1 run
-    (the bigrepo relations_multiset_equal oracle, at fixture scale)."""
-    import shutil
-
-    from claude_code_memory_spark.api import CodeMemoryEngine
-    from claude_code_memory_spark.operators import resolve as R
-
-    proj = tmp_path / "proj"
-    (proj / "pkg").mkdir(parents=True)
-    for path, src in SCOPE_FIXTURE.items():
-        p = proj / path
-        p.parent.mkdir(parents=True, exist_ok=True)
-        p.write_text(src)
-    # a first build has no stored state, so it never scopes: build once
-    # and give each variant its own copy of the store
-    base = tmp_path / "base"
-    CodeMemoryEngine(spark, str(base)).index(str(proj))
-
-    def one_file_rels(store_dir, no_scope):
-        if no_scope:
-            monkeypatch.setenv("CCMS_NO_SCOPE", "1")
-        else:
-            monkeypatch.delenv("CCMS_NO_SCOPE", raising=False)
-        shutil.copytree(base, store_dir)
-        eng = CodeMemoryEngine(spark, str(store_dir))
-        fs = eng.store.read("file_state")
-        eng.store.write(
-            "file_state",
-            fs.filter(F.col("relative_path") != "app_s.py"),
-        )
-        eng.index(str(proj))
-        return sorted(
-            tuple(r) for r in eng.store.read("relations").collect()
-        ), dict(R.LAST_SCOPE_INFO)
-
-    rels_scoped, info_scoped = one_file_rels(tmp_path / "s1", no_scope=False)
-    rels_plain, info_plain = one_file_rels(tmp_path / "s2", no_scope=True)
-    assert info_scoped["scoped"] is True
-    assert info_plain["why"] == "no seeds"
-    assert rels_scoped == rels_plain

@@ -1,9 +1,9 @@
-"""One-file incremental reindex profile — the resolve-scoping target
-metric (verdict r12 'next round' item 1). Full-indexes the target, then
-drops one file_state row (the first by relative_path, or pass
-one as argv[2]) and re-indexes that single file with profile=True +
-CCMS_RESOLVE_PROFILE=1, printing the stage split, the per-pin resolve
-profile, and the relations-multiset oracle.
+"""One-file incremental reindex profile: where a single-file re-index
+spends its time. Full-indexes the target, then drops one file_state row
+(the first by relative_path, or pass one as argv[2]) and re-indexes that
+single file with profile=True + CCMS_RESOLVE_PROFILE=1, printing the
+stage split, the per-pin resolve profile, and the relations-multiset
+oracle.
 
 Usage: python tools/onefile_profile.py [target_dir] [victim_rel_path]
 """
@@ -81,7 +81,6 @@ def main() -> None:
             [[lbl, sec] for lbl, sec in pins], key=lambda x: -x[1]
         )
         out["pin_total_sec"] = round(sum(s for _, s in pins), 2)
-        out["scope_info"] = dict(rmod.LAST_SCOPE_INFO)
     finally:
         shutil.rmtree(store, ignore_errors=True)
     print(json.dumps(out, indent=1))
