@@ -226,20 +226,16 @@ class CodeMemoryEngine:
         relations = self._filter_resolvable(relations, universe.distinct()).observe(
             obs_relations, F.count(F.lit(1)).alias("n")
         )
-        # the resolve+validate lineage is ~a dozen joins deep and has two
-        # consumers (relation chunks and the relations merge write; the
-        # J7-scoped _orphan_cleanup re-reads the merged table from the
-        # store); persist the entity-scale result so each consumer
-        # reuses one computation instead of replaying the join tree
+        # the validated relations have two consumers (relation chunks and
+        # the relations merge write; the J7-scoped _orphan_cleanup
+        # re-reads the merged table from the store); persist the
+        # entity-scale result so each consumer reuses one validation
         relations = relations.persist()
         if profile:
             _tv = _time.time()
-            relations.count()  # force the resolve+validate join tree
-            # sub-split (r12): under CCMS_RESOLVE_PROFILE the resolver
-            # output is already checkpointed (term_assemble pin), so
-            # this count executes only J4 validate + universe distinct —
-            # the last block of the resolve stage the pin profile
-            # couldn't see
+            # resolve_calls already ran its collects and returned a local
+            # frame, so this count times J4 validate + universe distinct
+            relations.count()
             stage_sec["resolve.validate"] = round(_time.time() - _tv, 2)
             _mark("resolve")
 

@@ -9,5 +9,4 @@ Each module maps a block of SURVEY.md §2:
 - ``textanalysis``language-ID / quality / token-count / fingerprint pipelines
 - ``stats``       A2/A3 collection statistics
 - ``sessions``    W4/ST8 sessionization
-- ``multimodal``  binary-column plumbing for image/audio payloads
 """

@@ -1,16 +1,10 @@
-"""BM25 fit/transform, hash embedder determinism, multimodal plumbing."""
+"""BM25 fit/transform and hash embedder determinism."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from claude_code_memory_spark.embeddings import bm25
 from claude_code_memory_spark.embeddings.hash_embedder import embed_text, hash_embedder_udf
-from claude_code_memory_spark.operators.multimodal import (
-    frame_sample_plan,
-    image_features,
-    metadata_only_scan,
-    synthetic_media,
-)
 
 
 def _corpus(spark):
@@ -58,94 +52,3 @@ def test_hash_embedder_deterministic(spark):
     # matches the driver-side embedding used for query vectors
     assert np.allclose(vecs[0]["v"], embed_text("alpha", 16), atol=1e-6)
     assert abs(np.linalg.norm(vecs[0]["v"]) - 1.0) < 1e-5
-
-
-def test_multimodal_plumbing(spark, tmp_path):
-    media = synthetic_media(spark, 12)
-    feats = image_features(media).collect()
-    assert len(feats) == 4  # every 3rd is an image
-    assert all(len(r["phash"]) == 16 and r["n_bytes"] == 256 for r in feats)
-    # deterministic across runs
-    feats2 = image_features(media).collect()
-    assert sorted(r["phash"] for r in feats) == sorted(r["phash"] for r in feats2)
-
-    frames = frame_sample_plan(media, every_ms=1000)
-    vid = frames.groupBy("media_id").count().collect()
-    assert all(r["count"] >= 1 for r in vid)
-
-    meta = metadata_only_scan(media).collect()
-    assert {r["kind"] for r in meta} == {"image", "audio", "video"}
-    # column pruning: the parquet ReadSchema for a metadata-only scan must
-    # exclude the binary payload column entirely
-    media.write.mode("overwrite").parquet(str(tmp_path / "media"))
-    on_disk = spark.read.parquet(str(tmp_path / "media"))
-    plan = metadata_only_scan(on_disk)._jdf.queryExecution().executedPlan().toString()
-    read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
-    assert read_schema and all("payload" not in ln for ln in read_schema)
-
-
-def test_audio_features(spark):
-    from claude_code_memory_spark.operators.multimodal import (
-        audio_features,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, 12)
-    rows = audio_features(media).collect()
-    # 12 media rows cycle image/audio/video → 4 audio clips
-    assert len(rows) == 4
-    for r in rows:
-        assert r["n_samples"] == 1600
-        assert 0 < r["rms"] < 1 and 0 < r["peak"] <= 1 and 0 <= r["zcr"] <= 1
-    # deterministic: same payloads → same features
-    again = audio_features(synthetic_media(spark, 12)).collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-
-
-def test_resize_images_schema_preserving(spark):
-    from claude_code_memory_spark.operators.multimodal import (
-        resize_images,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, 9)
-    out = resize_images(media, width=16, height=12)
-    assert out.schema == media.schema
-    rows = {r["media_id"]: r for r in out.collect()}
-    assert len(rows) == 9
-    for r in rows.values():
-        if r["kind"] == "image":
-            assert (r["width"], r["height"]) == (16, 12)
-            assert len(r["payload"]) == 16 * 12 * 3  # raw RGB stub encoding
-        else:  # non-image rows pass through untouched
-            assert (r["width"], r["height"]) == (64, 48)
-
-
-def test_phash_near_dup_finds_identical_payloads(spark):
-    import hashlib as _h
-
-    from claude_code_memory_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        phash_near_dup,
-    )
-
-    dup = _h.sha256(b"same-image").digest() * 8
-    other = _h.sha256(b"different-image").digest() * 8
-    rows = [
-        (1, "image", "x", dup, 64, 48, None),
-        (2, "image", "x", dup, 64, 48, None),       # exact dup of 1
-        (3, "image", "x", other, 64, 48, None),
-        (4, "audio", "x", dup, None, None, 1000),    # ignored: not an image
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    pairs = {(r["left_id"], r["right_id"]) for r in phash_near_dup(media).collect()}
-    assert (1, 2) in pairs
-    # the unrelated image must not pair with everything (banding prunes)
-    assert (1, 3) not in pairs or (2, 3) not in pairs
-
-    # bands that don't divide 16 must still cover every nibble (the old
-    # 16 // bands width orphaned the tail chars from candidate generation)
-    for bands in (3, 5, 7):
-        p = {(r["left_id"], r["right_id"])
-             for r in phash_near_dup(media, bands=bands).collect()}
-        assert (1, 2) in p

@@ -16,7 +16,6 @@ PKG = "claude_code_memory_spark"
 ROOT = Path(__file__).resolve().parent.parent
 KNOWN_ENV = {
     "CCMS_HOME",  # collection home of the CLI and the service
-    "CCMS_RESOLVE_PROFILE",  # per-pin resolve profile
     "EMBEDDING_BASE_URL",
     "OPENAI_API_KEY",
     "SPARK_GRAFT_CPUS",

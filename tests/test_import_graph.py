@@ -1,7 +1,7 @@
 """Every package module is reachable by import from the engine's entry
 points, so no module survives only because its own tests import it.
 
-The four modules in KNOWN_ORPHANS predate this guard. Their tests still
+The two modules in KNOWN_ORPHANS predate this guard. Their tests still
 pin their behaviour, so they stay until they are deleted together with
 those tests; the list may only shrink.
 
@@ -19,8 +19,6 @@ ROOT = Path(__file__).resolve().parent.parent
 ENTRY_POINTS = (f"{PKG}.api", f"{PKG}.__main__", f"{PKG}.service", f"{PKG}.queries")
 KNOWN_ORPHANS = {
     f"{PKG}.embeddings.provider",
-    f"{PKG}.operators.multimodal",
-    f"{PKG}.streaming.joins",
     f"{PKG}.streaming.stateful",
 }
 

@@ -4,8 +4,8 @@ to the defining module, re-export chains chase through __init__, and
 everything unresolvable passes through byte-identical.
 
 Reference parity: analysis/parser.py pairs tree-sitter with Jedi for
-exactly this cross-file step; here it is DataFrame joins over the
-parser's import-binding and call-base columns."""
+exactly this cross-file step; here it is dict lookups over the parser's
+collected import-binding and call-base tables."""
 
 from __future__ import annotations
 
@@ -13,7 +13,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from claude_code_memory_spark.operators.resolve import (
+    absolutize,
     module_of_path,
+    module_prefixes,
+    normalize_target,
     resolve_calls,
 )
 from claude_code_memory_spark.sources.python_parser import (
@@ -157,18 +160,9 @@ def test_throws_and_decorator_targets_resolve(spark):
     assert ("risky", "cached", "uses", "resolved") in got
 
 
-def test_module_of_path_cases(spark):
-    rows = spark.createDataFrame(
-        [
-            ("a/b/c.py",),
-            ("a/b/__init__.py",),
-            ("./x.py",),
-            ("__init__.py",),
-            ("top.py",),
-        ],
-        "p string",
-    ).select(module_of_path("p").alias("m"))
-    assert [r["m"] for r in rows.collect()] == ["a.b.c", "a.b", "x", "", "top"]
+def test_module_of_path_cases():
+    paths = ["a/b/c.py", "a/b/__init__.py", "./x.py", "__init__.py", "top.py"]
+    assert [module_of_path(p) for p in paths] == ["a.b.c", "a.b", "x", "", "top"]
 
 
 def test_aliased_from_import_resolves_to_defining_name(resolved):
@@ -240,19 +234,17 @@ def test_non_call_relations_untouched(spark):
 
 def test_relative_import_binding_absolutized(spark):
     # pkg/__init__.py's `from .core import helper` → target pkg.core
-    from claude_code_memory_spark.operators.resolve import _absolutize
-
     recs = parse_python_source("pkg/__init__.py", FIXTURE["pkg/__init__.py"])
     from claude_code_memory_spark.sources.python_parser import PARSED_SCHEMA
 
     parsed = spark.createDataFrame(recs, PARSED_SCHEMA)
-    b = _absolutize(import_bindings(parsed)).collect()
+    b = import_bindings(parsed).collect()
     assert len(b) == 1
-    assert b[0]["target_module"] == "pkg.core" and b[0]["member"] == "helper"
+    assert absolutize(b[0]["file_path"], b[0]["target_module"]) == "pkg.core"
+    assert b[0]["member"] == "helper"
 
 
 def test_deep_relative_import_absolutized(spark):
-    from claude_code_memory_spark.operators.resolve import _absolutize
     from claude_code_memory_spark.sources.python_parser import PARSED_SCHEMA
 
     recs = parse_python_source(
@@ -260,8 +252,8 @@ def test_deep_relative_import_absolutized(spark):
     )
     parsed = spark.createDataFrame(recs, PARSED_SCHEMA)
     got = {
-        r["member"]: r["target_module"]
-        for r in _absolutize(import_bindings(parsed)).collect()
+        r["member"]: absolutize(r["file_path"], r["target_module"])
+        for r in import_bindings(parsed).collect()
     }
     assert got == {"f": "a.b.x", "g": "a.b.c", "h": "a.top"}
 
@@ -1786,19 +1778,12 @@ def test_js_super_dispatch_resolution(spark):
     assert ("Button.render", "Widget.render", "resolved") in got
 
 
-def test_resolve_pin_budget(spark, monkeypatch):
-    """The round-9 resolve budget (verdict r8 item 3), pinned as a plan
-    shape: every `_pin` is an eager materialization job that runs
-    SERIALLY on the driver, so the pin count — not row volume — is what
-    the resolve stage's wall clock scales with on entity-scale data.
-    r9 head measured 14 pins / 46.8 s on the engine's own repo; pinning
-    `attr` once before the MRO lookups and batching the plain + super
-    lookups into one `_mro_nearest_def` pass (per-row `n_mind` depth
-    floor) cut that to 12 pins / ~15 s. 13th pin: the distinct-markers
-    frame (`mk_all`), which the deep-chain peel references three times —
-    one pin beats three replays of the attr subtree. A new fan-out that
-    adds a pin must justify itself here."""
-    import claude_code_memory_spark.operators.resolve as R
+def test_resolve_job_budget(spark):
+    """resolve_calls collects its entity-scale inputs once each and
+    resolves in one driver pass, so resolving plus one collect of the
+    result runs a handful of Spark jobs whatever the lookup families
+    exercised. The join plan it replaced ran about 170 jobs on a
+    78-file project; this budget keeps a join tree from coming back."""
     from claude_code_memory_spark.sources.python_parser import (
         PARSED_SCHEMA,
         return_bindings,
@@ -1834,33 +1819,27 @@ def test_resolve_pin_budget(spark, monkeypatch):
     parsed = spark.createDataFrame(recs, PARSED_SCHEMA)
     entities, relations, _ = split_parsed(parsed)
 
-    calls = {"n": 0}
-    orig = R._pin
-
-    def counting_pin(df, label="?"):
-        calls["n"] += 1
-        return orig(df, label)
-
-    monkeypatch.setattr(R, "_pin", counting_pin)
-    out = resolve_calls(
-        relations,
-        import_bindings(parsed),
-        entities,
-        type_bindings(parsed),
-        return_binds=return_bindings(parsed),
-    )
-    got = {
-        (r["from_entity"], r["to_entity"])
-        for r in out.filter(
-            out.import_type == "resolved"
-        ).collect()
-    }
+    sc = spark.sparkContext
+    sc.setJobGroup("resolve-job-budget", "resolve job budget")
+    try:
+        out = resolve_calls(
+            relations,
+            import_bindings(parsed),
+            entities,
+            type_bindings(parsed),
+            return_binds=return_bindings(parsed),
+        )
+        rows = out.filter(out.import_type == "resolved").collect()
+    finally:
+        sc.setJobGroup("resolve-job-budget-idle", "idle")
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("resolve-job-budget"))
+    got = {(r["from_entity"], r["to_entity"]) for r in rows}
     # the budget exercises every lookup family: bare import, instance
     # method, inherited attribute, super dispatch
     assert ("use", "helper") in got
     assert ("use", "Tool.run") in got
     assert ("Tool.run", "Base.close") in got
-    assert calls["n"] <= 13, f"resolve pin budget exceeded: {calls['n']} > 13"
+    assert n_jobs <= 10, f"resolve job budget exceeded: {n_jobs} > 10"
 
 
 def test_resolve_accepts_legacy_bind_schemas(spark):
@@ -1954,35 +1933,24 @@ def test_awaited_bind_blocks_without_return_binds(spark):
     )
 
 
-def test_normalize_targets_is_row_id_free(spark):
-    """_normalize_targets must not key its join-back on
-    monotonically_increasing_id: the pre-round-11 __bid self-join
-    computed the bindings lineage twice and relied on the two id
-    assignments aligning — at 31k-file scale they did NOT (multi-
-    partition + AQE), silently losing ~95k resolutions and misapplying
-    ~200 onto wrong rows (e.g. pc.any resolved to an unrelated module's
-    `any`). The value-keyed formulation is deterministic by
-    construction; this pins the plan property so the id join can never
-    come back."""
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-
-    from claude_code_memory_spark.operators.resolve import _normalize_targets
-
-    b = spark.createDataFrame(
-        [("pkg/a.py", "m", "from", "proj.pkg.mod", "f")],
-        "file_path string, local_name string, import_type string, "
-        "target_module string, member string",
-    ).withColumn("module", F.lit("pkg.a"))
-    known = spark.createDataFrame([("pkg.mod",)], "module string")
-    out = _normalize_targets(b, known)
-    assert [r["target_module"] for r in out.collect()] == ["pkg.mod"]
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain(mode="extended")
-    assert "monotonically_increasing_id" not in buf.getvalue()
+def test_normalize_target_package_dir_as_project_root():
+    """Indexing the package directory itself: files derive their modules
+    without the package name (``sources/files.py`` → ``sources.files``)
+    while the code imports ``mypkg.sources.files``. The target minus 0,
+    1 or 2 leading segments is matched against the known modules and
+    their dot-boundary prefixes; the fewest trims win, and a target
+    nothing matches (an external import) stays as it is."""
+    prefixes = module_prefixes({"sources.files", "api", "b.c", "c"})
+    cases = {
+        "mypkg.sources.files": "sources.files",  # one trim, a module
+        "mypkg.sources": "sources",  # a prefix of a known module
+        "sources.files": "sources.files",  # already path-derived
+        "x.y.api": "api",  # two trims
+        "w.x.y.api": "w.x.y.api",  # would need three: untouched
+        "a.b.c": "b.c",  # fewest trims beat the shorter match "c"
+        "os.path": "os.path",  # external
+    }
+    assert {t: normalize_target(t, prefixes) for t in cases} == cases
 
 
 # --- incremental re-index of one file ----------------------------------------

@@ -320,149 +320,6 @@ def test_dedup_within_watermark_collapses_redelivery(spark, tmp_path):
     assert pairs == [("a.py", "h1"), ("a.py", "h2")]
 
 
-def test_stream_stream_interval_join(spark, tmp_path):
-    """Stream-stream interval join with watermarks on both sides: clicks
-    joined to purchases by the same user within 5 minutes — the streaming
-    twin of range_join_click_to_purchase, with evictable join state
-    (both sides watermarked + a closed time interval)."""
-    from claude_code_memory_spark.streaming.joins import interval_join
-
-    clicks_dir = tmp_path / "clicks"
-    buys_dir = tmp_path / "buys"
-    clicks_dir.mkdir()
-    buys_dir.mkdir()
-
-    def write(d, fname, rows):
-        with open(d / fname, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-
-    write(clicks_dir, "c1.jsonl", [
-        {"user": "u1", "ts": "2024-01-01T00:00:00.000Z", "page": "a"},
-        {"user": "u2", "ts": "2024-01-01T00:00:30.000Z", "page": "b"},
-        {"user": "u3", "ts": "2024-01-01T00:01:00.000Z", "page": "c"},
-    ])
-    write(buys_dir, "b1.jsonl", [
-        # u1 buys within 5 min of the click -> match
-        {"user": "u1", "ts": "2024-01-01T00:03:00.000Z", "amount": 10.0},
-        # u2 buys 20 min later -> outside the interval, no match
-        {"user": "u2", "ts": "2024-01-01T00:20:30.000Z", "amount": 5.0},
-        # u3 "buys" BEFORE clicking -> no match (purchase must follow)
-        {"user": "u3", "ts": "2024-01-01T00:00:10.000Z", "amount": 7.0},
-    ])
-
-    clicks = (
-        spark.readStream.schema("user string, ts timestamp, page string")
-        .json(str(clicks_dir))
-    )
-    buys = (
-        spark.readStream.schema("user string, ts timestamp, amount double")
-        .json(str(buys_dir))
-    )
-    joined = interval_join(
-        clicks, buys, key="user", within="5 minutes", watermark="10 seconds"
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ssj_ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("select * from ssj_out").collect()
-        assert [(r["l_key"], r["l_page"], r["r_amount"]) for r in rows] == [
-            ("u1", "a", 10.0)
-        ]
-    finally:
-        q.stop()
-
-    # batch twin: the same operator on static frames gives the same match
-    b_clicks = spark.read.schema("user string, ts timestamp, page string").json(
-        str(clicks_dir)
-    )
-    b_buys = spark.read.schema("user string, ts timestamp, amount double").json(
-        str(buys_dir)
-    )
-    got = interval_join(b_clicks, b_buys, key="user", within="5 minutes").collect()
-    assert [(r["l_key"], r["r_amount"]) for r in got] == [("u1", 10.0)]
-
-
-def test_stream_stream_interval_left_outer_join(spark, tmp_path):
-    """leftOuter interval join: the click with no purchase inside its
-    5-minute window is emitted with NULL right columns once the
-    watermark passes the window — streaming abandonment analytics."""
-    from claude_code_memory_spark.streaming.joins import interval_join
-
-    clicks_dir = tmp_path / "oclicks"
-    buys_dir = tmp_path / "obuys"
-    clicks_dir.mkdir()
-    buys_dir.mkdir()
-
-    def write(d, fname, rows):
-        with open(d / fname, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-
-    write(clicks_dir, "c1.jsonl", [
-        {"user": "u1", "ts": "2024-01-01T00:00:00.000Z", "page": "a"},  # matched
-        {"user": "u2", "ts": "2024-01-01T00:00:10.000Z", "page": "b"},  # abandoned
-    ])
-    write(buys_dir, "b1.jsonl", [
-        {"user": "u1", "ts": "2024-01-01T00:02:00.000Z", "amount": 10.0},
-    ])
-    # a much-later event on BOTH sides pushes the watermark far past
-    # u2's window so the state store can emit the unmatched left row
-    write(clicks_dir, "c2.jsonl", [
-        {"user": "zz", "ts": "2024-01-01T02:00:00.000Z", "page": "z"},
-    ])
-    write(buys_dir, "b2.jsonl", [
-        {"user": "zz2", "ts": "2024-01-01T02:00:00.000Z", "amount": 0.5},
-    ])
-    now = time.time()
-    for d, early, late in ((clicks_dir, "c1.jsonl", "c2.jsonl"),
-                           (buys_dir, "b1.jsonl", "b2.jsonl")):
-        os.utime(d / early, (now - 10, now - 10))
-        os.utime(d / late, (now, now))
-
-    clicks = (
-        spark.readStream.schema("user string, ts timestamp, page string")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(clicks_dir))
-    )
-    buys = (
-        spark.readStream.schema("user string, ts timestamp, amount double")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(buys_dir))
-    )
-    joined = interval_join(
-        clicks, buys, key="user", within="5 minutes",
-        watermark="10 seconds", how="leftOuter",
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj_outer_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ssj_outer_ckpt"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        got = {}
-        while time.time() < deadline:
-            rows = spark.sql("SELECT * FROM ssj_outer_out").collect()
-            got = {r["l_key"]: r for r in rows}
-            if "u2" in got and "u1" in got:
-                break
-            time.sleep(1)
-        assert got["u1"]["r_amount"] == 10.0
-        assert got["u2"]["r_key"] is None and got["u2"]["r_amount"] is None
-    finally:
-        q.stop()
-
-
 def test_stream_static_broadcast_enrichment(spark, tmp_path):
     """Stream-static join: a streaming fact enriched against a static
     dimension — planned as a broadcast join per micro-batch, the

@@ -1,9 +1,8 @@
 """One-file incremental reindex profile: where a single-file re-index
 spends its time. Full-indexes the target, then drops one file_state row
 (the first by relative_path, or pass one as argv[2]) and re-indexes that
-single file with profile=True + CCMS_RESOLVE_PROFILE=1, printing the
-stage split, the per-pin resolve profile, and the relations-multiset
-oracle.
+single file with profile=True, printing the stage split and the
+relations-multiset oracle.
 
 Usage: python tools/onefile_profile.py [target_dir] [victim_rel_path]
 """
@@ -17,7 +16,6 @@ import sys
 import tempfile
 import time
 
-os.environ["CCMS_RESOLVE_PROFILE"] = "1"
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from claude_code_memory_spark.session import get_spark  # noqa: E402
@@ -34,7 +32,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from claude_code_memory_spark.api import CodeMemoryEngine
-    from claude_code_memory_spark.operators import resolve as rmod
 
     spark = get_spark("onefile_profile")
     spark.sparkContext.setLogLevel("ERROR")
@@ -76,11 +73,6 @@ def main() -> None:
         out["stage_sec"] = one.get("stage_sec")
         out["stage_cpu"] = one.get("stage_cpu")
         out["relations_multiset_equal"] = before == after
-        pins = rmod.PIN_PROFILE
-        out["pin_profile"] = sorted(
-            [[lbl, sec] for lbl, sec in pins], key=lambda x: -x[1]
-        )
-        out["pin_total_sec"] = round(sum(s for _, s in pins), 2)
     finally:
         shutil.rmtree(store, ignore_errors=True)
     print(json.dumps(out, indent=1))
