@@ -23,11 +23,10 @@ from claude_code_memory_spark.embeddings.hash_embedder import (
 )
 from claude_code_memory_spark.operators.joins import (
     dedup_new_content,
-    orphan_relations,
-    phantom_calls,
-    relations_touching,
-    stale_imports,
-    valid_relations,
+    invalid_relation_keys,
+    rel_key,
+    relations_in_scope,
+    unresolved_call,
 )
 from claude_code_memory_spark.plans.chunks import (
     entity_metadata_chunks,
@@ -61,7 +60,7 @@ class CodeMemoryEngine:
     def index(
         self, project_dir: str, *, incremental: bool = True, profile: bool = False
     ) -> dict:
-        """Scan → diff → parse → chunk → dedup-embed → merge → cleanup.
+        """Scan → diff → parse → resolve → check → chunk → dedup-embed → merge.
 
         Returns counters (files, entities, relations, chunks, skipped).
 
@@ -72,7 +71,7 @@ class CodeMemoryEngine:
         the first merge write, so a growing total (r5 32 s → r7 51 s)
         could not be attributed per stage (verdict r7 item 4). The
         forced actions reuse the caches the pipeline already keeps
-        (parsed/relations/chunks are persisted regardless; vectors is
+        (parsed/chunks are persisted regardless; vectors is
         persisted only under profile), so profiled totals stay within
         noise of unprofiled runs."""
         import time as _time
@@ -98,7 +97,10 @@ class CodeMemoryEngine:
             _t0 = now
 
         self.store.vacuum()  # safe point: no pipeline in flight
-        files = scan_project(self.spark, project_dir)
+        # one read of the tree per index: the parse and file_state both
+        # come from this scan, so a save during the index is seen as a
+        # change by the next one instead of being recorded unparsed
+        files = scan_project(self.spark, project_dir).cache()
         state = self.store.read("file_state") if incremental else None
         changed, deleted, _unchanged = diff_against_state(files, state)
         changed = changed.cache()
@@ -111,6 +113,7 @@ class CodeMemoryEngine:
         # nothing and should cost one file-listing join
         if n_changed == 0 and state is not None and deleted.isEmpty():
             changed.unpersist()
+            files.unpersist()
             return {
                 "files_changed": 0,
                 "entities": 0,
@@ -135,18 +138,18 @@ class CodeMemoryEngine:
         # — zero extra jobs — instead of the round-1 4-5 dedicated .count()
         # jobs per batch. Placement rule: each observed node must appear
         # exactly once in the plan of the query that first executes it
-        # (CollectMetrics aggregates per traversal), so relations are
-        # observed AFTER _filter_resolvable (which scans its input twice).
-        obs_entities, obs_relations = Observation(), Observation()
+        # (CollectMetrics aggregates per traversal).
+        obs_entities = Observation()
         obs_chunks, obs_skipped = Observation(), Observation()
-        # universe/changed_names below use entities_raw (unobserved) so the
-        # observed node appears exactly once per query (via the chunk path)
+        # defs and the relation check below use entities_raw (unobserved)
+        # so the observed node appears exactly once per query (via the
+        # chunk path)
         entities = entities_raw.observe(obs_entities, F.count(F.lit(1)).alias("n"))
 
-        # Cross-file resolution BEFORE J4: rewrite calls through the
-        # import graph (aliased from-imports → defining name, module-
-        # alias attribute calls → the defining module's entity) so the
-        # universe check below validates the REAL target, not the local
+        # Cross-file resolution BEFORE the relation check: rewrite calls
+        # through the import graph (aliased from-imports → defining name,
+        # module-alias attribute calls → the defining module's entity) so
+        # the check below validates the REAL target, not the local
         # alias. Bindings and defs come from stored ∪ batch with
         # replaced files' stored rows excluded (they're superseded by
         # this batch's re-parse). Reference: tree-sitter+Jedi pairing
@@ -216,26 +219,11 @@ class CodeMemoryEngine:
             stored_relations=stored_rels,
         )
 
-        # J4: pre-storage orphan filter — entity universe = stored ∪ batch.
-        # Only calls/inherits require a resolvable target; imports and
-        # `uses` keep external targets (modules, data files) — the
-        # reference whitelists external files too (qdrant.py:2183-2213).
-        universe = entities_raw.select("entity_name")
-        if stored_entities is not None:
-            universe = universe.unionByName(stored_entities.select("entity_name"))
-        relations = self._filter_resolvable(relations, universe.distinct()).observe(
-            obs_relations, F.count(F.lit(1)).alias("n")
+        _tv = _time.time()
+        relations, rel_writes, rel_replaced, n_relations = self._check_relations(
+            relations, entities_raw, impl, stored_entities, replaced
         )
-        # the validated relations have two consumers (relation chunks and
-        # the relations merge write; the J7-scoped _orphan_cleanup
-        # re-reads the merged table from the store); persist the
-        # entity-scale result so each consumer reuses one validation
-        relations = relations.persist()
         if profile:
-            _tv = _time.time()
-            # resolve_calls already ran its collects and returned a local
-            # frame, so this count times J4 validate + universe distinct
-            relations.count()
             stage_sec["resolve.validate"] = round(_time.time() - _tv, 2)
             _mark("resolve")
 
@@ -363,8 +351,11 @@ class CodeMemoryEngine:
             merge_replace_by_file(
                 self.store, "entities", entities, replaced, tombstone_src=tsrc
             )
+            # stored rows the check removed widen this merge's replaced
+            # set beyond the batch's, so it writes its own tombstone
             merge_replace_by_file(
-                self.store, "relations", relations, replaced, tombstone_src=tsrc
+                self.store, "relations", rel_writes, rel_replaced,
+                tombstone_src=tsrc if rel_replaced is replaced else None,
             )
             merge_replace_by_file(
                 self.store, "bindings", bindings, replaced, tombstone_src=tsrc
@@ -387,20 +378,8 @@ class CodeMemoryEngine:
             )
             _sub("write.merge_vectors")
 
-        # J2/J3 scoped by J7: only relations touching entities that were
-        # added, changed, or deleted in THIS batch can have become invalid;
-        # the rest of the table is untouched (reference smart filtering,
-        # storage/diff_layers.py:80-110)
-        changed_names = entities_raw.select("entity_name")
-        if stored_entities is not None:
-            changed_names = changed_names.unionByName(
-                stored_entities.join(
-                    F.broadcast(replaced), "file_path", "left_semi"
-                ).select("entity_name")
-            )
-        self._orphan_cleanup(
-            changed_names.distinct(), first_build=stored_entities is None
-        )
+        # the relation check ran before the writes (_check_relations);
+        # the key stays so traced runs keep their layer list
         _sub("write.orphan_cleanup")
 
         if refit and stored_chunks is not None:
@@ -423,20 +402,20 @@ class CodeMemoryEngine:
         if profile:
             _mark("write")
 
-        # all four observations were filled by actions above (the bm25
+        # the three observations were filled by actions above (the bm25
         # corpus count and the merge writes) — no extra jobs here
         counters = {
             "files_changed": n_changed,
             "entities": self._obs_n(obs_entities),
-            "relations": self._obs_n(obs_relations),
+            "relations": n_relations,
             "chunks": self._obs_n(obs_chunks),
             "chunks_skipped_unchanged": (
                 self._obs_n(obs_skipped) if stored_chunks is not None else 0
             ),
         }
+        files.unpersist()
         changed.unpersist()
         parsed.unpersist()
-        relations.unpersist()
         chunks.unpersist()
         if profile:
             vectors.unpersist()
@@ -457,130 +436,84 @@ class CodeMemoryEngine:
         except Exception:
             return 0
 
-    @staticmethod
-    def _filter_resolvable(relations: DataFrame, universe: DataFrame) -> DataFrame:
-        """Endpoint-existence check for calls/inherits only; imports/uses/
-        contains pass through (external modules, data files, own children)."""
-        needs_target = relations.filter(F.col("relation_type").isin("calls", "inherits"))
-        passthrough = relations.filter(~F.col("relation_type").isin("calls", "inherits"))
-        return valid_relations(needs_target, universe).unionByName(passthrough)
+    def _check_relations(
+        self,
+        relations: DataFrame,
+        entities: DataFrame,
+        impl: DataFrame,
+        stored_entities: DataFrame | None,
+        replaced: DataFrame,
+    ) -> tuple[DataFrame, DataFrame, DataFrame, int]:
+        """J2/J3/J4 scoped by J7, in one pass on the driver, before any
+        write (rules in operators/joins.py).
 
-    # (from, to, type, file) identifies a relation row; all four are
-    # non-null by construction in split_parsed
-    _REL_KEY = ("from_entity", "to_entity", "relation_type", "file_path")
+        Collects each input once: the resolved batch rows; the final
+        entity names (the batch plus the stored names minus the replaced
+        files, the defs resolve reads) and the replaced files' old
+        names; the stored relations minus the replaced files; and the
+        implementation contents of the callers the phantom rule checks.
+        A row is removed with every row that shares its key.
 
-    def _invalid_relations(
-        self, changed_names: DataFrame | None, *, first_build: bool = False
-    ) -> DataFrame | None:
-        """The J2/J3 delta: relations that became invalid this batch.
+        Returns the batch's kept rows (the relation chunks' input), the
+        rows the relations merge writes, that merge's replaced set and
+        the number of rows it writes. A stored row the batch invalidates
+        re-commits its file: the file joins the replaced set and its
+        other rows are written again."""
+        spark, cols = self.spark, relations.columns
+        batch = relations.toArrow().to_pylist()
+        names = set(entities.select("entity_name").toArrow().column(0).to_pylist())
+        changed = set(names)
+        if stored_entities is not None:
+            old = replaced.select("file_path", F.lit(True).alias("old"))
+            for r in (
+                stored_entities.join(F.broadcast(old), "file_path", "left")
+                .select("entity_name", "old").toArrow().to_pylist()
+            ):
+                (changed if r["old"] else names).add(r["entity_name"])
+        names.discard(None)
+        changed.discard(None)
+        stored: list[dict] = []
+        stored_rels = self.store.read("relations")
+        if stored_rels is not None:
+            stored = (
+                stored_rels.join(F.broadcast(replaced), "file_path", "left_anti")
+                .toArrow().to_pylist()
+            )
 
-        Candidates are scoped to relations touching a changed entity (J7,
-        reference storage/diff_layers.py:80-110) so a 1-file incremental
-        index validates O(delta) relations, not the whole table. Returns
-        None when there is nothing to validate against.
-
-        ``first_build`` (r13): on the FIRST build of a collection the
-        missing-endpoint branch is provably empty — J4 just filtered the
-        only relations that exist against exactly the entity universe
-        this table now holds, and no stored rows predate the batch — and
-        the J7 scope is the identity (every relation touches a changed
-        name), so both the branch and the double semi-join + distinct
-        are skipped. The invalid SET is unchanged: the final union is
-        distinct'd, and relations_touching only deduped rows."""
-        entities = self.store.read("entities")
-        relations = self.store.read("relations")
-        if entities is None or relations is None:
-            return None
-        candidates = relations
-        if changed_names is not None and not first_build:
-            candidates = relations_touching(relations, changed_names)
-        names = entities.select("entity_name")
-        needs_target = candidates.filter(
-            F.col("relation_type").isin("calls", "inherits")
-        )
-        missing_endpoint = orphan_relations(needs_target, names)
-        if first_build:
-            missing_endpoint = missing_endpoint.limit(0)
-        impl = self.store.read("chunks").filter(
-            F.col("chunk_type") == "implementation"
-        )
-        phantoms = phantom_calls(candidates, impl)
-
-        # J2-imports: import relations whose target module no longer
-        # resolves (reference resolve_module_name, qdrant.py:2044-2143).
-        # A renamed module's IMPORTERS are not caught by the name-equality
-        # J7 scope (their to_entity is the dotted module name, not the
-        # file path), so candidates are widened to imports whose target's
-        # last segment matches a changed file's basename — a broadcast
-        # semi-join against the tiny changed set.
-        import_cands = relations.filter(F.col("relation_type") == "imports")
-        if changed_names is not None and not first_build:
-            from claude_code_memory_spark.operators.joins import _SOURCE_EXT_RE
-
-            changed_base = (
-                changed_names.filter(F.col("entity_name").rlike(_SOURCE_EXT_RE))
-                .select(
-                    F.regexp_replace(
-                        F.element_at(F.split("entity_name", "/"), -1),
-                        _SOURCE_EXT_RE,
-                        "",
-                    ).alias("__cb")
+        rows = relations_in_scope(batch, stored, changed)
+        callers = {r["from_entity"] for r in rows if unresolved_call(r)} - {None}
+        impl_by_caller: dict[str, list] = {}
+        if callers:
+            contents = impl.select("entity_name", "content")
+            stored_chunks = self.store.read("chunks")
+            if stored_chunks is not None:
+                contents = contents.unionByName(
+                    stored_chunks.filter(F.col("chunk_type") == "implementation")
+                    .join(F.broadcast(replaced), "file_path", "left_anti")
+                    .select("entity_name", "content")
                 )
-                .distinct()
-            )
-            by_base = import_cands.withColumn(
-                "__tl",
-                F.element_at(
-                    F.split(F.regexp_replace("to_entity", r"^\.+", ""), r"\."), -1
-                ),
-            ).join(
-                F.broadcast(changed_base), F.col("__tl") == F.col("__cb"), "left_semi"
-            ).drop("__tl")
-            import_cands = (
-                candidates.filter(F.col("relation_type") == "imports")
-                .unionByName(by_base)
-                .distinct()
-            )
-        stale = stale_imports(import_cands, entities)
+            contents = contents.filter(F.col("entity_name").isin(*sorted(callers)))
+            for r in contents.toArrow().to_pylist():
+                impl_by_caller.setdefault(r["entity_name"], []).append(r["content"])
+        bad = invalid_relation_keys(rows, names, impl_by_caller)
 
-        return (
-            missing_endpoint.select(*self._REL_KEY)
-            .unionByName(phantoms.select(*self._REL_KEY))
-            .unionByName(stale.select(*self._REL_KEY))
-            .distinct()
+        def frame(rs: list[dict]) -> DataFrame:
+            return spark.createDataFrame(
+                [tuple(r.get(c) for c in cols) for r in rs], relations.schema
+            )
+
+        kept = [r for r in batch if rel_key(r) not in bad]
+        affected = {r["file_path"] for r in stored if rel_key(r) in bad}
+        if not affected:
+            kept_df = frame(kept)
+            return kept_df, kept_df, replaced, len(kept)
+        writes = kept + [
+            r for r in stored if r["file_path"] in affected and rel_key(r) not in bad
+        ]
+        widened = replaced.unionByName(
+            spark.createDataFrame([(f,) for f in sorted(affected)], "file_path string")
         )
-
-    def _orphan_cleanup(
-        self, changed_names: DataFrame | None = None, *, first_build: bool = False
-    ) -> None:
-        """J2/J3: drop relations with missing endpoints or phantom calls.
-
-        The invalid set is a small delta (scoped by J7): removal is one
-        broadcast anti-join, and when the delta is empty the relations
-        table is not rewritten at all — the common no-orphan incremental
-        batch costs zero table IO here (vs the round-1 full `exceptAll`
-        rewrite the judge flagged as a 100x-scale killer)."""
-        invalid = self._invalid_relations(changed_names, first_build=first_build)
-        if invalid is None:
-            return
-        invalid = invalid.cache()
-        try:
-            if invalid.isEmpty():
-                return
-            relations = self.store.read("relations")
-            # scoped removal through the delta-merge path (r12): the
-            # invalid rows live in a handful of files, so re-commit only
-            # THOSE files' relation rows (minus the invalid ones) as a
-            # delta instead of rewriting the corpus-scale table — the
-            # same merge-on-read commit every other incremental write
-            # takes
-            affected = invalid.select("file_path").distinct()
-            kept_of_affected = relations.join(
-                F.broadcast(affected), "file_path", "left_semi"
-            ).join(F.broadcast(invalid), on=list(self._REL_KEY), how="left_anti")
-            merge_replace_by_file(self.store, "relations", kept_of_affected, affected)
-        finally:
-            invalid.unpersist()
+        return frame(kept), frame(writes), widened, len(writes)
 
     # -- model accessors -----------------------------------------------------
 

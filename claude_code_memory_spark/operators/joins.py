@@ -1,70 +1,57 @@
-"""The reference's six join shapes, as first-class DataFrame operators.
+"""The reference's six join shapes: the relation check as plain Python
+rules, the replacement diff and dedup probe as DataFrame operators.
 
 Reference semantics (SURVEY.md §2.3):
-- J2 orphan relation cleanup      storage/qdrant.py:1937-2323  (anti join)
-- J3 phantom call detection       storage/qdrant.py:2325-2381  (semi join + contains)
-- J4 pre-storage orphan filter    indexer.py:1132-1210         (broadcast semi join)
+- J2 orphan relation cleanup      storage/qdrant.py:1937-2323  (endpoint + stale-import rules)
+- J3 phantom call detection       storage/qdrant.py:2325-2381  (phantom rule)
+- J4 pre-storage orphan filter    indexer.py:1132-1210         (endpoint rule)
 - J5 entity replacement diff      processing/processors.py:64-153 (full outer join)
 - J6 content-hash dedup probe     processing/content_processor.py:45-61 (left anti)
-- J7 smart relation filtering     storage/diff_layers.py:80-110 (semi join vs changed set)
+- J7 smart relation filtering     storage/diff_layers.py:80-110 (scope of the check)
 
-The reference hand-rolls each of these with O(1) lookup dicts and batch
-indices (its 66x/221x claims); on Spark every one is a single shuffle-or-
-broadcast join that Catalyst plans — the entity-name universe is small
-relative to relations, so J2/J4/J7 broadcast the name side.
+J2/J3/J4/J7 run once per ``index()``, on the driver, before any write.
+The reference hand-rolls them with O(1) lookup dicts; at the entity
+scale of one project the inputs are small, so the rules below are the
+same dict and set lookups over rows collected as Python dicts
+(``pyarrow.Table.to_pylist``). ``CodeMemoryEngine._check_relations``
+collects the inputs and hands the result to the writes.
 """
 
 from __future__ import annotations
 
+import re
+import sys
+from collections.abc import Iterable, Mapping
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def orphan_relations(
-    relations: DataFrame,
-    entities: DataFrame,
-    *,
-    from_col: str = "from_entity",
-    to_col: str = "to_entity",
-    name_col: str = "entity_name",
-) -> DataFrame:
-    """J2: relations whose endpoint no longer exists in the entity set."""
-    names = F.broadcast(entities.select(F.col(name_col).alias("__n")).distinct())
-    missing_to = relations.join(names, relations[to_col] == F.col("__n"), "left_anti")
-    missing_from = relations.join(names, relations[from_col] == F.col("__n"), "left_anti")
-    return missing_to.unionByName(missing_from).distinct()
+# (from, to, type, file) identifies a relation row: a row that fails a
+# rule is removed together with every row that shares its key
+REL_KEY = ("from_entity", "to_entity", "relation_type", "file_path")
 
 
-def valid_relations(
-    relations: DataFrame,
-    entities: DataFrame,
-    *,
-    from_col: str = "from_entity",
-    to_col: str = "to_entity",
-    name_col: str = "entity_name",
-) -> DataFrame:
-    """J4: keep only relations whose both endpoints exist (pre-storage filter).
-
-    Reference filters before embedding to avoid wasted $ — here it is a
-    broadcast double semi-join, which Catalyst collapses into two
-    BroadcastHashJoins with no shuffle of the big side."""
-    names = F.broadcast(entities.select(F.col(name_col).alias("__n")).distinct())
-    out = relations.join(names, relations[to_col] == F.col("__n"), "left_semi")
-    return out.join(names, out[from_col] == F.col("__n"), "left_semi")
+def rel_key(rel: Mapping) -> tuple:
+    return tuple(rel[c] for c in REL_KEY)
 
 
-def phantom_calls(
-    relations: DataFrame,
-    impl_chunks: DataFrame,
-    *,
-    from_col: str = "from_entity",
-    to_col: str = "to_entity",
-    type_col: str = "relation_type",
-    entity_col: str = "entity_name",
-    content_col: str = "content",
-) -> DataFrame:
-    """J3: 'calls' relations whose callee no longer appears as `callee(` in
-    the caller's implementation content.
+def missing_endpoint(rel: Mapping, names: set) -> bool:
+    """J2/J4 endpoint rule: an endpoint is not among the entity names.
+    A NULL endpoint never matches. The check applies it to `calls` and
+    `inherits` rows only; imports and `uses` keep external targets."""
+    return any(rel[c] is None or rel[c] not in names for c in ("from_entity", "to_entity"))
+
+
+def unresolved_call(rel: Mapping) -> bool:
+    """A `calls` row that the phantom rule checks."""
+    return rel["relation_type"] == "calls" and rel.get("import_type") != "resolved"
+
+
+def phantom_call(rel: Mapping, impl: Mapping[str, list]) -> bool:
+    """J3: an unresolved `calls` row whose callee does not appear as
+    `callee(` in some implementation chunk named like the caller.
+    ``impl`` maps an entity name to the contents of its chunks; a NULL
+    content or callee never marks a row.
 
     Cross-file-RESOLVED calls are exempt: their to_entity is the
     DEFINING name, which by construction differs from the aliased name
@@ -72,18 +59,135 @@ def phantom_calls(
     to f while the text says `g(`), and they were already validated
     against the import graph + entity universe — strictly stronger
     evidence than this textual heuristic (operators/resolve.py)."""
-    calls = relations.filter(F.col(type_col) == "calls")
-    if "import_type" in relations.columns:
-        calls = calls.filter(
-            ~F.coalesce(F.col("import_type") == "resolved", F.lit(False))
-        )
-    impl = impl_chunks.select(
-        F.col(entity_col).alias("__caller"), F.col(content_col).alias("__content")
+    callee = rel["to_entity"]
+    if not unresolved_call(rel) or callee is None:
+        return False
+    needle = callee + "("
+    return any(
+        c is not None and needle not in c for c in impl.get(rel["from_entity"], ())
     )
-    joined = calls.join(impl, calls[from_col] == F.col("__caller"), "inner")
-    return joined.filter(
-        ~F.col("__content").contains(F.concat(F.col(to_col), F.lit("(")))
-    ).drop("__caller", "__content")
+
+
+# External-file extensions the reference whitelists as valid relation
+# targets even when no entity exists for them (qdrant.py:2183-2213)
+FILE_REFERENCE_EXTENSIONS = frozenset(
+    "json csv txt xml yaml yml xlsx xls ini toml html css log md pdf doc docx "
+    "png jpg jpeg gif svg bin dat".split()
+)
+
+# Source extensions stripped when building the module-basename index
+_SOURCE_EXT = re.compile(r"\.(py|js|jsx|ts|tsx)$")
+_LEADING_DOTS = re.compile(r"^\.+")
+_STDLIB = frozenset(sys.stdlib_module_names)
+
+
+def module_basename(path: str) -> str | None:
+    """`a/b/c.py` → `c`; None for a name that is not a source file."""
+    if not _SOURCE_EXT.search(path):
+        return None
+    return _SOURCE_EXT.sub("", path.split("/")[-1])
+
+
+class ModuleIndex:
+    """The reference's four O(1) lookup indices (qdrant.py:2044-2100)
+    over the entity names: direct names, basenames (with paths),
+    directory components and dotted module keys of the source files."""
+
+    def __init__(self, names: set):
+        self.names = names
+        self.basenames: dict[str, list[str]] = {}
+        self.dirs: set[str] = set()
+        self.module_keys: set[str] = set()
+        for path in names:
+            base = module_basename(path)
+            if base is None:
+                continue
+            self.basenames.setdefault(base, []).append(path)
+            dirparts = path.split("/")[:-1]
+            self.dirs.update(dirparts)
+            # every dotted suffix of the dir path + basename: a/b/c.py →
+            # {a.b.c, b.c} (qdrant.py:2072-2080)
+            self.module_keys.update(
+                ".".join(dirparts[i:] + [base]) for i in range(len(dirparts))
+            )
+
+    def stale_import(self, rel: Mapping) -> bool:
+        """J2-imports: an `imports` row whose target resolves to no
+        project module and is not external.
+
+        The reference's resolve_module_name branches (storage/qdrant.py:
+        2044-2143); a row survives if ANY branch resolves it. Additions
+        over the reference: stdlib top-level modules are always
+        whitelisted (`import os` must survive cleanup) alongside the
+        reference's external-file-extension whitelist, and a bare name
+        also resolves to a basename (the reference's bare-name branch is
+        directory-only, qdrant.py:2135-2139, which would orphan
+        `from helpers import x` in a flat project with helpers.py)."""
+        target = rel["to_entity"]
+        if rel["relation_type"] != "imports" or target is None:
+            return False
+        clean = _LEADING_DOTS.sub("", target)
+        segs = clean.split(".")
+        if segs[0] in _STDLIB or (
+            "." in target and target.split(".")[-1].lower() in FILE_REFERENCE_EXTENSIONS
+        ):
+            return False
+        relative, dotted = target.startswith("."), len(segs) > 1
+        if target in self.names:
+            return False
+        if relative:
+            if clean in self.basenames:
+                return False
+            # relative dotted: the last segment is a known basename AND
+            # the slash form of the cleaned name is in that file's path
+            slashed = clean.replace(".", "/")
+            return not (
+                dotted
+                and rel["from_entity"] is not None
+                and any(slashed in p for p in self.basenames.get(segs[-1], ()))
+            )
+        if dotted:
+            return not (clean in self.module_keys or segs[-1] in self.basenames)
+        return not (clean in self.dirs or clean in self.basenames)
+
+
+def relations_in_scope(
+    batch: list[dict], stored: Iterable[dict], changed: set
+) -> list[dict]:
+    """J7: the rows the check reads — every batch row, plus the stored
+    rows of untouched files that touch a changed entity name (either
+    endpoint) or import a module whose last segment is the basename of a
+    changed file (a renamed module's importers name the module, not the
+    file). ``changed`` holds the batch's names and the replaced files'
+    old names."""
+    bases = {b for b in map(module_basename, changed) if b is not None}
+
+    def touches(rel: Mapping) -> bool:
+        if rel["from_entity"] in changed or rel["to_entity"] in changed:
+            return True
+        return (
+            rel["relation_type"] == "imports"
+            and rel["to_entity"] is not None
+            and _LEADING_DOTS.sub("", rel["to_entity"]).split(".")[-1] in bases
+        )
+
+    return batch + [r for r in stored if touches(r)]
+
+
+def invalid_relation_keys(
+    rows: Iterable[dict], names: set, impl: Mapping[str, list]
+) -> set[tuple]:
+    """J2/J3/J4: the keys of ``rows`` that fail the endpoint, phantom or
+    stale-import rule against the final entity ``names`` and the
+    implementation contents ``impl`` of the checked callers."""
+    index = ModuleIndex(names)
+    return {
+        rel_key(r)
+        for r in rows
+        if (r["relation_type"] in ("calls", "inherits") and missing_endpoint(r, names))
+        or phantom_call(r, impl)
+        or index.stale_import(r)
+    }
 
 
 def replacement_diff(
@@ -120,162 +224,3 @@ def dedup_new_content(
     The reference's single biggest cost saver; as a left-anti join the
     existing-hash side is typically the smaller delta and broadcastable."""
     return chunks.join(existing.select(hash_col).distinct(), on=hash_col, how="left_anti")
-
-
-# External-file extensions the reference whitelists as valid relation
-# targets even when no entity exists for them (qdrant.py:2183-2213)
-FILE_REFERENCE_EXTENSIONS = (
-    "json csv txt xml yaml yml xlsx xls ini toml html css log md pdf doc docx "
-    "png jpg jpeg gif svg bin dat".split()
-)
-
-# Source extensions stripped when building the module-basename index
-_SOURCE_EXT_RE = r"\.(py|js|jsx|ts|tsx)$"
-
-
-def _module_indices(entities, name_col: str):
-    """The reference's four O(1) lookup indices (qdrant.py:2044-2100) as
-    four tiny DataFrames built from file-entity names: direct names,
-    basenames (with paths), directory components, dotted module keys.
-    All are bounded by the file count — broadcast-side by construction."""
-    from pyspark.sql import functions as F
-
-    files = entities.filter(
-        F.col(name_col).rlike(_SOURCE_EXT_RE)
-    ).select(F.col(name_col).alias("path")).distinct()
-    p = (
-        files.withColumn("parts", F.split("path", "/"))
-        .withColumn(
-            "basename", F.regexp_replace(F.element_at("parts", -1), _SOURCE_EXT_RE, "")
-        )
-        .withColumn("dirparts", F.expr("slice(parts, 1, size(parts) - 1)"))
-    )
-    basenames = p.select("basename", "path")
-    dirs = p.select(F.explode("dirparts").alias("dir")).distinct()
-    # every dotted suffix of the dir path + basename: a/b/c.py →
-    # {a.b.c, b.c} (qdrant.py:2072-2080)
-    module_keys = (
-        p.withColumn(
-            "mkeys",
-            F.expr(
-                "CASE WHEN size(dirparts) = 0 THEN array() ELSE "
-                "transform(sequence(1, size(dirparts)), i -> "
-                "  concat_ws('.', concat(slice(dirparts, i, size(dirparts) - i + 1), "
-                "             array(basename)))) END"
-            ),
-        )
-        .select(F.explode("mkeys").alias("mkey"))
-        .distinct()
-    )
-    return basenames, dirs, module_keys
-
-
-def stale_imports(
-    relations: DataFrame,
-    entities: DataFrame,
-    *,
-    from_col: str = "from_entity",
-    to_col: str = "to_entity",
-    type_col: str = "relation_type",
-    name_col: str = "entity_name",
-) -> DataFrame:
-    """J2-imports: `imports` relations whose target no longer resolves to
-    any project module and is not external.
-
-    Re-expresses the reference's resolve_module_name indices
-    (storage/qdrant.py:2044-2143) relationally: the four lookup dicts
-    become four broadcastable index DataFrames and each resolution branch
-    becomes a semi-join; a relation survives if ANY branch resolves it.
-    Additions over the reference: stdlib top-level modules are always
-    whitelisted (`import os` must survive cleanup) alongside the
-    reference's external-file-extension whitelist."""
-    import sys
-
-    from pyspark.sql import functions as F
-
-    im = relations.filter(F.col(type_col) == "imports")
-    im = (
-        im.withColumn("__clean", F.regexp_replace(F.col(to_col), r"^\.+", ""))
-        .withColumn("__segs", F.split("__clean", r"\."))
-        .withColumn("__last", F.element_at("__segs", -1))
-        .withColumn("__first", F.element_at("__segs", 1))
-        .withColumn("__relative", F.col(to_col).startswith("."))
-        .withColumn("__dotted", F.size("__segs") > 1)
-    )
-
-    # whitelists: stdlib top-level (public sys.stdlib_module_names) and
-    # external file references by extension — pure expression filters
-    stdlib = sorted(sys.stdlib_module_names)
-    ext_ok = F.lower(F.element_at(F.split(F.col(to_col), r"\."), -1)).isin(
-        *FILE_REFERENCE_EXTENSIONS
-    ) & F.col(to_col).contains(".")
-    check = im.filter(~(F.col("__first").isin(*stdlib) | ext_ok))
-
-    basenames, dirs, module_keys = _module_indices(entities, name_col)
-
-    # One linear chain of broadcast left joins, each index attaching a
-    # flag column — the `check` subtree appears ONCE in the plan (a
-    # branch-per-rule formulation replicated it 6x and exploded the plan
-    # to hundreds of join nodes).
-    def flagged(df, key, flag):
-        return F.broadcast(df.select(F.col(key).alias(f"__k_{flag}")).distinct()
-                           .withColumn(flag, F.lit(True)))
-
-    names = entities.select(F.col(name_col).alias("n"))
-    j = (
-        check.join(flagged(names, "n", "__f_direct"),
-                   check[to_col] == F.col("__k___f_direct"), "left")
-        .join(flagged(basenames, "basename", "__f_cleanbase"),
-              F.col("__clean") == F.col("__k___f_cleanbase"), "left")
-        .join(flagged(basenames, "basename", "__f_lastbase"),
-              F.col("__last") == F.col("__k___f_lastbase"), "left")
-        .join(flagged(module_keys, "mkey", "__f_mkey"),
-              F.col("__clean") == F.col("__k___f_mkey"), "left")
-        .join(flagged(dirs, "dir", "__f_dir"),
-              F.col("__clean") == F.col("__k___f_dir"), "left")
-    )
-    # relative dotted: last segment is a known basename AND the slash-form
-    # of the cleaned name appears in that file's path (needs the paths, so
-    # it is its own small inner join, distinct'd to a key set)
-    pat_keys = (
-        check.filter(F.col("__relative") & F.col("__dotted"))
-        .select(from_col, to_col, "__last", "__clean")
-        .join(F.broadcast(basenames), F.col("__last") == F.col("basename"), "inner")
-        .filter(F.col("path").contains(F.regexp_replace("__clean", r"\.", "/")))
-        .select(from_col, to_col)
-        .distinct()
-        .withColumn("__f_path", F.lit(True))
-    )
-    j = j.join(F.broadcast(pat_keys), [from_col, to_col], "left")
-
-    t = lambda c: F.coalesce(F.col(c), F.lit(False))  # noqa: E731
-    resolved = (
-        t("__f_direct")
-        | (F.col("__relative") & t("__f_cleanbase"))
-        | (F.col("__relative") & F.col("__dotted") & t("__f_path"))
-        | (F.col("__dotted") & ~F.col("__relative")
-           & (t("__f_mkey") | t("__f_lastbase")))
-        # bare name: package directory component — plus a basename
-        # fallback the reference lacks (its bare-name branch is
-        # directory-only, qdrant.py:2135-2139, which would orphan
-        # `from helpers import x` in a flat project with helpers.py)
-        | (~F.col("__dotted") & ~F.col("__relative")
-           & (t("__f_dir") | t("__f_cleanbase")))
-    )
-    stale = j.filter(~resolved)
-    return stale.select(*relations.columns)
-
-
-def relations_touching(
-    relations: DataFrame,
-    changed_entities: DataFrame,
-    *,
-    from_col: str = "from_entity",
-    to_col: str = "to_entity",
-    name_col: str = "entity_name",
-) -> DataFrame:
-    """J7: relations touching any changed entity (either endpoint)."""
-    ch = F.broadcast(changed_entities.select(F.col(name_col).alias("__n")).distinct())
-    from_hit = relations.join(ch, relations[from_col] == F.col("__n"), "left_semi")
-    to_hit = relations.join(ch, relations[to_col] == F.col("__n"), "left_semi")
-    return from_hit.unionByName(to_hit).distinct()

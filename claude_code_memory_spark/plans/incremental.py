@@ -3,11 +3,13 @@ choreography of the reference's batch pipeline (SURVEY.md §3.1 steps 5-9).
 
 Reference flow per batch (indexer.py:1374-1459, unified_processor.py:26-166):
   1. parse changed files
-  2. pre-storage orphan filter on relations (J4, indexer.py:1132-1210)
+  2. relation check before storage, in one pass: the endpoint, phantom-
+     call and stale-import rules (J2/J3/J4, indexer.py:1132-1210) over
+     the batch and the stored rows it can invalidate (J7 scope)
   3. content-hash dedup vs stored chunks — skip re-embedding (J6)
-  4. delete replaced/deleted-file points, insert new points
-  5. orphan + phantom relation cleanup (J2/J3)
-  6. file_state update (K4)
+  4. delete replaced/deleted-file points, insert new points; stored
+     relations the check removed are committed with the batch's
+  5. file_state update (K4)
 
 Storage is plain parquet "tables" under a collection directory. Merge =
 read-current ∖ replaced ∪ new, written to a new snapshot directory and

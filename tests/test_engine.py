@@ -106,7 +106,6 @@ def test_incremental_noop_and_change(spark, temp_repo, tmp_path):
     assert n_vectors == n_chunks
 
 
-@pytest.mark.slow
 def test_deletion_propagation(spark, temp_repo, tmp_path):
     eng = CodeMemoryEngine(spark, str(tmp_path / "store"))
     eng.index(temp_repo)
@@ -201,11 +200,12 @@ def test_noop_reindex_rewrites_nothing(spark, temp_repo, tmp_path):
     assert pointers() == before  # no table advanced to a new snapshot
 
 
-@pytest.mark.slow
 def test_renamed_module_import_cleanup(spark, tmp_path):
     """Renaming a module drops the stale import edges of its (unchanged)
     importers, while stdlib imports survive — reference resolve_module_name
-    (qdrant.py:2044-2143) wired into the scoped cleanup."""
+    (qdrant.py:2044-2143) wired into the scoped check. The importer's
+    rows are re-committed in the same relations commit as the batch:
+    every index() adds exactly one commit to the table."""
     proj = tmp_path / "proj"
     proj.mkdir()
     (proj / "helpers.py").write_text("def greet():\n    return 'hi'\n")
@@ -214,6 +214,7 @@ def test_renamed_module_import_cleanup(spark, tmp_path):
     )
     eng = CodeMemoryEngine(spark, str(tmp_path / "store"))
     eng.index(str(proj))
+    assert len(eng.store.history("relations")) == 1
     rels = eng.store.read("relations")
     imports = {r["to_entity"] for r in rels.filter(F.col("relation_type") == "imports").collect()}
     assert {"os", "helpers"} <= imports
@@ -222,33 +223,36 @@ def test_renamed_module_import_cleanup(spark, tmp_path):
     os.rename(proj / "helpers.py", proj / "helpers_v2.py")
     (proj / "helpers_v2.py").write_text("def greet():\n    return 'hi'\n")
     eng.index(str(proj))
+    assert len(eng.store.history("relations")) == 2
     rels = eng.store.read("relations")
     imports = {r["to_entity"] for r in rels.filter(F.col("relation_type") == "imports").collect()}
     assert "helpers" not in imports, "stale import edge survived the rename"
     assert "os" in imports, "stdlib import was wrongly cleaned"
 
 
-@pytest.mark.slow
 def test_counters_match_stored_tables(spark, temp_repo, tmp_path):
     """index() counters come from observe() metrics piggybacked on the
-    pipeline's own actions (no dedicated .count() jobs) — they must equal
-    the actual stored table sizes on a fresh build."""
+    pipeline's own actions (no dedicated .count() jobs) and from the
+    relation check — they must equal the actual stored table sizes on a
+    fresh build."""
     eng = CodeMemoryEngine(spark, str(tmp_path / "store"))
     c = eng.index(temp_repo)
     assert c["entities"] == eng.store.read("entities").count()
     assert c["chunks"] == eng.store.read("chunks").count()
-    # relations counter = post-J4 count, >= stored (J2/J3 may clean more)
-    assert c["relations"] >= eng.store.read("relations").count()
+    # relations counter = the rows the one relations commit wrote
+    assert c["relations"] == eng.store.read("relations").count()
+    # a cold index commits relations once, as one snapshot, no tombstone
+    (commit,) = eng.store.history("relations")
+    assert len(commit["snapshots"]) == 1 and "tombstones" not in commit
     assert c["chunks_skipped_unchanged"] == 0  # nothing stored yet
 
 
-@pytest.mark.slow
 def test_incremental_cleanup_is_delta_scoped(spark, temp_repo, tmp_path):
     """A 1-file incremental index with no resulting orphans must write the
     relations table exactly once (the file-replace merge) — the J2/J3
-    cleanup is scoped to relations touching changed entities (J7) and
-    skips the rewrite when the invalid delta is empty. Round-1 re-validated
-    and rewrote the WHOLE table per batch (judge: 100x-scale killer)."""
+    check reads only the stored relations touching changed entities (J7)
+    and re-commits no untouched file when none of them became invalid.
+    Round-1 re-validated and rewrote the WHOLE table per batch."""
     import glob
 
     store_dir = str(tmp_path / "store")
@@ -262,7 +266,7 @@ def test_incremental_cleanup_is_delta_scoped(spark, temp_repo, tmp_path):
 
     snaps = glob.glob(os.path.join(store_dir, "relations", "snap-*"))
     # vacuum at index-start keeps 1 old snapshot; the merge writes 1 more;
-    # a cleanup rewrite would make it 3
+    # a second commit would make it 3
     assert len(snaps) == 2, f"relations rewritten by cleanup: {sorted(snaps)}"
 
     # and the scoped path still catches real orphans end-to-end
@@ -573,28 +577,6 @@ def test_bm25_model_is_storage_backed_after_index(spark, temp_repo, tmp_path):
     assert "Python" not in plan and "mapInPandas" not in plan
 
 
-def test_first_build_missing_endpoint_branch_is_provably_empty(
-    spark, temp_repo, tmp_path
-):
-    """r13: on a FIRST build the orphan cleanup skips the missing-endpoint
-    branch and the J7 scoping (J4 just validated the only relations that
-    exist against exactly this entity universe). Equivalence is asserted
-    directly: the invalid-relations set with the skip equals the full
-    (round-12) validation's on the same freshly built store."""
-    eng = CodeMemoryEngine(spark, str(tmp_path / "store_fb"))
-    eng.index(str(temp_repo))
-
-    def key_set(df):
-        return {
-            (r["from_entity"], r["to_entity"], r["relation_type"], r["file_path"])
-            for r in df.collect()
-        }
-
-    full = eng._invalid_relations(None, first_build=False)
-    skipped = eng._invalid_relations(None, first_build=True)
-    assert key_set(skipped) == key_set(full)
-
-
 def test_optimize_compacts_chunks_and_keeps_results(spark, temp_repo, tmp_path):
     """optimize() folds the chunks snapshots of an index and two appended
     memories into one snapshot; the table, searches and
@@ -631,3 +613,75 @@ def test_optimize_compacts_chunks_and_keeps_results(spark, temp_repo, tmp_path):
     assert len(eng.store._manifest("chunks")["snapshots"]) == 1
     assert answers(eng) == before
     assert answers(CodeMemoryEngine(spark, store_dir)) == before
+
+
+def test_dotted_package_import_leaves_no_orphan_relation_chunk(spark, tmp_path):
+    """The stale-import rule drops `from app.sub import thing` (its module
+    keys for `app/sub/__init__.py` are `app.sub.__init__` and
+    `sub.__init__`). The relation chunks are built from the checked rows,
+    so no relation chunk or vector outlives its triple in `relations`."""
+    proj = tmp_path / "proj"
+    (proj / "app" / "sub").mkdir(parents=True)
+    (proj / "app" / "__init__.py").write_text("\n")
+    (proj / "app" / "sub" / "__init__.py").write_text("def thing():\n    return 1\n")
+    (proj / "app" / "main.py").write_text(
+        "from app.sub import thing\n\n\ndef run():\n    return thing()\n"
+    )
+    eng = CodeMemoryEngine(spark, str(tmp_path / "store"))
+    eng.index(str(proj))
+
+    def triple(r):
+        return f"{r['from_entity']}::{r['relation_type']}::{r['to_entity']}::{r['import_type'] or ''}"
+
+    rels = eng.store.read("relations").collect()
+    assert "app.sub" not in {r["to_entity"] for r in rels if r["relation_type"] == "imports"}
+    triples = {triple(r) for r in rels}
+    relation = F.col("chunk_type") == "relation"
+    chunks = {
+        r["chunk_id"]: r["point_id"]
+        for r in eng.store.read("chunks").filter(relation).collect()
+    }
+    assert chunks and set(chunks) <= triples, sorted(set(chunks) - triples)
+    vectors = {r["point_id"] for r in eng.store.read("vectors").filter(relation).collect()}
+    assert vectors <= set(chunks.values())
+
+
+def test_file_state_records_the_parsed_bytes(spark, tmp_path, monkeypatch):
+    """A save that lands while index() parses must not be recorded as
+    indexed: file_state holds the hash of the bytes that were parsed, so
+    the next index() sees the file as changed and picks the save up."""
+    import hashlib
+
+    from claude_code_memory_spark import api
+
+    proj = tmp_path / "proj"
+    proj.mkdir()
+    a = proj / "a.py"
+    a.write_text("def f():\n    return 1\n")
+    (proj / "b.py").write_text("def g():\n    return 2\n")
+    eng = CodeMemoryEngine(spark, str(tmp_path / "store"))
+    eng.index(str(proj))
+
+    parsed_src = "def f():\n    return 1\n\n\ndef f2():\n    return 2\n"
+    saved_src = parsed_src + "\n\ndef f3():\n    return 3\n"
+    a.write_text(parsed_src)
+    real_parse = api.parse_files
+
+    def parse_then_save(changed):
+        out = real_parse(changed).cache()
+        out.count()  # the parse has read a.py's edit
+        a.write_text(saved_src)  # the user saves again mid-index
+        return out
+
+    monkeypatch.setattr(api, "parse_files", parse_then_save)
+    eng.index(str(proj))
+    monkeypatch.setattr(api, "parse_files", real_parse)
+
+    names = {r["entity_name"] for r in eng.store.read("entities").collect()}
+    assert {"f", "f2"} <= names and "f3" not in names
+    state = {r["relative_path"]: r["sha256"] for r in eng.store.read("file_state").collect()}
+    assert state["a.py"] == hashlib.sha256(parsed_src.encode()).hexdigest()
+
+    assert eng.index(str(proj))["files_changed"] == 1
+    names = {r["entity_name"] for r in eng.store.read("entities").collect()}
+    assert "f3" in names

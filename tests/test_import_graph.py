@@ -1,9 +1,9 @@
 """Every package module is reachable by import from the engine's entry
 points, so no module survives only because its own tests import it.
 
-The two modules in KNOWN_ORPHANS predate this guard. Their tests still
-pin their behaviour, so they stay until they are deleted together with
-those tests; the list may only shrink.
+The module in KNOWN_ORPHANS predates this guard. Its tests still pin its
+behaviour, so it stays until it is deleted together with those tests;
+the list may only shrink.
 
 Spark-free: walks the `ast` import graph (module-level and function-local
 imports alike) without importing anything.
@@ -19,7 +19,6 @@ ROOT = Path(__file__).resolve().parent.parent
 ENTRY_POINTS = (f"{PKG}.api", f"{PKG}.__main__", f"{PKG}.service", f"{PKG}.queries")
 KNOWN_ORPHANS = {
     f"{PKG}.embeddings.provider",
-    f"{PKG}.streaming.stateful",
 }
 
 

@@ -12,72 +12,71 @@ from claude_code_memory_spark.operators.dedup import (
     simhash32_table,
 )
 from claude_code_memory_spark.operators.joins import (
+    ModuleIndex,
     dedup_new_content,
-    orphan_relations,
-    phantom_calls,
+    missing_endpoint,
+    phantom_call,
     replacement_diff,
-    valid_relations,
 )
 from claude_code_memory_spark.operators.topk import merge_ranked, rrf_fuse
 from claude_code_memory_spark.operators.sessions import sessionize
 
 
 @pytest.fixture()
-def graph(spark):
-    entities = spark.createDataFrame(
-        [("a",), ("b",), ("c",)], "entity_name string"
-    )
-    relations = spark.createDataFrame(
-        [
+def graph():
+    entities = {"a", "b", "c"}
+    relations = [
+        {"from_entity": f, "to_entity": t, "relation_type": rt}
+        for f, t, rt in [
             ("a", "b", "calls"),
             ("a", "ghost", "calls"),  # orphan: to missing
             ("ghost2", "b", "uses"),  # orphan: from missing
             ("b", "c", "calls"),
-        ],
-        "from_entity string, to_entity string, relation_type string",
-    )
+        ]
+    ]
     return entities, relations
 
 
-def test_orphan_and_valid_relations(spark, graph):
+def test_orphan_and_valid_relations(graph):
     entities, relations = graph
     orphans = {
-        (r["from_entity"], r["to_entity"]) for r in orphan_relations(relations, entities).collect()
+        (r["from_entity"], r["to_entity"])
+        for r in relations
+        if missing_endpoint(r, entities)
     }
     assert orphans == {("a", "ghost"), ("ghost2", "b")}
     valid = {
-        (r["from_entity"], r["to_entity"]) for r in valid_relations(relations, entities).collect()
+        (r["from_entity"], r["to_entity"])
+        for r in relations
+        if not missing_endpoint(r, entities)
     }
     assert valid == {("a", "b"), ("b", "c")}
+    # a NULL endpoint never matches
+    assert missing_endpoint({"from_entity": "a", "to_entity": None}, entities)
 
 
-def test_phantom_calls(spark, graph):
+def test_phantom_calls(graph):
     entities, relations = graph
-    impl = spark.createDataFrame(
-        [("a", "def a():\n    return b()"), ("b", "def b():\n    return 1  # no call")],
-        "entity_name string, content string",
-    )
-    phantoms = phantom_calls(relations, impl)
-    got = {(r["from_entity"], r["to_entity"]) for r in phantoms.collect()}
+    impl = {"a": ["def a():\n    return b()"], "b": ["def b():\n    return 1  # no call"]}
+    got = {(r["from_entity"], r["to_entity"]) for r in relations if phantom_call(r, impl)}
     # b->c: both endpoints exist but 'c(' is absent from b's implementation;
     # a->ghost is likewise flagged here (in the pipeline, J2 removes it first)
     assert got == {("b", "c"), ("a", "ghost")}
     # a->b survives: 'b(' appears in a's implementation
     assert ("a", "b") not in got
+    # resolved calls are exempt; a NULL content never marks a row
+    assert not phantom_call(dict(relations[3], import_type="resolved"), impl)
+    assert not phantom_call(relations[3], {"b": [None]})
 
 
-def test_stale_imports_resolution_branches(spark):
+def test_stale_imports_resolution_branches():
     """J2-imports: each resolve_module_name branch (reference
-    qdrant.py:2100-2143) as a semi-join — stdlib and external files
-    whitelisted, unresolvable project-shaped targets flagged stale."""
-    from claude_code_memory_spark.operators.joins import stale_imports
-
-    entities = spark.createDataFrame(
-        [("pkg/mod.py",), ("pkg/util.py",), ("helpers.py",), ("greet",)],
-        "entity_name string",
-    )
-    rels = spark.createDataFrame(
-        [
+    qdrant.py:2100-2143) — stdlib and external files whitelisted,
+    unresolvable project-shaped targets flagged stale."""
+    index = ModuleIndex({"pkg/mod.py", "pkg/util.py", "helpers.py", "greet"})
+    rels = [
+        {"from_entity": f, "to_entity": t, "relation_type": rt}
+        for f, t, rt in [
             ("app.py", "os", "imports"),            # stdlib → kept
             ("app.py", "os.path", "imports"),       # stdlib dotted → kept
             ("app.py", "pkg.mod", "imports"),       # module key → kept
@@ -89,13 +88,9 @@ def test_stale_imports_resolution_branches(spark):
             ("app.py", "pkg.gone", "imports"),      # unresolvable → STALE
             ("app.py", "vanished", "imports"),      # unresolvable bare → STALE
             ("app.py", "pkg.gone", "calls"),        # not an import → untouched
-        ],
-        "from_entity string, to_entity string, relation_type string",
-    )
-    stale = {
-        (r["to_entity"], r["relation_type"])
-        for r in stale_imports(rels, entities).collect()
-    }
+        ]
+    ]
+    stale = {(r["to_entity"], r["relation_type"]) for r in rels if index.stale_import(r)}
     assert stale == {("pkg.gone", "imports"), ("vanished", "imports")}
 
 

@@ -101,68 +101,6 @@ def test_streaming_incremental_index(spark, temp_repo, tmp_path):
     assert found
 
 
-def test_stateful_sessionize_applyinpandaswithstate(spark, tmp_path):
-    """Two micro-batches for one user: batch 2 starts >= gap after batch 1's
-    last event, so the first session is emitted (closed by DATA, not by
-    wall-clock) with correct count/sum; the second stays open in state."""
-    from claude_code_memory_spark.streaming.stateful import stateful_sessionize
-
-    src = tmp_path / "sess_events"
-    src.mkdir()
-    gap_us = 1_000_000  # 1s inactivity closes a session
-
-    def write(fname, rows):
-        p = src / fname
-        with open(p, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-
-    write("b1.jsonl", [
-        {"user_id": 1, "ts_us": 100_000, "value": 1.0},
-        {"user_id": 1, "ts_us": 300_000, "value": 2.0},
-    ])
-    write("b2.jsonl", [
-        {"user_id": 1, "ts_us": 5_000_000, "value": 7.0},  # > gap later
-    ])
-    # force file order = batch order (FileStreamSource sorts by mtime)
-    now = time.time()
-    os.utime(src / "b1.jsonl", (now - 10, now - 10))
-    os.utime(src / "b2.jsonl", (now, now))
-
-    stream = (
-        spark.readStream.schema("user_id long, ts_us long, value double")
-        .option("maxFilesPerTrigger", 1)  # one file per micro-batch:
-        .json(str(src))                   # state must survive batch 1 → 2
-    )
-    out = stateful_sessionize(stream, gap_us=gap_us, emit_timeout_ms=3_600_000)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sessions_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        # a stateful query keeps running timeout-check batches, so
-        # processAllAvailable() never quiesces — poll the sink instead
-        deadline = time.time() + 120
-        rows = []
-        while time.time() < deadline:
-            rows = spark.sql("select * from sessions_out").collect()
-            if rows:
-                break
-            if q.exception():
-                raise AssertionError(q.exception())
-            time.sleep(1)
-        assert len(rows) == 1
-        r = rows[0]
-        assert (r["user_id"], r["session_start_us"], r["session_end_us"],
-                r["n_events"], r["total_value"]) == (1, 100_000, 300_000, 2, 3.0)
-    finally:
-        q.stop()
-
-
 def test_streaming_tumbling_window_with_watermark(spark, tmp_path):
     """Event-time tumbling windows with a watermark: a window is appended
     only once the watermark (max event time - delay) passes its end —
@@ -350,84 +288,3 @@ def test_stream_static_broadcast_enrichment(spark, tmp_path):
     finally:
         q.stop()
 
-
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas: per-user running totals
-    accumulate across micro-batches in a typed ValueState. Skips where
-    google.protobuf (the state-channel dependency) is unavailable —
-    this container ships a broken protobuf, so the operator is
-    env-gated like the multimodal decoders."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from claude_code_memory_spark.streaming.stateful import running_user_totals
-
-    src = tmp_path / "tws_events"
-    src.mkdir()
-
-    def write(fname, rows):
-        with open(src / fname, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-
-    write("b1.jsonl", [
-        {"user_id": 1, "ts_us": 1, "value": 10.0},
-        {"user_id": 1, "ts_us": 2, "value": 5.0},
-        {"user_id": 2, "ts_us": 3, "value": 1.0},
-    ])
-    write("b2.jsonl", [
-        {"user_id": 1, "ts_us": 4, "value": 2.5},
-    ])
-    now = time.time()
-    os.utime(src / "b1.jsonl", (now - 10, now - 10))
-    os.utime(src / "b2.jsonl", (now, now))
-
-    stream = (
-        spark.readStream.schema("user_id long, ts_us long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    out = running_user_totals(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_out")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        final = {}
-        while time.time() < deadline:
-            rows = spark.sql("SELECT * FROM tws_out").collect()
-            # memory sink in update mode appends each emission; take the
-            # latest per user (max n_events)
-            for r in rows:
-                cur = final.get(r["user_id"])
-                if cur is None or r["n_events"] > cur["n_events"]:
-                    final[r["user_id"]] = r
-            if final.get(1) and final[1]["n_events"] == 3:
-                break
-            time.sleep(1)
-        assert final[1]["n_events"] == 3 and final[1]["total_value"] == 17.5
-        assert final[2]["n_events"] == 1 and final[2]["total_value"] == 1.0
-    finally:
-        q.stop()
-
-
-def test_transform_with_state_gate_is_loud(spark):
-    """Without a working protobuf, the operator raises a clear
-    NotImplementedError at call time instead of failing opaquely
-    mid-query (the honest env-gate contract)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        pytest.skip("protobuf available here; gate not triggerable")
-    except ImportError:
-        pass
-    from claude_code_memory_spark.streaming.stateful import running_user_totals
-
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        .selectExpr("value AS user_id", "value AS ts_us", "CAST(value AS DOUBLE) AS value")
-    )
-    with pytest.raises(NotImplementedError, match="protobuf"):
-        running_user_totals(stream)

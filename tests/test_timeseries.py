@@ -193,75 +193,3 @@ class TestGapfillAndAnomaly:
         spike = max(r["bucket_id"] for r in out)
         assert flagged == {spike}
 
-
-def test_stateful_anomaly_zscore_streaming(spark, tmp_path):
-    """Streaming twin: calm history accumulates across micro-batches in
-    the state store; the spike bucket is flagged when a later bucket
-    closes it. State survives batch 1 -> 2 (maxFilesPerTrigger=1)."""
-    import json
-    import os
-    import time
-
-    from claude_code_memory_spark.streaming.stateful import (
-        stateful_anomaly_zscore,
-    )
-
-    src = tmp_path / "anom_events"
-    src.mkdir()
-
-    def write(fname, rows):
-        with open(src / fname, "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-
-    write(
-        "b1.jsonl",
-        [
-            {"series": "s", "ts_us": 100_000, "value": 10.0},
-            {"series": "s", "ts_us": 1_100_000, "value": 11.0},
-            {"series": "s", "ts_us": 2_100_000, "value": 10.0},
-            {"series": "s", "ts_us": 3_100_000, "value": 11.0},
-        ],
-    )
-    write(
-        "b2.jsonl",
-        [
-            {"series": "s", "ts_us": 4_100_000, "value": 1000.0},  # spike
-            {"series": "s", "ts_us": 5_100_000, "value": 10.0},
-        ],
-    )
-    now = time.time()
-    os.utime(src / "b1.jsonl", (now - 10, now - 10))
-    os.utime(src / "b2.jsonl", (now, now))
-
-    stream = (
-        spark.readStream.schema("series string, ts_us long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(src))
-    )
-    out = stateful_anomaly_zscore(
-        stream, bucket_us=1_000_000, window=3, emit_timeout_ms=3_600_000
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("anom_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "anom_ckpt"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        rows = []
-        while time.time() < deadline:
-            rows = spark.sql("SELECT * FROM anom_out").collect()
-            if len(rows) >= 2:
-                break
-            time.sleep(1)
-        got = {r["bucket_id"]: r for r in rows}
-        assert set(got) == {3, 4}
-        assert not got[3]["is_anomaly"]  # calm bucket vs calm history
-        assert got[4]["is_anomaly"] and got[4]["z"] > 100
-        assert got[4]["bucket_value"] == 1000.0
-    finally:
-        q.stop()

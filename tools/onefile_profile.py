@@ -2,7 +2,7 @@
 spends its time. Full-indexes the target, then drops one file_state row
 (the first by relative_path, or pass one as argv[2]) and re-indexes that
 single file with profile=True, printing the stage split and the
-relations-multiset oracle.
+relations- and chunks-multiset oracles.
 
 Usage: python tools/onefile_profile.py [target_dir] [victim_rel_path]
 """
@@ -43,36 +43,41 @@ def main() -> None:
         eng.index(target)
         out["full_index_sec"] = round(time.time() - t0, 2)
 
-        def rel_fingerprint():
+        def fingerprint(table, *cols):
             agg = (
-                eng.store.read("relations")
-                .select(
-                    F.xxhash64(
-                        "from_entity", "to_entity", "relation_type",
-                        "import_type", "file_path",
-                    ).cast("decimal(38,0)").alias("h")
-                )
+                eng.store.read(table)
+                .select(F.xxhash64(*cols).cast("decimal(38,0)").alias("h"))
                 .agg(F.count(F.lit(1)).alias("n"), F.sum("h").cast("string").alias("hs"))
                 .collect()[0]
             )
             return int(agg["n"]), agg["hs"]
+
+        def fingerprints():
+            return (
+                fingerprint(
+                    "relations", "from_entity", "to_entity", "relation_type",
+                    "import_type", "file_path",
+                ),
+                fingerprint("chunks", "chunk_id", "file_path", "content_hash"),
+            )
 
         fs = eng.store.read("file_state")
         if len(sys.argv) > 2:
             victim = sys.argv[2]
         else:
             victim = fs.orderBy("relative_path").limit(1).collect()[0]["relative_path"]
-        before = rel_fingerprint()
+        before = fingerprints()
         eng.store.write("file_state", fs.filter(F.col("relative_path") != victim))
         t0 = time.time()
         one = eng.index(target, profile=True)
         out["one_file_reindex_sec"] = round(time.time() - t0, 2)
-        after = rel_fingerprint()
+        after = fingerprints()
         out["victim"] = victim
         out["files_changed"] = one.get("files_changed")
         out["stage_sec"] = one.get("stage_sec")
         out["stage_cpu"] = one.get("stage_cpu")
-        out["relations_multiset_equal"] = before == after
+        out["relations_multiset_equal"] = before[0] == after[0]
+        out["chunks_multiset_equal"] = before[1] == after[1]
     finally:
         shutil.rmtree(store, ignore_errors=True)
     print(json.dumps(out, indent=1))
