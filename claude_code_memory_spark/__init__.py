@@ -11,15 +11,15 @@ This package re-expresses every one of those operators Spark-first:
 - ``functions/``   pure Column-expression helpers (hashing, vector math, text)
 - ``operators/``   relational + vector operators (top-k, RRF, dedup, ANN, …)
 - ``sources/``     scans and parsers (project files, python AST, chat JSONL)
-- ``embeddings/``  embedder UDFs (deterministic hash embedder, BM25 fit/transform)
+- ``embeddings/``  embedders (deterministic hash embedder, BM25 fit/encode)
 - ``plans/``       multi-statement choreography (incremental merge pipeline)
 - ``streaming/``   Structured Streaming paths (debounce, incremental foreachBatch)
 - ``queries/``     the driver-facing query catalog with DuckDB oracle SQL
 
 Design rules (see SURVEY.md §7): DataFrame/SQL only — no RDDs; Catalyst
-does pushdown/pruning/join-selection; Python appears solely in
-Arrow-batched ``mapInPandas`` stages (parsing, embedding); everything else
-is whole-stage-codegen'd column expressions.
+does pushdown/pruning/join-selection. ``api.index`` is the exception: a
+project's batch is entity-scale, so it runs as one driver pass over
+Python rows, and Spark does its store I/O.
 """
 
 __version__ = "0.1.0"

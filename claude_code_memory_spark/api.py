@@ -11,6 +11,7 @@ Reference entry points:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -19,7 +20,7 @@ from claude_code_memory_spark.embeddings import bm25 as bm25_mod
 from claude_code_memory_spark.embeddings.hash_embedder import (
     DEFAULT_DIM,
     embed_text,
-    hash_embedder_udf,
+    embed_vector,
 )
 from claude_code_memory_spark.operators.joins import (
     dedup_new_content,
@@ -28,19 +29,71 @@ from claude_code_memory_spark.operators.joins import (
     relations_in_scope,
     unresolved_call,
 )
+from claude_code_memory_spark.operators.resolve import resolve_calls
 from claude_code_memory_spark.plans.chunks import (
     entity_metadata_chunks,
     implementation_chunks,
     relation_chunks,
 )
-from claude_code_memory_spark.plans.incremental import TableStore, merge_replace_by_file
-from claude_code_memory_spark.sources.files import (
-    diff_against_state,
-    scan_project,
-    to_file_state,
+from claude_code_memory_spark.plans.incremental import (
+    TableStore,
+    TombstoneSource,
+    merge_replace_by_file,
 )
-from claude_code_memory_spark.sources.python_parser import split_parsed
-from claude_code_memory_spark.sources.registry import parse_files
+from claude_code_memory_spark.sources.files import diff_files, file_state, scan_project
+from claude_code_memory_spark.sources.python_parser import (
+    import_bindings,
+    return_bindings,
+    split_parsed,
+    type_bindings,
+)
+from claude_code_memory_spark.sources.registry import parse_rows
+
+_S, _I = pa.string(), pa.int32()
+# the tables index() writes from rows: column order and types
+TABLE_SCHEMAS = {
+    "entities": pa.schema([
+        ("entity_name", _S), ("entity_type", _S), ("file_path", _S),
+        ("line_number", _I), ("end_line_number", _I),
+        ("observations", pa.list_(_S)), ("signature", _S), ("docstring", _S),
+    ]),
+    "relations": pa.schema([
+        ("from_entity", _S), ("to_entity", _S), ("relation_type", _S),
+        ("context", _S), ("confidence", pa.float64()), ("import_type", _S),
+        ("file_path", _S),
+    ]),
+    "bindings": pa.schema([
+        ("file_path", _S), ("local_name", _S), ("target_module", _S),
+        ("member", _S), ("import_type", _S),
+    ]),
+    "type_bindings": pa.schema([
+        ("file_path", _S), ("scope", _S), ("var", _S), ("ctor", _S),
+        ("ctor_base", _S), ("awaited", pa.bool_()), ("targ", _S),
+    ]),
+    "return_binds": pa.schema([
+        ("file_path", _S), ("func", _S), ("ctor", _S), ("ctor_base", _S),
+        ("is_async", pa.bool_()),
+    ]),
+    "chunks": pa.schema([
+        ("chunk_id", _S), ("point_id", pa.int64()), ("entity_name", _S),
+        ("entity_type", _S), ("chunk_type", _S), ("content", _S),
+        ("content_bm25", _S), ("content_hash", _S),
+        ("has_implementation", pa.bool_()), ("file_path", _S),
+        ("line_number", _I), ("end_line_number", _I),
+    ]),
+    "vectors": pa.schema([
+        ("point_id", pa.int64()), ("dense", pa.list_(pa.float32())),
+        ("sparse_indices", pa.list_(_I)), ("sparse_values", pa.list_(pa.float32())),
+        ("entity_name", _S), ("entity_type", _S), ("chunk_type", _S),
+        ("file_path", _S), ("content_hash", _S),
+    ]),
+}
+
+
+def frame(spark: SparkSession, table: str, rows: list[dict]) -> DataFrame:
+    """``rows`` as a DataFrame of ``table``'s columns, through one Arrow
+    table (keys outside the table's columns are ignored)."""
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=TABLE_SCHEMAS[table]))
 
 
 class CodeMemoryEngine:
@@ -64,16 +117,18 @@ class CodeMemoryEngine:
 
         Returns counters (files, entities, relations, chunks, skipped).
 
+        Everything up to the writes is one driver pass over Python rows:
+        the scan reads and hashes the files, the parsers, resolve, the
+        relation check, the chunk builders, the BM25 encoder and the
+        hash embedder all take and return row dicts. Spark does the
+        store I/O only: one collect of each stored table an incremental
+        batch reads (minus the replaced files, in Python) and one Arrow
+        ``createDataFrame`` per written table.
+
         ``profile=True`` adds a ``stage_sec`` map (scan_diff / parse /
-        resolve / chunks / bm25 / embed / write) by forcing
-        materialization at the pipeline's persist boundaries — the
-        lineage is otherwise lazy and every stage's cost lands inside
-        the first merge write, so a growing total (r5 32 s → r7 51 s)
-        could not be attributed per stage (verdict r7 item 4). The
-        forced actions reuse the caches the pipeline already keeps
-        (parsed/chunks are persisted regardless; vectors is
-        persisted only under profile), so profiled totals stay within
-        noise of unprofiled runs."""
+        resolve / resolve.validate / chunks / bm25 / embed / write and
+        the write.* sub-stages) and a ``stage_cpu`` map; it times the
+        same calls and runs no Spark action of its own."""
         import time as _time
 
         from claude_code_memory_spark.cpuacct import StageAccountant
@@ -92,7 +147,7 @@ class CodeMemoryEngine:
         def _mark(stage: str) -> None:
             nonlocal _t0
             now = _time.time()
-            stage_sec[stage] = round(now - _t0, 2)
+            stage_sec[stage] = now - _t0
             _acct.end(stage, now - _t0)
             _t0 = now
 
@@ -100,20 +155,15 @@ class CodeMemoryEngine:
         # one read of the tree per index: the parse and file_state both
         # come from this scan, so a save during the index is seen as a
         # change by the next one instead of being recorded unparsed
-        files = scan_project(self.spark, project_dir).cache()
+        files = scan_project(project_dir)
         state = self.store.read("file_state") if incremental else None
-        changed, deleted, _unchanged = diff_against_state(files, state)
-        changed = changed.cache()
-        n_changed = changed.count()
+        changed, deleted = diff_files(files, state)
         if profile:
             _mark("scan_diff")
 
         # early exit (reference indexer.py:303): a no-op re-index must not
-        # rewrite any table — at 100 TB the common scheduled run touches
-        # nothing and should cost one file-listing join
-        if n_changed == 0 and state is not None and deleted.isEmpty():
-            changed.unpersist()
-            files.unpersist()
+        # rewrite any table
+        if not changed and not deleted and state is not None:
             return {
                 "files_changed": 0,
                 "entities": 0,
@@ -121,30 +171,15 @@ class CodeMemoryEngine:
                 "chunks": 0,
                 "chunks_skipped_unchanged": 0,
             }
+        replaced_paths = {f["relative_path"] for f in changed} | set(deleted)
 
-        replaced = changed.select("relative_path").unionByName(
-            deleted.select("relative_path")
-        ).distinct().select(F.col("relative_path").alias("file_path"))
-
-        from pyspark.sql import Observation
-
-        parsed = parse_files(changed).cache()
+        recs = parse_rows(changed)
         if profile:
-            parsed.count()  # force the mapInPandas parse into this stage
             _mark("parse")
-        entities_raw, relations, impl = split_parsed(parsed)
-        # Counter plumbing: observe() piggybacks the counts onto actions the
-        # pipeline already runs (the bm25 corpus count and the merge writes)
-        # — zero extra jobs — instead of the round-1 4-5 dedicated .count()
-        # jobs per batch. Placement rule: each observed node must appear
-        # exactly once in the plan of the query that first executes it
-        # (CollectMetrics aggregates per traversal).
-        obs_entities = Observation()
-        obs_chunks, obs_skipped = Observation(), Observation()
-        # defs and the relation check below use entities_raw (unobserved)
-        # so the observed node appears exactly once per query (via the
-        # chunk path)
-        entities = entities_raw.observe(obs_entities, F.count(F.lit(1)).alias("n"))
+        entities, relations, impl = split_parsed(recs)
+        bindings = import_bindings(recs)
+        tbinds = type_bindings(recs)
+        rbinds = return_bindings(recs)
 
         # Cross-file resolution BEFORE the relation check: rewrite calls
         # through the import graph (aliased from-imports → defining name,
@@ -152,100 +187,77 @@ class CodeMemoryEngine:
         # the check below validates the REAL target, not the local
         # alias. Bindings and defs come from stored ∪ batch with
         # replaced files' stored rows excluded (they're superseded by
-        # this batch's re-parse). Reference: tree-sitter+Jedi pairing
-        # (analysis/parser.py:15).
-        from claude_code_memory_spark.operators.resolve import resolve_calls
-        from claude_code_memory_spark.sources.python_parser import (
-            import_bindings,
-            return_bindings,
-            type_bindings,
-        )
+        # this batch's re-parse); the stored relations hand the resolver
+        # the untouched files' `inherits` edges and @property rows.
+        # Reference: tree-sitter+Jedi pairing (analysis/parser.py:15).
+        def collect(table: str, *cols) -> list[dict]:
+            df = self.store.read(table)
+            if df is None:
+                return []
+            return (df.select(*cols) if cols else df).toArrow().to_pylist()
 
-        stored_entities = self.store.read("entities")
-        bindings = import_bindings(parsed)
-        all_bindings = bindings
-        stored_bindings = self.store.read("bindings")
-        if stored_bindings is not None:
-            all_bindings = bindings.unionByName(
-                stored_bindings.join(F.broadcast(replaced), "file_path", "left_anti")
-            )
-        tbinds = type_bindings(parsed)
-        all_tbinds = tbinds
-        stored_tbinds = self.store.read("type_bindings")
-        if stored_tbinds is not None:
-            # allowMissingColumns: stores written before the round-10
-            # awaited/is_async columns read them as NULL (resolve.py
-            # coalesces NULL to false — the pre-async behavior)
-            all_tbinds = tbinds.unionByName(
-                stored_tbinds.join(F.broadcast(replaced), "file_path", "left_anti"),
-                allowMissingColumns=True,
-            )
-        rbinds = return_bindings(parsed)
-        all_rbinds = rbinds
-        stored_rbinds = self.store.read("return_binds")
-        if stored_rbinds is not None:
-            all_rbinds = rbinds.unionByName(
-                stored_rbinds.join(F.broadcast(replaced), "file_path", "left_anti"),
-                allowMissingColumns=True,
-            )
-        def_cols = ["entity_name", "entity_type", "file_path"]
-        defs = entities_raw.select(*def_cols)
-        if stored_entities is not None:
-            defs = defs.unionByName(
-                stored_entities.select(*def_cols).join(
-                    F.broadcast(replaced), "file_path", "left_anti"
-                )
-            )
-        # the batch's relation slice lacks untouched files' `inherits`
-        # edges and @property decorator rows; hand the resolver the
-        # stored ones (minus replaced) so inherited-method and
-        # property-attribute resolution survive incremental reindex
-        stored_rels = self.store.read("relations")
-        if stored_rels is not None:
-            stored_rels = stored_rels.filter(
-                (F.col("relation_type") == "inherits")
-                | (
-                    (F.col("relation_type") == "uses")
-                    & F.col("import_type").eqNullSafe("decorator")
-                    & (F.col("to_entity") == "property")
-                )
-            ).join(F.broadcast(replaced), "file_path", "left_anti")
+        def kept(rows: list[dict]) -> list[dict]:
+            return [r for r in rows if r["file_path"] not in replaced_paths]
+
+        all_defs = collect("entities", "entity_name", "entity_type", "file_path")
+        stored_defs = kept(all_defs)
+        stored_rels = kept(collect("relations"))
         relations = resolve_calls(
             relations,
-            all_bindings,
-            defs,
-            all_tbinds,
-            return_binds=all_rbinds,
+            bindings + kept(collect("bindings")),
+            entities + stored_defs,
+            tbinds + kept(collect("type_bindings")),
+            return_binds=rbinds + kept(collect("return_binds")),
             stored_relations=stored_rels,
         )
 
         _tv = _time.time()
-        relations, rel_writes, rel_replaced, n_relations = self._check_relations(
-            relations, entities_raw, impl, stored_entities, replaced
+        # J2/J3/J4 scoped by J7 (rules in operators/joins.py). The names
+        # are the final entity universe (the defs resolve read); the
+        # changed names add the replaced files' old ones.
+        names = {e["entity_name"] for e in entities + stored_defs} - {None}
+        changed_names = {e["entity_name"] for e in entities} | {
+            r["entity_name"] for r in all_defs if r["file_path"] in replaced_paths
+        }
+        changed_names.discard(None)
+        scope = relations_in_scope(relations, stored_rels, changed_names)
+        callers = {r["from_entity"] for r in scope if unresolved_call(r)} - {None}
+        # one collect of the stored chunks serves the phantom rule (the
+        # callers' implementation contents), J6 (every stored content
+        # hash, replaced files' too) and the BM25 corpus
+        is_impl = F.col("chunk_type") == "implementation"
+        all_chunks = collect(
+            "chunks", "file_path", "chunk_type", "entity_name", "point_id",
+            "content_hash", "content_bm25",
+            F.when(is_impl & F.col("entity_name").isin(*sorted(callers)), F.col("content"))
+            .alias("content"),
         )
+        stored_hashes = {r["content_hash"] for r in all_chunks}
+        stored_chunks = kept(all_chunks)
+        impl_by_caller: dict[str, list] = {}
+        for r in impl + [c for c in stored_chunks if c["chunk_type"] == "implementation"]:
+            if r["entity_name"] in callers:
+                impl_by_caller.setdefault(r["entity_name"], []).append(r["content"])
+        bad = invalid_relation_keys(scope, names, impl_by_caller)
+        relations = [r for r in relations if rel_key(r) not in bad]
+        # a stored row the batch invalidates re-commits its file: the
+        # file joins the relations merge's replaced set and its other
+        # rows are written again, so relations gets one commit
+        affected = {r["file_path"] for r in stored_rels if rel_key(r) in bad}
+        rel_writes = relations + [
+            r for r in stored_rels if r["file_path"] in affected and rel_key(r) not in bad
+        ]
         if profile:
-            stage_sec["resolve.validate"] = round(_time.time() - _tv, 2)
+            stage_sec["resolve.validate"] = _time.time() - _tv
             _mark("resolve")
 
-        meta = entity_metadata_chunks(entities, impl)
-        impl_ch = implementation_chunks(impl)
-        rel_ch = relation_chunks(relations)
-        chunks = meta.unionByName(impl_ch).unionByName(rel_ch).observe(
-            obs_chunks, F.count(F.lit(1)).alias("n")
+        chunks = (
+            entity_metadata_chunks(entities, impl)
+            + implementation_chunks(impl)
+            + relation_chunks(relations)
         )
-        # three consumers (the chunks merge, the embed/dedup path into
-        # vectors, the BM25 corpus slice) — persist so each reuses one
-        # computation instead of replaying chunk building per consumer
-        chunks = chunks.persist()
         if profile:
-            chunks.count()  # force metadata/impl/relation chunk building
             _mark("chunks")
-
-        # J6: dedup vs stored content hashes — skip re-embedding unchanged
-        stored_chunks = self.store.read("chunks")
-        to_embed = chunks
-        if stored_chunks is not None:
-            to_embed = dedup_new_content(chunks, stored_chunks)
 
         # BM25 model, amortized (UD4/A1 at scale): reuse the persisted
         # model and sparse-encode only this batch; refit — and rewrite all
@@ -255,265 +267,155 @@ class CodeMemoryEngine:
         # per batch at ours. Staleness between refits: new terms are not
         # yet searchable and IDFs lag slightly — the standard incremental
         # index trade (search-engine segment models behave the same way).
-        batch_meta = chunks.filter(F.col("chunk_type") == "metadata")
-        corpus_meta = batch_meta.select("point_id", "content_bm25")
-        if stored_chunks is not None:
-            stored_meta = (
-                stored_chunks.filter(F.col("chunk_type") == "metadata")
-                .join(F.broadcast(replaced), "file_path", "left_anti")
-                .select("point_id", "content_bm25")
-            )
-            corpus_meta = corpus_meta.unionByName(stored_meta)
+        corpus = [
+            (c["point_id"], c["content_bm25"])
+            for c in chunks + stored_chunks
+            if c["chunk_type"] == "metadata"
+        ]
         model = self._load_bm25()
-        n_corpus = corpus_meta.count()
-        refit = model is None or abs(n_corpus - model.n_docs) > 0.2 * max(model.n_docs, 1)
+        refit = model is None or abs(len(corpus) - model.n_docs) > 0.2 * max(model.n_docs, 1)
         if refit:
-            model = bm25_mod.fit(corpus_meta)
-            model.save(self._bm25_path())
-            # RELOAD from the just-written parquet: fit's vocabulary is a
-            # LAZY frame over this batch's chunk pipeline — holding it as
-            # the in-session model means every later consumer (the
-            # transform below, and worse, every post-index search's
-            # query_terms join after chunks.unpersist()) re-executes the
-            # whole parse+chunk lineage. Measured on the 865-file pyspark
-            # corpus: 572 s for ONE hybrid search served from the lazy
-            # model vs ~2 s from the parquet-backed one (bigrepo run,
-            # round 9). A fresh session loading the saved model was never
-            # affected — only the indexing session itself.
+            # saved, then reloaded: the idfs are the vocabulary write's
+            # Spark expression (embeddings/bm25.py)
+            bm25_mod.fit(self.spark, corpus).save(self._bm25_path())
             model = self._load_bm25()
         self._bm25 = model
+        sparse = bm25_mod.encode(model, ((c["point_id"], c["content_bm25"]) for c in chunks))
         if profile:
             _mark("bm25")
 
-        # embed once per distinct content hash, join back (cluster-wide memo)
-        distinct_content = to_embed.select("content_hash", "content").dropDuplicates(
-            ["content_hash"]
-        )
-        embedded = distinct_content.withColumn(
-            "dense", hash_embedder_udf(self.dim)(F.col("content"))
-        ).drop("content")
-        sparse_batch = bm25_mod.transform(model, to_embed)
-        vector_cols = [
-            "point_id", "dense", "sparse_indices", "sparse_values",
-            "entity_name", "entity_type", "chunk_type", "file_path", "content_hash",
-        ]
-        vectors = (
-            to_embed.join(embedded, "content_hash")
-            .join(sparse_batch, "point_id", "left")
-            .select(*vector_cols)
-        )
-        # Chunks whose content is unchanged were skipped above to avoid
-        # re-embedding — but the merge below still deletes every row of a
-        # replaced file, so their stored vectors must be carried over
-        # (reference: dedup skips the embedding call, not the upsert —
-        # content_processor.py:45-61).
-        if stored_chunks is not None:
-            skipped = chunks.join(
-                to_embed.select("point_id"), "point_id", "left_anti"
-            ).observe(obs_skipped, F.count(F.lit(1)).alias("n"))
-            stored_by_hash = (
-                self.store.read("vectors")
-                .select("content_hash", "dense", "sparse_indices", "sparse_values")
-                .dropDuplicates(["content_hash"])
-            )
-            reused = skipped.join(stored_by_hash, "content_hash").select(*vector_cols)
-            vectors = vectors.unionByName(reused)
+        # J6: embed once per distinct content hash; content already
+        # stored reuses its stored dense vector (reference: dedup skips
+        # the embedding call, not the upsert — content_processor.py:45-61)
+        skipped = sum(c["content_hash"] in stored_hashes for c in chunks)
+        dense = self._stored_dense({c["content_hash"] for c in chunks} & stored_hashes)
+        vectors = []
+        for c in chunks:
+            h = c["content_hash"]
+            if h not in dense:
+                dense[h] = embed_vector(c["content"], self.dim)
+            idx, val = sparse.get(c["point_id"], (None, None))
+            vectors.append({
+                **c, "dense": dense[h], "sparse_indices": idx, "sparse_values": val,
+            })
         if profile:
-            # persist-then-count so the embed UDF pass is charged here
-            # and the merge writes below read the cached vectors
-            vectors = vectors.persist()
-            vectors.count()
             _mark("embed")
 
         # fixed merge order: delete-replaced → insert (processors.py:155-179);
         # chunks/vectors partition on chunk_type (metadata-first pruning).
-        # (Measured and rejected: thread-pooling the six merges — they
-        # re-execute the shared chunk lineage concurrently and contend
-        # for the same cores, 38 s → 48 s on a 1-file batch.)
-        # write-stage sub-attribution (r13, profile only): the write stage
-        # lumped 7 merges + cleanup + refit-compact + state into one
-        # number, so its growth could not be attributed. Sub-marks use
-        # their own clock so the series-comparable "write" total (from
-        # _t0) is untouched.
-        _sub_t = [_time.time()]
+        # Write sub-stages (profile only) use their own clock so the
+        # "write" total (from _t0) is untouched.
+        _sub_t = _time.time()
 
         def _sub(stage: str) -> None:
+            nonlocal _sub_t
             if profile:
                 now = _time.time()
-                stage_sec[stage] = round(now - _sub_t[0], 2)
-                _sub_t[0] = now
+                stage_sec[stage] = now - _sub_t
+                _sub_t = now
 
-        # shared tombstone (r13): the 7 merges tombstone the SAME replaced
+        spark = self.spark
+
+        def files_frame(paths) -> DataFrame:
+            return spark.createDataFrame([(p,) for p in sorted(paths)], "file_path string")
+
+        replaced = files_frame(replaced_paths)
+        # shared tombstone (r13): the merges tombstone the SAME replaced
         # set; write it once, file-copy into the other tables' ts dirs
-        from claude_code_memory_spark.plans.incremental import TombstoneSource
-
         with TombstoneSource(self.store, replaced) as tsrc:
-            merge_replace_by_file(
-                self.store, "entities", entities, replaced, tombstone_src=tsrc
-            )
-            # stored rows the check removed widen this merge's replaced
-            # set beyond the batch's, so it writes its own tombstone
-            merge_replace_by_file(
-                self.store, "relations", rel_writes, rel_replaced,
-                tombstone_src=tsrc if rel_replaced is replaced else None,
-            )
-            merge_replace_by_file(
-                self.store, "bindings", bindings, replaced, tombstone_src=tsrc
-            )
-            merge_replace_by_file(
-                self.store, "type_bindings", tbinds, replaced, tombstone_src=tsrc
-            )
-            merge_replace_by_file(
-                self.store, "return_binds", rbinds, replaced, tombstone_src=tsrc
-            )
+            for table, rows in (
+                ("entities", entities),
+                ("relations", rel_writes),
+                ("bindings", bindings),
+                ("type_bindings", tbinds),
+                ("return_binds", rbinds),
+            ):
+                if table == "relations" and affected:
+                    # stored rows the check removed widen this merge's
+                    # replaced set, so it writes its own tombstone
+                    merge_replace_by_file(
+                        self.store, table, frame(spark, table, rows),
+                        files_frame(replaced_paths | affected),
+                    )
+                else:
+                    merge_replace_by_file(
+                        self.store, table, frame(spark, table, rows), replaced,
+                        tombstone_src=tsrc,
+                    )
             _sub("write.merge_meta")
             merge_replace_by_file(
-                self.store, "chunks", chunks, replaced, ["chunk_type"],
-                tombstone_src=tsrc,
+                self.store, "chunks", frame(spark, "chunks", chunks), replaced,
+                ["chunk_type"], tombstone_src=tsrc,
             )
             _sub("write.merge_chunks")
             merge_replace_by_file(
-                self.store, "vectors", vectors, replaced, ["chunk_type"],
-                tombstone_src=tsrc,
+                self.store, "vectors", frame(spark, "vectors", vectors), replaced,
+                ["chunk_type"], tombstone_src=tsrc,
             )
             _sub("write.merge_vectors")
 
-        # the relation check ran before the writes (_check_relations);
-        # the key stays so traced runs keep their layer list
+        # the relation check ran before the writes; the key stays so
+        # traced runs keep their layer list
         _sub("write.orphan_cleanup")
 
-        if refit and stored_chunks is not None:
+        if refit and all_chunks:
             # periodic compaction: re-encode every stored sparse vector
             # under the fresh vocabulary/IDFs (skipped on a first build —
-            # everything was just encoded with the fresh model)
-            merged_chunks = self.store.read("chunks")
-            sparse = bm25_mod.transform(model, merged_chunks)
-            vec = self.store.read("vectors").drop("sparse_indices", "sparse_values")
-            self.store.write(
-                "vectors",
-                vec.join(sparse, "point_id", "left").select(*vector_cols),
-                ["chunk_type"],
-            )
+            # everything was just encoded with the fresh model). The
+            # merged chunks are the kept stored rows plus the batch.
+            self._rewrite_sparse(chunks + stored_chunks)
         _sub("write.refit_compact")
 
         # K4: state update
-        self.store.write("file_state", to_file_state(files))
+        self.store.write("file_state", file_state(spark, files))
         _sub("write.state")
         if profile:
             _mark("write")
 
-        # the three observations were filled by actions above (the bm25
-        # corpus count and the merge writes) — no extra jobs here
         counters = {
-            "files_changed": n_changed,
-            "entities": self._obs_n(obs_entities),
-            "relations": n_relations,
-            "chunks": self._obs_n(obs_chunks),
-            "chunks_skipped_unchanged": (
-                self._obs_n(obs_skipped) if stored_chunks is not None else 0
-            ),
+            "files_changed": len(changed),
+            "entities": len(entities),
+            "relations": len(rel_writes),
+            "chunks": len(chunks),
+            "chunks_skipped_unchanged": skipped,
         }
-        files.unpersist()
-        changed.unpersist()
-        parsed.unpersist()
-        chunks.unpersist()
         if profile:
-            vectors.unpersist()
             counters["stage_sec"] = stage_sec
             if _acct.stages:
                 counters["stage_cpu"] = _acct.stages
         return counters
 
-    @staticmethod
-    def _obs_n(obs) -> int:
-        """Observation counter with an empty-plan fallback: AQE's
-        PropagateEmptyRelation can prune a CollectMetrics node whose input
-        is provably empty (e.g. a deletion-only batch), in which case the
-        metrics row is empty and decoding raises — a pruned node means
-        zero rows flowed through it."""
-        try:
-            return obs.get["n"]
-        except Exception:
-            return 0
-
-    def _check_relations(
-        self,
-        relations: DataFrame,
-        entities: DataFrame,
-        impl: DataFrame,
-        stored_entities: DataFrame | None,
-        replaced: DataFrame,
-    ) -> tuple[DataFrame, DataFrame, DataFrame, int]:
-        """J2/J3/J4 scoped by J7, in one pass on the driver, before any
-        write (rules in operators/joins.py).
-
-        Collects each input once: the resolved batch rows; the final
-        entity names (the batch plus the stored names minus the replaced
-        files, the defs resolve reads) and the replaced files' old
-        names; the stored relations minus the replaced files; and the
-        implementation contents of the callers the phantom rule checks.
-        A row is removed with every row that shares its key.
-
-        Returns the batch's kept rows (the relation chunks' input), the
-        rows the relations merge writes, that merge's replaced set and
-        the number of rows it writes. A stored row the batch invalidates
-        re-commits its file: the file joins the replaced set and its
-        other rows are written again."""
-        spark, cols = self.spark, relations.columns
-        batch = relations.toArrow().to_pylist()
-        names = set(entities.select("entity_name").toArrow().column(0).to_pylist())
-        changed = set(names)
-        if stored_entities is not None:
-            old = replaced.select("file_path", F.lit(True).alias("old"))
-            for r in (
-                stored_entities.join(F.broadcast(old), "file_path", "left")
-                .select("entity_name", "old").toArrow().to_pylist()
-            ):
-                (changed if r["old"] else names).add(r["entity_name"])
-        names.discard(None)
-        changed.discard(None)
-        stored: list[dict] = []
-        stored_rels = self.store.read("relations")
-        if stored_rels is not None:
-            stored = (
-                stored_rels.join(F.broadcast(replaced), "file_path", "left_anti")
-                .toArrow().to_pylist()
-            )
-
-        rows = relations_in_scope(batch, stored, changed)
-        callers = {r["from_entity"] for r in rows if unresolved_call(r)} - {None}
-        impl_by_caller: dict[str, list] = {}
-        if callers:
-            contents = impl.select("entity_name", "content")
-            stored_chunks = self.store.read("chunks")
-            if stored_chunks is not None:
-                contents = contents.unionByName(
-                    stored_chunks.filter(F.col("chunk_type") == "implementation")
-                    .join(F.broadcast(replaced), "file_path", "left_anti")
-                    .select("entity_name", "content")
-                )
-            contents = contents.filter(F.col("entity_name").isin(*sorted(callers)))
-            for r in contents.toArrow().to_pylist():
-                impl_by_caller.setdefault(r["entity_name"], []).append(r["content"])
-        bad = invalid_relation_keys(rows, names, impl_by_caller)
-
-        def frame(rs: list[dict]) -> DataFrame:
-            return spark.createDataFrame(
-                [tuple(r.get(c) for c in cols) for r in rs], relations.schema
-            )
-
-        kept = [r for r in batch if rel_key(r) not in bad]
-        affected = {r["file_path"] for r in stored if rel_key(r) in bad}
-        if not affected:
-            kept_df = frame(kept)
-            return kept_df, kept_df, replaced, len(kept)
-        writes = kept + [
-            r for r in stored if r["file_path"] in affected and rel_key(r) not in bad
-        ]
-        widened = replaced.unionByName(
-            spark.createDataFrame([(f,) for f in sorted(affected)], "file_path string")
+    def _stored_dense(self, hashes: set) -> dict:
+        """content_hash -> stored dense vector, for ``hashes``."""
+        if not hashes:
+            return {}
+        v = (
+            self.store.read("vectors")
+            .filter(F.col("content_hash").isin(*sorted(hashes)))
+            .select("content_hash", "dense")
+            .toArrow()
         )
-        return frame(kept), frame(writes), widened, len(writes)
+        return dict(zip(v["content_hash"].to_pylist(), v["dense"].to_pylist()))
+
+    def _rewrite_sparse(self, chunks: list[dict]) -> None:
+        """Rewrite every stored vector's sparse columns with the current
+        model's encoding of its chunk's ``content_bm25``."""
+        sparse = bm25_mod.encode(
+            self.bm25_model(), ((c["point_id"], c["content_bm25"]) for c in chunks)
+        )
+        enc = self.spark.createDataFrame(
+            pa.table({
+                "point_id": pa.array(list(sparse), pa.int64()),
+                "sparse_indices": pa.array([i for i, _ in sparse.values()], pa.list_(pa.int32())),
+                "sparse_values": pa.array([v for _, v in sparse.values()], pa.list_(pa.float32())),
+            })
+        )
+        vec = self.store.read("vectors").drop("sparse_indices", "sparse_values")
+        self.store.write(
+            "vectors",
+            vec.join(enc, "point_id", "left").select(*TABLE_SCHEMAS["vectors"].names),
+            ["chunk_type"],
+        )
 
     # -- model accessors -----------------------------------------------------
 
@@ -534,8 +436,16 @@ class CodeMemoryEngine:
         if not hasattr(self, "_bm25"):
             model = self._load_bm25()
             if model is None:
-                chunks = self.store.read("chunks")
-                model = bm25_mod.fit(chunks.filter(F.col("chunk_type") == "metadata"))
+                docs = (
+                    self.store.read("chunks")
+                    .filter(F.col("chunk_type") == "metadata")
+                    .select("point_id", "content_bm25")
+                    .toArrow()
+                )
+                model = bm25_mod.fit(
+                    self.spark,
+                    zip(docs["point_id"].to_pylist(), docs["content_bm25"].to_pylist()),
+                )
             self._bm25 = model
         return self._bm25
 
@@ -1283,22 +1193,25 @@ class CodeMemoryEngine:
         against, so the sparse columns stay NULL."""
         import os
 
-        dense = chunk.withColumn("dense", hash_embedder_udf(self.dim)(F.col("content")))
+        rows = chunk.toArrow().to_pylist()
+        sparse = {}
         if self.store.exists("chunks") or os.path.exists(
             os.path.join(self._bm25_path(), "stats.parquet")
         ):
-            sparse = bm25_mod.transform(self.bm25_model(), chunk)
-            dense = dense.join(sparse, "point_id", "left")
-        else:
-            dense = dense.withColumn(
-                "sparse_indices", F.lit(None).cast("array<int>")
-            ).withColumn("sparse_values", F.lit(None).cast("array<float>"))
-        vector = dense.select(
-            "point_id", "dense", "sparse_indices", "sparse_values",
-            "entity_name", "entity_type", "chunk_type", "file_path", "content_hash",
-        )
+            sparse = bm25_mod.encode(
+                self.bm25_model(), ((r["point_id"], r["content_bm25"]) for r in rows)
+            )
+        vectors = [
+            {
+                **r,
+                "dense": None if r["content"] is None else embed_vector(r["content"], self.dim),
+                "sparse_indices": sparse.get(r["point_id"], (None, None))[0],
+                "sparse_values": sparse.get(r["point_id"], (None, None))[1],
+            }
+            for r in rows
+        ]
         self.store.append("chunks", chunk, ["chunk_type"])
-        self.store.append("vectors", vector, ["chunk_type"])
+        self.store.append("vectors", frame(self.spark, "vectors", vectors), ["chunk_type"])
 
     def index_json_content(
         self, json_paths: list[str] | str, *, arrays=None, max_items: int = 0

@@ -1,35 +1,57 @@
-"""BM25 sparse embedder as a DataFrame-native fit/transform pair.
+"""BM25 sparse embedder: a driver-side fit and encoder over rows.
 
 Reference semantics (embeddings/bm25.py): fit = tokenize → vocabulary →
 document frequencies → robertson IDF log((N-df+0.5)/(df+0.5)) (:285-297);
-transform = per-document sparse vector over the fitted vocabulary; query
+encode = per-document sparse vector over the fitted vocabulary; query
 vectors use IDF term weights (:259-304). k1=1.2, b=0.75 (:34-38).
 
-Spark-first: the "model" is a vocabulary DataFrame (term, term_index, idf)
-plus two scalars (n_docs, avgdl) — fit is two aggregations, transform is
-an explode + broadcast join + collect back to (indices, values) arrays.
-At 100 TB the vocabulary table is still tiny (vocab ≪ corpus) and stays
-broadcast; nothing here shuffles the corpus more than once.
+The model is a vocabulary DataFrame (term, df, idf, term_index) plus two
+scalars (n_docs, avgdl). `fit` counts terms in one pass over the corpus
+rows; term_index is the term's rank in sorted order. The idf column is
+Spark's ``log`` (Java ``StrictMath``), evaluated by the vocabulary
+frame's own expression: Python's ``math.log`` differs from it in the
+last bit for some (N, df) pairs, and a stored idf or sparse weight must
+not depend on which side computed it. `BM25Model.terms` reads the
+vocabulary back once; `encode` weights documents with it.
 """
 
 from __future__ import annotations
 
+import re
+from collections import Counter, defaultdict
+from collections.abc import Hashable, Iterable
 from dataclasses import dataclass
+from functools import cached_property
 
-from pyspark.sql import DataFrame, Window
+import numpy as np
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from claude_code_memory_spark.functions.text import tokenize
 
 K1 = 1.2
 B = 0.75
+_NON_ALNUM = re.compile("[^a-z0-9]+")
+
+
+def tokenize(text: str) -> list[str]:
+    """X7: lowercase, split on non-alphanumerics, drop tokens of len <= 1
+    (`functions/text.tokenize`; reference ``\\b[a-zA-Z0-9]+\\b`` + len>1
+    filter, embeddings/bm25.py:163-175)."""
+    return [t for t in _NON_ALNUM.split(text.lower()) if len(t) > 1]
 
 
 @dataclass
 class BM25Model:
-    vocabulary: DataFrame  # term, term_index, df, idf
+    vocabulary: DataFrame  # term, df, idf, term_index
     n_docs: int
     avgdl: float
+
+    @cached_property
+    def terms(self) -> dict[str, tuple[int, float]]:
+        """term -> (term_index, idf), read from the vocabulary once."""
+        v = self.vocabulary.select("term", "term_index", "idf").toArrow()
+        return dict(
+            zip(v["term"].to_pylist(), zip(v["term_index"].to_pylist(), v["idf"].to_pylist()))
+        )
 
     def save(self, path: str) -> None:
         # model persistence ≈ reference's pickle cache (bm25.py:86-161)
@@ -46,99 +68,71 @@ class BM25Model:
         return cls(vocab, int(n_docs), float(avgdl))
 
 
-def fit(docs: DataFrame, *, id_col: str = "point_id", text_col: str = "content_bm25") -> BM25Model:
-    """Corpus fit (A1): vocabulary + document frequencies + IDF.
+def fit(spark: SparkSession, docs: Iterable[tuple[Hashable, str | None]]) -> BM25Model:
+    """Corpus fit (A1) over (doc id, text) pairs: vocabulary, document
+    frequencies and IDF.
 
-    The two corpus scalars (n_docs, avgdl) ride ONE driver action over a
-    single tokenize pass: per-doc lengths come from `size(tokenize(..))`
-    without exploding, so the stats job never shuffles the corpus at all
-    (map-side lengths → one 1-row aggregate). avgdl averages docs that
-    produced ≥1 token — identical to the former groupBy-on-exploded-tokens
-    formulation, at one job instead of two."""
-    nonnull = docs.filter(F.col(text_col).isNotNull())
-    dl = nonnull.select(F.size(tokenize(text_col)).alias("dl"))
-    stats = dl.agg(
-        F.count("*").alias("n"), F.avg(F.when(F.col("dl") > 0, F.col("dl"))).alias("avgdl")
-    ).collect()[0]
-    n_docs, avgdl = int(stats["n"]), float(stats["avgdl"] or 0.0)
-    toks = nonnull.select(id_col, F.explode(tokenize(text_col)).alias("term"))
-    df_ = toks.distinct().groupBy("term").agg(F.count("*").alias("df"))
-    vocab = df_.withColumn(
-        "idf", F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
+    A NULL text is no document. n_docs counts the others; avgdl averages
+    the lengths of those with at least one token; df counts the distinct
+    ids holding a term."""
+    n_docs, n_long, total = 0, 0, 0
+    terms_of: dict = defaultdict(set)
+    for key, text in docs:
+        if text is None:
+            continue
+        toks = tokenize(text)
+        n_docs += 1
+        if toks:
+            n_long += 1
+            total += len(toks)
+        terms_of[key].update(toks)
+    df = Counter(t for ts in terms_of.values() for t in ts)
+    vocab = spark.createDataFrame(
+        [(t, df[t], i) for i, t in enumerate(sorted(df))],
+        "term string, df long, term_index int",
+    ).select(
+        "term",
+        "df",
+        F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)).alias("idf"),
+        "term_index",
     )
-    return BM25Model(vocabulary=_dense_term_index(vocab), n_docs=n_docs, avgdl=avgdl)
+    return BM25Model(vocab, n_docs, total / n_long if n_long else 0.0)
 
 
-def _dense_term_index(vocab: DataFrame) -> DataFrame:
-    """term_index = global rank of `term` in sorted order, assigned WITHOUT a
-    single-partition window: range-partition by term, rank locally, then add
-    per-partition offsets (a #partitions-sized table). The index is invariant
-    to where the range boundaries land, so the result is deterministic even
-    though the boundaries are sampled. A code-corpus vocabulary can reach
-    10^7-10^8 terms at 100 TB; a global row_number() would sort all of it in
-    one task."""
-    v = vocab.repartitionByRange(F.col("term")).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    w_local = Window.partitionBy("_pid").orderBy("term")
-    v = v.withColumn("_local", F.row_number().over(w_local) - 1)
-    counts = v.groupBy("_pid").agg(F.count("*").alias("_n"))
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offs = counts.withColumn("_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0)))
-    return (
-        v.join(F.broadcast(offs.select("_pid", "_off")), "_pid")
-        .withColumn("term_index", (F.col("_off") + F.col("_local")).cast("int"))
-        .drop("_pid", "_local", "_off")
-    )
+def encode(
+    model: BM25Model, docs: Iterable[tuple[Hashable, str | None]]
+) -> dict[Hashable, tuple[list[int], list[float]]]:
+    """Sparse vectors of (doc id, text) pairs: id -> (sparse_indices,
+    sparse_values), term_index ascending, float32 values.
 
-
-def transform(
-    model: BM25Model,
-    docs: DataFrame,
-    *,
-    id_col: str = "point_id",
-    text_col: str = "content_bm25",
-) -> DataFrame:
-    """Per-document sparse vectors: (id, sparse_indices, sparse_values).
-
-    value(term) = idf * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))."""
-    toks = docs.filter(F.col(text_col).isNotNull()).select(
-        id_col, F.explode(tokenize(text_col)).alias("term")
-    )
-    dl = toks.groupBy(id_col).agg(F.count("*").alias("dl"))
-    tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    # No broadcast hint on the vocabulary: usually tiny (AQE converts to
-    # broadcast at runtime), but a forced hint would OOM on a 10^8-term
-    # vocab — let AQE pick from runtime sizes.
-    scored = (
-        tf.join(model.vocabulary.select("term", "term_index", "idf"), "term")
-        .join(dl, id_col)
-        .withColumn(
-            "w",
-            F.col("idf")
-            * (F.col("tf") * (K1 + 1))
-            / (F.col("tf") + K1 * (1 - B + B * F.col("dl") / F.lit(model.avgdl))),
+    value(term) = idf * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)), in
+    this operation order. The texts of one id are one document (dl and
+    tf sum over them); NULL texts are skipped, and an id with no
+    in-vocabulary term has no vector."""
+    toks_of: dict = defaultdict(list)
+    for key, text in docs:
+        if text is not None:
+            toks_of[key].extend(tokenize(text))
+    terms, avgdl = model.terms, model.avgdl
+    out = {}
+    for key, toks in toks_of.items():
+        dl = len(toks)
+        scored = sorted(
+            (terms[t][0], terms[t][1] * (tf * (K1 + 1)) / (tf + K1 * (1 - B + B * dl / avgdl)))
+            for t, tf in Counter(toks).items()
+            if t in terms
         )
-    )
-    packed = (
-        scored.select(id_col, F.struct("term_index", "w").alias("p"))
-        .groupBy(id_col)
-        .agg(F.sort_array(F.collect_list("p")).alias("ps"))
-        .select(
-            id_col,
-            F.col("ps.term_index").alias("sparse_indices"),
-            F.transform(F.col("ps.w"), lambda x: x.cast("float")).alias("sparse_values"),
-        )
-    )
-    return packed
+        if scored:
+            out[key] = (
+                [i for i, _ in scored],
+                np.array([w for _, w in scored], dtype=np.float32).tolist(),
+            )
+    return out
 
 
 def query_tf(query: str) -> dict[str, int]:
     """Query term frequencies: lower-cased alphanumeric runs of two or
     more characters (the query side of reference bm25.py:259-304)."""
-    import re
-    from collections import Counter
-
     return Counter(t for t in re.findall(r"[a-z0-9]+", query.lower()) if len(t) > 1)
 
 

@@ -4,77 +4,28 @@ Reference pattern: DummyEmbedder (tests/conftest.py:243-296) seeds a PRNG
 from the text hash and draws a unit vector, making every vector (and thus
 every top-k result) exactly reproducible without network calls.
 
-Production embedders (OpenAI/Voyage, embeddings/openai.py, voyage.py) slot
-in behind the same interface: a scalar-iterator pandas UDF whose batches
-amortize the HTTP round-trip; see `provider_embedder_stub`.
-
 Cost optimization: the reference memo-caches embeddings per text
-(registry.py:48-51). The cluster-wide equivalent is dedup-before-embed:
-`distinct()` on content_hash, embed once, join back — implemented in
-plans/incremental.py.
+(registry.py:48-51). `api.index` embeds once per distinct content hash
+and reuses the stored vector of content it already holds (J6).
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 DEFAULT_DIM = 64
 
 
-def embed_text(text: str, dim: int = DEFAULT_DIM) -> list[float]:
-    """Driver-side single-text embedding (for query vectors)."""
+def embed_vector(text: str, dim: int = DEFAULT_DIM) -> np.ndarray:
+    """The float32 unit vector of ``text``."""
     seed = int.from_bytes(hashlib.sha256(text.encode("utf-8")).digest()[:8], "big")
-    rng = np.random.default_rng(seed)
-    v = rng.standard_normal(dim)
-    v = v / np.linalg.norm(v)
-    return [float(x) for x in v.astype(np.float32)]
+    v = np.random.default_rng(seed).standard_normal(dim)
+    v /= np.linalg.norm(v)
+    return v.astype(np.float32)
 
 
-def hash_embedder_udf(dim: int = DEFAULT_DIM) -> Column:
-    """Arrow-batched pandas UDF: content → ARRAY<FLOAT> unit vector.
-
-    Rows stay numpy float32 arrays end-to-end (Arrow consumes them
-    directly); converting each vector to a Python list of floats measured
-    ~3x slower per core. Values are bit-identical to ``embed_text``."""
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def embed(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batches:
-            out = []
-            for text in s:
-                if text is None:
-                    out.append(None)
-                    continue
-                seed = int.from_bytes(
-                    hashlib.sha256(text.encode("utf-8")).digest()[:8], "big"
-                )
-                rng = np.random.default_rng(seed)
-                v = rng.standard_normal(dim)
-                v /= np.linalg.norm(v)
-                out.append(v.astype(np.float32))
-            yield pd.Series(out)
-
-    return embed
-
-
-def provider_embedder_stub(model: str = "voyage-3-lite", dim: int = 512):
-    """HTTP-backed embedders (UD2/UD3): the batching / truncation / retry
-    logic is fully implemented in `embeddings.provider` (token-budget
-    batching per voyage.py:182-189 — 30k-120k tokens, <=1000 texts — plus
-    backoff-with-jitter retry per base.py:171-235), behind a pluggable
-    transport. Only the HTTP transport itself needs credentials/network;
-    this container has neither → NotImplementedError here, while
-    `provider.provider_embedder_udf(provider.fake_transport(dim), model)`
-    exercises the complete provider path deterministically."""
-    raise NotImplementedError(
-        "provider embedders need network credentials; use "
-        "embeddings.provider.provider_embedder_udf with fake_transport (tests) "
-        "or an HTTP transport (deployment)"
-    )
+def embed_text(text: str, dim: int = DEFAULT_DIM) -> list[float]:
+    """Driver-side single-text embedding as a list (query vectors)."""
+    return embed_vector(text, dim).tolist()

@@ -11,7 +11,7 @@ Spark-first split: the duplicate-candidate search runs through
 `CodeMemoryEngine.search` (the same distributed keyword/hybrid top-k
 the MCP surface serves, :732-801 parity); only the judge call is
 driver-side. The judge is a pluggable transport exactly like the UD7
-summarizer and UD2 provider embedders — `fake_transport` makes the
+summarizer — `fake_transport` makes the
 whole gate deterministic and network-free (the reference's subprocess
 `claude -p` call is the env-gated production transport;
 `summarizer.http_transport` slots in for OpenAI-compatible judges).

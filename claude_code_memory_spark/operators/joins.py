@@ -13,8 +13,9 @@ J2/J3/J4/J7 run once per ``index()``, on the driver, before any write.
 The reference hand-rolls them with O(1) lookup dicts; at the entity
 scale of one project the inputs are small, so the rules below are the
 same dict and set lookups over rows collected as Python dicts
-(``pyarrow.Table.to_pylist``). ``CodeMemoryEngine._check_relations``
-collects the inputs and hands the result to the writes.
+(``pyarrow.Table.to_pylist``). ``CodeMemoryEngine.index`` holds the
+batch's rows, collects each stored input once and hands the result to
+the writes.
 """
 
 from __future__ import annotations

@@ -42,10 +42,11 @@ entity-universe validation — it never loses a relation.
 
 Execution: the inputs are entity-scale (rows ∝ files, imports and
 definitions, not corpus bytes), and at project scale a plan of joins
-costs its Spark job count, not its data. So ``resolve_calls`` collects
-each input once through Arrow, builds plain dicts, resolves every call,
-throws and decorator row in one driver loop, and returns one
-``createDataFrame``. Every rule that decides a result is order-free:
+costs its Spark job count, not its data. So ``resolve_calls`` takes
+the rows `api.index` already holds (the parsed batch plus the stored
+rows it collected once), builds plain dicts, and resolves every call,
+throws and decorator row in one driver loop. Every rule that decides a
+result is order-free:
 where several candidates meet, a count-distinct guard leaves the row
 unresolved or a ``min`` (NULLs first, as Spark orders structs) picks.
 A lookup key with a NULL part never matches, as in an equi-join.
@@ -55,8 +56,6 @@ from __future__ import annotations
 
 import re
 from collections import defaultdict
-
-from pyspark.sql import DataFrame
 
 _POISON = ("__poisoned__", "__poisoned__")
 _NO_POS = 2**31 - 1  # sorts a NULL base position after every real one
@@ -193,10 +192,6 @@ def _int(s):
         return int(s.strip())
     except (AttributeError, ValueError):
         return None
-
-
-def _rows(df: DataFrame) -> list[dict]:
-    return df.toArrow().to_pylist()
 
 
 class _Resolver:
@@ -897,51 +892,42 @@ class _Resolver:
         return out
 
 def resolve_calls(
-    relations: DataFrame,
-    bindings: DataFrame,
-    entities: DataFrame,
-    type_binds: DataFrame | None = None,
+    relations: list[dict],
+    bindings: list[dict],
+    entities: list[dict],
+    type_binds: list[dict] | None = None,
     *,
-    return_binds: DataFrame | None = None,
-    stored_relations: DataFrame | None = None,
+    return_binds: list[dict] | None = None,
+    stored_relations: list[dict] | None = None,
     max_hops: int = 3,
     max_inherit: int = 3,
-) -> DataFrame:
+) -> list[dict]:
     """Rewrite `calls` relations through the import graph.
 
-    ``relations``: split_parsed's relation slice (context = dotted call
-    base for attribute calls). ``bindings``: import_bindings(parsed).
-    ``entities``: the entity table (entity_name, entity_type,
-    file_path, ...). ``type_binds``: type_bindings(parsed) — enables
-    instance-typed method resolution (``x = C(); x.m()`` → the C.m
-    entity, looking through inherited classes when C doesn't define m).
-    ``return_binds``: return_bindings(parsed) — factory-function
-    returns; a type-bind whose ctor names such a function substitutes
-    the factory's returned class before method lookup.
-    ``stored_relations``: previously-indexed relations (replaced files
-    already excluded) — an INCREMENTAL batch's own relation slice lacks
-    the `inherits` edges and @property rows of untouched files, so
-    without this the ancestor closure would silently forget every
-    cross-file base class on reindex.
-    Returns relations with the same schema; resolved calls, throws and
-    decorator rows have to_entity rewritten to the defining entity's
-    name and import_type='resolved'. Every other row passes through
-    unchanged."""
-    names = relations.columns
-    rels = _rows(relations)
-    anc_rels = rels
-    if stored_relations is not None:
-        anc_rels = rels + _rows(stored_relations.select(*names))
+    Every argument is a list of row dicts. ``relations``: split_parsed's
+    relation rows (context = dotted call base for attribute calls).
+    ``bindings``: import_bindings rows. ``entities``: entity rows
+    (entity_name, entity_type, file_path, ...). ``type_binds``:
+    type_bindings rows — enables instance-typed method resolution (``x =
+    C(); x.m()`` → the C.m entity, looking through inherited classes
+    when C doesn't define m). ``return_binds``: return_bindings rows —
+    factory-function returns; a type-bind whose ctor names such a
+    function substitutes the factory's returned class before method
+    lookup. ``stored_relations``: previously-indexed relations
+    (replaced files already excluded) — an INCREMENTAL batch's own
+    relation rows lack the `inherits` edges and @property rows of
+    untouched files, so without them the ancestor closure would
+    silently forget every cross-file base class on reindex.
+    Returns the relation rows; resolved calls, throws and decorator rows
+    have to_entity rewritten to the defining entity's name and
+    import_type='resolved'. Every other row passes through unchanged."""
     r = _Resolver(
-        _rows(bindings),
-        _rows(entities.select("entity_name", "entity_type", "file_path")),
-        anc_rels,
-        None if type_binds is None else _rows(type_binds),
-        None if return_binds is None else _rows(return_binds),
+        bindings,
+        entities,
+        relations + (stored_relations or []),
+        type_binds,
+        return_binds,
         max_hops,
         max_inherit,
     )
-    out = r.resolve(rels)
-    return relations.sparkSession.createDataFrame(
-        [tuple(o[c] for c in names) for o in out], relations.schema
-    )
+    return r.resolve(relations)

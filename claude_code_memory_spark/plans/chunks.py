@@ -10,125 +10,153 @@ Reference semantics:
   (entities.py:244-262).
 - point id = int(sha256(chunk_id)[:16], 16) (storage/qdrant.py:1423-1430).
 
-Everything is a pure column expression — the whole chunk build is one
-shuffle-free projection over the parsed records.
+Every builder maps row dicts to chunk row dicts (the CHUNKS columns) on
+the driver, byte-equal to the Spark column expressions of
+`functions/hashing.py` and `functions/text.py`: ``_concat_ws`` skips
+NULLs and keeps empty strings, hashes are over UTF-8 bytes, and the
+point id is the signed 64-bit reading of the first 16 hex digits.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from claude_code_memory_spark.functions.hashing import content_hash, md5_8, point_id
-from claude_code_memory_spark.functions.text import camel_to_spaced, weighted_content
+import hashlib
+import re
 
 NO_IMPL_TYPES = ("import", "variable", "constant")  # processors.py:38-43
+CHUNK_COLUMNS = (
+    "chunk_id", "point_id", "entity_name", "entity_type", "chunk_type",
+    "content", "content_bm25", "content_hash", "has_implementation",
+    "file_path", "line_number", "end_line_number",
+)
+_CAMEL = re.compile("([a-z0-9])([A-Z])")
 
 
-def entity_metadata_chunks(entities: DataFrame, impl_entities: DataFrame) -> DataFrame:
-    """Metadata chunks: weighted content + BM25 doc per entity."""
-    has_impl_names = impl_entities.select(
-        F.col("entity_name").alias("__impl_name")
-    ).distinct()
-    content = weighted_content(F.col("entity_name"), F.col("observations"))
-    bm25_doc = F.concat_ws(
+def _concat_ws(sep: str, *parts: str | None) -> str:
+    """Spark ``concat_ws``: NULL parts are skipped, empty ones kept."""
+    return sep.join(p for p in parts if p is not None)
+
+
+def content_hash(s: str | None) -> str | None:
+    """X1: sha256 hex digest (``F.sha2(c, 256)``)."""
+    return None if s is None else hashlib.sha256(s.encode("utf-8")).hexdigest()
+
+
+def md5_8(s: str | None) -> str | None:
+    """X3: first 8 hex chars of md5."""
+    return None if s is None else hashlib.md5(s.encode("utf-8")).hexdigest()[:8]
+
+
+def point_id(s: str) -> int:
+    """X2: int(sha256(s)[:16], 16) read as a signed 64-bit integer."""
+    v = int(hashlib.sha256(s.encode("utf-8")).hexdigest()[:16], 16)
+    return v - (1 << 64) if v >= 1 << 63 else v
+
+
+def camel_to_spaced(name: str | None) -> str | None:
+    """X4: CamelCase / snake_case name → lowercase spaced words."""
+    if name is None:
+        return None
+    return _CAMEL.sub(r"\1 \2", name).replace("_", " ").lower()
+
+
+def weighted_content(name: str | None, observations: list | None) -> str:
+    """X5: field-weighted content — entity name 3×, first observation
+    2×, the rest 1× (reference entities.py:99-119)."""
+    obs = observations or []
+    first = obs[0] if obs and obs[0] is not None else ""
+    return _concat_ws(
         " ",
-        F.col("entity_name"),
-        F.col("entity_name"),  # 2x name boost (entities.py:145-221)
-        camel_to_spaced(F.col("entity_name")),
-        F.coalesce(F.element_at("observations", 1), F.lit("")),
-        F.col("entity_type"),
-        F.coalesce(F.element_at(F.split(F.col("file_path"), "/"), -1), F.lit("")),
-    )
-    df = entities.join(
-        has_impl_names, entities.entity_name == F.col("__impl_name"), "left"
-    ).withColumn(
-        "has_implementation",
-        F.when(F.col("entity_type").isin(*NO_IMPL_TYPES), F.lit(False)).otherwise(
-            F.col("__impl_name").isNotNull()
-        ),
-    )
-    chunk_id = F.concat_ws(
-        "::",
-        F.coalesce("file_path", F.lit("")),
-        F.col("entity_type"),
-        F.col("entity_name"),
-        F.lit("metadata"),
-        md5_8(content),
-    )
-    return df.select(
-        chunk_id.alias("chunk_id"),
-        point_id(chunk_id).alias("point_id"),
-        "entity_name",
-        "entity_type",
-        F.lit("metadata").alias("chunk_type"),
-        content.alias("content"),
-        bm25_doc.alias("content_bm25"),
-        content_hash(content).alias("content_hash"),
-        "has_implementation",
-        "file_path",
-        "line_number",
-        "end_line_number",
+        _concat_ws(" ", *[name] * 3),
+        _concat_ws(" ", first, first),
+        _concat_ws(" ", *obs[1:]),
     )
 
 
-def implementation_chunks(impl: DataFrame) -> DataFrame:
+def _chunk(chunk_id: str, chunk_type: str, name, etype, fp, content, content_bm25,
+           has_impl: bool, line=None, end_line=None) -> dict:
+    return {
+        "chunk_id": chunk_id,
+        "point_id": point_id(chunk_id),
+        "entity_name": name,
+        "entity_type": etype,
+        "chunk_type": chunk_type,
+        "content": content,
+        "content_bm25": content_bm25,
+        "content_hash": content_hash(content),
+        "has_implementation": has_impl,
+        "file_path": fp,
+        "line_number": line,
+        "end_line_number": end_line,
+    }
+
+
+def entity_metadata_chunks(entities: list[dict], impl: list[dict]) -> list[dict]:
+    """Metadata chunks: weighted content + BM25 doc per entity."""
+    impl_names = {r["entity_name"] for r in impl} - {None}
+    out = []
+    for e in entities:
+        name, etype, fp, obs = (
+            e["entity_name"], e["entity_type"], e["file_path"], e["observations"]
+        )
+        content = weighted_content(name, obs)
+        first = obs[0] if obs and obs[0] is not None else ""
+        bm25_doc = _concat_ws(
+            " ",
+            name,
+            name,  # 2x name boost (entities.py:145-221)
+            camel_to_spaced(name),
+            first,
+            etype,
+            "" if fp is None else fp.split("/")[-1],
+        )
+        chunk_id = _concat_ws(
+            "::", fp or "", etype, name, "metadata", md5_8(content)
+        )
+        has_impl = etype not in NO_IMPL_TYPES and name in impl_names
+        out.append(_chunk(
+            chunk_id, "metadata", name, etype, fp, content, bm25_doc, has_impl,
+            e["line_number"], e["end_line_number"],
+        ))
+    return out
+
+
+def implementation_chunks(impl: list[dict]) -> list[dict]:
     """Implementation chunks: the code itself (progressive disclosure —
     searched only on demand, entities.py:84-143)."""
-    chunk_id = F.concat_ws(
-        "::",
-        F.coalesce("file_path", F.lit("")),
-        F.col("entity_type"),
-        F.col("entity_name"),
-        F.lit("implementation"),
-        md5_8(F.col("content")),
-    )
-    return impl.select(
-        chunk_id.alias("chunk_id"),
-        point_id(chunk_id).alias("point_id"),
-        "entity_name",
-        "entity_type",
-        F.lit("implementation").alias("chunk_type"),
-        F.col("content"),
-        F.lit(None).cast("string").alias("content_bm25"),
-        content_hash(F.col("content")).alias("content_hash"),
-        F.lit(True).alias("has_implementation"),
-        "file_path",
-        "line_number",
-        "end_line_number",
-    )
+    return [
+        _chunk(
+            _concat_ws(
+                "::", r["file_path"] or "", r["entity_type"], r["entity_name"],
+                "implementation", md5_8(r["content"]),
+            ),
+            "implementation", r["entity_name"], r["entity_type"], r["file_path"],
+            r["content"], None, True, r["line_number"], r["end_line_number"],
+        )
+        for r in impl
+    ]
 
 
-def relation_chunks(relations: DataFrame) -> DataFrame:
-    """Relation chunks (entities.py:224-306): id from the endpoint triple."""
-    chunk_id = F.concat_ws(
-        "::",
-        F.col("from_entity"),
-        F.col("relation_type"),
-        F.col("to_entity"),
-        F.coalesce("import_type", F.lit("")),
-    )
-    content = F.concat_ws(" ", F.col("from_entity"), F.col("relation_type"), F.col("to_entity"))
-    rows = relations.select(
-        chunk_id.alias("chunk_id"),
-        point_id(chunk_id).alias("point_id"),
-        F.col("from_entity").alias("entity_name"),
-        F.lit(None).cast("string").alias("entity_type"),
-        F.lit("relation").alias("chunk_type"),
-        content.alias("content"),
-        F.lit(None).cast("string").alias("content_bm25"),
-        content_hash(content).alias("content_hash"),
-        F.lit(False).alias("has_implementation"),
-        "file_path",
-        F.lit(None).cast("int").alias("line_number"),
-        F.lit(None).cast("int").alias("end_line_number"),
-    )
-    # A4 relation dedup (processors.py:346-394): one chunk per triple. When
-    # several files hold the triple (e.g. a vendored copy), the smallest
-    # file_path owns the chunk, so every build keeps the same row.
-    rest = [c for c in rows.columns if c not in ("chunk_id", "file_path")]
-    return (
-        rows.groupBy("chunk_id")
-        .agg(F.min(F.struct("file_path", *rest)).alias("__r"))
-        .select("chunk_id", *[F.col(f"__r.{c}").alias(c) for c in rows.columns[1:]])
-    )
+def relation_chunks(relations: list[dict]) -> list[dict]:
+    """Relation chunks (entities.py:224-306): id from the endpoint triple.
+
+    A4 relation dedup (processors.py:346-394): one chunk per triple. When
+    several files hold the triple (e.g. a vendored copy), the smallest
+    file_path owns the chunk (a NULL one first), so every build keeps
+    the same row."""
+    owner: dict[str, tuple] = {}
+    for r in relations:
+        src, rtype, dst, fp = (
+            r["from_entity"], r["relation_type"], r["to_entity"], r["file_path"]
+        )
+        chunk_id = _concat_ws("::", src, rtype, dst, r["import_type"] or "")
+        key = (fp is not None, fp)
+        # every column but file_path is a function of the id
+        if chunk_id not in owner or key < owner[chunk_id][0]:
+            owner[chunk_id] = (key, src, rtype, dst)
+    return [
+        _chunk(
+            chunk_id, "relation", src, None, fp, _concat_ws(" ", src, rtype, dst),
+            None, False,
+        )
+        for chunk_id, ((_, fp), src, rtype, dst) in owner.items()
+    ]

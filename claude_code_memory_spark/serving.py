@@ -183,12 +183,7 @@ class Sparse:
     when the collection has none)."""
 
     def __init__(self, model, postings):
-        self.vocab = {}
-        if model is not None:
-            v = model.vocabulary.select("term", "term_index", "idf").toArrow()
-            self.vocab = dict(
-                zip(v["term"].to_pylist(), zip(v["term_index"].to_pylist(), v["idf"].to_pylist()))
-            )
+        self.vocab = {} if model is None else model.terms
         if postings is None:
             p = pa.table(
                 {"term_index": pa.array([], pa.int32()), "point_id": pa.array([], pa.int64()),

@@ -1,4 +1,4 @@
-"""Project file scan + changed-file detection.
+"""Project file scan + changed-file detection, on the driver.
 
 Reference semantics:
 - S1 project scan: include globs, exclude patterns, max-file-size filter
@@ -6,15 +6,17 @@ Reference semantics:
 - S2 changed-file scan: SHA256 diff vs stored state, deletions via key
   set-difference (indexer.py:954-987; mtime pruning :898-952)
 
-Spark-first: metadata listing is an explicit walk (the `binaryFile`
-source is unusable here — Hadoop's hidden-file filter silently drops
-`__init__.py` and every `_`-prefixed module); content reads are an
-Arrow-batched distributed stage over the path list; change detection is
-a full-outer join against the `file_state` table — at 100 TB both sides
-are just parquet.
+The scan is an explicit walk (the `binaryFile` source is unusable here —
+Hadoop's hidden-file filter silently drops `__init__.py` and every
+`_`-prefixed module) that reads and hashes each kept file in the same
+pass; change detection compares those hashes with one collect of the
+`file_state` table, which `file_state` rewrites from the same scan.
 """
 
 from __future__ import annotations
+
+import hashlib
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,34 +44,27 @@ LANGUAGE_BY_EXT = {
 
 
 def scan_project(
-    spark: SparkSession,
     project_dir: str,
     *,
     include_glob: str = "*",
     excludes: tuple[str, ...] = DEFAULT_EXCLUDES,
     max_file_size: int = 1_048_576,
-) -> DataFrame:
-    """S1: scan a project tree into the `source_files` schema.
+) -> list[dict]:
+    """S1: scan a project tree into `source_files` rows (dicts with
+    file_path, relative_path, content, size, mtime (epoch seconds),
+    sha256, language).
 
-    Listing is an explicit walk (metadata only — cheap at any repo
-    size); content reads run DISTRIBUTED via an Arrow-batched
-    mapInPandas over the path list, so the expensive byte IO scales
-    with executors. The `binaryFile` source is deliberately NOT used:
-    Hadoop's hidden-file convention silently drops every file whose
-    name starts with ``_`` or ``.`` — which in a Python project means
-    ``__init__.py``, ``__main__.py``, and every ``_internal.py`` module
-    would never be indexed (and package re-exports through __init__
-    could never resolve). Dot-prefixed files and directories stay
-    excluded (they are genuinely hidden); underscore files are code.
-
-    Exclude dirs prune during the walk (never descended); oversized
-    and zero-byte files are dropped at listing time, before any byte
-    is read."""
+    Dot-prefixed files and directories are excluded (they are genuinely
+    hidden); underscore files (``__init__.py``, ``_internal.py``) are
+    code and are kept. Exclude dirs prune during the walk (never
+    descended); oversized and zero-byte files are dropped from the stat,
+    before any byte is read. Content decodes as UTF-8 with replacement;
+    the hash is over the raw bytes, so the hash and the parsed text come
+    from one read."""
     import fnmatch
-    import os
 
     root = project_dir.rstrip("/")
-    listing: list[tuple[str, str, int, float]] = []
+    rows: list[dict] = []
     for dirpath, dirnames, filenames in os.walk(root):
         dirnames[:] = [
             d for d in dirnames if d not in excludes and not d.startswith(".")
@@ -84,81 +79,50 @@ def scan_project(
                 continue
             if st.st_size == 0 or st.st_size > max_file_size:
                 continue
-            listing.append((p, os.path.relpath(p, root), st.st_size, st.st_mtime))
-
-    meta = spark.createDataFrame(
-        listing or [], "file_path string, relative_path string, size long, mtime_s double"
-    )
-    n_part = max(1, min(len(listing), spark.sparkContext.defaultParallelism))
-
-    def read_contents(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            contents, hashes = [], []
-            for p in pdf["file_path"]:
-                try:
-                    with open(p, "rb") as fh:
-                        raw = fh.read()
-                except OSError:
-                    raw = b""
-                contents.append(raw.decode("utf-8", errors="replace"))
-                hashes.append(hashlib.sha256(raw).hexdigest())
-            out = pdf[["file_path", "relative_path", "size"]].copy()
-            out["content"] = contents
-            out["mtime_s"] = pdf["mtime_s"]
-            out["sha256"] = hashes
-            yield out
-
-    read_schema = (
-        "file_path string, relative_path string, size long, content string, "
-        "mtime_s double, sha256 string"
-    )
-    raw = meta.repartition(n_part).mapInPandas(read_contents, schema=read_schema)
-    ext = F.lower(F.element_at(F.split(F.col("relative_path"), r"\."), -1))
-    lang = F.create_map(
-        *[F.lit(x) for kv in LANGUAGE_BY_EXT.items() for x in kv]
-    )[ext]
-    return raw.select(
-        "file_path",
-        "relative_path",
-        "content",
-        "size",
-        F.timestamp_seconds(F.col("mtime_s")).alias("mtime"),
-        "sha256",
-        lang.alias("language"),
-    )
+            try:
+                with open(p, "rb") as fh:
+                    raw = fh.read()
+            except OSError:
+                raw = b""
+            rel = os.path.relpath(p, root)
+            rows.append({
+                "file_path": p,
+                "relative_path": rel,
+                "content": raw.decode("utf-8", errors="replace"),
+                "size": st.st_size,
+                "mtime": st.st_mtime,
+                "sha256": hashlib.sha256(raw).hexdigest(),
+                "language": LANGUAGE_BY_EXT.get(rel.rsplit(".", 1)[-1].lower()),
+            })
+    return rows
 
 
-def diff_against_state(
-    current: DataFrame, state: DataFrame | None
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """S2/U1: (added_or_changed, deleted, unchanged) vs the file_state table.
-
-    Full-outer join on relative_path; hash mismatch → changed. With no
-    prior state everything is new (full-index mode, indexer.py:374-393)."""
+def diff_files(
+    files: list[dict], state: DataFrame | None
+) -> tuple[list[dict], list[str]]:
+    """S2/U1: (added_or_changed rows, deleted relative paths) vs the
+    file_state table, read with one collect. A path is changed when it
+    is new or its hash differs; with no prior state everything is new
+    (full-index mode, indexer.py:374-393)."""
     if state is None:
-        return current, current.limit(0), current.limit(0)
-    st = state.select(
-        F.col("relative_path").alias("__rp"), F.col("sha256").alias("__old_sha")
+        return files, []
+    old = {
+        r["relative_path"]: r["sha256"]
+        for r in state.select("relative_path", "sha256").toArrow().to_pylist()
+    }
+    return (
+        [f for f in files if old.get(f["relative_path"]) != f["sha256"]],
+        sorted(set(old) - {f["relative_path"] for f in files}),
     )
-    joined = current.join(st, current["relative_path"] == F.col("__rp"), "full_outer")
-    changed = joined.filter(
-        F.col("__rp").isNull() | (F.col("relative_path").isNotNull() & (F.col("sha256") != F.col("__old_sha")))
-    ).drop("__rp", "__old_sha")
-    deleted = st.join(
-        current, st["__rp"] == current["relative_path"], "left_anti"
-    ).select(F.col("__rp").alias("relative_path"))
-    unchanged = current.join(
-        st,
-        (current["relative_path"] == F.col("__rp")) & (current["sha256"] == F.col("__old_sha")),
-        "left_semi",
-    )
-    return changed, deleted, unchanged
 
 
-def to_file_state(files: DataFrame) -> DataFrame:
-    """K4: project the columns persisted in the file_state table."""
-    return files.select("relative_path", "sha256", "size", "mtime")
+def file_state(spark: SparkSession, files: list[dict]) -> DataFrame:
+    """K4: the file_state table (relative_path, sha256, size, mtime) of
+    the scanned rows."""
+    return spark.createDataFrame(
+        [(f["relative_path"], f["sha256"], f["size"], f["mtime"]) for f in files],
+        "relative_path string, sha256 string, size long, mtime_s double",
+    ).select(
+        "relative_path", "sha256", "size",
+        F.timestamp_seconds(F.col("mtime_s")).alias("mtime"),
+    )

@@ -15,7 +15,7 @@ The reference drives tree-sitter; that library is not in this container,
 so the same surface is covered by a two-pass scanner: pass 1 masks
 comments and string/template bodies (preserving line structure) so pass 2
 can track real brace depth, class scopes, and declaration extents with
-line-anchored regexes. Runs per-file inside the shared mapInPandas stage.
+line-anchored regexes. Runs per-file inside the shared registry pass.
 """
 
 from __future__ import annotations

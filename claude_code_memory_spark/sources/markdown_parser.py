@@ -12,8 +12,8 @@ Reference semantics (S9, analysis/parser.py:1493-2107):
 Token counting uses the char/4 approximation (X13 fallback,
 embeddings/base.py:44-94) — deterministic without tiktoken.
 
-Executed per-file inside the same mapInPandas stage family as the Python
-parser; chunk records ride the shared PARSED_SCHEMA.
+Executed per-file inside the same registry pass as the Python parser;
+chunk records ride the shared PARSED_SCHEMA.
 """
 
 from __future__ import annotations

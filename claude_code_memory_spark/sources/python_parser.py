@@ -1,5 +1,5 @@
 """Python source parser: files → entities + relations + implementation
-chunks, as one Arrow-batched mapInPandas stage.
+chunks, as plain record dicts.
 
 Reference semantics (S3/S4, analysis/parser.py:119-1490): tree-sitter +
 Jedi extract functions/classes/methods/variables/imports with docstrings,
@@ -10,19 +10,15 @@ language). The parser is a *row-set flatMap*: one file row explodes into N
 typed records — exactly the ParserResult (entities, relations,
 implementation_chunks) of parser.py:46-84.
 
-Scale: per-file work is independent → embarrassingly parallel; Arrow
-batches amortize serde; the parser object is reused per executor batch
-iterator (the reference's per-run parser reuse, SURVEY.md §7).
+Per-file work is independent; `sources/registry.parse_rows` runs every
+language's parser in one driver loop over the scanned files, and the
+projections below split the records into the engine's tables.
 """
 
 from __future__ import annotations
 
 import ast
 import re
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
 
 # One unioned record schema with a discriminator; split downstream.
 PARSED_SCHEMA = (
@@ -31,6 +27,7 @@ PARSED_SCHEMA = (
     "docstring string, from_entity string, to_entity string, relation_type string, "
     "import_type string, content string, complexity int"
 )
+PARSED_COLUMNS = [f.split(" ")[0] for f in PARSED_SCHEMA.split(", ")]
 
 _CONTROL_NODES = (
     ast.If,
@@ -981,63 +978,50 @@ def parse_python_source(path: str, source: str) -> list[dict]:
     return recs
 
 
-def parse_python_files(files: DataFrame) -> DataFrame:
-    """S3 as a DataFrame transform: (source_files rows) → parsed records."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.split(" ")[0] for f in PARSED_SCHEMA.split(", ")]
-        for pdf in batches:
-            all_recs: list[dict] = []
-            for _, row in pdf.iterrows():
-                if row.get("language") == "py" and row.get("content"):
-                    all_recs.extend(parse_python_source(row["relative_path"], row["content"]))
-            if all_recs:
-                yield pd.DataFrame(all_recs, columns=cols)
-
-    return files.mapInPandas(run, schema=PARSED_SCHEMA)
+def _project(recs: list[dict], kind: str, cols: dict[str, str]) -> list[dict]:
+    """The ``kind`` records as rows of ``{out column: record field}``."""
+    return [
+        {out: r.get(src) for out, src in cols.items()}
+        for r in recs
+        if r["record_kind"] == kind
+    ]
 
 
-def split_parsed(parsed: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(entities, relations, implementation chunks) from the unioned records.
-
-    Callers should cache `parsed` first — one parse, three slices."""
-    from pyspark.sql import functions as F
-
-    entities = parsed.filter(F.col("record_kind") == "entity").select(
-        "entity_name",
-        "entity_type",
-        "file_path",
-        "line_number",
-        "end_line_number",
-        "observations",
-        "signature",
-        "docstring",
-    )
-    relations = parsed.filter(F.col("record_kind") == "relation").select(
-        "from_entity",
-        "to_entity",
-        "relation_type",
-        # for calls: the dotted attribute base (`z.f()` → 'z'), the
-        # hook cross-file resolution joins on; NULL for bare calls
-        F.col("content").alias("context"),
-        F.lit(1.0).alias("confidence"),
-        "import_type",
-        "file_path",
-    )
-    impl = parsed.filter(F.col("record_kind") == "implementation").select(
-        "entity_name",
-        "entity_type",
-        "file_path",
-        "line_number",
-        "end_line_number",
-        "content",
-        "complexity",
-    )
+def split_parsed(recs: list[dict]) -> tuple[list[dict], list[dict], list[dict]]:
+    """(entities, relations, implementation chunks) rows from the
+    unioned records."""
+    entities = _project(recs, "entity", {
+        c: c for c in (
+            "entity_name", "entity_type", "file_path", "line_number",
+            "end_line_number", "observations", "signature", "docstring",
+        )
+    })
+    relations = [
+        {
+            "from_entity": r.get("from_entity"),
+            "to_entity": r.get("to_entity"),
+            "relation_type": r.get("relation_type"),
+            # for calls: the dotted attribute base (`z.f()` → 'z'), the
+            # hook cross-file resolution looks up; NULL for bare calls
+            "context": r.get("content"),
+            "confidence": 1.0,
+            "import_type": r.get("import_type"),
+            "file_path": r.get("file_path"),
+        }
+        for r in recs
+        if r["record_kind"] == "relation"
+    ]
+    impl = _project(recs, "implementation", {
+        c: c for c in (
+            "entity_name", "entity_type", "file_path", "line_number",
+            "end_line_number", "content", "complexity",
+        )
+    })
     return entities, relations, impl
 
 
-def import_bindings(parsed: DataFrame) -> DataFrame:
-    """The per-file import alias table the cross-file resolver joins on:
+def import_bindings(recs: list[dict]) -> list[dict]:
+    """The per-file import alias table the cross-file resolver looks up:
     (file_path, local_name, target_module, member, import_type).
 
     ``import x.y as z``      → (f, 'z', 'x.y', NULL, 'module')
@@ -1046,20 +1030,19 @@ def import_bindings(parsed: DataFrame) -> DataFrame:
 
     Relative targets keep their leading dots; operators/resolve.py
     absolutizes them against the importing file's package."""
-    from pyspark.sql import functions as F
-
-    return parsed.filter(F.col("record_kind") == "import_binding").select(
-        "file_path",
-        F.col("from_entity").alias("local_name"),
-        F.col("to_entity").alias("target_module"),
-        F.col("content").alias("member"),
-        "import_type",
-    )
+    return _project(recs, "import_binding", {
+        "file_path": "file_path",
+        "local_name": "from_entity",
+        "target_module": "to_entity",
+        "member": "content",
+        "import_type": "import_type",
+    })
 
 
-def type_bindings(parsed: DataFrame) -> DataFrame:
+def type_bindings(recs: list[dict]) -> list[dict]:
     """The per-scope constructor-bind table instance-typed method
-    resolution joins on: (file_path, scope, var, ctor, ctor_base).
+    resolution looks up: (file_path, scope, var, ctor, ctor_base,
+    awaited, targ).
 
     ``def f(): x = Tool()``      → (f, 'f',  'x',       'Tool', NULL)
     ``def f(): t = m.Tool()``    → (f, 'f',  't',       'Tool', 'm')
@@ -1068,42 +1051,42 @@ def type_bindings(parsed: DataFrame) -> DataFrame:
 
     Only unambiguous binds are emitted — a var rebound to a different
     value anywhere in its scope never appears (parser poisons it), so a
-    join hit is a certainty, not a guess."""
-    from pyspark.sql import functions as F
+    lookup hit is a certainty, not a guess. ``awaited`` is True for
+    ``x = await f()`` (legacy stored rows lack it and read as False);
+    ``targ`` is the single type ARGUMENT of a generic annotation
+    (``r: Repo[User]`` → 'User'), NULL otherwise."""
+    rows = _project(recs, "type_binding", {
+        "file_path": "file_path",
+        "scope": "from_entity",
+        "var": "entity_name",
+        "ctor": "to_entity",
+        "ctor_base": "content",
+        "awaited": "import_type",
+        "targ": "signature",
+    })
+    for r in rows:
+        r["awaited"] = r["awaited"] == "await"
+    return rows
 
-    return parsed.filter(F.col("record_kind") == "type_binding").select(
-        "file_path",
-        F.col("from_entity").alias("scope"),
-        F.col("entity_name").alias("var"),
-        F.col("to_entity").alias("ctor"),
-        F.col("content").alias("ctor_base"),
-        # `x = await f()` → True; legacy stored rows surface as NULL
-        # through allowMissingColumns and coalesce to False downstream
-        F.col("import_type").eqNullSafe("await").alias("awaited"),
-        # single type ARGUMENT of a generic annotation (`r: Repo[User]`
-        # → 'User'); NULL for non-generic binds and legacy stored rows
-        F.col("signature").alias("targ"),
-    )
 
-
-def return_bindings(parsed: DataFrame) -> DataFrame:
-    """The factory table: (file_path, func, ctor, ctor_base) — functions
-    (and methods, keyed 'Class.method') whose EVERY return statement
-    returns the same named constructor call (``def make_tool(): return
-    Tool()``; classmethod factories ``return cls()`` key to their own
-    class). The resolver joins a call-site type-bind whose 'ctor' is
-    such a function onto this table, so ``x = make_tool(); x.run()`` and
-    ``t = Tool.create(); t.run()`` pin to Tool.run — the static slice of
-    Jedi's return-type inference."""
-    from pyspark.sql import functions as F
-
-    return parsed.filter(F.col("record_kind") == "return_bind").select(
-        "file_path",
-        F.col("from_entity").alias("func"),
-        F.col("to_entity").alias("ctor"),
-        F.col("content").alias("ctor_base"),
-        # async def / async method / Promise<T> factory: its CALL value
-        # is a future, its AWAITED value is the instance — matched
-        # against the bind's `awaited` flag in the resolver
-        F.col("import_type").eqNullSafe("async").alias("is_async"),
-    )
+def return_bindings(recs: list[dict]) -> list[dict]:
+    """The factory table: (file_path, func, ctor, ctor_base, is_async) —
+    functions (and methods, keyed 'Class.method') whose EVERY return
+    statement returns the same named constructor call (``def
+    make_tool(): return Tool()``; classmethod factories ``return cls()``
+    key to their own class). The resolver looks a call-site type-bind
+    whose 'ctor' is such a function up in this table, so ``x =
+    make_tool(); x.run()`` and ``t = Tool.create(); t.run()`` pin to
+    Tool.run — the static slice of Jedi's return-type inference. An
+    async def / async method / Promise<T> factory is ``is_async``: its
+    CALL value is a future, its AWAITED value is the instance."""
+    rows = _project(recs, "return_bind", {
+        "file_path": "file_path",
+        "func": "from_entity",
+        "ctor": "to_entity",
+        "ctor_base": "content",
+        "is_async": "import_type",
+    })
+    for r in rows:
+        r["is_async"] = r["is_async"] == "async"
+    return rows

@@ -2,16 +2,13 @@
 
 Reference: ParserRegistry dispatch (analysis/parser.py:2109-2267) routes a
 file to its language parser; here the registry is a plain dict consulted
-inside ONE mapInPandas stage — all languages parse in the same Arrow
-batch pass, so adding a parser never adds a scan.
+in one driver loop over the scanned rows — all languages parse in the
+same pass, so adding a parser never adds a scan.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
+from collections.abc import Callable
 
 from claude_code_memory_spark.sources.config_parsers import (
     parse_csv_source,
@@ -25,7 +22,8 @@ from claude_code_memory_spark.sources.javascript_parser import parse_javascript_
 from claude_code_memory_spark.sources.markdown_parser import parse_markdown_source
 from claude_code_memory_spark.sources.web_parsers import parse_css_source, parse_html_source
 from claude_code_memory_spark.sources.python_parser import (
-    PARSED_SCHEMA,
+    PARSED_COLUMNS,
+    _entity_rec,
     parse_python_source,
 )
 
@@ -51,31 +49,21 @@ def register_parser(language: str, parser: Parser) -> None:
     PARSERS[language] = parser
 
 
-def parse_files(files: DataFrame) -> DataFrame:
-    """All registered languages in one mapInPandas pass → PARSED_SCHEMA."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.split(" ")[0] for f in PARSED_SCHEMA.split(", ")]
-        for pdf in batches:
-            all_recs: list[dict] = []
-            for _, row in pdf.iterrows():
-                parser = PARSERS.get(row.get("language"))
-                if parser and row.get("content"):
-                    try:
-                        all_recs.extend(parser(row["relative_path"], row["content"]))
-                    except Exception:
-                        # graceful degradation parity: a crashing parser
-                        # must not take down the batch (parser.py error
-                        # handling; tests/unit/test_parser.py:210)
-                        from claude_code_memory_spark.sources.python_parser import _entity_rec
-
-                        all_recs.append(
-                            _entity_rec(
-                                row["relative_path"], "file", row["relative_path"], 1, 1,
-                                [f"Unparseable file {row['relative_path']}"],
-                            )
-                        )
-            if all_recs:
-                yield pd.DataFrame(all_recs, columns=cols)
-
-    return files.mapInPandas(run, schema=PARSED_SCHEMA)
+def parse_rows(files: list[dict]) -> list[dict]:
+    """All registered languages in one loop over the scanned rows →
+    PARSED_SCHEMA records (dicts holding exactly PARSED_COLUMNS)."""
+    recs: list[dict] = []
+    for f in files:
+        parser = PARSERS.get(f["language"])
+        if not (parser and f["content"]):
+            continue
+        path = f["relative_path"]
+        try:
+            out = parser(path, f["content"])
+        except Exception:
+            # graceful degradation parity: a crashing parser must not
+            # take down the batch (parser.py error handling;
+            # tests/unit/test_parser.py:210)
+            out = [_entity_rec(path, "file", path, 1, 1, [f"Unparseable file {path}"])]
+        recs.extend({c: r.get(c) for c in PARSED_COLUMNS} for r in out)
+    return recs

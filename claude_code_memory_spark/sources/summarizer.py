@@ -256,7 +256,7 @@ def http_transport(
     {base}/chat/completions with ``{"model", "messages"}``, Bearer auth,
     answer at ``choices[0].message.content``.
 
-    Env-gated like the embedder transport: needs ``OPENAI_API_KEY`` (or
+    Env-gated: needs ``OPENAI_API_KEY`` (or
     an explicit key) at construction, optional ``SUMMARIZER_BASE_URL``
     for OpenAI-compatible endpoints; no-credential environments use
     ``fake_transport``. Failures raise with status codes / the words

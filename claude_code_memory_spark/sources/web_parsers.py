@@ -8,8 +8,8 @@ Reference semantics:
 - X15 HTML/JS/CSS stripping for JSON content (json_parser.py:574-622).
 
 Regex-based (stdlib html.parser for structure) — same entity surface as
-the reference's tree-sitter grammar, executed in the shared mapInPandas
-registry pass.
+the reference's tree-sitter grammar, executed in the shared registry
+pass (`sources/registry.parse_rows`).
 """
 
 from __future__ import annotations

@@ -231,10 +231,9 @@ def test_renamed_module_import_cleanup(spark, tmp_path):
 
 
 def test_counters_match_stored_tables(spark, temp_repo, tmp_path):
-    """index() counters come from observe() metrics piggybacked on the
-    pipeline's own actions (no dedicated .count() jobs) and from the
-    relation check — they must equal the actual stored table sizes on a
-    fresh build."""
+    """index() counters are the sizes of the rows it writes (no
+    dedicated .count() jobs) — they must equal the actual stored table
+    sizes on a fresh build."""
     eng = CodeMemoryEngine(spark, str(tmp_path / "store"))
     c = eng.index(temp_repo)
     assert c["entities"] == eng.store.read("entities").count()
@@ -665,17 +664,16 @@ def test_file_state_records_the_parsed_bytes(spark, tmp_path, monkeypatch):
     parsed_src = "def f():\n    return 1\n\n\ndef f2():\n    return 2\n"
     saved_src = parsed_src + "\n\ndef f3():\n    return 3\n"
     a.write_text(parsed_src)
-    real_parse = api.parse_files
+    real_parse = api.parse_rows
 
     def parse_then_save(changed):
-        out = real_parse(changed).cache()
-        out.count()  # the parse has read a.py's edit
+        out = real_parse(changed)  # the parse has read a.py's edit
         a.write_text(saved_src)  # the user saves again mid-index
         return out
 
-    monkeypatch.setattr(api, "parse_files", parse_then_save)
+    monkeypatch.setattr(api, "parse_rows", parse_then_save)
     eng.index(str(proj))
-    monkeypatch.setattr(api, "parse_files", real_parse)
+    monkeypatch.setattr(api, "parse_rows", real_parse)
 
     names = {r["entity_name"] for r in eng.store.read("entities").collect()}
     assert {"f", "f2"} <= names and "f3" not in names
@@ -685,3 +683,78 @@ def test_file_state_records_the_parsed_bytes(spark, tmp_path, monkeypatch):
     assert eng.index(str(proj))["files_changed"] == 1
     names = {r["entity_name"] for r in eng.store.read("entities").collect()}
     assert "f3" in names
+
+
+def test_reused_chunks_keep_their_own_sparse_vector(spark, tmp_path):
+    """A content-unchanged chunk of a re-indexed file reuses its stored
+    dense vector (J6), but its sparse vector is encoded from its own
+    ``content_bm25``, which holds the file's basename. Five files share
+    the `from __future__ import annotations` metadata chunk's content;
+    after an edit of one function body, every stored sparse vector
+    equals the one a from-scratch index of the final tree stores."""
+    proj = tmp_path / "proj"
+    proj.mkdir()
+    src = "from __future__ import annotations\n\n\ndef f_{0}(x):\n    return x + {1}\n"
+    stems = ("alpha", "bravo", "charlie", "delta", "echo")
+    for stem in stems:
+        (proj / f"{stem}.py").write_text(src.format(stem, 1))
+    eng = CodeMemoryEngine(spark, str(tmp_path / "store"))
+    eng.index(str(proj))
+    (proj / "echo.py").write_text(src.format("echo", 2))
+    assert eng.index(str(proj))["chunks_skipped_unchanged"] > 0
+    fresh = CodeMemoryEngine(spark, str(tmp_path / "fresh"))
+    fresh.index(str(proj))
+
+    def sparse(e):
+        return {
+            r["point_id"]: (r["sparse_indices"], r["sparse_values"])
+            for r in e.store.read("vectors").collect()
+        }
+
+    def vocab(e):
+        return sorted(map(tuple, e.bm25_model().vocabulary.collect()))
+
+    assert vocab(eng) == vocab(fresh)
+    assert sparse(eng) == sparse(fresh)
+
+
+def _count_jobs(spark, group: str, fn):
+    """(fn(), the number of Spark jobs it ran), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(f"{group}-idle", "idle")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_index_job_budget_and_profile_adds_no_action(spark, tmp_path):
+    """index() runs Spark only for store I/O: a cold index and a
+    one-file edit re-index stay within a few jobs, and profile=True
+    times the same calls without an action of its own."""
+    proj = tmp_path / "proj"
+    proj.mkdir()
+    for stem in "abc":
+        (proj / f"{stem}.py").write_text(
+            f"import os\n\n\nclass C_{stem}:\n    def run(self):\n"
+            f"        return os.sep\n\n\ndef f_{stem}():\n    return C_{stem}().run()\n"
+        )
+    jobs = {}
+    for profile in (False, True):
+        eng = CodeMemoryEngine(spark, str(tmp_path / f"store-{profile}"))
+        (proj / "a.py").write_text((proj / "b.py").read_text().replace("_b", "_a"))
+        _, jobs[profile, "cold"] = _count_jobs(
+            spark, f"budget-cold-{profile}", lambda: eng.index(str(proj), profile=profile)
+        )
+        (proj / "a.py").write_text((proj / "a.py").read_text() + "\n\ndef g():\n    return 1\n")
+        c, jobs[profile, "edit"] = _count_jobs(
+            spark, f"budget-edit-{profile}", lambda: eng.index(str(proj), profile=profile)
+        )
+        assert c["files_changed"] == 1
+    assert jobs[True, "cold"] == jobs[False, "cold"], jobs
+    assert jobs[True, "edit"] == jobs[False, "edit"], jobs
+    # measured 14 and 21: the writes, the BM25 model's save and reload,
+    # and on the edit one collect per stored table the batch reads
+    assert jobs[False, "cold"] <= 16, jobs
+    assert jobs[False, "edit"] <= 24, jobs

@@ -16,12 +16,10 @@ PKG = "claude_code_memory_spark"
 ROOT = Path(__file__).resolve().parent.parent
 KNOWN_ENV = {
     "CCMS_HOME",  # collection home of the CLI and the service
-    "EMBEDDING_BASE_URL",
     "OPENAI_API_KEY",
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_DRIVER_MEM",
     "SUMMARIZER_BASE_URL",
-    "VOYAGE_API_KEY",
 }
 
 

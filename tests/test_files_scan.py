@@ -10,23 +10,23 @@ from __future__ import annotations
 from claude_code_memory_spark.sources.files import scan_project
 
 
-def _paths(spark, proj):
+def _paths(proj):
     return {
-        r["relative_path"] for r in scan_project(spark, str(proj)).collect()
+        r["relative_path"] for r in scan_project(str(proj))
     }
 
 
-def test_underscore_files_are_indexed(spark, tmp_path):
+def test_underscore_files_are_indexed(tmp_path):
     proj = tmp_path / "p"
     (proj / "pkg").mkdir(parents=True)
     (proj / "pkg" / "__init__.py").write_text("x = 1\n")
     (proj / "pkg" / "_internal.py").write_text("y = 2\n")
     (proj / "__main__.py").write_text("z = 3\n")
-    got = _paths(spark, proj)
+    got = _paths(proj)
     assert got == {"pkg/__init__.py", "pkg/_internal.py", "__main__.py"}
 
 
-def test_hidden_and_excluded_stay_out(spark, tmp_path):
+def test_hidden_and_excluded_stay_out(tmp_path):
     proj = tmp_path / "p"
     (proj / ".git").mkdir(parents=True)
     (proj / ".git" / "config").write_text("no\n")
@@ -34,26 +34,26 @@ def test_hidden_and_excluded_stay_out(spark, tmp_path):
     (proj / "node_modules" / "dep" / "index.js").write_text("no\n")
     (proj / ".hidden.py").write_text("no\n")
     (proj / "ok.py").write_text("yes\n")
-    assert _paths(spark, proj) == {"ok.py"}
+    assert _paths(proj) == {"ok.py"}
 
 
-def test_size_and_empty_filters(spark, tmp_path):
+def test_size_and_empty_filters(tmp_path):
     proj = tmp_path / "p"
     proj.mkdir()
     (proj / "empty.py").write_text("")
     (proj / "big.py").write_text("x" * 2_000_000)
     (proj / "ok.py").write_text("a = 1\n")
-    assert _paths(spark, proj) == {"ok.py"}
+    assert _paths(proj) == {"ok.py"}
 
 
-def test_schema_hash_and_language(spark, tmp_path):
+def test_schema_hash_and_language(tmp_path):
     import hashlib
 
     proj = tmp_path / "p"
     proj.mkdir()
     content = "def f():\n    pass\n"
     (proj / "m.py").write_text(content)
-    rows = scan_project(spark, str(proj)).collect()
+    rows = scan_project(str(proj))
     assert len(rows) == 1
     r = rows[0]
     assert r["language"] == "py"
@@ -63,9 +63,9 @@ def test_schema_hash_and_language(spark, tmp_path):
     assert r["mtime"] is not None
 
 
-def test_non_utf8_decodes_lossily(spark, tmp_path):
+def test_non_utf8_decodes_lossily(tmp_path):
     proj = tmp_path / "p"
     proj.mkdir()
     (proj / "weird.txt").write_bytes(b"ok \xff\xfe bytes\n")
-    rows = scan_project(spark, str(proj)).collect()
+    rows = scan_project(str(proj))
     assert len(rows) == 1 and "ok" in rows[0]["content"]

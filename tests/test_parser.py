@@ -3,18 +3,18 @@ simple function (:99), class+methods (:126), imports (:187), syntax errors
 (:210), empty files (:227), docstrings (:239)."""
 
 from claude_code_memory_spark.sources.files import scan_project
-from claude_code_memory_spark.sources.python_parser import parse_python_files, split_parsed
+from claude_code_memory_spark.sources.python_parser import split_parsed
+from claude_code_memory_spark.sources.registry import parse_rows
 
 
-def _parse(spark, temp_repo):
-    files = scan_project(spark, temp_repo)
-    parsed = parse_python_files(files).cache()
-    return split_parsed(parsed)
+def _parse(temp_repo):
+    files = [f for f in scan_project(temp_repo) if f["language"] == "py"]
+    return split_parsed(parse_rows(files))
 
 
-def test_entities_extracted(spark, temp_repo):
-    entities, relations, impl = _parse(spark, temp_repo)
-    by_name = {r["entity_name"]: r for r in entities.collect()}
+def test_entities_extracted(temp_repo):
+    entities, relations, impl = _parse(temp_repo)
+    by_name = {r["entity_name"]: r for r in entities}
     # functions and classes
     assert by_name["helper"]["entity_type"] == "function"
     assert by_name["compute"]["entity_type"] == "function"
@@ -41,35 +41,33 @@ def test_empty_source_graceful():
     assert len(recs) == 1 and recs[0]["entity_type"] == "file"
 
 
-def test_relations_extracted(spark, temp_repo):
-    entities, relations, impl = _parse(spark, temp_repo)
-    rels = {(r["from_entity"], r["relation_type"], r["to_entity"]) for r in relations.collect()}
+def test_relations_extracted(temp_repo):
+    entities, relations, impl = _parse(temp_repo)
+    rels = {(r["from_entity"], r["relation_type"], r["to_entity"]) for r in relations}
     assert ("compute", "calls", "helper") in rels
     assert ("Derived", "inherits", "Base") in rels
     assert ("Processor", "contains", "Processor.run") in rels
     assert any(r[1] == "imports" and r[2] == "os" for r in rels)
 
 
-def test_implementation_chunks(spark, temp_repo):
-    entities, relations, impl = _parse(spark, temp_repo)
-    rows = {r["entity_name"]: r for r in impl.collect()}
+def test_implementation_chunks(temp_repo):
+    entities, relations, impl = _parse(temp_repo)
+    rows = {r["entity_name"]: r for r in impl}
     assert "def helper(a, b):" in rows["helper"]["content"]
     assert rows["compute"]["complexity"] >= 3  # for + if + base
     assert rows["helper"]["line_number"] < rows["helper"]["end_line_number"]
 
 
-def test_relation_chunk_owner_is_smallest_file_path(spark):
+def test_relation_chunk_owner_is_smallest_file_path():
     """Two files holding the same relation triple (a vendored copy) yield
     one relation chunk, owned by the smallest file_path whatever the row
     order, so every build stores the same chunk."""
     from claude_code_memory_spark.plans.chunks import relation_chunks
-    from claude_code_memory_spark.schemas import RELATIONS
 
-    row = ("f", "g", "calls", None, 1.0, None)
-    rels = spark.createDataFrame(
-        [(*row, "vendor/copy0/a.py"), (*row, "a.py")], RELATIONS
-    ).coalesce(1)
-    out = relation_chunks(rels).collect()
+    row = {"from_entity": "f", "to_entity": "g", "relation_type": "calls",
+           "context": None, "confidence": 1.0, "import_type": None}
+    rels = [{**row, "file_path": "vendor/copy0/a.py"}, {**row, "file_path": "a.py"}]
+    out = relation_chunks(rels)
     assert [(r["chunk_id"], r["file_path"]) for r in out] == [("f::calls::g::", "a.py")]
 
 

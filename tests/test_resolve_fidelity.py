@@ -929,13 +929,11 @@ NEGATIVES = [
 
 
 @pytest.fixture(scope="module")
-def fidelity(spark):
-    from claude_code_memory_spark.sources.python_parser import PARSED_SCHEMA
-
+def fidelity():
     recs = []
     for path, src in FIXTURE.items():
         recs.extend(parse_python_source(path, src))
-    parsed = spark.createDataFrame(recs, PARSED_SCHEMA).cache()
+    parsed = recs
     entities, relations, _ = split_parsed(parsed)
     out = resolve_calls(
         relations,
@@ -944,9 +942,7 @@ def fidelity(spark):
         type_bindings(parsed),
         return_binds=return_bindings(parsed),
     )
-    rows = out.filter(
-        out.relation_type.isin("calls", "throws", "uses")
-    ).collect()
+    rows = [r for r in out if r["relation_type"] in ("calls", "throws", "uses")]
     return {
         (r["from_entity"], r["to_entity"], r["import_type"]) for r in rows
     }

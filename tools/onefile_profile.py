@@ -1,8 +1,9 @@
 """One-file incremental reindex profile: where a single-file re-index
 spends its time. Full-indexes the target, then drops one file_state row
 (the first by relative_path, or pass one as argv[2]) and re-indexes that
-single file with profile=True, printing the stage split and the
-relations- and chunks-multiset oracles.
+single file with profile=True, printing the wall times and Spark job
+counts of both, the stage split and the relations- and chunks-multiset
+oracles.
 
 Usage: python tools/onefile_profile.py [target_dir] [victim_rel_path]
 """
@@ -39,9 +40,19 @@ def main() -> None:
     out: dict = {"target": target}
     try:
         eng = CodeMemoryEngine(spark, store)
-        t0 = time.time()
-        eng.index(target)
-        out["full_index_sec"] = round(time.time() - t0, 2)
+        sc = spark.sparkContext
+
+        def timed(name, fn):
+            sc.setJobGroup(name, name)
+            t0 = time.time()
+            try:
+                return fn()
+            finally:
+                out[f"{name}_sec"] = round(time.time() - t0, 2)
+                sc.setJobGroup("idle", "idle")
+                out[f"{name}_jobs"] = len(sc.statusTracker().getJobIdsForGroup(name))
+
+        timed("full_index", lambda: eng.index(target))
 
         def fingerprint(table, *cols):
             agg = (
@@ -68,9 +79,7 @@ def main() -> None:
             victim = fs.orderBy("relative_path").limit(1).collect()[0]["relative_path"]
         before = fingerprints()
         eng.store.write("file_state", fs.filter(F.col("relative_path") != victim))
-        t0 = time.time()
-        one = eng.index(target, profile=True)
-        out["one_file_reindex_sec"] = round(time.time() - t0, 2)
+        one = timed("one_file_reindex", lambda: eng.index(target, profile=True))
         after = fingerprints()
         out["victim"] = victim
         out["files_changed"] = one.get("files_changed")
