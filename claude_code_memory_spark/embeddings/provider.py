@@ -1,54 +1,15 @@
-"""Provider-embedder plumbing (UD2/UD3) implemented network-free.
+"""Provider-embedder token-budget batching (UD2), network-free.
 
 The reference ships HTTP embedders for OpenAI and Voyage
-(embeddings/openai.py:16-290, embeddings/voyage.py:16-220) whose real
-engineering content is not the HTTP call — it's the batching, truncation
-and retry logic around it:
-
-- token-budget batch splitting (voyage.py:175-216: flush when the next
-  text would exceed the model's token limit OR the batch hits the
-  provider's text-count cap);
-- per-text truncation to the model's max context (base.py:120-160,
-  binary-search on the tokenizer);
-- exponential-backoff retry with jitter on transient errors only
-  (base.py:171-235: rate limit / timeout / connection / 5xx / 429).
-
-This module implements all of that as pure, unit-testable functions over
-a pluggable ``transport`` callable — ``transport(list[str]) ->
-list[list[float]]``. A real deployment passes an HTTP client wrapper; the
-container (no network) passes a deterministic fake. The Spark stage is a
-scalar-iterator pandas UDF that builds the transport ONCE per executor
-worker (the reference builds one HTTP client per process, openai.py:73)
-and streams Arrow batches through ``embed_batch``.
-
-Scale note: at 100 TB the embed stage is embarrassingly parallel — each
-executor worker runs its own batcher/retry loop against the provider, and
-the only cluster-level concern is provider-side rate limiting, which the
-per-worker backoff handles adaptively (slow workers simply consume their
-input partitions more slowly).
+(embeddings/openai.py:16-290, embeddings/voyage.py:16-220). What is kept
+here is their batch splitting (voyage.py:175-216): flush when the next
+text would exceed the model's token limit OR the batch hits the
+provider's text-count cap. The engine embeds with the local hash
+embedder, so no entry point imports this module; it is listed in
+``tests/test_import_graph.py::KNOWN_ORPHANS``.
 """
 
 from __future__ import annotations
-
-import random
-import time
-from collections.abc import Callable, Iterator
-from dataclasses import dataclass, field
-
-import numpy as np
-import pandas as pd
-
-# Public per-model limits, as measured/documented by the reference
-# (voyage.py:179-189, openai.py:199-206).
-MODEL_LIMITS: dict[str, dict[str, int]] = {
-    "voyage-3-lite": {"token_limit": 30_000, "text_count_limit": 1000, "max_tokens_per_text": 16_000},
-    "voyage-3.5-lite": {"token_limit": 30_000, "text_count_limit": 1000, "max_tokens_per_text": 16_000},
-    "voyage-3": {"token_limit": 120_000, "text_count_limit": 1000, "max_tokens_per_text": 32_000},
-    "voyage-code-3": {"token_limit": 120_000, "text_count_limit": 1000, "max_tokens_per_text": 32_000},
-    "text-embedding-3-small": {"token_limit": 120_000, "text_count_limit": 2048, "max_tokens_per_text": 8191},
-    "text-embedding-3-large": {"token_limit": 120_000, "text_count_limit": 2048, "max_tokens_per_text": 8191},
-}
-DEFAULT_LIMITS = {"token_limit": 120_000, "text_count_limit": 1000, "max_tokens_per_text": 8191}
 
 _ENCODER = None
 _ENCODER_TRIED = False
@@ -73,22 +34,6 @@ def estimate_tokens(text: str) -> int:
         except Exception:
             pass
     return max(1, len(text) // 4)
-
-
-def truncate_to_tokens(text: str, max_tokens: int) -> str:
-    """Truncate ``text`` to at most ``max_tokens`` tokens — binary search
-    on the character length, as in the reference (base.py:131-160)."""
-    if estimate_tokens(text) <= max_tokens:
-        return text
-    left, right, best = 0, len(text), 0
-    while left <= right:
-        mid = (left + right) // 2
-        if estimate_tokens(text[:mid]) <= max_tokens:
-            best = mid
-            left = mid + 1
-        else:
-            right = mid - 1
-    return text[:best]
 
 
 def split_batches(
@@ -121,202 +66,3 @@ def split_batches(
     if current:
         batches.append(current)
     return batches
-
-
-# Transient-error markers, verbatim from the reference (base.py:203-211).
-TRANSIENT_MARKERS = ("rate limit", "timeout", "connection", "temporary", "503", "502", "429")
-
-
-@dataclass
-class RetryPolicy:
-    """Exponential backoff with jitter (base.py:171-235).
-
-    ``rng`` and ``sleep`` are injectable so tests run instantly and
-    deterministically — the logic under test is the schedule, not the
-    wall clock.
-    """
-
-    max_retries: int = 3
-    base_delay: float = 1.0
-    max_delay: float = 60.0
-    backoff_factor: float = 2.0
-    rng: random.Random = field(default_factory=random.Random)
-    sleep: Callable[[float], None] = time.sleep
-
-    def delay(self, attempt: int) -> float:
-        d = min(self.base_delay * (self.backoff_factor**attempt), self.max_delay)
-        return d + self.rng.uniform(0.1, 0.3) * d  # jitter vs thundering herd
-
-    def should_retry(self, error: Exception, attempt: int) -> bool:
-        if attempt >= self.max_retries:
-            return False
-        msg = str(error).lower()
-        return any(marker in msg for marker in TRANSIENT_MARKERS)
-
-    def call(self, fn: Callable, *args, **kwargs):
-        """base.py:_embed_with_retry — retry transient failures, re-raise
-        the last error otherwise."""
-        last: Exception | None = None
-        for attempt in range(self.max_retries + 1):
-            try:
-                return fn(*args, **kwargs)
-            except Exception as exc:  # noqa: BLE001 — classify, don't mask
-                last = exc
-                if not self.should_retry(exc, attempt):
-                    break
-                if attempt < self.max_retries:
-                    self.sleep(self.delay(attempt))
-        assert last is not None
-        raise last
-
-
-Transport = Callable[[list[str]], list[list[float]]]
-
-
-@dataclass
-class ProviderEmbedder:
-    """Batching + truncation + retry around a pluggable transport.
-
-    ``transport(texts) -> vectors`` is the ONLY provider-specific piece;
-    everything else (the part the reference spends voyage.py:120-216 on)
-    is generic and runs here, fully unit-tested without network.
-    """
-
-    transport: Transport
-    model: str = "voyage-3"
-    policy: RetryPolicy = field(default_factory=RetryPolicy)
-
-    def __post_init__(self) -> None:
-        self.limits = MODEL_LIMITS.get(self.model, DEFAULT_LIMITS)
-        self.batches_sent = 0
-        self.tokens_sent = 0
-
-    def embed_batch(self, texts: list[str]) -> list[list[float] | None]:
-        """Embed preserving input order; ``None`` rows stay ``None``."""
-        idx_text = [(i, t) for i, t in enumerate(texts) if t is not None]
-        clean = [
-            truncate_to_tokens(t, self.limits["max_tokens_per_text"]) for _, t in idx_text
-        ]
-        counts = [estimate_tokens(t) for t in clean]
-        out: list[list[float] | None] = [None] * len(texts)
-        for batch in split_batches(
-            clean, self.limits["token_limit"], self.limits["text_count_limit"], counts
-        ):
-            vectors = self.policy.call(self.transport, [clean[i] for i in batch])
-            if len(vectors) != len(batch):
-                raise ValueError(
-                    f"transport returned {len(vectors)} vectors for {len(batch)} texts"
-                )
-            self.batches_sent += 1
-            self.tokens_sent += sum(counts[i] for i in batch)
-            for local, vec in zip(batch, vectors):
-                out[idx_text[local][0]] = vec
-        return out
-
-
-def provider_embedder_udf(
-    transport_factory: Callable[[], Transport],
-    model: str = "voyage-3",
-    dim: int = 512,
-):
-    """Scalar-iterator pandas UDF: text → ARRAY<FLOAT> via a provider
-    transport built once per executor worker.
-
-    The iterator form matters at scale: ``transport_factory`` runs once
-    per Python worker (mirroring one HTTP client per process,
-    openai.py:73), not once per Arrow batch, so connection setup and
-    auth are amortized over the whole partition.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def embed(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        embedder = ProviderEmbedder(transport=transport_factory(), model=model)
-        for s in batches:
-            vecs = embedder.embed_batch(list(s))
-            yield pd.Series(
-                [None if v is None else np.asarray(v, dtype=np.float32) for v in vecs]
-            )
-
-    return embed
-
-
-def http_transport(
-    model: str = "voyage-3",
-    *,
-    api_key: str | None = None,
-    base_url: str | None = None,
-    timeout: float = 60.0,
-) -> Transport:
-    """Real provider transport over stdlib ``urllib`` — the last piece of
-    UD2/UD3 parity with the reference's HTTP embedders
-    (embeddings/openai.py:16-290, embeddings/voyage.py:16-220). Both
-    providers speak the same public shape: POST {base}/embeddings with
-    ``{"model", "input": [texts]}``, Bearer auth, response
-    ``{"data": [{"embedding": [...]}, ...]}`` in input order.
-
-    Env-gated: resolution order is explicit args, then ``VOYAGE_API_KEY``
-    / ``OPENAI_API_KEY`` (+ optional ``EMBEDDING_BASE_URL``). Without a
-    key this raises at construction — CI and the no-network container
-    never reach a socket; tests exercise the request/response packing by
-    monkeypatching ``urllib.request.urlopen``.
-
-    Error surfacing is deliberate: HTTP status codes and the words
-    "timeout"/"connection" are embedded in the raised message so
-    ``RetryPolicy.should_retry``'s transient markers classify transport
-    failures exactly like the reference's (base.py:203-211)."""
-    import json as _json
-    import os
-    import urllib.error
-    import urllib.request
-
-    is_voyage = model.startswith("voyage")
-    key = api_key or os.environ.get("VOYAGE_API_KEY" if is_voyage else "OPENAI_API_KEY")
-    if not key:
-        raise RuntimeError(
-            "http_transport needs an API key (arg or "
-            f"{'VOYAGE_API_KEY' if is_voyage else 'OPENAI_API_KEY'}); use "
-            "fake_transport() in no-credential environments"
-        )
-    base = base_url or os.environ.get("EMBEDDING_BASE_URL") or (
-        "https://api.voyageai.com/v1" if is_voyage else "https://api.openai.com/v1"
-    )
-
-    def transport(texts: list[str]) -> list[list[float]]:
-        req = urllib.request.Request(
-            f"{base.rstrip('/')}/embeddings",
-            data=_json.dumps({"model": model, "input": texts}).encode(),
-            headers={
-                "Authorization": f"Bearer {key}",
-                "Content-Type": "application/json",
-            },
-            method="POST",
-        )
-        try:
-            with urllib.request.urlopen(req, timeout=timeout) as resp:
-                payload = _json.loads(resp.read().decode())
-        except urllib.error.HTTPError as exc:
-            raise RuntimeError(f"embedding request failed: HTTP {exc.code}") from exc
-        except urllib.error.URLError as exc:
-            raise RuntimeError(f"embedding connection error: {exc.reason}") from exc
-        except TimeoutError as exc:
-            raise RuntimeError("embedding request timeout") from exc
-        data = sorted(payload["data"], key=lambda d: d.get("index", 0))
-        return [d["embedding"] for d in data]
-
-    return transport
-
-
-def fake_transport(dim: int = 512) -> Transport:
-    """Deterministic stand-in transport: same vectors as the hash
-    embedder, so provider-path results are comparable against the
-    test-mode embedder end-to-end. This is what a no-credentials
-    environment plugs in; a real deployment swaps in an HTTP wrapper
-    with the same signature."""
-    from claude_code_memory_spark.embeddings.hash_embedder import embed_text
-
-    def transport(texts: list[str]) -> list[list[float]]:
-        return [embed_text(t, dim) for t in texts]
-
-    return transport

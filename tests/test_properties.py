@@ -1,5 +1,5 @@
 """Property-based invariants for the pure algebra underlying operators:
-generics stripping and the summarizer contract. Pure
+batch splitting, generics stripping, and the summarizer contract. Pure
 functions only — hypothesis runs hundreds of examples in seconds with no
 Spark session.
 
@@ -16,6 +16,7 @@ hypothesis = pytest.importorskip("hypothesis")
 from hypothesis import given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
+from claude_code_memory_spark.embeddings.provider import split_batches  # noqa: E402
 from claude_code_memory_spark.sources.javascript_parser import (  # noqa: E402
     _strip_decl_generics,
     mask_source,
@@ -24,6 +25,26 @@ from claude_code_memory_spark.sources.summarizer import (  # noqa: E402
     parse_response,
     validate_payload,
 )
+
+# --- split_batches: a partition of the input, in order, within caps ------
+
+
+@given(
+    counts=st.lists(st.integers(min_value=1, max_value=500), max_size=200),
+    token_limit=st.integers(min_value=1, max_value=1000),
+    count_limit=st.integers(min_value=1, max_value=50),
+)
+@settings(max_examples=200, deadline=None)
+def test_split_batches_is_an_ordered_partition(counts, token_limit, count_limit):
+    batches = split_batches(["x"] * len(counts), token_limit, count_limit, counts)
+    flat = [i for b in batches for i in b]
+    assert flat == list(range(len(counts)))  # every index once, in order
+    for b in batches:
+        assert 1 <= len(b) <= count_limit
+        # token budget holds except for the documented singleton-oversize case
+        if len(b) > 1:
+            assert sum(counts[i] for i in b) <= token_limit
+
 
 # --- generics stripper: total, idempotent-ish, structure-preserving ------
 

@@ -1,26 +1,10 @@
-"""Provider-embedder plumbing (UD2/UD3): token-budget batching, truncation
-and retry semantics, verified against the reference's documented behavior
-(voyage.py:175-216, openai.py:162-206, base.py:120-235) using a fake
-transport — no network.
+"""Provider-embedder token-budget batching (UD2), verified against the
+reference's documented behavior (voyage.py:175-216) — no network.
 """
 
 from __future__ import annotations
 
-import random
-
-import pytest
-
-from claude_code_memory_spark.embeddings.provider import (
-    MODEL_LIMITS,
-    ProviderEmbedder,
-    RetryPolicy,
-    estimate_tokens,
-    fake_transport,
-    provider_embedder_udf,
-    split_batches,
-    truncate_to_tokens,
-)
-
+from claude_code_memory_spark.embeddings.provider import estimate_tokens, split_batches
 
 # --- batch splitting ------------------------------------------------------
 
@@ -51,262 +35,14 @@ def test_split_boundary_exact_fit_does_not_flush():
     assert split_batches(["x"] * 3, 100, 1000, token_counts=[50, 50, 1]) == [[0, 1], [2]]
 
 
-def test_voyage_lite_30k_boundary():
-    # voyage-3-lite: 30k token budget (voyage.py:181)
-    lim = MODEL_LIMITS["voyage-3-lite"]
-    counts = [10_000, 10_000, 10_000, 1]
-    batches = split_batches(["x"] * 4, lim["token_limit"], lim["text_count_limit"], counts)
-    assert batches == [[0, 1, 2], [3]]  # 30_000 exactly fits; the +1 flushes
-
-
-def test_voyage3_120k_and_1000_texts():
-    lim = MODEL_LIMITS["voyage-3"]
-    assert lim["token_limit"] == 120_000 and lim["text_count_limit"] == 1000
-    batches = split_batches(["x"] * 2500, lim["token_limit"], lim["text_count_limit"], [1] * 2500)
-    assert [len(b) for b in batches] == [1000, 1000, 500]
-
-
 def test_empty_input():
     assert split_batches([], 100, 10) == []
 
 
-# --- token estimation / truncation ---------------------------------------
+# --- token estimation -----------------------------------------------------
 
 
 def test_estimate_tokens_positive_and_monotonicish():
     assert estimate_tokens("") >= 1
     short, long = estimate_tokens("hello"), estimate_tokens("hello " * 500)
     assert long > short
-
-
-def test_truncate_to_tokens_bounds():
-    text = "word " * 2000
-    out = truncate_to_tokens(text, 50)
-    assert estimate_tokens(out) <= 50
-    assert len(out) < len(text)
-    assert text.startswith(out)  # prefix truncation, not mangling
-    assert truncate_to_tokens("tiny", 50) == "tiny"  # under limit untouched
-
-
-# --- retry policy ---------------------------------------------------------
-
-
-def _policy(**kw):
-    sleeps: list[float] = []
-    p = RetryPolicy(rng=random.Random(0), sleep=sleeps.append, **kw)
-    return p, sleeps
-
-
-def test_retry_on_429_then_success():
-    p, sleeps = _policy(max_retries=3)
-    calls = {"n": 0}
-
-    def flaky(texts):
-        calls["n"] += 1
-        if calls["n"] < 3:
-            raise RuntimeError("HTTP 429 rate limit exceeded")
-        return [[0.0]] * len(texts)
-
-    assert p.call(flaky, ["a"]) == [[0.0]]
-    assert calls["n"] == 3
-    assert len(sleeps) == 2
-    # exponential: second delay ~2x first (modulo jitter in [1.1, 1.3]x)
-    assert sleeps[1] > sleeps[0]
-
-
-def test_no_retry_on_permanent_error():
-    p, sleeps = _policy(max_retries=3)
-    calls = {"n": 0}
-
-    def auth_fail(texts):
-        calls["n"] += 1
-        raise RuntimeError("HTTP 401 invalid api key")
-
-    with pytest.raises(RuntimeError, match="401"):
-        p.call(auth_fail, ["a"])
-    assert calls["n"] == 1 and sleeps == []
-
-
-def test_retries_exhausted_reraises_last():
-    p, sleeps = _policy(max_retries=2)
-
-    def always_timeout(texts):
-        raise TimeoutError("connection timeout")
-
-    with pytest.raises(TimeoutError):
-        p.call(always_timeout, ["a"])
-    assert len(sleeps) == 2  # attempts 0,1 slept; attempt 2 was final
-
-
-def test_delay_schedule_capped():
-    p, _ = _policy(max_retries=10, base_delay=1.0, max_delay=5.0)
-    ds = [p.delay(a) for a in range(8)]
-    assert all(d <= 5.0 * 1.3 for d in ds)  # cap + jitter ceiling
-    assert ds[0] < ds[2]
-
-
-# --- ProviderEmbedder end-to-end (fake transport) -------------------------
-
-
-def test_embedder_order_nulls_and_counters():
-    sent_batches: list[int] = []
-    base = fake_transport(dim=8)
-
-    def recording(texts):
-        sent_batches.append(len(texts))
-        return base(texts)
-
-    emb = ProviderEmbedder(transport=recording, model="voyage-3-lite")
-    texts = ["alpha", None, "beta", "gamma", None]
-    out = emb.embed_batch(texts)
-    assert out[1] is None and out[4] is None
-    assert all(len(v) == 8 for i, v in enumerate(out) if i not in (1, 4))
-    # order preserved: same vector as direct fake transport
-    assert out[0] == base(["alpha"])[0]
-    assert sum(sent_batches) == 3
-    assert emb.batches_sent == len(sent_batches) >= 1
-    assert emb.tokens_sent > 0
-
-
-def test_embedder_transport_length_mismatch_raises():
-    emb = ProviderEmbedder(transport=lambda texts: [[0.0]], model="voyage-3")
-    with pytest.raises(ValueError, match="vectors"):
-        emb.embed_batch(["a", "b", "c"])
-
-
-def test_embedder_retries_transient_transport():
-    calls = {"n": 0}
-    base = fake_transport(dim=4)
-
-    def flaky(texts):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise RuntimeError("temporary failure, HTTP 503")
-        return base(texts)
-
-    emb = ProviderEmbedder(
-        transport=flaky,
-        model="voyage-3",
-        policy=RetryPolicy(rng=random.Random(0), sleep=lambda s: None),
-    )
-    out = emb.embed_batch(["x", "y"])
-    assert calls["n"] == 2 and len(out) == 2
-
-
-# --- Spark stage ----------------------------------------------------------
-
-
-def test_provider_udf_matches_hash_embedder(spark):
-    from pyspark.sql import functions as F
-
-    from claude_code_memory_spark.embeddings.hash_embedder import hash_embedder_udf
-
-    df = spark.createDataFrame(
-        [("doc one text",), ("doc two text",), (None,)], ["text"]
-    )
-    udf = provider_embedder_udf(lambda: fake_transport(16), model="voyage-3-lite", dim=16)
-    rows = (
-        df.select(
-            udf(F.col("text")).alias("provider_vec"),
-            hash_embedder_udf(16)(F.col("text")).alias("hash_vec"),
-        )
-        .collect()
-    )
-    for r in rows:
-        if r["provider_vec"] is None:
-            assert r["hash_vec"] is None
-        else:
-            assert r["provider_vec"] == pytest.approx(r["hash_vec"])
-
-
-def test_http_transport_requires_key(monkeypatch):
-    import pytest
-
-    from claude_code_memory_spark.embeddings.provider import http_transport
-
-    monkeypatch.delenv("VOYAGE_API_KEY", raising=False)
-    monkeypatch.delenv("OPENAI_API_KEY", raising=False)
-    with pytest.raises(RuntimeError, match="API key"):
-        http_transport("voyage-3")
-    with pytest.raises(RuntimeError, match="API key"):
-        http_transport("text-embedding-3-small")
-
-
-def test_http_transport_packs_request_and_unpacks_response(monkeypatch):
-    """No network: monkeypatch urlopen, verify URL routing by model
-    family, auth header, JSON body, and index-ordered unpacking."""
-    import io
-    import json as _json
-    import urllib.request
-
-    from claude_code_memory_spark.embeddings.provider import http_transport
-
-    seen = {}
-
-    class FakeResp(io.BytesIO):
-        def __enter__(self):
-            return self
-
-        def __exit__(self, *a):
-            return False
-
-    def fake_urlopen(req, timeout=None):
-        seen["url"] = req.full_url
-        seen["auth"] = req.get_header("Authorization")
-        seen["body"] = _json.loads(req.data.decode())
-        # deliberately out of order: transport must sort by index
-        return FakeResp(_json.dumps({"data": [
-            {"index": 1, "embedding": [3.0, 4.0]},
-            {"index": 0, "embedding": [1.0, 2.0]},
-        ]}).encode())
-
-    monkeypatch.setattr(urllib.request, "urlopen", fake_urlopen)
-    t = http_transport("voyage-3", api_key="k-test")
-    out = t(["alpha", "beta"])
-    assert out == [[1.0, 2.0], [3.0, 4.0]]
-    assert seen["url"] == "https://api.voyageai.com/v1/embeddings"
-    assert seen["auth"] == "Bearer k-test"
-    assert seen["body"] == {"model": "voyage-3", "input": ["alpha", "beta"]}
-
-    t2 = http_transport("text-embedding-3-small", api_key="k2")
-    t2(["x"])
-    assert seen["url"] == "https://api.openai.com/v1/embeddings"
-
-
-def test_http_transport_errors_are_retry_classifiable(monkeypatch):
-    """HTTP 429 / URLError / timeout must surface with the transient
-    markers RetryPolicy.should_retry looks for."""
-    import urllib.error
-    import urllib.request
-
-    import pytest
-
-    from claude_code_memory_spark.embeddings.provider import (
-        RetryPolicy,
-        http_transport,
-    )
-
-    def raise_429(req, timeout=None):
-        raise urllib.error.HTTPError(req.full_url, 429, "rate limited", {}, None)
-
-    monkeypatch.setattr(urllib.request, "urlopen", raise_429)
-    t = http_transport("voyage-3", api_key="k")
-    with pytest.raises(RuntimeError, match="429") as exc_info:
-        t(["x"])
-    assert RetryPolicy().should_retry(exc_info.value, attempt=0)
-
-    def raise_conn(req, timeout=None):
-        raise urllib.error.URLError("connection refused")
-
-    monkeypatch.setattr(urllib.request, "urlopen", raise_conn)
-    with pytest.raises(RuntimeError, match="connection") as exc_info:
-        t(["x"])
-    assert RetryPolicy().should_retry(exc_info.value, attempt=0)
-
-    def raise_timeout(req, timeout=None):
-        raise TimeoutError("timed out")
-
-    monkeypatch.setattr(urllib.request, "urlopen", raise_timeout)
-    with pytest.raises(RuntimeError, match="timeout") as exc_info:
-        t(["x"])
-    assert RetryPolicy().should_retry(exc_info.value, attempt=0)
