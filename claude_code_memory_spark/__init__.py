@@ -19,7 +19,8 @@ This package re-expresses every one of those operators Spark-first:
 Design rules (see SURVEY.md §7): DataFrame/SQL only — no RDDs; Catalyst
 does pushdown/pruning/join-selection. ``api.index`` is the exception: a
 project's batch is entity-scale, so it runs as one driver pass over
-Python rows, and Spark does its store I/O.
+Python rows, and the table store reads and writes its parquet through
+pyarrow; Spark reads the same files for ``sql()`` and the reports.
 """
 
 __version__ = "0.1.0"

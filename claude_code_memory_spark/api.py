@@ -12,6 +12,7 @@ Reference entry points:
 from __future__ import annotations
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,7 +24,6 @@ from claude_code_memory_spark.embeddings.hash_embedder import (
     embed_vector,
 )
 from claude_code_memory_spark.operators.joins import (
-    dedup_new_content,
     invalid_relation_keys,
     rel_key,
     relations_in_scope,
@@ -33,6 +33,7 @@ from claude_code_memory_spark.operators.resolve import resolve_calls
 from claude_code_memory_spark.plans.chunks import (
     entity_metadata_chunks,
     implementation_chunks,
+    memory_chunk,
     relation_chunks,
 )
 from claude_code_memory_spark.plans.incremental import (
@@ -90,10 +91,10 @@ TABLE_SCHEMAS = {
 }
 
 
-def frame(spark: SparkSession, table: str, rows: list[dict]) -> DataFrame:
-    """``rows`` as a DataFrame of ``table``'s columns, through one Arrow
-    table (keys outside the table's columns are ignored)."""
-    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=TABLE_SCHEMAS[table]))
+def frame(table: str, rows: list[dict]) -> pa.Table:
+    """``rows`` as an Arrow table of ``table``'s columns (keys outside
+    the table's columns are ignored)."""
+    return pa.Table.from_pylist(rows, schema=TABLE_SCHEMAS[table])
 
 
 class CodeMemoryEngine:
@@ -117,13 +118,13 @@ class CodeMemoryEngine:
 
         Returns counters (files, entities, relations, chunks, skipped).
 
-        Everything up to the writes is one driver pass over Python rows:
-        the scan reads and hashes the files, the parsers, resolve, the
-        relation check, the chunk builders, the BM25 encoder and the
-        hash embedder all take and return row dicts. Spark does the
-        store I/O only: one collect of each stored table an incremental
-        batch reads (minus the replaced files, in Python) and one Arrow
-        ``createDataFrame`` per written table.
+        The whole call is one driver pass over Python rows and runs no
+        Spark job: the scan reads and hashes the files, the parsers,
+        resolve, the relation check, the chunk builders, the BM25 fit and
+        encoder and the hash embedder all take and return row dicts. The
+        store reads each stored table an incremental batch needs through
+        pyarrow (minus the replaced files, in Python) and writes each
+        table as one parquet commit.
 
         ``profile=True`` adds a ``stage_sec`` map (scan_diff / parse /
         resolve / resolve.validate / chunks / bm25 / embed / write and
@@ -156,7 +157,7 @@ class CodeMemoryEngine:
         # come from this scan, so a save during the index is seen as a
         # change by the next one instead of being recorded unparsed
         files = scan_project(project_dir)
-        state = self.store.read("file_state") if incremental else None
+        state = self.store.read_arrow("file_state") if incremental else None
         changed, deleted = diff_files(files, state)
         if profile:
             _mark("scan_diff")
@@ -190,11 +191,14 @@ class CodeMemoryEngine:
         # this batch's re-parse); the stored relations hand the resolver
         # the untouched files' `inherits` edges and @property rows.
         # Reference: tree-sitter+Jedi pairing (analysis/parser.py:15).
-        def collect(table: str, *cols) -> list[dict]:
-            df = self.store.read(table)
-            if df is None:
+        def collect(table: str, *cols, **computed) -> list[dict]:
+            rows = self.store.read_arrow(table)
+            if rows is None:
                 return []
-            return (df.select(*cols) if cols else df).toArrow().to_pylist()
+            out = rows.select(list(cols)) if cols else rows
+            for name, col in computed.items():
+                out = out.append_column(name, col(rows))
+            return out.to_pylist()
 
         def kept(rows: list[dict]) -> list[dict]:
             return [r for r in rows if r["file_path"] not in replaced_paths]
@@ -222,15 +226,19 @@ class CodeMemoryEngine:
         changed_names.discard(None)
         scope = relations_in_scope(relations, stored_rels, changed_names)
         callers = {r["from_entity"] for r in scope if unresolved_call(r)} - {None}
-        # one collect of the stored chunks serves the phantom rule (the
+        # one read of the stored chunks serves the phantom rule (the
         # callers' implementation contents), J6 (every stored content
         # hash, replaced files' too) and the BM25 corpus
-        is_impl = F.col("chunk_type") == "implementation"
+        def caller_impl_content(c: pa.Table):
+            is_caller_impl = pc.and_(
+                pc.equal(c["chunk_type"], "implementation"),
+                pc.is_in(c["entity_name"], pa.array(sorted(callers), pa.string())),
+            )
+            return pc.if_else(is_caller_impl, c["content"], pa.scalar(None, pa.string()))
+
         all_chunks = collect(
             "chunks", "file_path", "chunk_type", "entity_name", "point_id",
-            "content_hash", "content_bm25",
-            F.when(is_impl & F.col("entity_name").isin(*sorted(callers)), F.col("content"))
-            .alias("content"),
+            "content_hash", "content_bm25", content=caller_impl_content,
         )
         stored_hashes = {r["content_hash"] for r in all_chunks}
         stored_chunks = kept(all_chunks)
@@ -275,8 +283,8 @@ class CodeMemoryEngine:
         model = self._load_bm25()
         refit = model is None or abs(len(corpus) - model.n_docs) > 0.2 * max(model.n_docs, 1)
         if refit:
-            # saved, then reloaded: the idfs are the vocabulary write's
-            # Spark expression (embeddings/bm25.py)
+            # saved, then reloaded: the engine's model is always the
+            # stored one
             bm25_mod.fit(self.spark, corpus).save(self._bm25_path())
             model = self._load_bm25()
         self._bm25 = model
@@ -314,10 +322,8 @@ class CodeMemoryEngine:
                 stage_sec[stage] = now - _sub_t
                 _sub_t = now
 
-        spark = self.spark
-
-        def files_frame(paths) -> DataFrame:
-            return spark.createDataFrame([(p,) for p in sorted(paths)], "file_path string")
+        def files_frame(paths) -> pa.Table:
+            return pa.table({"file_path": pa.array(sorted(paths), pa.string())})
 
         replaced = files_frame(replaced_paths)
         # shared tombstone (r13): the merges tombstone the SAME replaced
@@ -334,22 +340,22 @@ class CodeMemoryEngine:
                     # stored rows the check removed widen this merge's
                     # replaced set, so it writes its own tombstone
                     merge_replace_by_file(
-                        self.store, table, frame(spark, table, rows),
+                        self.store, table, frame(table, rows),
                         files_frame(replaced_paths | affected),
                     )
                 else:
                     merge_replace_by_file(
-                        self.store, table, frame(spark, table, rows), replaced,
+                        self.store, table, frame(table, rows), replaced,
                         tombstone_src=tsrc,
                     )
             _sub("write.merge_meta")
             merge_replace_by_file(
-                self.store, "chunks", frame(spark, "chunks", chunks), replaced,
+                self.store, "chunks", frame("chunks", chunks), replaced,
                 ["chunk_type"], tombstone_src=tsrc,
             )
             _sub("write.merge_chunks")
             merge_replace_by_file(
-                self.store, "vectors", frame(spark, "vectors", vectors), replaced,
+                self.store, "vectors", frame("vectors", vectors), replaced,
                 ["chunk_type"], tombstone_src=tsrc,
             )
             _sub("write.merge_vectors")
@@ -367,7 +373,7 @@ class CodeMemoryEngine:
         _sub("write.refit_compact")
 
         # K4: state update
-        self.store.write("file_state", file_state(spark, files))
+        self.store.write("file_state", file_state(files))
         _sub("write.state")
         if profile:
             _mark("write")
@@ -389,12 +395,8 @@ class CodeMemoryEngine:
         """content_hash -> stored dense vector, for ``hashes``."""
         if not hashes:
             return {}
-        v = (
-            self.store.read("vectors")
-            .filter(F.col("content_hash").isin(*sorted(hashes)))
-            .select("content_hash", "dense")
-            .toArrow()
-        )
+        v = self.store.read_arrow("vectors")
+        v = v.filter(pc.is_in(v["content_hash"], pa.array(sorted(hashes), pa.string())))
         return dict(zip(v["content_hash"].to_pylist(), v["dense"].to_pylist()))
 
     def _rewrite_sparse(self, chunks: list[dict]) -> None:
@@ -403,19 +405,12 @@ class CodeMemoryEngine:
         sparse = bm25_mod.encode(
             self.bm25_model(), ((c["point_id"], c["content_bm25"]) for c in chunks)
         )
-        enc = self.spark.createDataFrame(
-            pa.table({
-                "point_id": pa.array(list(sparse), pa.int64()),
-                "sparse_indices": pa.array([i for i, _ in sparse.values()], pa.list_(pa.int32())),
-                "sparse_values": pa.array([v for _, v in sparse.values()], pa.list_(pa.float32())),
-            })
-        )
-        vec = self.store.read("vectors").drop("sparse_indices", "sparse_values")
-        self.store.write(
-            "vectors",
-            vec.join(enc, "point_id", "left").select(*TABLE_SCHEMAS["vectors"].names),
-            ["chunk_type"],
-        )
+        vec = self.store.read_arrow("vectors")
+        enc = [sparse.get(p, (None, None)) for p in vec["point_id"].to_pylist()]
+        vec = vec.drop_columns(["sparse_indices", "sparse_values"]).append_column(
+            "sparse_indices", pa.array([i for i, _ in enc], pa.list_(pa.int32()))
+        ).append_column("sparse_values", pa.array([v for _, v in enc], pa.list_(pa.float32())))
+        self.store.write("vectors", vec.select(TABLE_SCHEMAS["vectors"].names), ["chunk_type"])
 
     # -- model accessors -----------------------------------------------------
 
@@ -436,12 +431,8 @@ class CodeMemoryEngine:
         if not hasattr(self, "_bm25"):
             model = self._load_bm25()
             if model is None:
-                docs = (
-                    self.store.read("chunks")
-                    .filter(F.col("chunk_type") == "metadata")
-                    .select("point_id", "content_bm25")
-                    .toArrow()
-                )
+                docs = self.store.read_arrow("chunks")
+                docs = docs.filter(pc.equal(docs["chunk_type"], "metadata"))
                 model = bm25_mod.fit(
                     self.spark,
                     zip(docs["point_id"].to_pylist(), docs["content_bm25"].to_pylist()),
@@ -797,7 +788,7 @@ class CodeMemoryEngine:
         old one in a single assignment."""
         store = self.store
         need = {
-            t: (store.manifest_key(t), lambda t=t: serving.load_table(t, store.read(t)))
+            t: (store.manifest_key(t), lambda t=t: serving.load_table(t, store.read_arrow(t)))
             for t in tables
         }
         if sparse:
@@ -1080,34 +1071,7 @@ class CodeMemoryEngine:
         """Store a manual memory: a metadata chunk+vector with NULL
         file_path — the reference's manual memories, which
         ``clear(preserve_manual=True)`` keeps (qdrant.py:1341-1353)."""
-        from claude_code_memory_spark.functions.hashing import (
-            content_hash,
-            md5_8,
-            point_id,
-        )
-
-        row = self.spark.createDataFrame(
-            [(name, entity_type, content)], "entity_name string, entity_type string, content string"
-        )
-        chunk_id = F.concat_ws(
-            "::", F.lit(""), F.col("entity_type"), F.col("entity_name"),
-            F.lit("metadata"), md5_8(F.col("content")),
-        )
-        chunk = row.select(
-            chunk_id.alias("chunk_id"),
-            point_id(chunk_id).alias("point_id"),
-            "entity_name",
-            "entity_type",
-            F.lit("metadata").alias("chunk_type"),
-            "content",
-            F.concat_ws(" ", "entity_name", "entity_name", "content").alias("content_bm25"),
-            content_hash(F.col("content")).alias("content_hash"),
-            F.lit(False).alias("has_implementation"),
-            F.lit(None).cast("string").alias("file_path"),
-            F.lit(None).cast("int").alias("line_number"),
-            F.lit(None).cast("int").alias("end_line_number"),
-        )
-        self._vectorize_and_append(chunk)
+        self._vectorize_and_append([memory_chunk(name, content, entity_type)])
 
     def index_chat(
         self, jsonl_path: str, *, gap_seconds: int = 3600, summarizer_transport=None
@@ -1176,16 +1140,14 @@ class CodeMemoryEngine:
         """Shared append-content tail of chat and streamed JSON: J6
         dedup vs stored hashes → embed new → append chunks+vectors.
         Returns (total rows, newly embedded rows)."""
-        stored_c = self.store.read("chunks")
-        n_total = chunk.count()
-        if stored_c is not None:
-            chunk = dedup_new_content(chunk, stored_c.select("content_hash"))
-        chunk = chunk.localCheckpoint()  # stable ids across the two writes
-        n_new = chunk.count()
-        self._vectorize_and_append(chunk)
-        return n_total, n_new
+        rows = chunk.toArrow().to_pylist()
+        stored = self.store.read_arrow("chunks")
+        hashes = set() if stored is None else set(stored["content_hash"].to_pylist())
+        new = [r for r in rows if r["content_hash"] is None or r["content_hash"] not in hashes]
+        self._vectorize_and_append(new)
+        return len(rows), len(new)
 
-    def _vectorize_and_append(self, chunk: DataFrame) -> None:
+    def _vectorize_and_append(self, rows: list[dict]) -> None:
         """Dense-embed and BM25-encode new chunks with the in-session
         model, then append chunks and vectors as new snapshots: O(new
         chunks) IO, prior snapshot dirs untouched. Before any index
@@ -1193,7 +1155,6 @@ class CodeMemoryEngine:
         against, so the sparse columns stay NULL."""
         import os
 
-        rows = chunk.toArrow().to_pylist()
         sparse = {}
         if self.store.exists("chunks") or os.path.exists(
             os.path.join(self._bm25_path(), "stats.parquet")
@@ -1210,8 +1171,8 @@ class CodeMemoryEngine:
             }
             for r in rows
         ]
-        self.store.append("chunks", chunk, ["chunk_type"])
-        self.store.append("vectors", frame(self.spark, "vectors", vectors), ["chunk_type"])
+        self.store.append("chunks", frame("chunks", rows), ["chunk_type"])
+        self.store.append("vectors", frame("vectors", vectors), ["chunk_type"])
 
     def index_json_content(
         self, json_paths: list[str] | str, *, arrays=None, max_items: int = 0
@@ -1269,16 +1230,18 @@ class CodeMemoryEngine:
             "return_binds",
             "file_state",
         ):
-            df = self.store.read(t)
-            if df is not None:
-                self.store.write(t, df.limit(0))
+            rows = self.store.read_arrow(t)
+            if rows is not None:
+                self.store.write(t, rows.slice(0, 0))
         for t in ("chunks", "vectors"):
-            df = self.store.read(t)
-            if df is None:
+            rows = self.store.read_arrow(t)
+            if rows is None:
                 continue
             kept = (
-                df.filter(F.col("file_path").isNull() & (F.col("chunk_type") != "relation"))
+                rows.filter(pc.and_(
+                    pc.is_null(rows["file_path"]), pc.not_equal(rows["chunk_type"], "relation")
+                ))
                 if preserve_manual
-                else df.limit(0)
+                else rows.slice(0, 0)
             )
             self.store.write(t, kept, ["chunk_type"])

@@ -5,31 +5,113 @@ document frequencies → robertson IDF log((N-df+0.5)/(df+0.5)) (:285-297);
 encode = per-document sparse vector over the fitted vocabulary; query
 vectors use IDF term weights (:259-304). k1=1.2, b=0.75 (:34-38).
 
-The model is a vocabulary DataFrame (term, df, idf, term_index) plus two
-scalars (n_docs, avgdl). `fit` counts terms in one pass over the corpus
-rows; term_index is the term's rank in sorted order. The idf column is
-Spark's ``log`` (Java ``StrictMath``), evaluated by the vocabulary
-frame's own expression: Python's ``math.log`` differs from it in the
+The model is an Arrow vocabulary (term, df, idf, term_index) plus two
+scalars (n_docs, avgdl), saved and loaded as two parquet files. `fit`
+counts terms in one pass over the corpus rows; term_index is the term's
+rank in sorted order. The idf is `strict_log`, a port of fdlibm's
+``__ieee754_log``: the algorithm of Java's ``StrictMath.log``, which
+Spark's ``log`` evaluates. Python's ``math.log`` differs from it in the
 last bit for some (N, df) pairs, and a stored idf or sparse weight must
-not depend on which side computed it. `BM25Model.terms` reads the
-vocabulary back once; `encode` weights documents with it.
+not depend on whether Spark or this module computed it.
 """
 
 from __future__ import annotations
 
+import math
+import os
 import re
+import shutil
+import struct
 from collections import Counter, defaultdict
 from collections.abc import Hashable, Iterable
 from dataclasses import dataclass
 from functools import cached_property
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 K1 = 1.2
 B = 0.75
 _NON_ALNUM = re.compile("[^a-z0-9]+")
+VOCAB_SCHEMA = pa.schema([
+    ("term", pa.string()), ("df", pa.int64()), ("idf", pa.float64()),
+    ("term_index", pa.int32()),
+])
+
+# fdlibm e_log.c constants
+_LN2_HI = 6.93147180369123816490e-01
+_LN2_LO = 1.90821492927058770002e-10
+_TWO54 = 1.80143985094819840000e16
+_LG1, _LG2, _LG3, _LG4, _LG5, _LG6, _LG7 = (
+    6.666666666666735130e-01, 3.999999999940941908e-01, 2.857142874366239149e-01,
+    2.222219843214978396e-01, 1.818357216161805012e-01, 1.531383769920937332e-01,
+    1.479819860511658591e-01,
+)
+
+
+def _bits(x: float) -> int:
+    return struct.unpack("<q", struct.pack("<d", x))[0]
+
+
+def strict_log(x: float) -> float:
+    """Natural log, bit for bit Java's ``StrictMath.log`` (fdlibm
+    ``__ieee754_log``): reduce x to 2^k * (1 + f) with sqrt(2)/2 < 1 + f
+    < sqrt(2), then log(1 + f) from a minimax polynomial in s = f/(2+f).
+    Python floats are IEEE doubles with no fused multiply-add, so each
+    operation rounds as the C and Java code's does."""
+    hx = _bits(x) >> 32  # signed high word
+    lx = _bits(x) & 0xFFFFFFFF
+    k = 0
+    if hx < 0x00100000:  # x < 2**-1022
+        if ((hx & 0x7FFFFFFF) | lx) == 0:
+            return -math.inf
+        if hx < 0:
+            return math.nan
+        k -= 54  # subnormal: scale up
+        x *= _TWO54
+        hx = _bits(x) >> 32
+    if hx >= 0x7FF00000:
+        return x + x
+    k += (hx >> 20) - 1023
+    hx &= 0x000FFFFF
+    i = (hx + 0x95F64) & 0x100000
+    hi = hx | (i ^ 0x3FF00000)  # normalize x or x/2
+    x = struct.unpack("<d", struct.pack("<q", (hi << 32) | (_bits(x) & 0xFFFFFFFF)))[0]
+    k += i >> 20
+    f = x - 1.0
+    if (0x000FFFFF & (2 + hx)) < 3:  # |f| < 2**-20
+        if f == 0.0:
+            if k == 0:
+                return 0.0
+            dk = float(k)
+            return dk * _LN2_HI + dk * _LN2_LO
+        r = f * f * (0.5 - 0.33333333333333333 * f)
+        if k == 0:
+            return f - r
+        dk = float(k)
+        return dk * _LN2_HI - ((r - dk * _LN2_LO) - f)
+    s = f / (2.0 + f)
+    dk = float(k)
+    z = s * s
+    i = hx - 0x6147A
+    w = z * z
+    j = 0x6B851 - hx
+    t1 = w * (_LG2 + w * (_LG4 + w * _LG6))
+    t2 = z * (_LG1 + w * (_LG3 + w * (_LG5 + w * _LG7)))
+    i |= j
+    r = t2 + t1
+    if i > 0:
+        hfsq = 0.5 * f * f
+        if k == 0:
+            return f - (hfsq - s * (hfsq + r))
+        return dk * _LN2_HI - ((hfsq - (s * (hfsq + r) + dk * _LN2_LO)) - f)
+    if k == 0:
+        return f - s * (f - r)
+    return dk * _LN2_HI - ((s * (f - r) - dk * _LN2_LO) - f)
 
 
 def tokenize(text: str) -> list[str]:
@@ -39,33 +121,56 @@ def tokenize(text: str) -> list[str]:
     return [t for t in _NON_ALNUM.split(text.lower()) if len(t) > 1]
 
 
+def _write(table: pa.Table, path: str) -> None:
+    """``table`` as the one part file of the parquet directory ``path``,
+    replacing what was there."""
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+
+
 @dataclass
 class BM25Model:
-    vocabulary: DataFrame  # term, df, idf, term_index
+    vocab: pa.Table  # VOCAB_SCHEMA: term, df, idf, term_index
     n_docs: int
     avgdl: float
+    spark: SparkSession | None = None
+    path: str | None = None  # the directory the model was loaded from
+
+    @cached_property
+    def vocabulary(self) -> DataFrame:
+        """The vocabulary as a Spark DataFrame (`query_terms`): a scan of
+        the saved file for a loaded model."""
+        if self.path is not None:
+            return self.spark.read.parquet(f"{self.path}/vocabulary.parquet")
+        return self.spark.createDataFrame(self.vocab)
 
     @cached_property
     def terms(self) -> dict[str, tuple[int, float]]:
-        """term -> (term_index, idf), read from the vocabulary once."""
-        v = self.vocabulary.select("term", "term_index", "idf").toArrow()
+        """term -> (term_index, idf)."""
+        v = self.vocab
         return dict(
             zip(v["term"].to_pylist(), zip(v["term_index"].to_pylist(), v["idf"].to_pylist()))
         )
 
     def save(self, path: str) -> None:
         # model persistence ≈ reference's pickle cache (bm25.py:86-161)
-        self.vocabulary.write.mode("overwrite").parquet(f"{path}/vocabulary.parquet")
-        spark = self.vocabulary.sparkSession
-        spark.createDataFrame(
-            [(self.n_docs, self.avgdl)], "n_docs long, avgdl double"
-        ).write.mode("overwrite").parquet(f"{path}/stats.parquet")
+        _write(self.vocab, f"{path}/vocabulary.parquet")
+        _write(
+            pa.table({
+                "n_docs": pa.array([self.n_docs], pa.int64()),
+                "avgdl": pa.array([self.avgdl], pa.float64()),
+            }),
+            f"{path}/stats.parquet",
+        )
 
     @classmethod
     def load(cls, spark, path: str) -> "BM25Model":
-        vocab = spark.read.parquet(f"{path}/vocabulary.parquet")
-        n_docs, avgdl = spark.read.parquet(f"{path}/stats.parquet").collect()[0]
-        return cls(vocab, int(n_docs), float(avgdl))
+        vocab = ds.dataset(
+            f"{path}/vocabulary.parquet", schema=VOCAB_SCHEMA, format="parquet"
+        ).to_table()
+        stats = ds.dataset(f"{path}/stats.parquet", format="parquet").to_table().to_pylist()[0]
+        return cls(vocab, int(stats["n_docs"]), float(stats["avgdl"]), spark, path)
 
 
 def fit(spark: SparkSession, docs: Iterable[tuple[Hashable, str | None]]) -> BM25Model:
@@ -74,7 +179,8 @@ def fit(spark: SparkSession, docs: Iterable[tuple[Hashable, str | None]]) -> BM2
 
     A NULL text is no document. n_docs counts the others; avgdl averages
     the lengths of those with at least one token; df counts the distinct
-    ids holding a term."""
+    ids holding a term; idf = strict_log((n_docs - df + 0.5) / (df + 0.5))
+    in this operation order."""
     n_docs, n_long, total = 0, 0, 0
     terms_of: dict = defaultdict(set)
     for key, text in docs:
@@ -87,16 +193,21 @@ def fit(spark: SparkSession, docs: Iterable[tuple[Hashable, str | None]]) -> BM2
             total += len(toks)
         terms_of[key].update(toks)
     df = Counter(t for ts in terms_of.values() for t in ts)
-    vocab = spark.createDataFrame(
-        [(t, df[t], i) for i, t in enumerate(sorted(df))],
-        "term string, df long, term_index int",
-    ).select(
-        "term",
-        "df",
-        F.log((F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)).alias("idf"),
-        "term_index",
+    terms = sorted(df)
+    counts = [df[t] for t in terms]
+    vocab = pa.table(
+        [
+            pa.array(terms, pa.string()),
+            pa.array(counts, pa.int64()),
+            pa.array(
+                [strict_log((float(n_docs) - d + 0.5) / (d + 0.5)) for d in counts],
+                pa.float64(),
+            ),
+            pa.array(range(len(terms)), pa.int32()),
+        ],
+        schema=VOCAB_SCHEMA,
     )
-    return BM25Model(vocab, n_docs, total / n_long if n_long else 0.0)
+    return BM25Model(vocab, n_docs, total / n_long if n_long else 0.0, spark)
 
 
 def encode(

@@ -1,12 +1,12 @@
 """The reference's six join shapes: the relation check as plain Python
-rules, the replacement diff and dedup probe as DataFrame operators.
+rules, the replacement diff as a DataFrame operator.
 
 Reference semantics (SURVEY.md §2.3):
 - J2 orphan relation cleanup      storage/qdrant.py:1937-2323  (endpoint + stale-import rules)
 - J3 phantom call detection       storage/qdrant.py:2325-2381  (phantom rule)
 - J4 pre-storage orphan filter    indexer.py:1132-1210         (endpoint rule)
 - J5 entity replacement diff      processing/processors.py:64-153 (full outer join)
-- J6 content-hash dedup probe     processing/content_processor.py:45-61 (left anti)
+- J6 content-hash dedup probe     processing/content_processor.py:45-61 (set lookup, api.py)
 - J7 smart relation filtering     storage/diff_layers.py:80-110 (scope of the check)
 
 J2/J3/J4/J7 run once per ``index()``, on the driver, before any write.
@@ -212,16 +212,3 @@ def replacement_diff(
         .otherwise(F.lit("unchanged"))
     )
     return joined.select(*keys, status.alias("status"))
-
-
-def dedup_new_content(
-    chunks: DataFrame,
-    existing: DataFrame,
-    *,
-    hash_col: str = "content_hash",
-) -> DataFrame:
-    """J6: drop chunks whose content hash is already stored (skip re-embedding).
-
-    The reference's single biggest cost saver; as a left-anti join the
-    existing-hash side is typically the smaller delta and broadcastable."""
-    return chunks.join(existing.select(hash_col).distinct(), on=hash_col, how="left_anti")

@@ -160,3 +160,14 @@ def relation_chunks(relations: list[dict]) -> list[dict]:
         )
         for chunk_id, ((_, fp), src, rtype, dst) in owner.items()
     ]
+
+
+def memory_chunk(name: str, content: str | None, entity_type: str) -> dict:
+    """The metadata chunk of a manual memory (``add_memory``): NULL
+    file_path, no line numbers, and the name twice before the content
+    as its BM25 text."""
+    chunk_id = _concat_ws("::", "", entity_type, name, "metadata", md5_8(content))
+    return _chunk(
+        chunk_id, "metadata", name, entity_type, None, content,
+        _concat_ws(" ", name, name, content), False,
+    )

@@ -11,12 +11,17 @@ Reference flow per batch (indexer.py:1374-1459, unified_processor.py:26-166):
      relations the check removed are committed with the batch's
   5. file_state update (K4)
 
-Storage is plain parquet "tables" under a collection directory. Merge =
-read-current ∖ replaced ∪ new, written to a new snapshot directory and
-atomically repointed (the parquet stand-in for Delta's MERGE — on a real
-cluster swap TableStore for Delta/Iceberg and each step below becomes a
-single MERGE INTO / DELETE statement; ordering stays explicit because the
-dedup-vs-just-deleted hazard (processors.py:155-179) forbids reordering).
+Storage is plain parquet "tables" under a collection directory, read and
+written in process through pyarrow. A commit writes a new snapshot
+directory (hive ``col=value`` partition dirs where asked, Spark's
+layout), appends a line to the table's ``_log`` and swaps the
+``_current`` pointer with ``os.replace``. Merge = read-current ∖ replaced
+∪ new, as an O(batch) delta snapshot plus a tombstone sidecar that
+readers apply (merge-on-read); the order of the steps stays explicit
+because the dedup-vs-just-deleted hazard (processors.py:155-179) forbids
+reordering. The pointer carries the table's schema as Spark
+``StructType`` JSON, so `TableStore.read` hands the same rows to Spark
+for ``sql()`` and the reports.
 """
 
 from __future__ import annotations
@@ -28,9 +33,105 @@ import re
 import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import StructType
 
 TABLES = ("entities", "relations", "bindings", "chunks", "vectors", "file_state")
+_FILE_PATH = pa.schema([("file_path", pa.string())])
+# the characters Spark escapes in a partition directory name
+# (ExternalCatalogUtils.escapePathName), written as %XX
+_ESCAPE = set('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(1, 32)}
+
+
+def as_arrow(rows) -> pa.Table:
+    """``rows`` as a pa.Table; a Spark DataFrame goes through one
+    ``toArrow()``."""
+    return rows if isinstance(rows, pa.Table) else rows.toArrow()
+
+
+def conform(rows: pa.Table, schema: pa.Schema) -> pa.Table:
+    """``rows`` with ``schema``'s columns, order and types; a column the
+    rows lack is all NULL."""
+    return pa.table(
+        [
+            rows[f.name].cast(f.type)
+            if f.name in rows.column_names
+            else pa.nulls(rows.num_rows, f.type)
+            for f in schema
+        ],
+        schema=schema,
+    )
+
+
+def _partition_dir(col: str, value) -> str:
+    if value is None or value == "":
+        return f"{col}=__HIVE_DEFAULT_PARTITION__"
+    return col + "=" + "".join(f"%{ord(c):02X}" if c in _ESCAPE else c for c in str(value))
+
+
+def _write_part(rows: pa.Table, path: str) -> None:
+    # dictionary pages for strings only: the float vectors and unique ids
+    # do not repeat, and a dictionary that overflows its page limit stays
+    # in the file beside the plain pages (a third more bytes for vectors)
+    pq.write_table(
+        rows, path, use_dictionary=[f.name for f in rows.schema if pa.types.is_string(f.type)]
+    )
+
+
+def _write_dir(path: str, rows: pa.Table, partition_by: list[str] | None) -> None:
+    """``rows`` as parquet under the new directory ``path``: one part
+    file, or one per ``partition_by`` value combination in nested
+    ``col=value`` dirs without the partition columns. A row-less table
+    writes no part file, as Spark's writer does; readers take the
+    schema from the pointer."""
+    os.makedirs(path)
+    if not rows.num_rows:
+        return
+    if not partition_by:
+        _write_part(rows, os.path.join(path, "part-00000.parquet"))
+        return
+    data = rows.drop_columns(partition_by)
+    keys = rows.select(partition_by).group_by(partition_by, use_threads=False).aggregate([])
+    for combo in keys.to_pylist():
+        mask = None
+        for col, v in combo.items():
+            m = pc.is_null(rows[col]) if v is None else pc.fill_null(pc.equal(rows[col], v), False)
+            mask = m if mask is None else pc.and_(mask, m)
+        sub = os.path.join(path, *[_partition_dir(c, v) for c, v in combo.items()])
+        os.makedirs(sub, exist_ok=True)
+        _write_part(data.filter(mask), os.path.join(sub, "part-00000.parquet"))
+
+
+def _partition_cols(path: str) -> list[str]:
+    """The hive partition columns of a snapshot dir, outermost first."""
+    cols = []
+    while True:
+        sub = sorted(
+            e.path for e in os.scandir(path)
+            if e.is_dir() and "=" in e.name and not e.name.startswith(("_", "."))
+        )
+        if not sub:
+            return cols
+        cols.append(os.path.basename(sub[0]).split("=", 1)[0])
+        path = sub[0]
+
+
+def _read_dir(path: str, schema: pa.Schema) -> pa.Table:
+    """One snapshot or tombstone dir as ``schema`` (a column a part file
+    lacks reads as NULL). Hidden and ``_``-prefixed files, such as
+    Spark's ``_SUCCESS`` and ``.crc`` files, are skipped."""
+    cols = _partition_cols(path)
+    part = (
+        ds.partitioning(pa.schema([schema.field(c) for c in cols]), flavor="hive")
+        if cols
+        else None
+    )
+    return ds.dataset(path, schema=schema, format="parquet", partitioning=part).to_table()
 
 
 class TableStore:
@@ -60,91 +161,60 @@ class TableStore:
             meta["snapshots"] = [meta.pop("snapshot")]
         return meta
 
-    def _reader_for(self, meta):
-        reader = self.spark.read
-        if "schema" in meta:
-            # an empty table writes no parquet part files (Spark skips
-            # file creation for row-less tasks), so schema inference has
-            # nothing to read — the pointer carries the schema instead
-            from pyspark.sql.types import StructType
+    @staticmethod
+    def _schema(meta: dict) -> pa.Schema:
+        """The pointer's schema (Spark ``StructType`` JSON) as Arrow."""
+        return to_arrow_schema(StructType.fromJson(json.loads(meta["schema"])))
 
-            reader = reader.schema(StructType.fromJson(json.loads(meta["schema"])))
-        return reader
-
-    def _assemble(self, table: str, meta: dict) -> DataFrame:
-        """Manifest → DataFrame: lazily-unioned snapshot dirs, with the
-        delta-merge survivor rule applied when any commit carried a
-        tombstone (r12). A tombstoned file_path kills rows in EARLIER
-        snapshots only — the delta commit that tombstones a file also
-        carries its replacement rows, which must survive — so each row
-        joins the latest tombstone ordinal for its file and survives iff
-        its own snapshot ordinal is >= that (or no tombstone exists)."""
-        from pyspark.sql import functions as F
-
-        reader = self._reader_for(meta)
-        snaps = meta["snapshots"]
-        tss = meta.get("tombstones") or [None] * len(snaps)
-        parts = [
-            reader.parquet(os.path.join(self.root, table, s)) for s in snaps
-        ]
-        if not any(tss):
-            # fast path (all plain commits): one union, no join —
-            # partition pruning still applies inside each snapshot dir
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            return df
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        parts = [p.withColumn("__snap_ord", F.lit(i)) for i, p in enumerate(parts)]
-        rows = parts[0]
-        for p in parts[1:]:
-            rows = rows.unionByName(p)
-        ts_schema = StructType([StructField("file_path", StringType())])
-        ts_parts = [
-            self.spark.read.schema(ts_schema)
-            .parquet(os.path.join(self.root, table, t))
-            .withColumn("__ts_ord", F.lit(i))
-            for i, t in enumerate(tss)
-            if t
-        ]
-        ts = ts_parts[0]
-        for p in ts_parts[1:]:
-            ts = ts.unionByName(p)
-        last = ts.groupBy(F.col("file_path").alias("__ts_fp")).agg(
-            F.max("__ts_ord").alias("__ts_ord")
-        )
-        # tombstone maps are rows-∝-touched-files — broadcast hash join,
-        # never a shuffle of the fact side
-        return (
-            rows.join(
-                F.broadcast(last), rows["file_path"] == F.col("__ts_fp"), "left"
-            )
-            .filter(
-                F.col("__ts_ord").isNull()
-                | (F.col("__snap_ord") >= F.col("__ts_ord"))
-            )
-            .drop("__snap_ord", "__ts_fp", "__ts_ord")
-        )
-
-    def read(self, table: str) -> DataFrame | None:
+    def read_arrow(self, table: str) -> pa.Table | None:
+        """The current table: its snapshot dirs read with the pointer's
+        schema and concatenated, partition columns last (where Spark's
+        reader puts them). When a commit carried a tombstone, a row
+        survives iff its snapshot ordinal is >= the latest tombstone
+        ordinal of its file_path: the delta commit that tombstones a
+        file also carries the file's replacement rows."""
         meta = self._manifest(table)
         if meta is None:
             return None
-        return self._assemble(table, meta)
+        tdir = os.path.join(self.root, table)
+        snaps = meta["snapshots"]
+        schema = self._schema(meta)
+        first = _partition_cols(os.path.join(tdir, snaps[0]))
+        schema = pa.schema(
+            [f for f in schema if f.name not in first] + [schema.field(c) for c in first]
+        )
+        last: dict[str, int] = {}
+        for i, ts in enumerate(meta.get("tombstones") or []):
+            if ts:
+                fps = _read_dir(os.path.join(tdir, ts), _FILE_PATH)["file_path"]
+                last.update(dict.fromkeys(fps.to_pylist(), i))
+        parts = []
+        for i, snap in enumerate(snaps):
+            part = _read_dir(os.path.join(tdir, snap), schema)
+            dead = [fp for fp, o in last.items() if o > i and fp is not None]
+            if dead:
+                part = part.filter(
+                    pc.invert(pc.is_in(part["file_path"], pa.array(dead, pa.string())))
+                )
+            parts.append(part)
+        rows = pa.concat_tables(parts)
+        # a row-less scan has zero-chunk columns, which createDataFrame
+        # rejects; the schema's empty table has one empty chunk each
+        return rows if rows.num_rows else rows.schema.empty_table()
 
-    def _new_snapshot_dir(self, table: str, df: DataFrame,
+    def read(self, table: str) -> DataFrame | None:
+        """`read_arrow` as a Spark DataFrame, for sql() and the reports."""
+        rows = self.read_arrow(table)
+        return None if rows is None else self.spark.createDataFrame(rows)
+
+    def _new_snapshot_dir(self, table: str, rows: pa.Table,
                           partition_by: list[str] | None) -> str:
         self._counter = getattr(self, "_counter", 0) + 1
         snap = f"snap-{int(time.time() * 1000)}-{os.getpid()}-{self._counter}"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            # e.g. chunks/vectors partitioned by chunk_type: the reference's
-            # metadata-first progressive disclosure (README.md:209, 335-339)
-            # becomes parquet partition pruning — a chunk_type-filtered
-            # search never lists the implementation partitions
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(os.path.join(self.root, table, snap))
+        # e.g. chunks/vectors partitioned by chunk_type: the reference's
+        # metadata-first progressive disclosure (README.md:209, 335-339)
+        # becomes parquet partition pruning for Spark readers
+        _write_dir(os.path.join(self.root, table, snap), rows, partition_by)
         return snap
 
     def _log_path(self, table: str) -> str:
@@ -166,16 +236,15 @@ class TableStore:
             json.dump(meta, fh)
         # append the version to the commit log BEFORE the pointer swap:
         # a crash between the two leaves a log entry whose snapshots are
-        # fully written (the parquet write preceded _commit), readable by
-        # read_version, while _current still serves the previous commit —
-        # never a pointer to missing data
+        # fully written (the parquet write preceded _commit), while
+        # _current still serves the previous commit — never a pointer to
+        # missing data
         version = self._next_version(table)
         with open(self._log_path(table), "a") as fh:
             fh.write(json.dumps({"version": version, "ts": time.time(), **meta}) + "\n")
         os.replace(tmp, self._pointer(table))  # atomic pointer swap
-        # No GC here: lazy DataFrames captured earlier in the pipeline may
-        # still reference older snapshots (Delta's time-travel + deferred
-        # VACUUM solves the same hazard). vacuum() runs between pipelines.
+        # No GC here: a reader that listed the previous pointer may still
+        # be reading its snapshots. vacuum() runs between pipelines.
 
     def _next_version(self, table: str) -> int:
         """Next commit's version number, from the log's LAST line only —
@@ -219,34 +288,11 @@ class TableStore:
                     out.append(json.loads(line))
         return out
 
-    def read_version(self, table: str, version: int) -> DataFrame:
-        """Time-travel read: the table as of commit ``version`` (0-based,
-        see `history`). Raises if the version never existed or its
-        snapshots were reclaimed by `vacuum` — the same contract as Delta
-        time-travel past the retention window."""
-        entries = self.history(table)
-        matches = [e for e in entries if e["version"] == version]
-        if not matches:
-            raise ValueError(
-                f"table {table!r} has no version {version} "
-                f"(log has {len(entries)} commits)"
-            )
-        meta = matches[-1]
-        missing = [
-            s
-            for s in meta["snapshots"] + [t for t in meta.get("tombstones") or [] if t]
-            if not os.path.isdir(os.path.join(self.root, table, s))
-        ]
-        if missing:
-            raise ValueError(
-                f"version {version} of {table!r} was vacuumed "
-                f"(missing snapshots: {missing})"
-            )
-        return self._assemble(table, meta)
-
-    def write(self, table: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
-        snap = self._new_snapshot_dir(table, df, partition_by)
-        self._commit(table, [snap], df.schema.json())
+    def write(self, table: str, rows, partition_by: list[str] | None = None) -> None:
+        """Replace ``table`` with ``rows`` (a pa.Table or a DataFrame)."""
+        rows = as_arrow(rows)
+        snap = self._new_snapshot_dir(table, rows, partition_by)
+        self._commit(table, [snap], from_arrow_schema(rows.schema).json())
 
     # Auto-compact when a table accumulates this many append snapshots:
     # the small-file problem is the append trade-off, and folding N dirs
@@ -254,83 +300,73 @@ class TableStore:
     # once per MAX_SNAPSHOTS appends = amortized O(1) per append.
     MAX_SNAPSHOTS = 32
 
-    def append(self, table: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
+    def append(self, table: str, rows, partition_by: list[str] | None = None) -> None:
         """Append rows as an additional manifest snapshot — O(new rows) IO,
         prior snapshot dirs untouched (the Delta-append this store
         emulates; round 1 appended by rewriting the whole table)."""
+        rows = as_arrow(rows)
         meta = self._manifest(table)
         if meta is None:
-            self.write(table, df, partition_by)
+            self.write(table, rows, partition_by)
             return
-        snap = self._new_snapshot_dir(table, df, partition_by)
+        snap = self._new_snapshot_dir(table, rows, partition_by)
         snapshots = meta["snapshots"] + [snap]
         if len(snapshots) >= self.MAX_SNAPSHOTS:
-            merged = self.read(table).unionByName(
-                self.spark.read.schema(df.schema).parquet(
-                    os.path.join(self.root, table, snap)
-                )
+            current = self.read_arrow(table)
+            self.write(
+                table, pa.concat_tables([current, conform(rows, current.schema)]), partition_by
             )
-            self.write(table, merged, partition_by)
             return
         tombstones = (meta.get("tombstones") or [None] * (len(snapshots) - 1)) + [None]
-        self._commit(
-            table, snapshots, meta.get("schema", df.schema.json()), tombstones
-        )
+        self._commit(table, snapshots, meta["schema"], tombstones)
 
     # merge_replace_by_file delta bound: a 1-file commit must not
     # rewrite a corpus-scale table (measured r12: the write stage of a
     # 1-file incremental on the 865-file corpus was ~21 s of pure
     # rewrite), but unbounded deltas grow read amplification — compact
-    # every MAX_MERGE_SNAPSHOTS delta commits (the postings serving
-    # index measured 1.52x read-amp at 8 deltas; same bound).
+    # every MAX_MERGE_SNAPSHOTS delta commits.
     MAX_MERGE_SNAPSHOTS = 8
 
     def merge_delta(
         self,
         table: str,
-        new_rows: DataFrame,
-        replaced_files: DataFrame,
+        new_rows,
+        replaced_files,
         partition_by: list[str] | None = None,
         tombstone_src: "TombstoneSource | None" = None,
     ) -> None:
         """O(batch) MERGE commit: append the batch's rows as a delta
         snapshot plus a tombstone sidecar of the replaced/deleted
         file_paths. Readers apply last-writer-wins per file (see
-        _assemble); rows of replaced files in earlier snapshots are
+        `read_arrow`); rows of replaced files in earlier snapshots are
         dead without being rewritten — Delta/Iceberg's merge-on-read.
 
-        ``tombstone_src`` (r13): the 7 per-batch merges all tombstone the
-        SAME replaced set, so writing it as 7 separate Spark jobs was 6
-        redundant job round-trips + lineage replays per incremental
-        batch. A shared TombstoneSource writes the parquet once and the
-        other tables receive a driver-side file copy of the identical
-        bytes."""
+        ``tombstone_src``: the merges of one batch tombstone the SAME
+        replaced set; a shared TombstoneSource writes the parquet once
+        and the other tables receive a file copy of the identical bytes."""
         meta = self._manifest(table)
         assert meta is not None, "merge_delta requires an existing table"
-        snap = self._new_snapshot_dir(table, new_rows, partition_by)
+        snap = self._new_snapshot_dir(table, as_arrow(new_rows), partition_by)
         self._counter = getattr(self, "_counter", 0) + 1
         ts = f"ts-{int(time.time() * 1000)}-{os.getpid()}-{self._counter}"
         ts_path = os.path.join(self.root, table, ts)
         if tombstone_src is not None:
             shutil.copytree(tombstone_src.materialize(), ts_path)
         else:
-            replaced_files.select("file_path").write.mode("overwrite").parquet(
-                ts_path
-            )
+            _write_dir(ts_path, as_arrow(replaced_files).select(["file_path"]), None)
         snapshots = meta["snapshots"] + [snap]
         tombstones = (meta.get("tombstones") or [None] * (len(snapshots) - 1)) + [ts]
-        self._commit(table, snapshots, meta.get("schema", new_rows.schema.json()), tombstones)
+        self._commit(table, snapshots, meta["schema"], tombstones)
 
     def optimize(self, table: str, partition_by: list[str] | None = None) -> None:
         """Compaction (Delta ``OPTIMIZE`` without ZORDER): fold the
         table's snapshots, appends and tombstoned deltas alike, into ONE
-        new snapshot with the same rows. Time travel to prior versions
-        is preserved (new commit, old snapshots untouched until
-        vacuum)."""
-        df = self.read(table)
-        if df is None:
+        new snapshot with the same rows (a new commit; the old snapshots
+        stay until vacuum)."""
+        rows = self.read_arrow(table)
+        if rows is None:
             return
-        self.write(table, df, partition_by)
+        self.write(table, rows, partition_by)
 
     def manifest_key(self, table: str) -> tuple | None:
         """Stable identifier of a table's current snapshot set — changes on
@@ -357,13 +393,10 @@ class TableStore:
             return None
         return [snap for snap, _ in new]
 
-    def vacuum(self, retain_versions: int = 1) -> None:
-        """Delete snapshots unreachable from the last ``retain_versions``
-        commits (default 1: current only). Call only between pipelines,
-        when no live DataFrame references older snapshots. This truncates
-        time-travel past the retention window: `read_version` on a
-        vacuumed commit raises, while its log entry remains as an audit
-        record — Delta's VACUUM + logRetention split."""
+    def vacuum(self) -> None:
+        """Delete the snapshot and tombstone dirs no current pointer
+        references. Call only between pipelines, when no reader still
+        lists an older pointer. The log keeps every commit's entry."""
         for table in os.listdir(self.root):
             # shared-tombstone sources: sweep the stranded ones (crash
             # between write and cleanup), never one that an index() of
@@ -377,10 +410,6 @@ class TableStore:
                 continue
             keep = set(meta["snapshots"])
             keep.update(t for t in meta.get("tombstones") or [] if t)
-            if retain_versions > 1:
-                for entry in self.history(table)[-retain_versions:]:
-                    keep.update(entry["snapshots"])
-                    keep.update(t for t in entry.get("tombstones") or [] if t)
             tdir = os.path.join(self.root, table)
             for d in os.listdir(tdir):
                 if d.startswith(("snap-", "ts-")) and d not in keep:
@@ -390,9 +419,9 @@ class TableStore:
 class TombstoneSource:
     """One-per-batch tombstone parquet, written lazily on first delta
     commit and file-copied into every later table's ts dir (identical
-    bytes, one Spark job instead of seven). The caller (api.index) owns
-    the lifecycle: it holds the source in a ``with`` block around the
-    batch's merges, and leaving the block cleans the dir up.
+    bytes, one write instead of one per table). The caller (api.index)
+    owns the lifecycle: it holds the source in a ``with`` block around
+    the batch's merges, and leaving the block cleans the dir up.
 
     The dir is named ``_tsrc-<ms>-<pid>-<n>``. `TableStore.vacuum` sweeps
     it only when `stranded`: its writer process is gone, or the writer is
@@ -401,7 +430,7 @@ class TombstoneSource:
     _seq = itertools.count()
     _in_flight: set[str] = set()  # dir names of this process's live sources
 
-    def __init__(self, store: TableStore, replaced_files: DataFrame):
+    def __init__(self, store: TableStore, replaced_files):
         self.store = store
         self.replaced = replaced_files
         self._dir: str | None = None
@@ -421,7 +450,10 @@ class TombstoneSource:
             if self._held:
                 self._in_flight.add(name)
             path = os.path.join(self.store.root, name)
-            self.replaced.select("file_path").write.mode("overwrite").parquet(path)
+            if isinstance(self.replaced, pa.Table):
+                _write_dir(path, self.replaced.select(["file_path"]), None)
+            else:  # a DataFrame is written by Spark's own writer
+                self.replaced.select("file_path").write.mode("overwrite").parquet(path)
             self._dir = path
         return self._dir
 
@@ -452,135 +484,42 @@ class TombstoneSource:
 def merge_replace_by_file(
     store: TableStore,
     table: str,
-    new_rows: DataFrame,
-    replaced_files: DataFrame,
+    new_rows,
+    replaced_files,
     partition_by: list[str] | None = None,
     tombstone_src: TombstoneSource | None = None,
 ) -> None:
     """MERGE emulation: drop all rows of replaced/deleted files, insert new.
 
-    `replaced_files` is a 1-column DF (file_path).
+    ``new_rows`` and ``replaced_files`` (one ``file_path`` column) are
+    pa.Tables or DataFrames.
 
-    Since r12 this is merge-on-READ: an incremental commit appends an
-    O(batch) delta snapshot + tombstone sidecar (`merge_delta`), so a
-    1-file change on a 100 TB corpus writes KBs, not the corpus. Every
-    MAX_MERGE_SNAPSHOTS delta commits the table compacts back to one
-    snapshot (bounded read amplification), and a batch whose schema
-    adds columns also compacts (snapshot dirs must stay
-    union-compatible). The compaction path keeps the original
-    anti-join-then-union shape; the delete set is computed from the
-    *current* snapshot before the write starts."""
-    current = store.read(table)
-    if current is None:
+    Merge-on-READ: a commit appends an O(batch) delta snapshot +
+    tombstone sidecar (`merge_delta`), so a 1-file change writes KBs,
+    not the table. Every MAX_MERGE_SNAPSHOTS delta commits the table
+    compacts back to one snapshot (bounded read amplification), and a
+    batch whose schema adds columns also compacts (snapshot dirs must
+    stay union-compatible): the current rows minus the replaced files,
+    then the batch."""
+    new_rows = as_arrow(new_rows)
+    meta = store._manifest(table)
+    if meta is None:
         store.write(table, new_rows, partition_by)
         return
-    meta = store._manifest(table)
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    stored_cols = set(
-        StructType.fromJson(_json.loads(meta["schema"])).fieldNames()
-        if "schema" in meta
-        else current.columns
-    )
+    stored = store._schema(meta)
     if len(meta["snapshots"]) < store.MAX_MERGE_SNAPSHOTS and set(
-        new_rows.columns
-    ) <= stored_cols:
-        from pyspark.sql import functions as F
-
-        if set(new_rows.columns) < stored_cols:
-            # align to the stored schema so snapshot dirs stay
-            # union-compatible (the full rewrite used allowMissingColumns)
-            stored_schema = StructType.fromJson(_json.loads(meta["schema"]))
-            missing = [f for f in stored_schema.fields if f.name not in new_rows.columns]
-            for f in missing:
-                new_rows = new_rows.withColumn(f.name, F.lit(None).cast(f.dataType))
-            new_rows = new_rows.select(*stored_schema.fieldNames())
+        new_rows.column_names
+    ) <= set(stored.names):
+        # a narrower batch is aligned to the stored schema, so snapshot
+        # dirs stay union-compatible
         store.merge_delta(
-            table, new_rows, replaced_files, partition_by,
+            table, conform(new_rows, stored), replaced_files, partition_by,
             tombstone_src=tombstone_src,
         )
         return
-    from pyspark.sql import functions as F
-
-    kept = current.join(
-        F.broadcast(replaced_files.select(F.col("file_path").alias("__rf"))),
-        current["file_path"] == F.col("__rf"),
-        "left_anti",
-    )
+    current = store.read_arrow(table)
+    gone = as_arrow(replaced_files)["file_path"].combine_chunks().drop_null()
+    kept = current.filter(pc.invert(pc.is_in(current["file_path"], gone)))
     store.write(
-        table, kept.unionByName(new_rows, allowMissingColumns=True), partition_by
+        table, pa.concat_tables([kept, new_rows], promote_options="permissive"), partition_by
     )
-
-
-def diff_versions(
-    store: TableStore,
-    table: str,
-    v_old: int,
-    v_new: int,
-    key_cols: list[str],
-    compare_cols: list[str] | None = None,
-) -> DataFrame:
-    """Change-data-capture between two commits of a TableStore table:
-    one full-outer join on the key, classifying each row as added /
-    removed / changed (unchanged rows are dropped).
-
-    The generalization of `merge_replace_by_file`'s replacement diff
-    (reference: indexer change detection) to ARBITRARY versions via the
-    time-travel log — "what changed between yesterday's index and
-    today's" as one join, at any scale the join keys shuffle to.
-    ``compare_cols`` defaults to every non-key column; comparison is
-    null-safe."""
-    from pyspark.sql import functions as F
-
-    old = store.read_version(table, v_old)
-    new = store.read_version(table, v_new)
-    cols = compare_cols or [c for c in new.columns if c not in key_cols]
-    o = old.select(
-        *[F.col(k).alias(f"__k_{k}") for k in key_cols],
-        F.struct(*cols).alias("__old"),
-    )
-    n = new.select(
-        *[F.col(k).alias(f"__k_{k}") for k in key_cols],
-        F.struct(*cols).alias("__new"),
-    )
-    joined = o.join(n, [f"__k_{k}" for k in key_cols], "full_outer")
-    status = (
-        F.when(F.col("__old").isNull(), F.lit("added"))
-        .when(F.col("__new").isNull(), F.lit("removed"))
-        .when(~F.col("__old").eqNullSafe(F.col("__new")), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-    )
-    return (
-        joined.withColumn("change", status)
-        .filter(F.col("change") != "unchanged")
-        .select(
-            *[F.col(f"__k_{k}").alias(k) for k in key_cols],
-            "change",
-            F.col("__old").alias("old"),
-            F.col("__new").alias("new"),
-        )
-    )
-
-
-def delete_where(store: TableStore, table: str, condition) -> int:
-    """Predicate delete (the right-to-be-forgotten primitive): commit a
-    new version of ``table`` without the matching rows; returns the
-    number of rows removed.
-
-    The rewrite costs O(table) — at scale, partition the table so the
-    predicate prunes the rewrite to affected partitions (Delta's DELETE
-    does the same under the hood). Time travel intentionally keeps the
-    deleted rows reachable in PRIOR versions until `vacuum()` runs —
-    a compliant erasure is delete_where + vacuum, mirroring Delta's
-    DELETE + VACUUM two-step."""
-    from pyspark.sql import functions as F
-
-    df = store.read(table)
-    if df is None:
-        raise ValueError(f"no such table: {table!r}")
-    cond = F.expr(condition) if isinstance(condition, str) else condition
-    n_removed = df.filter(cond).count()
-    store.write(table, df.filter(~cond))
-    return n_removed

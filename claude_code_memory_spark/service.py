@@ -121,16 +121,16 @@ class IndexingService:
         out = []
         for p in self.load_config()["projects"]:
             eng = self.engine(p["collection"])
-            chunks = eng.store.read("chunks")
-            state = eng.store.read("file_state")
+            chunks = eng.store.read_arrow("chunks")
+            state = eng.store.read_arrow("file_state")
             out.append(
                 {
                     "path": p["path"],
                     "collection": p["collection"],
                     "enabled": p["enabled"],
                     "indexed": chunks is not None,
-                    "n_chunks": chunks.count() if chunks is not None else 0,
-                    "n_files": state.count() if state is not None else 0,
+                    "n_chunks": chunks.num_rows if chunks is not None else 0,
+                    "n_files": state.num_rows if state is not None else 0,
                 }
             )
         return out

@@ -79,16 +79,14 @@ def refresh(snap: Snapshot, need: dict[str, tuple[object, Callable]]) -> Snapsho
     return Snapshot(parts)
 
 
-def load_table(name: str, df):
-    """A store table as Arrow (an empty table of the declared schema when
-    the collection never wrote it); vectors and chunks get their serving
-    indexes."""
-    if df is None:
+def load_table(name: str, table: pa.Table | None):
+    """A store table's rows (`TableStore.read_arrow`; an empty table of
+    the declared schema when the collection never wrote it); vectors and
+    chunks get their serving indexes."""
+    if table is None:
         from pyspark.sql.pandas.types import to_arrow_schema
 
         table = to_arrow_schema(_SCHEMAS[name]).empty_table()
-    else:
-        table = df.toArrow()
     table = table.combine_chunks()
     if name == "vectors":
         return Vectors(table)

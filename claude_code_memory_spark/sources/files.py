@@ -9,7 +9,7 @@ Reference semantics:
 The scan is an explicit walk (the `binaryFile` source is unusable here —
 Hadoop's hidden-file filter silently drops `__init__.py` and every
 `_`-prefixed module) that reads and hashes each kept file in the same
-pass; change detection compares those hashes with one collect of the
+pass; change detection compares those hashes with the stored
 `file_state` table, which `file_state` rewrites from the same scan.
 """
 
@@ -18,8 +18,7 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pyarrow as pa
 
 DEFAULT_EXCLUDES = (".git", "__pycache__", "node_modules", ".venv", "venv", ".claude")
 LANGUAGE_BY_EXT = {
@@ -98,31 +97,31 @@ def scan_project(
 
 
 def diff_files(
-    files: list[dict], state: DataFrame | None
+    files: list[dict], state: pa.Table | None
 ) -> tuple[list[dict], list[str]]:
     """S2/U1: (added_or_changed rows, deleted relative paths) vs the
-    file_state table, read with one collect. A path is changed when it
-    is new or its hash differs; with no prior state everything is new
-    (full-index mode, indexer.py:374-393)."""
+    stored file_state table. A path is changed when it is new or its
+    hash differs; with no prior state everything is new (full-index
+    mode, indexer.py:374-393)."""
     if state is None:
         return files, []
-    old = {
-        r["relative_path"]: r["sha256"]
-        for r in state.select("relative_path", "sha256").toArrow().to_pylist()
-    }
+    old = dict(zip(state["relative_path"].to_pylist(), state["sha256"].to_pylist()))
     return (
         [f for f in files if old.get(f["relative_path"]) != f["sha256"]],
         sorted(set(old) - {f["relative_path"] for f in files}),
     )
 
 
-def file_state(spark: SparkSession, files: list[dict]) -> DataFrame:
+def file_state(files: list[dict]) -> pa.Table:
     """K4: the file_state table (relative_path, sha256, size, mtime) of
-    the scanned rows."""
-    return spark.createDataFrame(
-        [(f["relative_path"], f["sha256"], f["size"], f["mtime"]) for f in files],
-        "relative_path string, sha256 string, size long, mtime_s double",
-    ).select(
-        "relative_path", "sha256", "size",
-        F.timestamp_seconds(F.col("mtime_s")).alias("mtime"),
-    )
+    the scanned rows. ``mtime`` is Spark's ``timestamp_seconds`` of the
+    scanned epoch seconds: the double times 10^6, truncated toward zero
+    to whole microseconds."""
+    return pa.table({
+        "relative_path": pa.array([f["relative_path"] for f in files], pa.string()),
+        "sha256": pa.array([f["sha256"] for f in files], pa.string()),
+        "size": pa.array([f["size"] for f in files], pa.int64()),
+        "mtime": pa.array(
+            [int(f["mtime"] * 1_000_000) for f in files], pa.timestamp("us", tz="UTC")
+        ),
+    })

@@ -62,3 +62,32 @@ def test_hash_embedder_deterministic():
     # matches the driver-side embedding used for query vectors
     assert vecs[0].tolist() == embed_text("alpha", 16)
     assert abs(np.linalg.norm(vecs[0]) - 1.0) < 1e-5
+
+
+def test_strict_log_is_spark_log_on_every_idf_argument(spark):
+    """`strict_log` equals Spark's `log` bit for bit on every idf
+    argument (n - df + 0.5) / (df + 0.5) with 1 <= df <= n <= 620, the
+    192,510 pairs Spark evaluates in one collect. Python's math.log
+    differs from it on thousands of them."""
+    from pyspark.sql import functions as F
+
+    ns = spark.range(1, 621).withColumnRenamed("id", "n")
+    dfs = spark.range(1, 621).withColumnRenamed("id", "df")
+    want = (
+        ns.crossJoin(dfs)
+        .filter("df <= n")
+        .select(
+            "n", "df",
+            F.log((F.col("n").cast("double") - F.col("df") + 0.5) / (F.col("df") + 0.5))
+            .alias("x"),
+        )
+        .toArrow()
+    )
+    assert want.num_rows == 192_510
+    args = [
+        (float(n) - df + 0.5) / (df + 0.5)
+        for n, df in zip(want["n"].to_pylist(), want["df"].to_pylist())
+    ]
+    got = np.array([bm25.strict_log(a) for a in args])
+    assert np.array_equal(got.view(np.int64), want["x"].to_numpy().view(np.int64))
+    assert sum(math.log(a) != x for a, x in zip(args, want["x"].to_pylist())) > 1000

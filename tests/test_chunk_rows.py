@@ -21,6 +21,7 @@ from claude_code_memory_spark.plans.chunks import (
     NO_IMPL_TYPES,
     entity_metadata_chunks,
     implementation_chunks,
+    memory_chunk,
     relation_chunks,
 )
 
@@ -178,6 +179,23 @@ def _spark_relation(relations):
     )
 
 
+def _spark_memory(memories):
+    chunk_id = F.concat_ws(
+        "::", F.lit(""), F.col("entity_type"), F.col("entity_name"),
+        F.lit("metadata"), md5_8(F.col("content")),
+    )
+    return memories.select(
+        chunk_id.alias("chunk_id"), point_id(chunk_id).alias("point_id"),
+        "entity_name", "entity_type", F.lit("metadata").alias("chunk_type"), "content",
+        F.concat_ws(" ", "entity_name", "entity_name", "content").alias("content_bm25"),
+        content_hash(F.col("content")).alias("content_hash"),
+        F.lit(False).alias("has_implementation"),
+        F.lit(None).cast("string").alias("file_path"),
+        F.lit(None).cast("int").alias("line_number"),
+        F.lit(None).cast("int").alias("end_line_number"),
+    )
+
+
 def _spark_bm25_transform(model, docs):
     toks = docs.filter(F.col("content_bm25").isNotNull()).select(
         "point_id", F.explode(tokenize("content_bm25")).alias("term")
@@ -248,3 +266,17 @@ def test_bm25_encode_matches_spark_transform(spark):
     ).collect()
     got = bm25.encode(model, docs)
     assert {r["point_id"]: (r["sparse_indices"], r["sparse_values"]) for r in want} == got
+
+
+def test_memory_chunk_matches_spark(spark):
+    memories = [
+        ("deploy_ritual", "always run smoke tests before deploying", "documentation"),
+        ("Ünïcødé Nöte", "ΣΟΦΟΣ — zweite Zeile\n\ttabbed", "documentation"),
+        ("empty", "", "note"),
+        ("no_content", None, "documentation"),
+        ("no_type", "typeless", None),
+    ]
+    want = _spark_memory(
+        spark.createDataFrame(memories, "entity_name string, content string, entity_type string")
+    ).collect()
+    assert _multiset(memory_chunk(*m) for m in memories) == _multiset(want)

@@ -730,9 +730,9 @@ def _count_jobs(spark, group: str, fn):
 
 
 def test_index_job_budget_and_profile_adds_no_action(spark, tmp_path):
-    """index() runs Spark only for store I/O: a cold index and a
-    one-file edit re-index stay within a few jobs, and profile=True
-    times the same calls without an action of its own."""
+    """index() runs no Spark job: the store reads and writes go through
+    pyarrow, on a cold index and on a one-file edit re-index alike, and
+    profile=True times the same calls without an action of its own."""
     proj = tmp_path / "proj"
     proj.mkdir()
     for stem in "abc":
@@ -754,7 +754,21 @@ def test_index_job_budget_and_profile_adds_no_action(spark, tmp_path):
         assert c["files_changed"] == 1
     assert jobs[True, "cold"] == jobs[False, "cold"], jobs
     assert jobs[True, "edit"] == jobs[False, "edit"], jobs
-    # measured 14 and 21: the writes, the BM25 model's save and reload,
-    # and on the edit one collect per stored table the batch reads
-    assert jobs[False, "cold"] <= 16, jobs
-    assert jobs[False, "edit"] <= 24, jobs
+    assert jobs[False, "cold"] == 0, jobs
+    assert jobs[False, "edit"] == 0, jobs
+
+
+def test_add_memory_runs_no_spark_job(spark, tmp_path):
+    """A manual memory is built, embedded and appended in process, before
+    any index and after one."""
+    proj = tmp_path / "proj"
+    proj.mkdir()
+    (proj / "a.py").write_text("def f():\n    return 1\n")
+    eng = CodeMemoryEngine(spark, str(tmp_path / "store"))
+    _, before = _count_jobs(spark, "memory-empty", lambda: eng.add_memory("m0", "first note"))
+    eng.index(str(proj))
+    _, after = _count_jobs(spark, "memory-indexed", lambda: eng.add_memory("m1", "second note"))
+    assert (before, after) == (0, 0)
+    assert sorted(
+        n for n in eng.store.read_arrow("chunks")["entity_name"].to_pylist() if n.startswith("m")
+    ) == ["m0", "m1"]

@@ -1,9 +1,9 @@
 """Every package module is reachable by import from the engine's entry
 points, so no module survives only because its own tests import it.
 
-The module in KNOWN_ORPHANS predates this guard. Its tests still pin its
-behaviour, so it stays until it is deleted together with those tests;
-the list may only shrink.
+KNOWN_ORPHANS lists modules that predate this guard and stay until they
+are deleted together with their tests; it is empty now and may only
+shrink.
 
 Spark-free: walks the `ast` import graph (module-level and function-local
 imports alike) without importing anything.
@@ -17,9 +17,7 @@ from pathlib import Path
 PKG = "claude_code_memory_spark"
 ROOT = Path(__file__).resolve().parent.parent
 ENTRY_POINTS = (f"{PKG}.api", f"{PKG}.__main__", f"{PKG}.service", f"{PKG}.queries")
-KNOWN_ORPHANS = {
-    f"{PKG}.embeddings.provider",
-}
+KNOWN_ORPHANS: set[str] = set()
 
 
 def package_modules() -> dict[str, Path]:

@@ -68,13 +68,6 @@ def test_compaction_bounds_read_amplification(spark, store):
     assert _as_set(store.read("t")) == expected
 
 
-def test_time_travel_across_delta_commits(spark, store):
-    merge_replace_by_file(store, "t", _rows(spark, [("a", 1), ("b", 2)]), _files(spark, []))
-    merge_replace_by_file(store, "t", _rows(spark, [("a", 10)]), _files(spark, ["a"]))
-    assert _as_set(store.read_version("t", 0)) == {("a", 1), ("b", 2)}
-    assert _as_set(store.read_version("t", 1)) == {("a", 10), ("b", 2)}
-
-
 def test_vacuum_retains_tombstones_of_current(spark, store, tmp_path):
     merge_replace_by_file(store, "t", _rows(spark, [("a", 1)]), _files(spark, []))
     merge_replace_by_file(store, "t", _rows(spark, [("a", 2)]), _files(spark, ["a"]))

@@ -13,7 +13,6 @@ from claude_code_memory_spark.operators.dedup import (
 )
 from claude_code_memory_spark.operators.joins import (
     ModuleIndex,
-    dedup_new_content,
     missing_endpoint,
     phantom_call,
     replacement_diff,
@@ -105,15 +104,6 @@ def test_replacement_diff(spark):
     )
     got = {r["entity_name"]: r["status"] for r in replacement_diff(stored, parsed).collect()}
     assert got == {"a": "unchanged", "b": "changed", "gone": "deleted", "new": "added"}
-
-
-def test_dedup_new_content(spark):
-    chunks = spark.createDataFrame(
-        [("h1", "x"), ("h2", "y"), ("h3", "z")], "content_hash string, content string"
-    )
-    existing = spark.createDataFrame([("h2",)], "content_hash string")
-    kept = {r["content_hash"] for r in dedup_new_content(chunks, existing).collect()}
-    assert kept == {"h1", "h3"}
 
 
 def test_rrf_fusion_missing_contributes_zero(spark):

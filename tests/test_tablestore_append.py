@@ -149,6 +149,21 @@ def test_torn_uncommitted_snapshot_dir_is_invisible(spark, tmp_path):
     assert sorted(r.id for r in store.read("t").collect()) == list(range(4))
 
 
+def test_empty_table_reads_back_through_spark(spark, tmp_path):
+    """A table written with no rows, as `clear()` leaves each table, has
+    no part file and no partition dir; it reads back through Spark with
+    the pointer's columns in the pointer's order, as Spark's reader
+    gives them."""
+    store = TableStore(spark, str(tmp_path / "s"))
+    empty = spark.createDataFrame(
+        [], "file_path string, chunk_type string, mtime timestamp, dense array<float>"
+    )
+    store.write("t", empty, ["chunk_type"])
+    df = store.read("t")
+    assert df.count() == 0
+    assert df.columns == ["file_path", "chunk_type", "mtime", "dense"]
+
+
 def test_single_snapshot_pointer_backcompat(spark, tmp_path):
     import json
 
@@ -164,91 +179,56 @@ def test_single_snapshot_pointer_backcompat(spark, tmp_path):
     assert store.read("t").count() == 5
 
 
-def test_time_travel_read_version_and_history(spark, tmp_path):
-    """Delta-style time travel: every commit is a log version; read_version
-    reproduces the exact pre-append/pre-overwrite contents; vacuum
-    truncates reachability but keeps the audit log."""
-    from claude_code_memory_spark.plans.incremental import TableStore
+def test_spark_written_store_reads_back_unchanged(spark, tmp_path):
+    """A table whose snapshots and tombstone Spark's parquet writer wrote
+    (part files with `.crc` and `_SUCCESS` siblings, chunk_type hive
+    dirs: the layout earlier versions of the store wrote) reads through
+    `read_arrow` as Spark reads those files: the same columns, the
+    partition column last, and the same rows after the tombstone."""
+    import datetime
+    import json
+    from collections import Counter
 
-    store = TableStore(spark, str(tmp_path / "tt"))
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    store.write("t", df1)
-    store.append("t", spark.createDataFrame([(3, "c")], "id long, v string"))
-    store.write("t", spark.createDataFrame([(9, "z")], "id long, v string"))
+    from pyspark.sql import functions as F
 
-    hist = store.history("t")
-    assert [e["version"] for e in hist] == [0, 1, 2]
-    assert {r["id"] for r in store.read_version("t", 0).collect()} == {1, 2}
-    assert {r["id"] for r in store.read_version("t", 1).collect()} == {1, 2, 3}
-    assert {r["id"] for r in store.read_version("t", 2).collect()} == {9}
-    assert {r["id"] for r in store.read("t").collect()} == {9}
+    tdir = tmp_path / "s" / "t"
+    ddl = (
+        "file_path string, point_id long, chunk_type string, dense array<float>,"
+        " line_number int, mtime timestamp"
+    )
+    when = datetime.datetime(2026, 1, 2, 3, 4, 5, 678901)
+    snap0 = spark.createDataFrame(
+        [
+            ("a.py", 1, "metadata", [0.5, 1.0], 3, when),
+            ("b.py", 2, "relation", None, None, None),
+            (None, 3, "metadata", [], 7, when),
+        ],
+        ddl,
+    )
+    snap1 = spark.createDataFrame([("a.py", 4, "implementation", [2.0], 1, when)], ddl)
+    snap0.write.partitionBy("chunk_type").parquet(str(tdir / "snap-0"))
+    snap1.write.partitionBy("chunk_type").parquet(str(tdir / "snap-1"))
+    spark.createDataFrame([("a.py",)], "file_path string").write.parquet(str(tdir / "ts-1"))
+    (tdir / "_current").write_text(json.dumps({
+        "snapshots": ["snap-0", "snap-1"],
+        "schema": snap0.schema.json(),
+        "tombstones": [None, "ts-1"],
+    }))
+    names = {p.name for p in tdir.rglob("*")}
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
 
-    import pytest as _pytest
+    def spark_read(snap):
+        return spark.read.schema(snap0.schema).parquet(str(tdir / snap))
 
-    with _pytest.raises(ValueError, match="no version 7"):
-        store.read_version("t", 7)
-    store.vacuum()
-    with _pytest.raises(ValueError, match="vacuumed"):
-        store.read_version("t", 0)
-    assert len(store.history("t")) == 3  # audit log survives vacuum
-    assert {r["id"] for r in store.read_version("t", 2).collect()} == {9}
+    want = spark_read("snap-0").filter(
+        F.col("file_path").isNull() | (F.col("file_path") != "a.py")
+    ).unionByName(spark_read("snap-1"))
+    got = TableStore(spark, str(tmp_path / "s")).read_arrow("t")
+    assert got.column_names == want.columns
+    assert got.column_names[-1] == "chunk_type"
 
+    def multiset(rows):
+        return Counter(repr(tuple(r)) for r in rows)
 
-def test_vacuum_retention_window(spark, tmp_path):
-    """vacuum(retain_versions=N) keeps the last N commits time-travelable."""
-    from claude_code_memory_spark.plans.incremental import TableStore
-
-    store = TableStore(spark, str(tmp_path / "rv"))
-    for i in range(3):
-        store.write("t", spark.createDataFrame([(i,)], "id long"))
-    store.vacuum(retain_versions=2)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="vacuumed"):
-        store.read_version("t", 0)
-    assert store.read_version("t", 1).first()["id"] == 1
-    assert store.read_version("t", 2).first()["id"] == 2
-
-
-def test_diff_versions_cdc(spark, tmp_path):
-    """CDC between commits: added / removed / changed classified by one
-    null-safe full-outer join over time-travel reads."""
-    from claude_code_memory_spark.plans.incremental import TableStore, diff_versions
-
-    store = TableStore(spark, str(tmp_path / "cdc"))
-    store.write("t", spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", None)],
-        "id long, name string, score int"))
-    store.write("t", spark.createDataFrame(
-        [(1, "a", 10), (2, "B", 20), (4, "d", 40), (5, None, None)],
-        "id long, name string, score int"))
-
-    got = {r["id"]: r["change"]
-           for r in diff_versions(store, "t", 0, 1, ["id"]).collect()}
-    # id 1 unchanged (dropped); 2 changed; 3 removed; 4 and 5 added
-    assert got == {2: "changed", 3: "removed", 4: "added", 5: "added"}
-    row2 = {r["id"]: r for r in diff_versions(store, "t", 0, 1, ["id"]).collect()}[2]
-    assert row2["old"]["name"] == "b" and row2["new"]["name"] == "B"
-
-
-def test_delete_where_and_erasure(spark, tmp_path):
-    """Predicate delete commits a new version; the erased rows stay
-    time-travelable until vacuum (the Delta DELETE + VACUUM two-step)."""
-    from claude_code_memory_spark.plans.incremental import TableStore, delete_where
-
-    store = TableStore(spark, str(tmp_path / "gdpr"))
-    store.write("t", spark.createDataFrame(
-        [(1, "keep"), (2, "erase"), (3, "keep"), (4, "erase")],
-        "id long, status string"))
-    n = delete_where(store, "t", "status = 'erase'")
-    assert n == 2
-    assert {r["id"] for r in store.read("t").collect()} == {1, 3}
-    # pre-delete version still reachable (audit window) ...
-    assert store.read_version("t", 0).count() == 4
-    # ... until vacuum completes the erasure
-    store.vacuum()
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="vacuumed"):
-        store.read_version("t", 0)
-    assert {r["id"] for r in store.read("t").collect()} == {1, 3}
+    assert multiset(spark.createDataFrame(got).collect()) == multiset(want.collect())
+    assert got.num_rows == 3
