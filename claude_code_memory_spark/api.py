@@ -833,7 +833,8 @@ class CodeMemoryEngine:
         `mmr_rerank`). Returns (point_id, score) — hybrid: (point_id,
         dense_rank, sparse_rank, rrf_score) — in rank order, LEFT JOINed
         to the chunk payload (entity_name, chunk_type, file_path,
-        line_number, content). A warm call runs no Spark job.
+        line_number, content). A warm call runs no Spark job, and the
+        answer's `collect()` makes no JVM call (`serving.Result`).
 
         Semantic mode drops rounded scores below ``score_threshold``.
         Hybrid fuses the over-fetched dense and keyword lists by RRF with
@@ -851,7 +852,8 @@ class CodeMemoryEngine:
         snap = self._serving(
             ("vectors", "chunks"), sparse=mode != "semantic", ann=ann
         )
-        return self.spark.createDataFrame(
+        return serving.Result(
+            self.spark,
             serving.search(
                 snap,
                 query,
@@ -904,7 +906,8 @@ class CodeMemoryEngine:
             raise ValueError(f"invalid read_graph mode: {mode}")
         limit = limit if limit is not None else (150 if mode == "smart" else 300)
         snap = self._serving(("relations", "entities"))
-        return self.spark.createDataFrame(
+        return serving.Result(
+            self.spark,
             serving.read_graph(
                 snap["relations"],
                 snap["entities"],
@@ -925,7 +928,8 @@ class CodeMemoryEngine:
         if scope not in ("minimal", "logical", "dependencies"):
             raise ValueError(f"invalid scope: {scope}")
         snap = self._serving(("chunks", "relations"))
-        return self.spark.createDataFrame(
+        return serving.Result(
+            self.spark,
             serving.get_implementation(
                 snap["chunks"].impl, snap["relations"], entity_name, scope
             )

@@ -18,6 +18,11 @@ rebuilt index invalidates exactly the parts it touched, and the next
 request that needs one reloads it (`refresh`). Invalidation, incremental
 maintenance and torn-write self-heal stay with those sources.
 
+A request returns a `Result`: a Spark DataFrame whose ``collect()`` reads
+the answer's Arrow rows in the driver, so a search answered and collected
+makes no JVM call at all; any other DataFrame method builds the Spark plan
+first.
+
 Scores equal the Spark operators' (`operators/topk.py`,
 `operators/similarity.ivf_topk`) bit for bit: float64 sums folded left to
 right as `functions/vector.dot` folds them, Spark's ``round(x, 6)`` (HALF_UP
@@ -33,6 +38,9 @@ from decimal import ROUND_HALF_UP, Decimal
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.sql import Row
+from pyspark.sql.classic.dataframe import DataFrame as SparkFrame
+from pyspark.sql.types import _create_row
 
 from claude_code_memory_spark import schemas
 from claude_code_memory_spark.embeddings.bm25 import query_tf
@@ -93,6 +101,42 @@ def load_table(name: str, table: pa.Table | None):
     if name == "chunks":
         return Chunks(table)
     return table
+
+
+class Result(SparkFrame):
+    """A request's answer: a Spark DataFrame over an Arrow table held in
+    the driver. ``collect()`` builds the rows from the table; for the
+    column types an answer has (strings, integers, doubles, booleans,
+    lists of strings) those are the values Spark's collect returns. Every
+    other DataFrame method runs on ``spark.createDataFrame(table)``,
+    planned on its first use. A collected answer thus costs no JVM round
+    trip, whose latency would depend on how warm the JVM is."""
+
+    # SparkFrame.__new__ takes (jdf, session) and runs __init__ itself
+    def __new__(cls, spark, table: pa.Table):
+        return object.__new__(cls)
+
+    # state goes through __dict__: DataFrame.__getattr__ reads a missing
+    # attribute as a column, which would plan the frame
+    def __init__(self, spark, table: pa.Table):
+        self.__dict__["_table"] = table
+        super().__init__(None, spark)
+
+    @property
+    def _jdf(self):
+        if self.__dict__["_plan"] is None:
+            self.__dict__["_plan"] = self._session.createDataFrame(self._table)._jdf
+        return self.__dict__["_plan"]
+
+    @_jdf.setter
+    def _jdf(self, jdf) -> None:
+        self.__dict__["_plan"] = jdf
+
+    def collect(self) -> list[Row]:
+        # the Row constructor Spark's own collect uses
+        names = self._table.column_names
+        columns = (c.to_pylist() for c in self._table.columns)
+        return [_create_row(names, r) for r in zip(*columns)]
 
 
 def _bools(arr) -> np.ndarray:

@@ -3,7 +3,7 @@
 equal the Spark operators and expressions they replaced — exact scores,
 ties and row multiplicity — after a full index, after a pure append and
 after a tombstoned one-file edit re-index (a stale snapshot fails), and a
-warm request must run no Spark job."""
+warm request must run no Spark job; its collect() makes no JVM call."""
 
 from __future__ import annotations
 
@@ -312,6 +312,28 @@ def test_warm_requests_run_no_spark_job(eng):
     finally:
         sc.setJobGroup("serving-idle", "idle")
     assert sc.statusTracker().getJobIdsForGroup("serving-warm") == []
+
+
+def test_collect_reads_the_answer_without_a_plan(eng):
+    """A request's collect() builds its rows from the Arrow answer without
+    planning the DataFrame, and they equal Spark's collect of that plan:
+    values, Python types and field names."""
+    from pyspark.sql.classic.dataframe import DataFrame as SparkFrame
+
+    answers = [
+        eng.search(QUERY, mode="hybrid"),
+        eng.search(QUERY, mode="semantic", mmr=True),
+        eng.read_graph("helper", mode="entities"),
+        eng.read_graph("helper", mode="smart"),
+        eng.get_implementation("compute", scope="dependencies"),
+    ]
+    for res in answers:
+        rows = res.collect()
+        assert res.__dict__["_plan"] is None
+        want = SparkFrame.collect(res)
+        assert rows and rows == want
+        assert [(r.__fields__, [type(v) for v in r]) for r in rows] == [
+            (r.__fields__, [type(v) for v in r]) for r in want]
 
 
 def test_round6_equals_spark_round(spark):
