@@ -48,8 +48,7 @@ def main(argv: list[str] | None = None) -> int:
     p_search.add_argument("-k", type=int, default=10)
     p_search.add_argument("--threshold", type=float, default=0.0)
     p_search.add_argument("--ann", action="store_true",
-                          help="probe the materialized IVF index (unfiltered dense path)")
-    p_search.add_argument("--nprobe", type=int, default=4)
+                          help="approximate allowed; answered exactly")
 
     p_graph = sub.add_parser("graph")
     p_graph.add_argument("entity")
@@ -219,7 +218,7 @@ def main(argv: list[str] | None = None) -> int:
         eng.search(
             args.query, mode=args.mode, k=args.k,
             entity_types=types, score_threshold=args.threshold,
-            ann=args.ann, nprobe=args.nprobe,
+            ann=args.ann,
         ).show(args.k, truncate=60)
     elif args.cmd == "graph":
         eng.read_graph(args.entity, mode="bfs2" if args.bfs else "relationships",

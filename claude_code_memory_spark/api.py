@@ -441,372 +441,44 @@ class CodeMemoryEngine:
         return self._bm25
 
     def _sparse_postings(self) -> DataFrame | None:
-        """Materialized inverted index over the current vectors snapshot set
-        (T2 scale path): (term_index, point_id, weight) range-clustered by
-        term_index, so a keyword query's IN-list predicate prunes row
-        groups at the parquet scan and per-query IO is proportional to the
-        touched postings lists — Qdrant keeps a sparse index structure for
-        the same reason (storage/qdrant.py:228-239).
-
-        INCREMENTAL MAINTENANCE (same state-file discipline as
-        `_ann_index`): postings rows are a pure per-row function of the
-        vectors table, so a pure APPEND explodes only the new snapshots'
-        sparse vectors into an additional range-clustered delta dir —
-        O(new rows) — while any non-append change or the delta cap
-        triggers a full rebuild. Crash-safe: dirs are _SUCCESS-marked
-        before the state file is atomically replaced; unreferenced
-        `post-` dirs are GC'd on the next successful refresh."""
-        key = self.store.manifest_key("vectors")
-        if key is None:
-            return None
-        cached = getattr(self, "_postings_cache", None)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        import json as _json
-        import os
-        import shutil
-        import time as _time
-
-        from claude_code_memory_spark.io import write_clustered
+        """`build_postings` of the stored vectors, an unmaterialized Spark
+        plan. Its only caller is perfbench's traced search layers, and it
+        goes with them (ROADMAP item 2); no request reaches it — keyword
+        search scores the serving snapshot's postings (`serving.Postings`)."""
         from claude_code_memory_spark.operators.topk import build_postings
 
-        pdir = os.path.join(self.store.root, "postings")
-        os.makedirs(pdir, exist_ok=True)
-        spath = os.path.join(pdir, "state-postings.json")
-        state = None
-        if os.path.exists(spath):
-            with open(spath) as fh:
-                state = _json.load(fh)
-            for d in state["dirs"]:  # torn dir → serve nothing stale: rebuild
-                if not os.path.exists(os.path.join(pdir, d, "_SUCCESS")):
-                    state = None
-                    break
-
-        def _new_dir(tag: str) -> str:
-            self._post_counter = getattr(self, "_post_counter", 0) + 1
-            return f"post-{tag}-{int(_time.time() * 1000)}-{self._post_counter}"
-
-        def _commit_state(new_state: dict) -> None:
-            tmp = spath + ".tmp"
-            with open(tmp, "w") as fh:
-                _json.dump(new_state, fh)
-            os.replace(tmp, spath)
-            keep = set(new_state["dirs"])
-            for d in os.listdir(pdir):  # GC superseded post- dirs
-                if d.startswith("post-") and d not in keep:
-                    shutil.rmtree(os.path.join(pdir, d), ignore_errors=True)
-
-        covered = tuple(map(tuple, state["covered"])) if state else None
-        if state is not None and covered != key:
-            new_snaps = self.store.appended_snapshots(key, covered)
-            if new_snaps and len(state["dirs"]) < self.ANN_MAX_DELTA_DIRS:
-                delta = self.spark.read.parquet(
-                    *[os.path.join(self.store.root, "vectors", s) for s in new_snaps]
-                ).filter(F.col("sparse_indices").isNotNull())
-                dname = _new_dir("delta")
-                write_clustered(
-                    build_postings(delta, id_col="point_id"),
-                    os.path.join(pdir, dname),
-                    "term_index",
-                    num_files=2,  # delta-sized: a few lists, not the corpus
-                )
-                state = {"covered": list(key), "dirs": state["dirs"] + [dname]}
-                _commit_state(state)
-            else:
-                state = None  # non-append change or delta cap: rebuild
-
-        if state is None:
-            v = self.store.read("vectors").filter(
-                F.col("sparse_indices").isNotNull()
-            )
-            dname = _new_dir("full")
-            write_clustered(
-                build_postings(v, id_col="point_id"),
-                os.path.join(pdir, dname),
-                "term_index",
-                num_files=8,
-            )
-            state = {"covered": list(key), "dirs": [dname]}
-            _commit_state(state)
-
-        # one read per dir + union: the term IN-list filter distributes
-        # over the union, so each member scan still row-group-prunes
-        dfs = [
-            self.spark.read.parquet(os.path.join(pdir, d))
-            for d in state["dirs"]
-        ]
-        df = dfs[0]
-        for d2 in dfs[1:]:
-            df = df.unionByName(d2)
-        self._postings_cache = (key, df)
-        return df
-
-    # delta-dir cap: at this many append dirs the next refresh does a
-    # full retrain+rewrite instead (the OPTIMIZE/compaction move — fixed
-    # centroids drift as the corpus grows, and small dirs accumulate)
-    ANN_MAX_DELTA_DIRS = 8
-    # retired-N retention (advice r8): an ivf<N> whose state file hasn't
-    # been touched (written OR served — reads utime it) for this long is
-    # swept by the next sibling commit. Config changes stop leaking dirs
-    # while live multi-N serving stays protected.
-    ANN_STATE_RETENTION_SEC = 7 * 86400
-    # rolling-delta rebuild trigger (verdict r8 item 4): the single
-    # cumulative delta dir may grow to this fraction of the base before
-    # the next refresh re-trains and rewrites everything — past it the
-    # fixed centroids have drifted and the merged-delta write approaches
-    # rebuild cost anyway
-    ANN_DELTA_REBUILD_FRACTION = 0.25
+        vectors = self.store.read("vectors")
+        return None if vectors is None else build_postings(vectors, id_col="point_id")
 
     def _ann_index(self, n_centroids: int = 16):
-        """Materialized IVF serving index for the dense path — the
-        engine's analogue of the reference's HNSW-backed search
-        (storage/qdrant.py:827-886), built from the public IVF pieces:
-        vectors written `partitionBy(ivf_cluster)` (~2 files per cell)
-        under `<store>/annindex/` so a probe reads only the nprobe cell
-        directories (file-level pruning).
-
-        INCREMENTAL MAINTENANCE (the reference's incremental HNSW-upsert
-        analogue): the index state file records which vectors-manifest
-        snapshots it covers. A pure APPEND to the vectors table (the
-        manifest grew by suffix — add_memory, index_chat, streaming
-        batches) assigns ONLY the new snapshots' vectors against the
-        SAVED centroids and folds them, together with the previous
-        delta, into ONE rolling delta dir — the serving index is always
-        at most TWO dirs (base + delta), so probe file read-amp stays
-        ~1.5x vs freshly compacted instead of growing per append
-        (verdict r8 item 4: the 8-dir accumulation measured 4.68x).
-        Append cost is O(cumulative delta + new), bounded by
-        ANN_DELTA_REBUILD_FRACTION of the base; past that — or on any
-        non-append change (merge rewrite, compaction) — the refresh
-        re-trains and rewrites. Crash-safe: every dir is Spark-written
-        (_SUCCESS-marked) BEFORE the state file is atomically replaced;
-        a torn refresh leaves the old state serving the old dirs, and
-        unreferenced dirs are GC'd on the next successful refresh."""
-        key = self.store.manifest_key("vectors")
-        if key is None:
-            return None
-        cached = getattr(self, "_ann_cache", None)
-        if cached is not None and cached[0] == (key, n_centroids):
-            return cached[1], cached[2]
-        import json as _json
-        import os
-        import shutil
-        import time as _time
-
-        import numpy as np
-
+        """`ivf_build` over the stored vectors, unmaterialized; None below
+        ``n_centroids`` rows. Its only caller is perfbench's traced search
+        layers, and it goes with them (ROADMAP item 2); no request reaches
+        it — ``ann=True`` searches are answered by the exact dense scan."""
         from claude_code_memory_spark.operators.similarity import ivf_build
 
-        adir = os.path.join(self.store.root, "annindex")
-        os.makedirs(adir, exist_ok=True)
-        spath = os.path.join(adir, f"state-ivf{n_centroids}.json")
-        state = None
-        if os.path.exists(spath):
-            with open(spath) as fh:
-                state = _json.load(fh)
-            # a referenced dir without _SUCCESS (or missing) is torn:
-            # fall back to a full rebuild rather than serving holes
-            for d in state["dirs"]:
-                if not os.path.exists(os.path.join(adir, d, "_SUCCESS")):
-                    state = None
-                    break
-            if state is not None:
-                try:
-                    # liveness signal for the retired-N sweep: serving
-                    # reads keep a hot-but-unchanged index's state fresh
-                    os.utime(spath)
-                except OSError:
-                    pass
-
-        def _new_dir(tag: str) -> str:
-            self._ann_counter = getattr(self, "_ann_counter", 0) + 1
-            return f"ivf{n_centroids}-{tag}-{int(_time.time() * 1000)}-{self._ann_counter}"
-
-        def _write_partitioned(df, dirname: str, files_per_cell: int = 2) -> None:
-            # ~2 files per cell dir for the BASE: a bare partitionBy
-            # write leaves one file per (upstream partition x cell) —
-            # hundreds of tiny files whose task-scheduling cost exceeds
-            # the pruning win (measured: the naive layout LOST to the
-            # brute scan); one file per cell
-            # serializes each probed cell into a single task. Two
-            # balances both. The rolling DELTA writes 1 file per cell
-            # (it is a fraction of the base by construction).
-            df.withColumn(
-                "__b", F.pmod(F.hash("point_id"), F.lit(files_per_cell))
-            ).repartition("ivf_cluster", "__b").drop("__b").write.partitionBy(
-                "ivf_cluster"
-            ).mode("overwrite").parquet(os.path.join(adir, dirname))
-
-        def _commit_state(new_state: dict) -> None:
-            tmp = spath + ".tmp"
-            with open(tmp, "w") as fh:
-                _json.dump(new_state, fh)
-            os.replace(tmp, spath)
-            keep = set(new_state["dirs"]) | {os.path.basename(spath)}
-            # GC is scoped to THIS index's artifacts (the ivf<N>- dir
-            # prefix and its own state file): two indexes with different
-            # n_centroids share `annindex/`, and an unscoped sweep would
-            # delete the sibling's state + dirs on every commit (advice
-            # r7 — rebuild thrash)
-            mine = f"ivf{n_centroids}-"
-            # RETIRED-N sweep (advice r8): a config change (say 32 -> 16
-            # centroids) would otherwise strand the old N's dirs + state
-            # forever. An N is live while its state file exists and was
-            # touched within the retention window (serving reads utime
-            # it); stale or stateless prefixes are swept wholesale. The
-            # per-N scoping above still protects live siblings.
-            import re as _re
-
-            now = _time.time()
-            live_ns = {str(n_centroids)}
-            for f2 in os.listdir(adir):
-                m2 = _re.fullmatch(r"state-ivf(\d+)\.json", f2)
-                if not m2:
-                    continue
-                try:
-                    fresh = now - os.path.getmtime(os.path.join(adir, f2)) < (
-                        self.ANN_STATE_RETENTION_SEC
-                    )
-                except OSError:
-                    fresh = False
-                if fresh:
-                    live_ns.add(m2.group(1))
-            for d in os.listdir(adir):
-                if d in keep or d.endswith(".tmp"):
-                    continue
-                m2 = _re.match(r"(?:state-)?ivf(\d+)[-.]", d)
-                owner = m2.group(1) if m2 else None
-                superseded_mine = d.startswith(mine)
-                retired = owner is not None and owner not in live_ns
-                if not (superseded_mine or retired):
-                    continue
-                p2 = os.path.join(adir, d)
-                if os.path.isdir(p2):
-                    shutil.rmtree(p2, ignore_errors=True)
-                else:
-                    os.remove(p2)
-
-        covered = tuple(map(tuple, state["covered"])) if state else None
-        if state is not None and covered != key:
-            new_snaps = self.store.appended_snapshots(key, covered)
-            if new_snaps and "base_rows" in state:  # legacy pre-r9 states rebuild
-                delta = self.spark.read.parquet(
-                    *[os.path.join(self.store.root, "vectors", s) for s in new_snaps]
-                ).select("point_id", "dense")
-                n_new = delta.count()
-                delta_rows = state.get("delta_rows", 0) + n_new
-                if delta_rows > self.ANN_DELTA_REBUILD_FRACTION * max(
-                    state["base_rows"], 1
-                ):
-                    state = None  # delta outgrew the base: retrain+rewrite
-            else:
-                state = None  # non-append change (merge/compaction): rebuild
-            if state is not None:
-                centers_df = self.spark.createDataFrame(
-                    [
-                        (int(i), [float(x) for x in c])
-                        for i, c in enumerate(state["centers"])
-                    ],
-                    "ivf_cluster int, __cvec array<double>",
-                )
-                from claude_code_memory_spark.operators.clustering import (
-                    assign_clusters,
-                )
-
-                assigned = assign_clusters(
-                    delta,
-                    centers_df,
-                    id_col="point_id",
-                    vec_col="dense",
-                    cluster_col="ivf_cluster",
-                )
-                # ROLLING delta (verdict r8 item 4): fold the existing
-                # delta dir into the new one so the serving index is at
-                # most TWO dirs (base + one delta) — a probe's file
-                # read-amplification stays <= ~1.5x vs freshly compacted
-                # (base 2 files/cell + delta 1 file/cell) instead of the
-                # 4.68x the 8-dir accumulation measured in BENCH_r08.
-                # Append cost is O(cumulative delta + new), bounded by
-                # ANN_DELTA_REBUILD_FRACTION of the base; past that the
-                # rebuild re-trains anyway (centroid drift).
-                if len(state["dirs"]) > 1:
-                    prior = self.spark.read.parquet(
-                        os.path.join(adir, state["dirs"][1])
-                    ).select(*assigned.columns)
-                    assigned = assigned.unionByName(prior)
-                dname = _new_dir("delta")
-                _write_partitioned(assigned, dname, files_per_cell=1)
-                state = {
-                    "covered": list(key),
-                    "dirs": [state["dirs"][0], dname],
-                    "centers": state["centers"],
-                    "base_rows": state["base_rows"],
-                    "delta_rows": delta_rows,
-                }
-                _commit_state(state)
-
-        if state is None:
-            v = self.store.read("vectors").select("point_id", "dense")
-            n_vec = v.count()
-            if n_vec < n_centroids:
-                return None  # corpus smaller than the cell count: brute wins
-            assigned, centers = ivf_build(v, n_centroids, vec_col="dense")
-            dname = _new_dir("full")
-            _write_partitioned(assigned, dname)
-            state = {
-                "covered": list(key),
-                "dirs": [dname],
-                "centers": [[float(x) for x in c] for c in centers],
-                "base_rows": n_vec,
-                "delta_rows": 0,
-            }
-            _commit_state(state)
-
-        centers = np.array(state["centers"])
-        # one read per dir + union (multi-root partition discovery rejects
-        # sibling roots): the ivf_cluster probe filter distributes over the
-        # union, so every member scan still prunes its cell directories
-        dfs = [
-            self.spark.read.parquet(os.path.join(adir, d))
-            for d in state["dirs"]
-        ]
-        df = dfs[0]
-        for d2 in dfs[1:]:
-            df = df.unionByName(d2)
-        self._ann_cache = ((key, n_centroids), df, centers)
-        return df, centers
+        rows = self.store.read_arrow("vectors")
+        if rows is None or rows.num_rows < n_centroids:
+            return None
+        vectors = self.spark.createDataFrame(rows.select(["point_id", "dense"]))
+        return ivf_build(vectors, n_centroids, vec_col="dense")
 
     # -- serving (search / read_graph / get_implementation) ---------------
 
-    def _serving(
-        self, tables: tuple[str, ...], *, sparse: bool = False, ann: bool = False
-    ) -> serving.Snapshot:
-        """The serving snapshot with ``tables`` (and the BM25 / IVF parts
+    def _serving(self, tables: tuple[str, ...], *, vocab: bool = False) -> serving.Snapshot:
+        """The serving snapshot with ``tables`` (and the BM25 vocabulary
         when asked) loaded from their current sources. A part whose source
-        changed since it was loaded — a write, an append, a rebuilt
-        postings or IVF index — is reloaded; the new snapshot replaces the
-        old one in a single assignment."""
+        changed since it was loaded — a write, an append, a refit model —
+        is reloaded; the new snapshot replaces the old one in a single
+        assignment."""
         store = self.store
         need = {
             t: (store.manifest_key(t), lambda t=t: serving.load_table(t, store.read_arrow(t)))
             for t in tables
         }
-        if sparse:
-            model, postings = (
-                (self.bm25_model(), self._sparse_postings())
-                if store.exists("chunks")
-                else (None, None)
-            )
-            need["sparse"] = (
-                (model, postings),
-                lambda: serving.Sparse(model, postings),
-            )
-        if ann:
-            idx = self._ann_index()
-            need["ivf"] = (
-                idx[0] if idx is not None else None,
-                lambda: serving.Ivf(*idx) if idx is not None else None,
-            )
+        if vocab:
+            model = self.bm25_model() if store.exists("chunks") else None
+            need["vocab"] = (model, lambda: {} if model is None else model.terms)
         self._snapshot = serving.refresh(self._snapshot, need)
         return self._snapshot
 
@@ -824,13 +496,11 @@ class CodeMemoryEngine:
         mmr_lambda: float = 0.5,
         mmr_fetch: int = 50,
         ann: bool = False,
-        nprobe: int = 4,
     ) -> DataFrame:
         """T1-T4: semantic / keyword / hybrid top-k with payload filters,
         scored in-process over the serving snapshot (`serving.py`) with
         the scores, ties and row multiplicity of the Spark operators
-        (`dense_topk`, `sparse_topk`, `rrf_fuse`, `ivf_topk`,
-        `mmr_rerank`). Returns (point_id, score) — hybrid: (point_id,
+        (`dense_topk`, `sparse_topk`, `rrf_fuse`, `mmr_rerank`). Returns (point_id, score) — hybrid: (point_id,
         dense_rank, sparse_rank, rrf_score) — in rank order, LEFT JOINed
         to the chunk payload (entity_name, chunk_type, file_path,
         line_number, content). A warm call runs no Spark job, and the
@@ -838,20 +508,16 @@ class CodeMemoryEngine:
 
         Semantic mode drops rounded scores below ``score_threshold``.
         Hybrid fuses the over-fetched dense and keyword lists by RRF with
-        weight ``alpha`` on the dense side. ``ann=True`` on an unfiltered
-        search restricts the dense side to the ``nprobe`` IVF cells
-        nearest the query (`_ann_index`); payload-filtered searches score
-        every row that passes the filters. ``mmr=True`` (semantic mode
+        weight ``alpha`` on the dense side. ``ann=True`` means an
+        approximate answer is allowed; it is answered exactly, by the same
+        dense scan as ``ann=False``. ``mmr=True`` (semantic mode
         only) over-fetches ``mmr_fetch`` candidates and greedily
         diversity-reranks them (MMR, ``mmr_lambda`` trades relevance vs
         novelty); the result carries an extra ``mmr_rank`` column in
         selection order."""
         if mode not in ("semantic", "keyword", "hybrid"):
             raise ValueError(f"invalid search mode: {mode}")  # qdrant.py:722-801
-        ann = bool(ann and not entity_types and not chunk_type)
-        snap = self._serving(
-            ("vectors", "chunks"), sparse=mode != "semantic", ann=ann
-        )
+        snap = self._serving(("vectors", "chunks"), vocab=mode != "semantic")
         return serving.Result(
             self.spark,
             serving.search(
@@ -867,8 +533,6 @@ class CodeMemoryEngine:
                 mmr=mmr and mode == "semantic",
                 mmr_lambda=mmr_lambda,
                 mmr_fetch=mmr_fetch,
-                ivf=snap["ivf"] if ann else None,
-                nprobe=nprobe,
             )
         )
 

@@ -370,9 +370,9 @@ class TableStore:
 
     def manifest_key(self, table: str) -> tuple | None:
         """Stable identifier of a table's current snapshot set — changes on
-        every write/append, so derived artifacts (e.g. the materialized
-        BM25 postings index) can cache-key on it and invalidate exactly
-        when the base table changes. One (snapshot, tombstone) pair per
+        every write/append, so derived state (the serving snapshot's parts)
+        can cache-key on it and invalidate exactly when the base table
+        changes. One (snapshot, tombstone) pair per
         snapshot; the tombstone is None unless that snapshot's commit
         was a `merge_delta`."""
         meta = self._manifest(table)
@@ -380,18 +380,6 @@ class TableStore:
             return None
         snaps = meta["snapshots"]
         return tuple(zip(snaps, meta.get("tombstones") or [None] * len(snaps)))
-
-    @staticmethod
-    def appended_snapshots(key: tuple, covered: tuple) -> list[str] | None:
-        """Snapshot dirs committed between two `manifest_key`s when every
-        commit in between was a pure append: ``covered`` is a prefix of
-        ``key`` and no new snapshot carries a tombstone (a tombstone
-        deletes rows of earlier snapshots). None when ``key`` is not such
-        an extension — the caller must rebuild from the whole table."""
-        new = key[len(covered):]
-        if not new or key[: len(covered)] != covered or any(ts for _, ts in new):
-            return None
-        return [snap for snap, _ in new]
 
     def vacuum(self) -> None:
         """Delete the snapshot and tombstone dirs no current pointer

@@ -86,49 +86,3 @@ def graph_pagerank_nations(spark, sf_dir):
     return pr.join(F.broadcast(nation), pr["node"] == nation["n_nationkey"]).select(
         "n_name", F.round("pr", 6).alias("pagerank")
     )
-
-
-@register(
-    "graph_triangle_counts",
-    oracle="""
-    WITH base AS (SELECT DISTINCT l_orderkey AS g, l_partkey AS i FROM lineitem),
-    keep AS (SELECT g FROM base GROUP BY g HAVING count(*) <= 10),
-    b2 AS (SELECT base.g, base.i FROM base JOIN keep USING (g)),
-    edges AS (
-      SELECT DISTINCT a.i AS a, b.i AS b
-      FROM b2 a JOIN b2 b ON a.g = b.g AND a.i < b.i),
-    tris AS (
-      SELECT e1.a AS x, e1.b AS y, e2.b AS z
-      FROM edges e1
-      JOIN edges e2 ON e1.b = e2.a
-      JOIN edges e3 ON e3.a = e1.a AND e3.b = e2.b),
-    nodes AS (SELECT unnest([x, y, z]) AS node FROM tris)
-    SELECT node AS part_id, count(*) AS n_triangles
-    FROM nodes GROUP BY node
-    ORDER BY n_triangles DESC, part_id ASC LIMIT 10
-    """,
-)
-def graph_triangle_counts(spark, sf_dir):
-    """Top-10 parts by triangle participation in the co-ordered-parts
-    graph (parts are adjacent when one order contains both). Ordered-edge
-    ("node-iterator++") enumeration: each undirected edge kept once as
-    a < b, each triangle counted once as a < b < c — two equi-joins of
-    the edge list, no N x N anywhere; group sizes are capped before the
-    pairwise projection so a pathological mega-order cannot explode
-    quadratically. Aggregate-analytics counterpart of the reference's
-    relation-graph traversal surface (read_graph, storage/qdrant.py)."""
-    from claude_code_memory_spark.operators.triangles import (
-        co_occurrence_edges,
-        triangle_counts,
-    )
-
-    li = table(spark, sf_dir, "lineitem")
-    edges = co_occurrence_edges(
-        li, group_col="l_orderkey", item_col="l_partkey", max_group_size=10
-    )
-    return (
-        triangle_counts(edges)
-        .select(F.col("node").alias("part_id"), "n_triangles")
-        .orderBy(F.desc("n_triangles"), F.asc("part_id"))
-        .limit(10)
-    )

@@ -10,23 +10,22 @@ resident index (storage/qdrant.py), and *Incremental Based Framework for
 Efficient Top-K Similarity Search in Interactive Data Analysis Sessions*
 (EDBT 2020) reuses session state across top-k queries the same way.
 
-A `Snapshot` is immutable: part name -> (source, value). Each part is
-keyed on what its source returns — a table on `TableStore.manifest_key`,
-the sparse part on the BM25 model and the postings DataFrame, the IVF
-cells on the DataFrame `_ann_index()` returns — so a write, an append or a
-rebuilt index invalidates exactly the parts it touched, and the next
-request that needs one reloads it (`refresh`). Invalidation, incremental
-maintenance and torn-write self-heal stay with those sources.
+A `Snapshot` is immutable: part name -> (source, value). A table is keyed
+on `TableStore.manifest_key` and the BM25 vocabulary on the model, so a
+write, an append or a refit invalidates exactly the parts it touched, and
+the next request that needs one reloads it (`refresh`). The keyword
+postings are a per-row function of `vectors` and are built with it: no
+index lives beside the table store.
 
 A request returns a `Result`: a Spark DataFrame whose ``collect()`` reads
 the answer's Arrow rows in the driver, so a search answered and collected
 makes no JVM call at all; any other DataFrame method builds the Spark plan
 first.
 
-Scores equal the Spark operators' (`operators/topk.py`,
-`operators/similarity.ivf_topk`) bit for bit: float64 sums folded left to
-right as `functions/vector.dot` folds them, Spark's ``round(x, 6)`` (HALF_UP
-on the double's shortest decimal form), ties broken on point_id ascending.
+Scores equal the Spark operators' (`operators/topk.py`) bit for bit:
+float64 sums folded left to right as `functions/vector.dot` folds them,
+Spark's ``round(x, 6)`` (HALF_UP on the double's shortest decimal form),
+ties broken on point_id ascending.
 """
 
 from __future__ import annotations
@@ -145,9 +144,9 @@ def _bools(arr) -> np.ndarray:
 
 
 class Vectors:
-    """Point ids, filter columns and the dense matrix, one column per
-    point (``cols[d]`` is dimension d of every point, so a dot product
-    folds over the dimensions in order)."""
+    """Point ids, filter columns, the dense matrix, one column per point
+    (``cols[d]`` is dimension d of every point, so a dot product folds
+    over the dimensions in order), and the keyword postings."""
 
     def __init__(self, table: pa.Table):
         self.ids = table["point_id"].to_numpy()
@@ -162,6 +161,7 @@ class Vectors:
         for c in self.cols:
             sq += c * c
         self.norms = np.sqrt(sq)
+        self.postings = Postings(table)
 
     def mask(self, entity_types, chunk_type) -> np.ndarray | None:
         """Rows passing the payload filters; None when there are none."""
@@ -219,34 +219,30 @@ class Chunks:
         )
 
 
-class Sparse:
-    """BM25 vocabulary (term -> term_index, idf) and the postings lists as
-    CSR over term_index, from the model and the postings DataFrame (None
-    when the collection has none)."""
+class Postings:
+    """The rows `operators/topk.build_postings` explodes from the vectors
+    table — (term_index, point_id, weight) of every row with sparse
+    indices, a point held by two rows posting both — as CSR over
+    term_index."""
 
-    def __init__(self, model, postings):
-        self.vocab = {} if model is None else model.terms
-        if postings is None:
-            p = pa.table(
-                {"term_index": pa.array([], pa.int32()), "point_id": pa.array([], pa.int64()),
-                 "weight": pa.array([], pa.float32())}
-            )
-        else:
-            p = postings.toArrow()
-        terms = p["term_index"].to_numpy()
+    def __init__(self, table: pa.Table):
+        indices = table["sparse_indices"].combine_chunks()
+        per = pc.fill_null(pc.list_value_length(indices), 0).to_numpy()
+        terms = indices.flatten().to_numpy()
         order = np.argsort(terms, kind="stable")
         self.terms = terms[order]
-        self.ids, self.doc = np.unique(p["point_id"].to_numpy()[order], return_inverse=True)
-        self.weights = p["weight"].to_numpy()[order].astype(np.float64)
+        ids = np.repeat(table["point_id"].to_numpy(), per)[order]
+        self.ids, self.doc = np.unique(ids, return_inverse=True)
+        weights = table["sparse_values"].combine_chunks().flatten().to_numpy()
+        self.weights = weights[order].astype(np.float64)
 
-    def score(self, query: str) -> tuple[np.ndarray, np.ndarray]:
+    def score(self, vocab: dict, query: str) -> tuple[np.ndarray, np.ndarray]:
         """(point ids, scores) of the points with a posting for a query
         term: sum of weight * idf * qtf over the query's terms in
-        term_index order — the per-point fold of `sparse_topk`."""
+        term_index order — the per-point fold of `sparse_topk`. ``vocab``
+        is the BM25 model's term -> (term_index, idf)."""
         weighted = sorted(
-            (self.vocab[t][0], self.vocab[t][1] * qtf)
-            for t, qtf in query_tf(query).items()
-            if t in self.vocab
+            (vocab[t][0], vocab[t][1] * qtf) for t, qtf in query_tf(query).items() if t in vocab
         )
         scores = np.zeros(len(self.ids))
         hit = np.zeros(len(self.ids), dtype=bool)
@@ -257,24 +253,6 @@ class Sparse:
             hit[docs] = True
         found = np.flatnonzero(hit)
         return self.ids[found], scores[found]
-
-
-class Ivf:
-    """IVF cell of every indexed point and the centroids, from what
-    `_ann_index()` returns."""
-
-    def __init__(self, indexed, centers: np.ndarray):
-        t = indexed.select("point_id", "ivf_cluster").toArrow()
-        self.ids = t["point_id"].to_numpy()
-        self.cells = t["ivf_cluster"].to_numpy()
-        self.centers = centers
-
-    def rows(self, ids: np.ndarray, q: list[float], nprobe: int) -> np.ndarray:
-        """Rows of ``ids`` in the ``nprobe`` cells nearest the query by L2
-        — the probe of `ivf_topk`."""
-        dists = np.linalg.norm(self.centers - np.asarray(q, dtype=np.float64), axis=1)
-        probe = np.argsort(dists)[:nprobe]
-        return np.flatnonzero(np.isin(ids, self.ids[np.isin(self.cells, probe)]))
 
 
 _MICRO = Decimal("0.000001")
@@ -366,23 +344,17 @@ def search(
     mmr: bool,
     mmr_lambda: float,
     mmr_fetch: int,
-    ivf: Ivf | None,
-    nprobe: int,
 ) -> pa.Table:
-    """One search over the snapshot; the payload columns attached.
-    ``ivf`` restricts the dense side to the ``nprobe`` probed cells (the
-    engine passes it for unfiltered ``ann=True`` searches only); otherwise
-    the dense side scans every row that passes the filters."""
+    """One search over the snapshot; the payload columns attached. The
+    dense side scans every row that passes the filters; the keyword side
+    scores the postings with the snapshot's ``vocab`` part."""
     vec = snap["vectors"]
     keep = vec.mask(entity_types, chunk_type)
     rows = None if keep is None else np.flatnonzero(keep)
     # hybrid ranks unthresholded lists; semantic filters rounded scores
-    # (dense_topk keeps score >= threshold, so the default 0.0 drops
-    # negative cosines, while the IVF probe applies only a non-zero one)
+    # (dense_topk keeps score >= threshold: the default 0.0 drops
+    # negative cosines)
     threshold = None if mode == "hybrid" else score_threshold
-    if ivf is not None:
-        rows = ivf.rows(vec.ids, qvec, nprobe)
-        threshold = threshold or None
 
     def dense(limit: int) -> tuple[np.ndarray, np.ndarray]:
         ids = vec.ids if rows is None else vec.ids[rows]
@@ -390,7 +362,7 @@ def search(
         return (pos if rows is None else rows[pos]), score
 
     def sparse(limit: int) -> tuple[np.ndarray, np.ndarray]:
-        ids, raw = snap["sparse"].score(query)
+        ids, raw = vec.postings.score(snap["vocab"], query)
         if keep is not None:
             inside = np.isin(ids, vec.ids[keep])
             ids, raw = ids[inside], raw[inside]

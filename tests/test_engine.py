@@ -38,10 +38,10 @@ def test_index_and_search(spark, temp_repo, tmp_path):
 
 def test_search_after_incremental_edit_matches_explode_path(spark, temp_repo, tmp_path):
     """A one-file edit re-index commits tombstoned delta snapshots to
-    `vectors`. The postings and IVF indexes built before it must not
-    read a tombstone as a snapshot: unfiltered keyword and hybrid
-    searches afterwards equal the explode/brute path over the merged
-    table, and an ANN search still serves."""
+    `vectors`. The serving snapshot loaded before it must not read a
+    tombstone as a snapshot: unfiltered keyword and hybrid searches
+    afterwards equal the explode/brute path over the merged table, and an
+    ANN search still serves."""
     from claude_code_memory_spark.embeddings import bm25 as bm25_mod
     from claude_code_memory_spark.embeddings.hash_embedder import embed_text
     from claude_code_memory_spark.operators.topk import (
@@ -54,8 +54,8 @@ def test_search_after_incremental_edit_matches_explode_path(spark, temp_repo, tm
     eng = CodeMemoryEngine(spark, str(tmp_path / "store"))
     eng.index(temp_repo)
     query, k = "helper compute numbers", 50
-    eng.search(query, mode="keyword", k=k).collect()  # builds the postings index
-    eng.search(query, mode="semantic", k=k, ann=True).collect()  # and the IVF one
+    eng.search(query, mode="keyword", k=k).collect()  # loads the snapshot
+    eng.search(query, mode="semantic", k=k, ann=True).collect()
     with open(os.path.join(temp_repo, "main.py"), "a") as fh:
         fh.write("\n\ndef helper_again(numbers):\n    return helper(numbers, 2)\n")
     assert eng.index(temp_repo)["files_changed"] == 1
@@ -409,82 +409,6 @@ def test_index_chat_summarizer_outage_does_not_poison_content(spark, tmp_path):
     # stub-content hash differs from the summarized-content hash
     r2 = eng.index_chat(str(p), summarizer_transport=fake_transport)
     assert r2["chunks_new"] == 1
-
-
-@pytest.mark.slow
-def test_keyword_search_uses_postings_and_matches_explode_path(spark, tmp_path, temp_repo):
-    """T2 scale path: unfiltered keyword search runs over the materialized
-    term-clustered postings index; results must be identical to the
-    explode-per-query fallback, and the index must re-materialize when the
-    vectors table changes."""
-    eng = CodeMemoryEngine(spark, str(tmp_path / "pstore"))
-    eng.index(temp_repo)
-
-    hits = eng.search("compute helper", mode="keyword", k=5).collect()
-    assert hits
-    key1 = eng._postings_cache[0]
-    postings_dir = tmp_path / "pstore" / "postings"
-    assert postings_dir.exists() and any(postings_dir.iterdir())
-
-    # filtered search takes the explode path over the same terms — same rows
-    filtered = eng.search(
-        "compute helper", mode="keyword", k=5, chunk_type="metadata"
-    ).collect()
-    kw_meta = [(r["point_id"], r["score"]) for r in hits if r["chunk_type"] == "metadata"]
-    assert [(r["point_id"], r["score"]) for r in filtered][: len(kw_meta)] == kw_meta
-
-    # appending vectors invalidates the cache key and refreshes the index
-    # INCREMENTALLY: the state gains a delta dir (new rows exploded
-    # against the saved layout), no full rebuild
-    import json
-
-    eng.add_memory("new-note", "a brand new memory about compute")
-    after = eng.search("compute helper", mode="keyword", k=5).collect()
-    assert eng._postings_cache[0] != key1
-    state = json.loads((postings_dir / "state-postings.json").read_text())
-    assert len(state["dirs"]) == 2
-    assert any(d.startswith("post-delta-") for d in state["dirs"])
-    # the appended memory is findable through the delta — query with an
-    # in-vocabulary term ("compute" was in the fitted corpus; the cached
-    # BM25 model cannot weight words it has never seen)
-    assert "new-note" in {
-        r["entity_name"]
-        for r in eng.search("compute", mode="keyword", k=20).collect()
-    }
-    assert after  # and the original terms still hit
-
-
-@pytest.mark.slow
-def test_postings_torn_write_self_heals(spark, tmp_path, temp_repo):
-    """A postings dir without Spark's _SUCCESS marker (interrupted
-    write_clustered) must be discarded and rebuilt, not silently served —
-    a torn index would drop postings and return wrong keyword results."""
-    eng = CodeMemoryEngine(spark, str(tmp_path / "tstore"))
-    eng.index(temp_repo)
-    good = eng.search("compute helper", mode="keyword", k=5).collect()
-    assert good
-
-    postings_dir = tmp_path / "tstore" / "postings"
-    built = [p for p in postings_dir.iterdir() if p.is_dir()]
-    assert built
-    # simulate the interruption: remove the success marker AND a data file
-    for sub in built:
-        (sub / "_SUCCESS").unlink()
-        parts = sorted(sub.glob("part-*"))
-        assert parts
-        parts[0].unlink()
-    eng._postings_cache = None  # fresh process: only the dir on disk remains
-
-    healed = eng.search("compute helper", mode="keyword", k=5).collect()
-    assert [(r["point_id"], round(r["score"], 6)) for r in healed] == [
-        (r["point_id"], round(r["score"], 6)) for r in good
-    ]
-    # and the rebuilt dir is complete again
-    assert any(
-        (sub / "_SUCCESS").exists()
-        for sub in postings_dir.iterdir()
-        if sub.is_dir()
-    )
 
 
 @pytest.mark.slow

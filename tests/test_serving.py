@@ -3,13 +3,15 @@
 equal the Spark operators and expressions they replaced — exact scores,
 ties and row multiplicity — after a full index, after a pure append and
 after a tombstoned one-file edit re-index (a stale snapshot fails), and a
-warm request must run no Spark job; its collect() makes no JVM call."""
+request — warm, or the first after a write — must run no Spark job; its
+collect() makes no JVM call."""
 
 from __future__ import annotations
 
 import textwrap
 from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,7 +19,6 @@ from pyspark.sql import functions as F
 from claude_code_memory_spark.api import CodeMemoryEngine
 from claude_code_memory_spark.embeddings import bm25 as bm25_mod
 from claude_code_memory_spark.embeddings.hash_embedder import embed_text
-from claude_code_memory_spark.operators.similarity import ivf_topk
 from claude_code_memory_spark.operators.topk import (
     dense_topk,
     mmr_rerank,
@@ -94,7 +95,7 @@ def eng(spark, project, tmp_path_factory):
 
 def spark_search(eng, query, *, mode, entity_types=None, chunk_type=None, ann=False,
                  mmr=False, k=K, score_threshold=0.0, alpha=0.5, mmr_lambda=0.5,
-                 mmr_fetch=50, nprobe=4):
+                 mmr_fetch=50):
     vectors = eng.store.read("vectors")
     if entity_types:
         vectors = vectors.filter(F.col("entity_type").isin(entity_types))
@@ -103,15 +104,7 @@ def spark_search(eng, query, *, mode, entity_types=None, chunk_type=None, ann=Fa
     fetch = overfetch_limit(k) if mode == "hybrid" else k
     qvec = embed_text(query, eng.dim)
 
-    def dense(limit):
-        if ann and not entity_types and not chunk_type:
-            idx = eng._ann_index()
-            if idx is not None:
-                r = ivf_topk(idx[0], idx[1], qvec, limit, nprobe=nprobe,
-                             id_col="point_id", vec_col="dense")
-                if mode != "hybrid" and score_threshold:
-                    r = r.filter(F.col("score") >= score_threshold)
-                return r
+    def dense(limit):  # ann=True is answered exactly: the same scan
         return dense_topk(vectors, qvec, limit, id_col="point_id", vec_col="dense",
                           score_threshold=score_threshold if mode != "hybrid" else None)
 
@@ -202,20 +195,17 @@ def _types(df):
 
 def _search_cases():
     """Every mode x filter x ann x mmr, keyed by the Spark computation it
-    amounts to (ann probes unfiltered dense sides only, mmr is semantic
-    only), so each distinct oracle runs once."""
+    amounts to (ann=True is the exact dense scan, mmr is semantic only),
+    so each distinct oracle runs once."""
     for mode in ("semantic", "keyword", "hybrid"):
         for f, filt in enumerate(FILTERS):
             for ann in (False, True):
                 for mmr in (False, True):
-                    oracle = (mode, f, ann and not filt and mode != "keyword",
-                              mmr and mode == "semantic")
+                    oracle = (mode, f, mmr and mode == "semantic")
                     yield oracle, dict(mode=mode, ann=ann, mmr=mmr, **filt)
 
 
 def _assert_matches_spark(eng, stage):
-    # snapshot side first: it also builds the postings and IVF indexes the
-    # oracles read, so the concurrent oracles below only read
     got = []
     for oracle, kw in _search_cases():
         df = eng.search(QUERY, k=K, **kw)
@@ -272,7 +262,6 @@ def _assert_matches_spark(eng, stage):
 
 
 def test_snapshot_equals_spark_operators_across_writes(eng, project):
-    assert eng._ann_index() is not None  # ann=True probes a real IVF index
     _assert_matches_spark(eng, "index")
 
     # a pure append: chunks and vectors gain a snapshot each
@@ -290,7 +279,10 @@ def test_snapshot_equals_spark_operators_across_writes(eng, project):
         r["from_entity"] for r in eng.read_graph("helper").collect()}
 
 
-def test_warm_requests_run_no_spark_job(eng):
+def test_warm_requests_run_no_spark_job(eng, project):
+    """Warm requests, and the first keyword, hybrid and ann=True requests
+    after an append and after a one-file edit re-index, run no Spark job:
+    nothing is built beside the table store."""
     calls = [
         lambda mode=mode, ann=ann: eng.search(QUERY, mode=mode, ann=ann).collect()
         for mode in ("semantic", "keyword", "hybrid")
@@ -302,16 +294,38 @@ def test_warm_requests_run_no_spark_job(eng):
         lambda: eng.read_graph("helper", mode="raw").collect(),
         lambda: eng.get_implementation("compute", scope="dependencies").collect(),
     ]
+    first = [
+        lambda: eng.search(QUERY, mode="keyword").collect(),
+        lambda: eng.search(QUERY, mode="hybrid").collect(),
+        lambda: eng.search(QUERY, mode="semantic", ann=True).collect(),
+        lambda: eng.search(QUERY, mode="hybrid", ann=True).collect(),
+    ]
+
+    def edit():
+        with open(project / "main.py", "a") as fh:
+            fh.write("\n\ndef helper_warm(numbers):\n    return helper(numbers, 3)\n")
+        assert eng.index(str(project))["files_changed"] == 1
+
     for call in calls:  # warm: the snapshot loads its parts on first use
         call()
     sc = eng.spark.sparkContext
-    sc.setJobGroup("serving-warm", "warm serving requests")
-    try:
-        for call in calls:
-            call()
-    finally:
-        sc.setJobGroup("serving-idle", "idle")
+
+    def in_group(requests):
+        sc.setJobGroup("serving-warm", "serving requests")
+        try:
+            for call in requests:
+                call()
+        finally:
+            sc.setJobGroup("serving-idle", "idle")
+
+    in_group(calls)
+    eng.add_memory("warm_memo", "helper compute numbers, appended after warm-up")
+    in_group(first)
+    edit()
+    in_group(first)
     assert sc.statusTracker().getJobIdsForGroup("serving-warm") == []
+    root = Path(eng.store.root)
+    assert not (root / "postings").exists() and not (root / "annindex").exists()
 
 
 def test_collect_reads_the_answer_without_a_plan(eng):
