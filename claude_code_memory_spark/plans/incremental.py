@@ -368,18 +368,19 @@ class TableStore:
             return
         self.write(table, rows, partition_by)
 
-    def manifest_key(self, table: str) -> tuple | None:
-        """Stable identifier of a table's current snapshot set — changes on
-        every write/append, so derived state (the serving snapshot's parts)
-        can cache-key on it and invalidate exactly when the base table
-        changes. One (snapshot, tombstone) pair per
-        snapshot; the tombstone is None unless that snapshot's commit
-        was a `merge_delta`."""
-        meta = self._manifest(table)
-        if meta is None:
+    def manifest_key(self, table: str) -> bytes | None:
+        """Stable identifier of a table's current snapshot set, so derived
+        state (the serving snapshot's parts) can cache-key on it and
+        invalidate exactly when the base table changes: the raw bytes of
+        its ``_current`` pointer, not parsed. Every commit (write, append,
+        merge) points at a newly named ``snap-<ms>-<pid>-<n>`` dir, so the
+        bytes change with it. Not ``os.stat``: an inode can be reused and
+        mtimes are coarse."""
+        try:
+            with open(self._pointer(table), "rb") as fh:
+                return fh.read()
+        except FileNotFoundError:
             return None
-        snaps = meta["snapshots"]
-        return tuple(zip(snaps, meta.get("tombstones") or [None] * len(snaps)))
 
     def vacuum(self) -> None:
         """Delete the snapshot and tombstone dirs no current pointer

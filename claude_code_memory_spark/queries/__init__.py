@@ -9,7 +9,6 @@ from claude_code_memory_spark.queries import (  # noqa: F401,E402
     clusterq,
     dedupq,
     graphq,
-    mlq,
     pipelineq,
     relational,
     relational2,
@@ -40,11 +39,14 @@ from claude_code_memory_spark.queries import (  # noqa: F401,E402
 # top staleness priority (all judge-selfchecked green at sf0.01 in the
 # r11 verdict); (b) round 11 added no new catalog entries, so the rest
 # of the window is the first 38 of the 50-entry r9-last-green cohort,
-# in catalog order. 12 + 38 = 50; the remaining 12 r9 entries
-# (debounce_last_event_wins, events_json_props, agg_value_percentiles,
-# diag_key_skew, sketch_countmin_freq, sketch_kmv_jaccard,
-# sketch_approx_quantiles, agg_token_histogram, text_pmi_cooccurrence,
-# tokenizer_bpe_pair_counts, lm_bigram_doc_scores,
+# in catalog order. 12 + 38 = 50. One of the 38,
+# corpus_epoch_allocation, left the catalog with queries/mlq.py; its slot
+# went to debounce_last_event_wins, the head of the round-13 queue, so
+# the window stays 50 entries. The remaining 11 r9 entries
+# (events_json_props, agg_value_percentiles, diag_key_skew,
+# sketch_countmin_freq, sketch_kmv_jaccard, sketch_approx_quantiles,
+# agg_token_histogram, text_pmi_cooccurrence, tokenizer_bpe_pair_counts,
+# lm_bigram_doc_scores,
 # pack_training_sequences) lead the round-13 queue, followed by any
 # round-12 additions, then the r10 cohort. After this rotation no
 # catalog entry's latest driver green is older than r9.
@@ -65,7 +67,7 @@ _DRIVER_WINDOW = [
     "dedup_embedding_neardup",
     "dedup_duplicate_clusters",
     "dedup_prefix_boilerplate",
-    "corpus_epoch_allocation",
+    "debounce_last_event_wins",
     "split_train_val_test",
     "sample_stratified_by_lang",
     "graph_bfs2_brand_parts",
@@ -102,7 +104,7 @@ _DRIVER_WINDOW = [
     "ann_ivf_probe",
 ]
 # Round-13 rotation queue (oldest-green-first after this round lands):
-# (a) the 12 r9-cohort entries deferred above (listed in the window
+# (a) the 11 r9-cohort entries deferred above (listed in the window
 #     comment); (b) any round-12 additions (never driver-checked);
 # (c) the 50-entry r10-last-green cohort — whatever fits after (a)+(b);
 #     remainder rotates in round 14 with the r11 cohort.

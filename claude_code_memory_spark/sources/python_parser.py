@@ -13,6 +13,14 @@ implementation_chunks) of parser.py:46-84.
 Per-file work is independent; `sources/registry.parse_rows` runs every
 language's parser in one driver loop over the scanned files, and the
 projections below split the records into the engine's tables.
+
+Each top-level function and method is traversed once (`_walk`). The one
+pass yields every node of its subtree in ``ast.walk`` order, which
+complexity, call sites, file ops and raises read, and the nodes of its
+own scope, which the type and factory binds read. A class's complexity
+adds its methods' control counts to one pass over the rest of the class,
+so each node is traversed once. Parsing is one of the largest stages of a
+cold ``index()``, which is why the per-node work is kept to one visit.
 """
 
 from __future__ import annotations
@@ -29,21 +37,52 @@ PARSED_SCHEMA = (
 )
 PARSED_COLUMNS = [f.split(" ")[0] for f in PARSED_SCHEMA.split(", ")]
 
-_CONTROL_NODES = (
-    ast.If,
-    ast.For,
-    ast.While,
-    ast.Try,
-    ast.ExceptHandler,
-    ast.With,
-    ast.BoolOp,
-    ast.Match,
+# X12: cyclomatic-ish = 1 + count of control constructs
+# (parser.py:1175-1181). An exact-type test equals isinstance here: no
+# `ast` class subclasses these, and AsyncFor / AsyncWith / TryStar are
+# not counted.
+_CONTROL_NODES = frozenset(
+    (ast.If, ast.For, ast.While, ast.Try, ast.ExceptHandler, ast.With, ast.BoolOp, ast.Match)
+)
+_SCOPE_BARRIERS = frozenset((ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef, ast.Lambda))
+_FUNCTION_NODES = (ast.FunctionDef, ast.AsyncFunctionDef)
+# the statements and expressions `_collect_type_binds` reads
+_BINDING_NODES = frozenset(
+    (ast.Assign, ast.NamedExpr, ast.AnnAssign, ast.AugAssign, ast.For, ast.AsyncFor, ast.With,
+     ast.AsyncWith)
 )
 
 
-def _complexity(node: ast.AST) -> int:
-    # X12: cyclomatic-ish = 1 + count of control constructs (parser.py:1175-1181)
-    return 1 + sum(isinstance(n, _CONTROL_NODES) for n in ast.walk(node))
+def _walk(root: ast.AST) -> tuple[list[ast.AST], list[ast.AST]]:
+    """One pass over ``root``'s subtree → (nodes, scope).
+
+    ``nodes`` is every node, root included, in ``ast.walk``'s
+    breadth-first order. ``scope`` is the nodes of root's own scope:
+    everything below root except nested function/class/lambda
+    definitions and what they hold (their assignments bind in their own
+    scope, not root's). Children are listed through ``_fields`` directly,
+    which is what ``ast.iter_child_nodes`` does through two generators."""
+    nodes = [root]
+    # opens[i]: the children of nodes[i] belong to root's scope. The two
+    # lists grow in step while the loop reads them.
+    opens = [True]
+    scope: list[ast.AST] = []
+    for node, open_ in zip(nodes, opens):
+        for field in node._fields:
+            value = getattr(node, field, None)
+            for child in value if isinstance(value, list) else (value,):
+                if isinstance(child, ast.AST):
+                    nodes.append(child)
+                    if open_ and type(child) not in _SCOPE_BARRIERS:
+                        scope.append(child)
+                        opens.append(True)
+                    else:
+                        opens.append(False)
+    return nodes, scope
+
+
+def _controls(nodes: list[ast.AST]) -> int:
+    return sum(type(n) in _CONTROL_NODES for n in nodes)
 
 
 def _signature(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> str:
@@ -63,12 +102,13 @@ _FILE_OP_FUNCS = frozenset(
 )
 
 
-def _file_op_relations(owner: str, node: ast.AST, path: str) -> list[dict]:
+def _file_op_relations(owner: str, nodes: list[ast.AST], path: str) -> list[dict]:
     """Calls like open('x.txt') / json.load / pd.read_csv('d.csv') with a
-    string-literal argument → (owner, uses, <filename>) relations."""
+    string-literal argument → (owner, uses, <filename>) relations, in
+    ``nodes`` order."""
     out: list[dict] = []
-    for n in ast.walk(node):
-        if not isinstance(n, ast.Call):
+    for n in nodes:
+        if type(n) is not ast.Call:
             continue
         f = n.func
         name = f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
@@ -81,11 +121,6 @@ def _file_op_relations(owner: str, node: ast.AST, path: str) -> list[dict]:
                     continue
                 out.append(_relation_rec(owner, arg.value, "uses", path, name))
     return out
-
-
-def _call_names(node: ast.AST) -> set[str]:
-    # X9: function-call extraction (parser.py:1109-1159) — AST beats regex
-    return {name for name, _base in _call_sites(node)}
 
 
 def _name_and_base(f: ast.AST) -> tuple[str | None, str | None]:
@@ -262,8 +297,9 @@ def _marker_of_call(call: ast.Call, depth: int = 3) -> str | None:
     return None
 
 
-def _call_sites(node: ast.AST) -> set[tuple[str, str | None]]:
-    """(callee_name, dotted_base) call sites: ``f()`` → ('f', None),
+def _call_sites(nodes: list[ast.AST]) -> set[tuple[str, str | None]]:
+    """(callee_name, dotted_base) call sites among ``nodes`` (X9,
+    parser.py:1109-1159): ``f()`` → ('f', None),
     ``z.f()`` → ('f', 'z'), ``a.b.f()`` → ('f', 'a.b'). The base feeds
     cross-file resolution (operators/resolve.py): when it names an
     imported module alias, the call pins to that module's entity instead
@@ -283,8 +319,8 @@ def _call_sites(node: ast.AST) -> set[tuple[str, str | None]]:
     non-name-chain base (subscript, deeper than the marker cap, lambda)
     is None — unresolvable statically, same as today."""
     out: set[tuple[str, str | None]] = set()
-    for n in ast.walk(node):
-        if not isinstance(n, ast.Call):
+    for n in nodes:
+        if type(n) is not ast.Call:
             continue
         name, base = _name_and_base(n.func)
         if name is None:
@@ -299,35 +335,16 @@ def _call_sites(node: ast.AST) -> set[tuple[str, str | None]]:
     return out
 
 
-_SCOPE_BARRIERS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef, ast.Lambda)
-
-
-def _scope_nodes(root: ast.AST) -> list[ast.AST]:
-    """The statements/expressions belonging to ``root``'s own scope —
-    descends through if/for/while/try/with bodies but NOT into nested
-    function/class/lambda definitions (their assignments bind in their
-    own scope, not root's)."""
-    stack = list(ast.iter_child_nodes(root))
-    out: list[ast.AST] = []
-    while stack:
-        n = stack.pop()
-        if isinstance(n, _SCOPE_BARRIERS):
-            continue
-        out.append(n)
-        stack.extend(ast.iter_child_nodes(n))
-    return out
-
-
-def _function_return_bind(fn: ast.AST) -> tuple[str, str | None] | None:
-    """(ctor, dotted_base) when EVERY return statement in ``fn``'s own
-    scope returns the SAME named call (and there is at least one) — the
-    factory-function pattern ``def make(): return Tool()``. Any bare
+def _function_return_bind(scope: list[ast.AST]) -> tuple[str, str | None] | None:
+    """(ctor, dotted_base) when EVERY return statement in a function's own
+    ``scope`` (`_walk`) returns the SAME named call (and there is at least
+    one) — the factory-function pattern ``def make(): return Tool()``. Any bare
     return, non-call value, differing call, or yield (a generator's
     caller receives the generator, not the return) yields None, so the
     resolver only pins factory results it is certain about."""
     seen: tuple[str, str | None] | None = None
     any_ret = False
-    for n in _scope_nodes(fn):
+    for n in scope:
         if isinstance(n, (ast.Yield, ast.YieldFrom)):
             return None
         if not isinstance(n, ast.Return):
@@ -346,7 +363,7 @@ def _function_return_bind(fn: ast.AST) -> tuple[str, str | None] | None:
 
 
 def _collect_type_binds(
-    root: ast.AST,
+    scope: list[ast.AST],
 ) -> tuple[dict[str, tuple[str, str | None] | None], dict[str, tuple[str, str | None] | None]]:
     """Flow-free local type inference, the static slice of what Jedi
     infers dynamically (reference: analysis/parser.py:15, :120): a
@@ -357,7 +374,8 @@ def _collect_type_binds(
     (maps it to None) so resolution stays a strict refinement: we only
     ever pin a method call to a class we are certain about.
 
-    Returns (locals, self_attrs): var → (ctor_name, ctor_dotted_base)
+    ``scope`` is the nodes of that scope (`_walk`). Returns (locals,
+    self_attrs): var → (ctor_name, ctor_dotted_base)
     or None when poisoned. ``self.x = C()`` keys as 'self.x' in the
     second dict (merged per-class by the caller across methods)."""
     local: dict[str, tuple[str, str | None] | None] = {}
@@ -410,7 +428,9 @@ def _collect_type_binds(
             return (name, base, awaited)
         return None
 
-    for n in _scope_nodes(root):
+    for n in scope:
+        if type(n) not in _BINDING_NODES:
+            continue
         if isinstance(n, ast.Assign):
             val = call_val(n.value)
             for t in n.targets:
@@ -515,12 +535,12 @@ def _decorator_names(node) -> list[str]:
     return out
 
 
-def _raised_names(fn) -> set[str]:
-    """`raise X(...)` / `raise X` exception type names inside a function
-    (the JS parser's throws relations, mirrored via ast.Raise)."""
+def _raised_names(nodes: list[ast.AST]) -> set[str]:
+    """`raise X(...)` / `raise X` exception type names among a function's
+    ``nodes`` (the JS parser's throws relations, mirrored via ast.Raise)."""
     out = set()
-    for node in ast.walk(fn):
-        if isinstance(node, ast.Raise) and node.exc is not None:
+    for node in nodes:
+        if type(node) is ast.Raise and node.exc is not None:
             e = node.exc.func if isinstance(node.exc, ast.Call) else node.exc
             if isinstance(e, ast.Name):
                 out.add(e.id)
@@ -644,7 +664,9 @@ def parse_python_source(path: str, source: str) -> list[dict]:
         parent_typeparams_all: frozenset[str] = frozenset(),
     ):
         """Emits the function's records; returns its self-attribute type
-        binds for class-level merging."""
+        binds for class-level merging and its control-construct count."""
+        nodes, scope = _walk(fn)
+        controls = _controls(nodes)
         qual = f"{parent_name}.{fn.name}" if parent_name else fn.name
         doc = ast.get_docstring(fn)
         obs = [f"{'Method' if etype == 'method' else 'Function'} {_signature(fn)}"]
@@ -656,9 +678,9 @@ def parse_python_source(path: str, source: str) -> list[dict]:
         recs.append(_relation_rec(parent_name or path, qual, "contains", path))
         seg = _segment_of(seg_lines, fn)
         recs.append(
-            _impl_rec(qual, etype, path, fn.lineno, fn.end_lineno, seg, _complexity(fn))
+            _impl_rec(qual, etype, path, fn.lineno, fn.end_lineno, seg, 1 + controls)
         )
-        for callee, base in sorted(_call_sites(fn), key=lambda t: (t[0], t[1] or "")):
+        for callee, base in sorted(_call_sites(nodes), key=lambda t: (t[0], t[1] or "")):
             # the self-recursion exclusion applies to BARE calls only:
             # `super().close()` inside close() — the canonical super
             # pattern — and `self.close()` / `other.close()` are real
@@ -667,15 +689,15 @@ def parse_python_source(path: str, source: str) -> list[dict]:
                 rec = _relation_rec(qual, callee, "calls", path)
                 rec["content"] = base  # dotted call base, for cross-file resolution
                 recs.append(rec)
-        recs.extend(_file_op_relations(qual, fn, path))
+        recs.extend(_file_op_relations(qual, nodes, path))
         for deco in _decorator_names(fn):
             recs.append(_relation_rec(qual, deco, "uses", path, "decorator"))
-        for exc in sorted(_raised_names(fn)):
+        for exc in sorted(_raised_names(nodes)):
             recs.append(_relation_rec(qual, exc, "throws", path))
         # instance-typed method resolution raw material: x = C() binds
         # x→C in THIS function's scope; parameters shadow (poison) any
         # same-named local constructor bind
-        local_binds, self_binds = _collect_type_binds(fn)
+        local_binds, self_binds = _collect_type_binds(scope)
         a = fn.args
         # an ANNOTATED parameter binds to its declared type (`def f(t:
         # Tool)` — declared intent, as certain as `x: Tool = ...`);
@@ -759,7 +781,7 @@ def parse_python_source(path: str, source: str) -> list[dict]:
                 elif ann_name is not None:
                     rb = (ann_name, ann_base)
             if rb is None and not suppress_rb:
-                rb = _function_return_bind(fn)
+                rb = _function_return_bind(scope)
             if rb is not None:
                 name, base = rb
                 if parent_name is not None and base is None and name in ("cls", parent_name):
@@ -776,7 +798,7 @@ def parse_python_source(path: str, source: str) -> list[dict]:
                     # pinning to the instance type
                     r["import_type"] = "async"
                 recs.append(r)
-        return self_binds
+        return self_binds, controls
 
     for node in tree.body:
         if isinstance(node, (ast.Import, ast.ImportFrom)):
@@ -859,7 +881,7 @@ def parse_python_source(path: str, source: str) -> list[dict]:
                                 node.end_lineno, ["Variable __all__"])
                 )
                 recs.append(_relation_rec(path, "__all__", "contains", path))
-        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+        elif isinstance(node, _FUNCTION_NODES):
             handle_function(node, None, "function")
         elif isinstance(node, ast.ClassDef):
             doc = ast.get_docstring(node)
@@ -871,9 +893,14 @@ def parse_python_source(path: str, source: str) -> list[dict]:
             )
             recs.append(_relation_rec(path, node.name, "contains", path))
             seg = _segment_of(seg_lines, node)
-            recs.append(
-                _impl_rec(node.name, "class", path, node.lineno, node.end_lineno, seg,
-                          _complexity(node))
+            # complexity is set once the methods below have counted their
+            # own control constructs; the rest of the class counts here
+            impl = _impl_rec(node.name, "class", path, node.lineno, node.end_lineno, seg, None)
+            recs.append(impl)
+            controls = sum(
+                _controls(_walk(child)[0])
+                for child in ast.iter_child_nodes(node)
+                if not isinstance(child, _FUNCTION_NODES)
             )
             for bpos, base in enumerate(node.bases):
                 base_name = (
@@ -918,16 +945,19 @@ def parse_python_source(path: str, source: str) -> list[dict]:
                         elif key not in cls_binds:
                             cls_binds[key] = val
             for item in node.body:
-                if isinstance(item, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                    for var, val in handle_function(
+                if isinstance(item, _FUNCTION_NODES):
+                    self_binds, method_controls = handle_function(
                         item, node.name, "method",
                         parent_typeparams=_class_typeparams(node),
                         parent_typeparams_all=_class_typeparams_all(node),
-                    ).items():
+                    )
+                    controls += method_controls
+                    for var, val in self_binds.items():
                         if var in cls_binds and cls_binds[var] != val:
                             cls_binds[var] = None
                         elif var not in cls_binds:
                             cls_binds[var] = val
+            impl["complexity"] = 1 + controls
             for var, val in sorted(cls_binds.items()):
                 if val is not None:
                     recs.append(
@@ -965,8 +995,14 @@ def parse_python_source(path: str, source: str) -> list[dict]:
                 recs.append(_relation_rec(path, name, "contains", path))
     # module-scope type binds (x = C() at top level, visible to every
     # function in the file unless shadowed): scope keys as the file path,
-    # the same parent convention `contains` relations use
-    mod_binds, _ = _collect_type_binds(tree)
+    # the same parent convention `contains` relations use. The module's
+    # scope is its top-level statements other than def/class and what they
+    # hold, nested def/class/lambda bodies excepted.
+    mod_scope: list[ast.AST] = []
+    for node in tree.body:
+        if type(node) not in _SCOPE_BARRIERS:
+            mod_scope += [node, *_walk(node)[1]]
+    mod_binds, _ = _collect_type_binds(mod_scope)
     for var, val in sorted(mod_binds.items()):
         if val is not None:
             recs.append(

@@ -304,3 +304,174 @@ def test_async_await_records():
     }
     assert rb["aget"] == "async"
     assert rb["sget"] is None
+
+
+_SCOPES_SRC = '''\
+import json
+
+CONFIG = Settings()
+if CONFIG:
+    handler = lambda: (zed := Zed())
+
+    def hook():
+        hooked = Hooked()
+
+
+def outer(path, flag):
+    """Outer doc."""
+    a = Thing()
+    if flag and path:
+        data = open("deep.txt")
+    for item in [Item(x) for x in range(3)]:
+        while item:
+            try:
+                item = item.step()
+            except ValueError:
+                raise Retry(item)
+    with Lock() as (a, b):
+        pass
+    if (conf := Config()):
+        pass
+    parts = [(w := Part()) for _ in range(2)]
+    match flag:
+        case 1:
+            pass
+    json.load("top.json")
+
+    def inner():
+        inner_val = Widget()
+        if inner_val:
+            raise InnerError()
+        return Widget()
+
+    def gen():
+        yield 1
+
+    class Local:
+        def method(self):
+            hidden = Hidden()
+            return open("local.txt")
+
+    cb = lambda: helper(lam := Gadget())
+    return Factory()
+
+
+async def runner(stream):
+    async for chunk in stream:
+        async with Session() as s:
+            pass
+    try:
+        pass
+    except* KeyError:
+        pass
+    return Factory()
+
+
+class Holder(Base):
+    label = Name() if flag or other else None
+
+    class Meta:
+        def check(self):
+            if self:
+                kept = Kept()
+
+    def setup(self):
+        self.repo = Repo()
+        for x in self.items:
+            pass
+'''
+
+
+def test_nested_scopes_complexity_and_file_op_order():
+    """Every record of one crafted file, in order. What nested def /
+    class / lambda bodies hold counts for the enclosing function's calls,
+    raises, file ops and complexity, but their assignments and returns
+    stay out of its type and factory binds (so do the module's). Walrus
+    binds in a comprehension bind in the function; `with ... as (a, b)`
+    poisons `a`. Complexity counts if/for/while/try/except/with/BoolOp/
+    match, not async for / async with / try* (the handler of `except*`
+    is an except). File ops come in breadth-first order: top.json, which
+    sits shallower, before deep.txt."""
+    from claude_code_memory_spark.sources.python_parser import parse_python_source
+
+    recs = parse_python_source("m.py", _SCOPES_SRC)
+    lines = _SCOPES_SRC.split("\n")
+    got = []
+    for r in recs:
+        assert r["file_path"] == "m.py"
+        fields = {k: v for k, v in r.items() if v is not None and k != "file_path"}
+        if r["record_kind"] == "implementation":
+            span = lines[r["line_number"] - 1 : r["end_line_number"]]
+            assert fields.pop("content") == "\n".join(span).lstrip()
+        got.append((fields.pop("record_kind"), fields))
+
+    def rel(src, dst, rtype, **kw):
+        return ("relation", dict(from_entity=src, to_entity=dst, relation_type=rtype, **kw))
+
+    def bind(scope, var, ctor):
+        return ("type_binding", dict(entity_name=var, from_entity=scope, to_entity=ctor))
+
+    def impl(name, etype, first, last, complexity):
+        return ("implementation", dict(
+            entity_name=name, entity_type=etype, line_number=first,
+            end_line_number=last, complexity=complexity,
+        ))
+
+    outer_calls = [
+        "Config", "Factory", "Gadget", "Hidden", "InnerError", "Item", "Lock",
+        "Part", "Retry", "Thing", "Widget", "helper",
+    ]
+    assert got == [
+        ("entity", dict(entity_name="m.py", entity_type="file", line_number=1,
+                        end_line_number=73, observations=["Python file m.py"])),
+        ("entity", dict(entity_name="json", entity_type="import", line_number=1,
+                        end_line_number=1, observations=["Imports module json"])),
+        rel("m.py", "json", "imports", import_type="module"),
+        ("import_binding", dict(from_entity="json", to_entity="json",
+                                relation_type="import_binding", import_type="module")),
+        ("entity", dict(entity_name="CONFIG", entity_type="constant", line_number=3,
+                        end_line_number=3, observations=["Constant CONFIG"])),
+        rel("m.py", "CONFIG", "contains"),
+        ("entity", dict(entity_name="outer", entity_type="function", line_number=11,
+                        end_line_number=47,
+                        observations=["Function outer(path, flag)", "Outer doc."],
+                        signature="outer(path, flag)", docstring="Outer doc.")),
+        rel("m.py", "outer", "contains"),
+        impl("outer", "function", 11, 47, 11),
+        *[rel("outer", c, "calls") for c in outer_calls],
+        rel("outer", "load", "calls", content="json"),
+        rel("outer", "open", "calls"),
+        rel("outer", "range", "calls"),
+        rel("outer", "step", "calls", content="item"),
+        rel("outer", "top.json", "uses", import_type="load"),
+        rel("outer", "deep.txt", "uses", import_type="open"),
+        rel("outer", "local.txt", "uses", import_type="open"),
+        rel("outer", "InnerError", "throws"),
+        rel("outer", "Retry", "throws"),
+        bind("outer", "conf", "Config"),
+        bind("outer", "data", "open"),
+        bind("outer", "w", "Part"),
+        ("return_bind", dict(from_entity="outer", to_entity="Factory")),
+        ("entity", dict(entity_name="runner", entity_type="function", line_number=50,
+                        end_line_number=58, observations=["Function runner(stream)"],
+                        signature="runner(stream)")),
+        rel("m.py", "runner", "contains"),
+        impl("runner", "function", 50, 58, 2),
+        rel("runner", "Factory", "calls"),
+        rel("runner", "Session", "calls"),
+        bind("runner", "s", "Session"),
+        ("return_bind", dict(from_entity="runner", to_entity="Factory", import_type="async")),
+        ("entity", dict(entity_name="Holder", entity_type="class", line_number=61,
+                        end_line_number=72, observations=["Class Holder"])),
+        rel("m.py", "Holder", "contains"),
+        impl("Holder", "class", 61, 72, 4),
+        rel("Holder", "Base", "inherits", content="0"),
+        ("entity", dict(entity_name="Holder.setup", entity_type="method", line_number=69,
+                        end_line_number=72, observations=["Method setup(self)"],
+                        signature="setup(self)")),
+        rel("Holder", "Holder.setup", "contains"),
+        impl("Holder.setup", "method", 69, 72, 2),
+        rel("Holder.setup", "Repo", "calls"),
+        bind("Holder", "self.repo", "Repo"),
+        bind("m.py", "CONFIG", "Settings"),
+    ]

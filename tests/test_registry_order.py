@@ -10,7 +10,9 @@ from claude_code_memory_spark.queries import REGISTRY, _DRIVER_WINDOW
 # stale — verdict r11 item 1: the pre-named round-12 queue), then the
 # first 38 of the r9-last-green cohort in catalog order. Round 11
 # added no catalog entries, so there is no never-checked segment this
-# round. The 12 deferred r9 entries lead the round-13 queue.
+# round. The 12 deferred r9 entries lead the round-13 queue; the head of
+# that queue, debounce_last_event_wins, holds the slot of
+# corpus_epoch_allocation, which left the catalog.
 R8_DEFERRALS = {
     "transition_matrix_events",
     "scd2_user_state_intervals",
@@ -30,7 +32,7 @@ R9_COHORT_38 = {
     "dedup_embedding_neardup",
     "dedup_duplicate_clusters",
     "dedup_prefix_boilerplate",
-    "corpus_epoch_allocation",
+    "debounce_last_event_wins",
     "split_train_val_test",
     "sample_stratified_by_lang",
     "graph_bfs2_brand_parts",
